@@ -38,20 +38,19 @@ from camelot_spark.tdp import text as tdp_text
 # _load 1-3 times inside their timed region — ~15 s across a bench
 # sweep. This caches ONLY the immutable plan object: no rows, no
 # .cache()/persist — every action still scans the parquet files, so
-# nothing computed is reused across runs. Keyed per Spark application
-# so concurrent/sequential sessions (bench, oracle checker, tests)
-# never share handles.
-_LOAD_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+# nothing computed is reused across runs. Keyed on the session object:
+# sessions of one application (spark.newSession()) share an
+# applicationId but not conf or catalog, so each gets its own handles.
+_LOAD_MEMO: dict[tuple[SparkSession, str, str], DataFrame] = {}
 
 
 def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, name)
+    # session timeZone pins timestamp rendering for the oracle compares;
+    # set on every call so no session reaches a query without it
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    key = (spark, sf_dir, name)
     df = _LOAD_MEMO.get(key)
     if df is None:
-        # session timeZone pins timestamp rendering for the oracle
-        # compares; setting it with the first load of a session is
-        # equivalent to setting it per call (it persists on the session)
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
         df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
         _LOAD_MEMO[key] = df
     return df
@@ -218,7 +217,9 @@ def _prod_dedup_expected_rows(docs: list) -> dict[str, list[str]]:
         if jac >= 3000:
             ver_rows.append(f"({a},{b},{jac})")
 
-    # --- dedup_groups: 8-round synchronous min-label over the pairs
+    # --- dedup_groups: synchronous min-label over the pairs, at most 8
+    # rounds — equal to dedup_groups' converged components on both
+    # gated corpora (largest diameter 1-2)
     nodes = sorted({x for p in pairs for x in p})
     label = {x: x for x in nodes}
     adj: dict[int, list[int]] = {x: [] for x in nodes}
@@ -729,7 +730,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             threshold_x10k=7000),
         "dedup_groups_verified": lambda s, d: dedup.dedup_groups(
             _load(s, d, "documents").where(F.col("doc_id") % 2 == 0),
-            portable=True, algorithm="star", verify_threshold_x10k=7000,
+            portable=True, verify_threshold_x10k=7000,
             pairs=_portable_lsh_pairs(s, d)),
         # pre-delete audit: per-group size / verified-pair jaccard
         # range / reclaimable chars (new r6; shares the LSH prefix)
@@ -853,12 +854,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_groups_portable": lambda s, d: dedup.dedup_groups(
             _load(s, d, "documents").where(F.col("doc_id") % 2 == 0),
             portable=True, pairs=_portable_lsh_pairs(s, d)),
-        # same grouping via O(log n) large-star/small-star contraction —
-        # the huge-diameter-safe algorithm; converges to true components
+        # kept as a key for its name: the same call as
+        # dedup_groups_portable since one CC algorithm remains
         "dedup_groups_star": lambda s, d: dedup.dedup_groups(
             _load(s, d, "documents").where(F.col("doc_id") % 2 == 0),
-            portable=True, algorithm="star",
-            pairs=_portable_lsh_pairs(s, d)),
+            portable=True, pairs=_portable_lsh_pairs(s, d)),
         # iterative tokenizer training: 8 BPE merges learned on a %4
         # sample — per round one pair-count agg, a 1-row argmax, and a
         # literal merge replace; the SQL twin replays the whole loop

@@ -302,6 +302,15 @@ def is_table_identifier(target: str) -> bool:
     return "/" not in target
 
 
+def load_documents(spark, source: str):
+    """Read a documents table: catalog table or parquet path, by the
+    same rule as the writer (``is_table_identifier``). Shared by the
+    extraction and curation jobs."""
+    if is_table_identifier(source):
+        return spark.read.table(source)
+    return spark.read.parquet(source)
+
+
 def read_extracted(spark, target: str):
     """Read an extraction output written by ``run_extraction``: catalog
     table, snapshot-log dir, or plain parquet dir (legacy outputs)."""

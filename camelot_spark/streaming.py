@@ -303,7 +303,8 @@ def streaming_neardup_pairs(documents, num_hashes: int = 32, bands: int = 8,
     duplicates arriving in different micro-batches).
 
     Each doc's MinHash signature bands are computed statelessly on the
-    stream (the same expressions as batch, via
+    stream by the batch plan itself (``dedup.minhash_signatures`` — the
+    same expressions and Arrow seam for both hash families — then
     ``dedup.banded_signatures``); the stateful step keys on
     (band, band_sig) and keeps the CAPPED list of doc ids seen in that
     bucket, emitting (a_id, b_id) the moment a new member meets the

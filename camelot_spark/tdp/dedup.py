@@ -231,68 +231,26 @@ def minhash_signatures(
     in SQL, so the banded-LSH candidate logic is hash-verified by the
     DuckDB oracle.
 
-    The batch PORTABLE family runs explode → codegen projection →
-    partial-agg MIN per seed, NOT a transform() fold: higher-order-
-    function lambda bodies are interpreted per element, and the flat
-    branch-on-length hash that wins 10× inside whole-stage codegen
-    (feature_hash_vec) loses 2.5× interpreted — measured r6 (3.5 s vs
-    1.3 s at sf0.1). The hash projects ONCE per shingle into ``ph`` and
-    the 32 seed mixes read that column in a second projection (32
-    inline copies of the hash overflow janino's 64 KB method limit and
-    kill codegen entirely). Cost of the shape: one extra exchange of
-    (doc_id, 32 longs) per doc — partial aggregation combines the
-    exploded shingle rows map-side, so shuffled bytes equal the
-    signature itself. The batch PRODUCTION family deliberately keeps
-    the per-row fold (see branch comment — measured 2× faster than the
-    explode shape, r7), and streams keep the stateless fold for both
-    families (no watermark, immediate emission).
+    Batch and streaming inputs run the same plan. The PORTABLE family
+    explodes shingle rows, hashes each once in a codegen projection and
+    folds the 32 seed mixes per doc in one ``mapInArrow`` seam; the
+    PRODUCTION family folds ``array_min(transform(xxhash64))`` per row
+    (see the branch comments for the measured choice of each shape).
+    Neither shape aggregates across rows, so a stream needs no
+    watermark and emits each signature in the micro-batch its doc
+    arrives in.
 
     ``doc_id`` is a PRIMARY KEY (same contract as feature_hash_vec):
-    the portable explode+groupBy shape merges rows sharing a doc_id
-    into one union-of-shingles signature, where the per-row fold
-    (production batch, streams) and the DuckDB twin emit one signature
+    the portable seam folds each contiguous run of one doc_id's shingle
+    rows into one signature, and the DuckDB twin emits one signature
     per ROW.
     Duplicate doc_ids are corrupt input to this whole family (pairs,
     groups, incremental all key on doc_id) — dedupe ids upstream."""
     from . import spread
-    from .text import _POLY_M, portable_token_hash
-
-    if documents.isStreaming:
-        # the explode+agg shape below is a streaming AGGREGATION (would
-        # demand a watermark and delay emission); streams keep the
-        # stateless per-row fold — same values, computed in the batch's
-        # own tasks (streaming_neardup_pairs' micro-batches are small,
-        # so the interpreted-lambda cost the batch path dodges is noise)
-        d = documents.select(
-            "doc_id", _shingles(F.col("text"), n).alias("sh"))
-        if portable:
-            ph = F.transform("sh", portable_token_hash)
-
-            def _mix(k):
-                return lambda h: (
-                    h * (2654435761 + k) + 40503 * (k + 1)) % _POLY_M
-
-            sig = F.array(*[F.array_min(F.transform(ph, _mix(k)))
-                            for k in range(num_hashes)])
-            return d.select("doc_id", sig.alias("sig"))
-
-        # Seeds MUST be closed over via a factory, never a lambda
-        # default: Spark's HOF wrapper substitutes a Column for EVERY
-        # lambda parameter (defaults included), so `lambda s, k=k:`
-        # silently binds k to the array-index column — every "seed"
-        # becomes the element index and all K signature entries
-        # collapse to the same hash.
-        def _seeded(k):
-            # late-bound module global: tests swap _prod_minhash_hash
-            # for a portable hash to wire-verify the production family
-            return lambda s: _prod_minhash_hash(s, k)
-
-        sig = F.array(*[F.array_min(F.transform("sh", _seeded(k)))
-                        for k in range(num_hashes)])
-        return d.select("doc_id", sig.alias("sig"))
+    from .text import portable_token_hash
 
     if portable:
-        # Batch portable: explode-first shingle rows → one codegen hash
+        # Portable: explode-first shingle rows → one codegen hash
         # projection → numpy seed-mix + segment-MIN seam (r7; guide
         # §4.2). The r6 shape ran 32 affine-mod projections and a
         # 32-column partial-agg groupBy in the JVM — measured 0.38 s +
@@ -314,7 +272,7 @@ def minhash_signatures(
             "doc_id", portable_token_hash(F.col("__mh_s")).alias("__mh_ph"))
         return _portable_sig_arrow(ex, num_hashes)
 
-    # Batch production: per-row fold — 32 array_min(transform(xxhash64))
+    # Production: per-row fold — 32 array_min(transform(xxhash64))
     # over no-distinct zip grams. Measured r7 AGAINST the explode+
     # partial-agg shape that wins for the portable family: the fold is
     # 2× FASTER here (0.55 vs 1.13 s at sf0.1) because one interpreted
@@ -328,6 +286,10 @@ def minhash_signatures(
     d = spread(documents).select(
         "doc_id", _zip_grams(F.col("text"), n).alias("sh"))
 
+    # Seeds MUST be closed over via a factory, never a lambda default:
+    # Spark's HOF wrapper substitutes a Column for EVERY lambda
+    # parameter (defaults included), so `lambda s, k=k:` silently binds
+    # k to the array-index column and all K entries collapse.
     def _seeded(k):
         # late-bound module global: tests swap _prod_minhash_hash for a
         # portable hash to wire-verify the production branch end-to-end
@@ -363,7 +325,8 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """LSH candidate pairs: split the K-wide signature into bands, join
     docs sharing any (band_id, band_signature) bucket. ``portable``
-    picks the hash family (see minhash_signatures)."""
+    picks the hash family (see minhash_signatures). Batch input only;
+    ``streaming.streaming_neardup_pairs`` is the stream counterpart."""
     if num_hashes % bands != 0:
         # silently truncating the signature would pay for num_hashes
         # folds while delivering the recall of bands*(num_hashes//bands)
@@ -371,14 +334,11 @@ def minhash_lsh_pairs(
             f"num_hashes ({num_hashes}) must be divisible by bands ({bands})")
     rows_per_band = num_hashes // bands
     sigs = minhash_signatures(documents, num_hashes, n, portable=portable)
-    banded = banded_signatures(sigs, bands, rows_per_band)
-    if not documents.isStreaming:
-        # materialize the slim (doc_id, band, band_sig) rows once (r7):
-        # the static plan otherwise embeds the whole shingle+signature
-        # pipeline once per self-join side (AQE exchange reuse is not
-        # guaranteed across differently-projected branches); streams
-        # keep the stateless lineage (checkpointing is a batch-only op)
-        banded = banded.localCheckpoint()
+    # materialize the slim (doc_id, band, band_sig) rows once (r7): the
+    # plan otherwise embeds the whole shingle+signature pipeline once
+    # per self-join side (AQE exchange reuse is not guaranteed across
+    # differently-projected branches)
+    banded = banded_signatures(sigs, bands, rows_per_band).localCheckpoint()
     # one explicit shuffle on the join key so both self-join branches
     # reuse the same exchange instead of recomputing the signatures
     banded = banded.repartition("band", "band_sig")
@@ -760,24 +720,29 @@ def minhash_neardup_verified(
                                 threshold_x10k=threshold_x10k)
 
 
-def connected_components(pairs, rounds: int = 8, check_fixpoint: bool = True):
+# Min-label propagation needs one round per hop of a component's
+# diameter, plus one to see no label change. Near-dup clusters are
+# dense (diameter 1-2), so a chain long enough to hit this cap is
+# pathological input, reported instead of silently split.
+_CC_MAX_ROUNDS = 64
+
+
+def connected_components(pairs):
     """Connected components over an undirected pair list — the step
     that turns near-dup PAIRS into dedup GROUPS (one canonical doc per
     component). Input: (a_id, b_id) rows; output: (doc_id, component)
-    with component = the minimum doc_id reachable within ``rounds``
-    label-propagation steps.
+    with component = the minimum doc_id of the node's component, one
+    row per node appearing in ``pairs`` (self-loops count).
 
-    Algorithm: min-label propagation. Each round, every node takes the
-    minimum of its own label and its neighbors' labels — pure
-    DataFrame joins/aggregations, shuffling only (id, label) longs.
-    Converges once ``rounds`` >= the largest component's diameter;
-    near-dup clusters are dense (diameter is tiny — mostly 1-2), so 8
-    rounds is generous. A fixed round count keeps the operator
-    deterministic AND exactly reproducible by the DuckDB oracle (the
-    SQL runs the identical rounds); at extreme scale the same loop is
-    what GraphFrames' connectedComponents runs, with large-star/
-    small-star contraction cutting rounds to O(log n) — the swap-in
-    point if components with huge diameters ever appear.
+    Algorithm: min-label propagation run to its fixpoint. Each round,
+    every node takes the minimum of its own label and its neighbors'
+    labels — pure DataFrame joins/aggregations, shuffling only
+    (id, label) longs — and the loop stops at the first round in which
+    no label changed. Raises RuntimeError if labels still change after
+    ``_CC_MAX_ROUNDS`` rounds, rather than return split components.
+    The DuckDB twins (``_cc_rounds_sql``) and the Python prod twin run
+    the same propagation to a fixed depth, which gives these labels
+    whenever the depth covers every component's diameter.
     """
     from pyspark.sql import functions as F
 
@@ -802,162 +767,41 @@ def connected_components(pairs, rounds: int = 8, check_fixpoint: bool = True):
         edges.select(F.col("src").alias("id")).distinct()
         .select("id", F.col("id").alias("label"))
     )
-    for rnd in range(rounds):
+    for _ in range(_CC_MAX_ROUNDS):
         neigh = (
             edges.join(labels, edges.src == labels.id)
             .groupBy(F.col("dst").alias("nid"))
             .agg(F.min("label").alias("nlabel"))
         )
-        stepped = labels.join(neigh, labels.id == F.col("nid"), "left").select(
-            "id",
-            F.least(F.col("label"), F.coalesce("nlabel", "label")).alias("label"),
-            F.col("label").alias("prev"),
-        )
         # each round references `labels` twice; without truncation the
         # logical plan doubles per iteration (2^rounds operators — OOMs
         # the driver around 12 rounds). Iterative Spark algorithms
         # checkpoint per iteration for exactly this reason (GraphX/
-        # GraphFrames do the same).
-        if check_fixpoint:
-            # eager: the materialized round feeds an exact fixpoint
-            # check; min-label propagation is monotone, so once no
-            # label changed every remaining round is a no-op and the
-            # early exit returns EXACTLY the fixed-`rounds` labels
-            stepped = stepped.localCheckpoint(eager=True)
-            changed = stepped.where(F.col("label") != F.col("prev")).count()
-            labels = stepped.drop("prev")
-            if changed == 0:
-                break
-        else:
-            # lazy: one job chain drives all rounds at the final action
-            labels = stepped.drop("prev").localCheckpoint(eager=False)
-    return labels.select(
-        F.col("id").alias("doc_id"), F.col("label").alias("component")
-    )
-
-
-def connected_components_star(pairs, max_iters: int = 30):
-    """Connected components via alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — the O(log n)-round algorithm for graphs whose
-    components may have LARGE diameter, where fixed-round min-label
-    propagation (``connected_components``) would need diameter-many
-    rounds. Same contract: input (a_id, b_id) pair rows, output
-    (doc_id, component) with component = the minimum doc_id in each
-    true connected component, one row per node appearing in ``pairs``.
-
-    Each iteration runs:
-    - **large-star**: every node u links its LARGER neighbors to
-      min(Γ(u) ∪ {u}) — long chains collapse toward small ids;
-    - **small-star**: every node links its smaller-or-self neighborhood
-      to its minimum — forms stars rooted at local minima.
-    Both steps preserve connectivity (paper, Lemmas 1-2) and strictly
-    reduce a monotone potential, converging to one star per component
-    rooted at the component minimum in O(log n) iterations — the same
-    contraction GraphFrames' connectedComponents runs.
-
-    Per iteration: two groupBy + two join shuffles over (long, long)
-    edges only (never document bodies), plan truncated per iteration
-    with localCheckpoint exactly like the fixed-round variant.
-    Convergence is detected by a (count, sum-of-hash) signature of the
-    canonical edge set going stable — at the fixpoint an extra
-    iteration is a no-op, so a (vanishingly unlikely) 64-bit signature
-    collision can only cost one wasted iteration, never wrong labels.
-    """
-    from pyspark.sql import functions as F
-
-    e = pairs.select(
-        F.col("a_id").cast("bigint").alias("u"), F.col("b_id").cast("bigint").alias("v")
-    ).localCheckpoint(eager=True)
-    # every node mentioned by pairs gets an output row, exactly like
-    # the fixed-round variant (self-loops count as node mentions)
-    nodes = e.select(F.col("u").alias("id")).union(
-        e.select(F.col("v").alias("id"))).distinct()
-    # canonical undirected edge set, u < v
-    edges = (
-        e.where(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def _signature(E):
-        row = E.agg(
-            F.count(F.lit(1)).alias("n"),
-            # xor-fold (not sum: ANSI mode would overflow) — the edge
-            # set is distinct, so xor is a faithful set signature
-            F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("s"),
-        ).collect()[0]
-        return (row["n"], row["s"])
-
-    sig = _signature(edges)
-    converged = False
-    for _ in range(max_iters):
-        # large-star over the symmetric neighborhood view
-        sym = edges.select(F.col("u").alias("a"), F.col("v").alias("b")).union(
-            edges.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        mins = sym.groupBy("a").agg(F.min("b").alias("m")).select(
-            "a", F.least("m", "a").alias("m"))
-        large = (
-            sym.join(mins, "a")
-            .where(F.col("b") > F.col("a"))
-            .select(F.col("m").alias("u"), F.col("b").alias("v"))  # m < a < b
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star: canonical (u, v) already orients v's smaller
-        # neighborhood as {u}; link it (and v itself) to its minimum
-        smins = large.groupBy("v").agg(F.min("u").alias("m"))
-        small = (
-            large.join(smins, "v")
-            .where(F.col("u") != F.col("m"))
-            .select(F.col("m").alias("u"), F.col("u").alias("v"))
-            .union(smins.select(F.col("m").alias("u"), F.col("v").alias("v")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        new_sig = _signature(small)
-        edges = small
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
-    if not converged:
-        # labels from a half-contracted graph can silently SPLIT true
-        # components (a node still appearing as both u and v); never
-        # return them as if they were final
-        raise RuntimeError(
-            f"connected_components_star did not converge within "
-            f"{max_iters} iterations; raise max_iters (components "
-            f"contract in O(log n) rounds, so this indicates either a "
-            f"tiny max_iters or pathological input)")
-    # at the fixpoint each non-root node has exactly ONE star edge; the
-    # min-aggregate is then a no-op
-    labels = edges.groupBy(F.col("v").alias("id")).agg(F.min("u").alias("label"))
-    return (
-        nodes.join(labels, "id", "left")
-        .select(
-            F.col("id").alias("doc_id"),
-            F.coalesce("label", "id").alias("component"),
-        )
-    )
+        # GraphFrames do the same); the eager checkpoint also feeds the
+        # fixpoint count below.
+        stepped = labels.join(neigh, labels.id == F.col("nid"), "left").select(
+            "id",
+            F.least(F.col("label"), F.coalesce("nlabel", "label")).alias("label"),
+            F.col("label").alias("prev"),
+        ).localCheckpoint(eager=True)
+        changed = stepped.where(F.col("label") != F.col("prev")).count()
+        labels = stepped.drop("prev")
+        if changed == 0:
+            return labels.select(
+                F.col("id").alias("doc_id"), F.col("label").alias("component")
+            )
+    raise RuntimeError(
+        f"connected_components did not converge within {_CC_MAX_ROUNDS} "
+        f"rounds (a component's diameter exceeds the cap)")
 
 
 def dedup_groups(documents, num_hashes: int = 32, bands: int = 8, n: int = 3,
-                 portable: bool = False, rounds: int = 8,
-                 algorithm: str = "rounds",
+                 portable: bool = False,
                  verify_threshold_x10k: int | None = None,
                  pairs: DataFrame | None = None):
     """Full dedup grouping: MinHash-LSH candidate pairs → connected
     components → (doc_id, component, is_canonical). The canonical doc
     of each group is its minimum doc_id (= the component label).
-
-    ``algorithm="rounds"`` (default) is fixed-round min-label
-    propagation — deterministic round count, exactly reproducible by
-    the DuckDB oracle. ``algorithm="star"`` is the O(log n) large-star/
-    small-star contraction for huge-diameter components; it converges
-    to TRUE components, so at convergence both agree wherever
-    ``rounds`` covers the component diameter.
 
     ``verify_threshold_x10k``: when set, LSH candidate pairs are exact-
     Jaccard-verified (``verify_pairs_jaccard``) before grouping, so a
@@ -981,13 +825,7 @@ def dedup_groups(documents, num_hashes: int = 32, bands: int = 8, n: int = 3,
     if verify_threshold_x10k is not None:
         pairs = verify_pairs_jaccard(documents, pairs, n=n,
                                      threshold_x10k=verify_threshold_x10k)
-    if algorithm == "star":
-        cc = connected_components_star(pairs)
-    elif algorithm == "rounds":
-        cc = connected_components(pairs, rounds=rounds)
-    else:
-        raise ValueError(f"unknown algorithm {algorithm!r} (rounds|star)")
-    return cc.select(
+    return connected_components(pairs).select(
         "doc_id", "component",
         F.when(F.col("doc_id") == F.col("component"), 1).otherwise(0)
         .cast("int").alias("is_canonical"),
@@ -1009,7 +847,7 @@ def dedup_report(documents, num_hashes: int = 32, bands: int = 8,
 
     Scale shape: candidates from the banded LSH prefix (shareable via
     ``pairs``), exact-Jaccard verification on candidate docs only,
-    O(log n) star contraction for components; the stats are two
+    min-label propagation for components; the stats are two
     partial aggregations over (id, longs) rows joined on the 8-byte
     component key — the corpus text is read once for lengths and never
     shuffled."""
@@ -1020,10 +858,10 @@ def dedup_report(documents, num_hashes: int = 32, bands: int = 8,
                                   bands=bands, n=n, portable=portable)
     verified = verify_pairs_jaccard(
         documents, pairs, n=n, threshold_x10k=verify_threshold_x10k)
-    # feeds BOTH the iterative contraction and the pair-stats
-    # aggregation: materialize once (same pattern as verify's cand)
+    # feeds BOTH the label propagation and the pair-stats aggregation:
+    # materialize once (same pattern as verify's cand)
     verified = verified.localCheckpoint(eager=True)
-    cc = connected_components_star(verified)
+    cc = connected_components(verified)
     sizes = documents.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.length("text").cast("bigint").alias("doc_chars"))
@@ -1048,9 +886,12 @@ def dedup_report(documents, num_hashes: int = 32, bands: int = 8,
 
 
 def _cc_rounds_sql(rounds: int) -> str:
-    """The DuckDB twin of connected_components: the SAME fixed number of
-    min-label propagation rounds, generated as chained CTEs (recursive
-    CTEs cannot aggregate over the recursive term)."""
+    """The DuckDB twin of connected_components: ``rounds`` min-label
+    propagation steps, generated as chained CTEs (recursive CTEs cannot
+    aggregate over the recursive term). A fixed depth equals
+    connected_components' converged labels once it covers every
+    component's diameter; the twins below use 8 or 12 on corpora whose
+    near-dup clusters have diameter 1-2."""
     steps = []
     for k in range(1, rounds + 1):
         prev = f"l{k - 1}"
@@ -1069,8 +910,10 @@ def _cc_rounds_sql(rounds: int) -> str:
 
 # dedup_groups(portable=True) oracle: portable minhash pairs (the
 # MINHASH_PORTABLE_SQL candidate logic, same %2 sample) → undirected
-# edges → 8 rounds of min-label propagation → groups. Assembled by
-# folding MINHASH_PORTABLE_SQL's final SELECT into a `pairs` CTE.
+# edges → 8 rounds of min-label propagation → groups. 8 rounds equal
+# dedup_groups' converged components on the compared corpora (largest
+# diameter 1-2). Assembled by folding MINHASH_PORTABLE_SQL's final
+# SELECT into a `pairs` CTE.
 _MINHASH_CTE_HEAD, _MINHASH_FINAL_SELECT = MINHASH_PORTABLE_SQL.rstrip().split(
     "SELECT DISTINCT", 1
 )
@@ -1093,12 +936,11 @@ FROM l8
 """
 )
 
-# dedup_groups(portable=True, algorithm="star") oracle: the star
-# contraction converges to TRUE components, which equal min-label
-# propagation run past the largest component diameter — 12 rounds is
-# comfortably past it on the sampled corpus (near-dup clusters are
-# template duplicates: dense, diameter 1-2), so the SQL twin is the
-# same chained-CTE propagation taken to a converged depth.
+# dedup_groups_star oracle: the registry key kept for its name, now the
+# same dedup_groups(portable=True) call as dedup_groups_portable. Its
+# twin runs 12 rounds of the same propagation, which equal the
+# converged components on the compared corpora (near-dup clusters are
+# template duplicates: dense, diameter 1-2).
 DEDUP_GROUPS_STAR_SQL = (
     _MINHASH_CTE_HEAD
     + ",\npairs AS MATERIALIZED (SELECT DISTINCT"
@@ -1152,10 +994,10 @@ WHERE jaccard_x10k >= {_VERIFY_THRESHOLD}
 """
 )
 
-# dedup_groups(verify_threshold_x10k=7000, algorithm="star") oracle:
-# components over the VERIFIED pair set (the destructive-consumer
-# configuration curate_job uses) — propagation to converged depth as in
-# the star twin above.
+# dedup_groups(verify_threshold_x10k=7000) oracle: components over the
+# VERIFIED pair set (the destructive-consumer configuration curate_job
+# uses) — 12 rounds of propagation, equal to the converged components
+# on the compared corpora as in the twin above.
 DEDUP_GROUPS_VERIFIED_SQL = (
     _MINHASH_CTE_HEAD
     + ",\ncand AS MATERIALIZED (SELECT DISTINCT"
@@ -1184,9 +1026,8 @@ FROM l12
 
 # dedup_report twin: the verified-groups chain with the jaccard kept
 # as a column, then the two per-component aggregations (pair stats +
-# member/chars stats). Star contraction converges to true components,
-# which the 12-round min-label CTE reproduces on this corpus (same
-# precedent as DEDUP_GROUPS_VERIFIED_SQL pairing with algorithm=star).
+# member/chars stats). The 12-round min-label CTE equals the converged
+# components on the compared corpora (as in DEDUP_GROUPS_VERIFIED_SQL).
 DEDUP_REPORT_SQL = (
     _MINHASH_CTE_HEAD
     + ",\ncand AS MATERIALIZED (SELECT DISTINCT"

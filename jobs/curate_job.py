@@ -22,7 +22,8 @@ catalog:
 - ``dedup_exact``  keep the first copy of each exact-duplicate text;
 - ``dedup_near``   drop non-canonical docs of each near-dup group:
                    MinHash-LSH candidates, exact-Jaccard-verified at
-                   ``--near-threshold``/10000 before grouping
+                   ``--near-threshold``/10000, grouped by min-label
+                   propagation run to its fixpoint
                    (tdp.dedup.dedup_groups);
 - ``strip_substr`` cut corpus-wide duplicate substring regions out of
                    the surviving text (tdp.substr_dedup);
@@ -107,8 +108,7 @@ def apply_steps(spark, docs, args):
             # exact n-gram Jaccard (>= --near-threshold/10000) before
             # grouping; --near-threshold 0 opts out explicitly.
             groups = dedup_groups(
-                docs, algorithm=args.cc_algorithm,
-                verify_threshold_x10k=(args.near_threshold or None))
+                docs, verify_threshold_x10k=(args.near_threshold or None))
             canon = groups.where(F.col("is_canonical") == 1).select("doc_id")
             # docs never seen in any near-dup group pass through
             docs = docs.join(groups.select("doc_id"), "doc_id", "left_anti") \
@@ -205,9 +205,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--steps", default="quality,dedup_exact,sample")
     ap.add_argument("--min-quality", type=int, default=300)
     ap.add_argument("--substr-k", type=int, default=40)
-    ap.add_argument("--cc-algorithm", choices=("rounds", "star"), default="star",
-                    help="near-dup grouping: fixed-round propagation or "
-                         "O(log n) star contraction")
     ap.add_argument("--near-threshold", type=int, default=7000,
                     metavar="JACCARD_X10K",
                     help="dedup_near: exact-Jaccard verification floor for "
@@ -239,15 +236,12 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import SparkSession
 
-    from camelot_spark.pipeline import is_table_identifier
+    from camelot_spark.pipeline import load_documents
     from camelot_spark.snapshots import SnapshotLog
 
     spark = SparkSession.builder.appName("camelot-spark-curate").config(
         "spark.sql.adaptive.enabled", "true").getOrCreate()
-    # same table-vs-path rule as extract_job (jobs/ is not packaged in
-    # the --py-files zip, so the loader is inlined here)
-    docs = (spark.read.table(args.input) if is_table_identifier(args.input)
-            else spark.read.parquet(args.input))
+    docs = load_documents(spark, args.input)
     curated, report = apply_steps(spark, docs, args)
     manifest = SnapshotLog(args.output).append(
         curated, metrics={"steps": report})

@@ -47,17 +47,6 @@ def parse_kw(pairs: list[str]) -> dict:
     return out
 
 
-def load_documents(spark, path: str):
-    """Iceberg/catalog table name or parquet path — same rule as the
-    writer (`pipeline.is_table_identifier`): no '/' means table; use
-    './dir' for a relative parquet directory."""
-    from camelot_spark.pipeline import is_table_identifier
-
-    if is_table_identifier(path):
-        return spark.read.table(path)
-    return spark.read.parquet(path)
-
-
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--input", required=True, help="documents: parquet path or catalog table (no '/' = table; use ./dir for relative paths)")
@@ -85,7 +74,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import SparkSession
 
-    from camelot_spark.pipeline import run_extraction
+    from camelot_spark.pipeline import load_documents, run_extraction
 
     spark = SparkSession.builder.appName(
         f"camelot-spark-extract-{args.flavor}"

@@ -28,7 +28,6 @@ def test_curate_job_steps_and_snapshot(spark, tmp_path):
         steps = "quality,dedup_exact,sample"
         min_quality = 300
         substr_k = 40
-        cc_algorithm = "star"
         sample_rates = "en=1000000,fr=0"
         strata_col = "lang"
 
@@ -63,7 +62,6 @@ def test_curate_strip_substr_step(spark):
         steps = "strip_substr"
         min_quality = 0
         substr_k = 20
-        cc_algorithm = "star"
         sample_rates = ""
         strata_col = "lang"
 
@@ -151,7 +149,6 @@ def test_curate_classifier_step(spark):
         steps = "classifier"
         min_quality = 0
         substr_k = 40
-        cc_algorithm = "star"
         near_threshold = 7000
         sample_rates = ""
         strata_col = "lang"
@@ -177,7 +174,6 @@ def test_curate_classifier_skips_one_class_corpus(spark):
         steps = "classifier"
         min_quality = 0
         substr_k = 40
-        cc_algorithm = "star"
         near_threshold = 7000
         sample_rates = ""
         strata_col = "lang"
@@ -203,7 +199,6 @@ def test_curate_classifier_passes_through_tokenless_docs(spark):
         steps = "classifier"
         min_quality = 0
         substr_k = 40
-        cc_algorithm = "star"
         near_threshold = 7000
         sample_rates = ""
         strata_col = "lang"
@@ -225,7 +220,6 @@ def test_curate_split_step_annotates_without_filtering(spark):
         steps = "split"
         min_quality = 300
         substr_k = 40
-        cc_algorithm = "star"
         sample_rates = ""
         strata_col = "lang"
         train_ppm = 600_000
@@ -252,7 +246,6 @@ def test_curate_boilerplate_and_ppl_mix_steps(spark):
         steps = "boilerplate"
         min_quality = 300
         substr_k = 40
-        cc_algorithm = "star"
         sample_rates = ""
         strata_col = "lang"
         boilerplate_ratio_ppm = 500_000
@@ -269,7 +262,6 @@ def test_curate_boilerplate_and_ppl_mix_steps(spark):
         steps = "ppl_mix"
         min_quality = 300
         substr_k = 40
-        cc_algorithm = "star"
         sample_rates = ""
         strata_col = "lang"
         ppl_rates = "1000000,1000000,1000000"

@@ -58,3 +58,14 @@ def test_entry_contract(spark):
     assert len(rows) > 0
     assert {"doc_id", "n_tables", "n_spans", "accuracy", "whitespace"} <= set(df.columns)
     assert all(r["n_tables"] >= 1 for r in rows)
+
+
+def test_load_binds_each_session_and_pins_utc(spark):
+    """_load memoizes handles per session: a second session of the same
+    application gets a DataFrame bound to itself, and is put on UTC."""
+    entrymod._load(spark, SF_DIR, "documents")
+    other = spark.newSession()
+    other.conf.set("spark.sql.session.timeZone", "America/New_York")
+    df = entrymod._load(other, SF_DIR, "documents")
+    assert df.sparkSession is other
+    assert other.conf.get("spark.sql.session.timeZone") == "UTC"

@@ -197,8 +197,8 @@ def test_scrub_pii_undecorated_reports_only_true_hits(spark):
 
 
 def test_connected_components_matches_union_find(spark):
-    """Fixed-round min-label propagation vs a true union-find on random
-    graphs: with rounds >= diameter the labels are exact components."""
+    """Min-label propagation run to its fixpoint vs a true union-find on
+    a random graph: the labels are exact components."""
     import random
 
     from camelot_spark.tdp.dedup import connected_components
@@ -209,40 +209,35 @@ def test_connected_components_matches_union_find(spark):
     pairs = [(a, b) for a, b in pairs if a != b]
     df = spark.createDataFrame(pairs, "a_id long, b_id long")
     got = {r["doc_id"]: r["component"]
-           for r in connected_components(df, rounds=10).collect()}
-
-    parent = {n: n for n in nodes}
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    touched = {x for p in pairs for x in p}
-    want = {}
-    for n in touched:
-        root = find(n)
-        want[n] = min(m for m in touched if find(m) == root)
-    assert got == want
+           for r in connected_components(df).collect()}
+    assert got == _union_find_components(pairs)
 
 
 def test_connected_components_long_chain_needs_rounds(spark):
-    """A 12-node chain: rounds below the diameter leave far nodes
-    unconverged (documented fixed-round semantics); enough rounds
-    collapse the whole chain to one component."""
+    """A 12-node chain needs 11 propagation rounds; run to its fixpoint,
+    it collapses to one component."""
     from camelot_spark.tdp.dedup import connected_components
 
     chain = [(i, i + 1) for i in range(11)]
     df = spark.createDataFrame(chain, "a_id long, b_id long")
     full = {r["doc_id"]: r["component"]
-            for r in connected_components(df, rounds=12).collect()}
-    assert set(full.values()) == {0}
-    partial = {r["doc_id"]: r["component"]
-               for r in connected_components(df, rounds=2).collect()}
-    assert partial[11] != 0  # honest: 2 rounds cannot reach 11 hops
+            for r in connected_components(df).collect()}
+    assert len(full) == 12 and set(full.values()) == {0}
+
+
+def test_dedup_groups_default_joins_12_hop_chain(spark):
+    """dedup_groups with default arguments groups a 12-hop pair chain
+    into one component with one canonical doc: propagation runs past
+    the 8-round depth of the oracle twins when the graph needs it."""
+    from camelot_spark.tdp.dedup import dedup_groups
+
+    docs = spark.createDataFrame(
+        [(i, f"doc {i}") for i in range(13)], "doc_id long, text string")
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "a_id long, b_id long")
+    got = {r["doc_id"]: (r["component"], r["is_canonical"])
+           for r in dedup_groups(docs, pairs=chain).collect()}
+    assert got == {i: (0, int(i == 0)) for i in range(13)}
 
 
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):
@@ -343,11 +338,12 @@ def _union_find_components(pairs):
 
 
 def test_star_cc_matches_union_find_on_random_graphs(spark):
-    """Large-star/small-star contraction returns TRUE components (vs a
-    union-find oracle) on random graphs, cliques, and self-loops."""
+    """The cases that pinned the removed star contraction, now run on
+    the one connected_components: self-loops, cliques and random graphs
+    all give TRUE components (vs a union-find oracle)."""
     import random
 
-    from camelot_spark.tdp.dedup import connected_components_star
+    from camelot_spark.tdp.dedup import connected_components
 
     rng = random.Random(7)
     cases = [
@@ -361,38 +357,21 @@ def test_star_cc_matches_union_find_on_random_graphs(spark):
     for pairs in cases:
         df = spark.createDataFrame(pairs, "a_id long, b_id long")
         got = {r["doc_id"]: r["component"]
-               for r in connected_components_star(df).collect()}
+               for r in connected_components(df).collect()}
         assert got == _union_find_components(pairs)
 
 
 def test_star_cc_converges_on_huge_diameter_component(spark):
-    """The O(log n) motivation: a 60-hop path collapses to one component
-    in few contraction iterations, where fixed-round min-label would
-    need 60 rounds (cf. test_connected_components_long_chain_needs_rounds)."""
-    from camelot_spark.tdp.dedup import connected_components_star
+    """A long path (20 hops, past the 8-round depth of the oracle twins)
+    collapses to one component: connected_components keeps propagating
+    until no label changes."""
+    from camelot_spark.tdp.dedup import connected_components
 
-    chain = [(i, i + 1) for i in range(60)]
+    chain = [(i, i + 1) for i in range(20)]
     df = spark.createDataFrame(chain, "a_id long, b_id long")
     got = {r["doc_id"]: r["component"]
-           for r in connected_components_star(df, max_iters=8).collect()}
-    assert len(got) == 61 and set(got.values()) == {0}
-
-
-def test_dedup_groups_star_equals_rounds_on_corpus(spark):
-    """On the real sampled corpus (dense near-dup clusters), the star
-    algorithm and converged fixed-round propagation produce identical
-    groups — the contract behind DEDUP_GROUPS_STAR_SQL's oracle."""
-    from pyspark.sql import functions as F
-
-    from camelot_spark.tdp.dedup import dedup_groups
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").where(
-        F.col("doc_id") % 2 == 0)
-    a = {(r["doc_id"], r["component"], r["is_canonical"])
-         for r in dedup_groups(docs, portable=True, algorithm="star").collect()}
-    b = {(r["doc_id"], r["component"], r["is_canonical"])
-         for r in dedup_groups(docs, portable=True, rounds=12).collect()}
-    assert a == b and len(a) > 0
+           for r in connected_components(df).collect()}
+    assert len(got) == 21 and set(got.values()) == {0}
 
 
 def test_kmv_partial_agg_identical_to_plain(spark):

@@ -1,5 +1,6 @@
 """Round-4 fixes: verified near-dup curation, degenerate-corpus BPE
-oracle, star-CC convergence reporting, JPEG marker-scan robustness."""
+oracle, connected-components convergence reporting, JPEG marker-scan
+robustness."""
 
 import os
 import sys
@@ -65,7 +66,6 @@ def test_curate_dedup_near_verified_end_to_end(spark):
         steps = "dedup_near"
         min_quality = 0
         substr_k = 40
-        cc_algorithm = "star"
         near_threshold = 7000
         sample_rates = ""
         strata_col = "lang"
@@ -100,15 +100,16 @@ def test_bpe_oracle_degenerate_corpus_matches(spark):
     assert counts[0] == 4          # no merges applicable -> 4 tokens
 
 
-def test_star_cc_raises_when_not_converged(spark):
-    """Exhausting max_iters before the edge-set fixpoint must raise, not
+def test_connected_components_raises_when_not_converged(spark, monkeypatch):
+    """Reaching the round cap before the label fixpoint must raise, not
     return silently split components."""
-    from camelot_spark.tdp.dedup import connected_components_star
+    from camelot_spark.tdp import dedup
 
-    edges = [(i, i + 1) for i in range(0, 40)]
+    monkeypatch.setattr(dedup, "_CC_MAX_ROUNDS", 2)
+    edges = [(i, i + 1) for i in range(0, 6)]
     df = spark.createDataFrame(edges, "a_id long, b_id long")
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components_star(df, max_iters=1).collect()
+        dedup.connected_components(df)
 
 
 def test_jpeg_marker_scan_handles_fill_bytes_and_standalone_markers():

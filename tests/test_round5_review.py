@@ -412,7 +412,7 @@ class TestStreamingNeardup:
                 (2, t + " lambda"), (3, "nine ten eleven twelve thirteen"),
                 (4, t)]
 
-    def _run(self, spark, batches, tmp_path, **kwargs):
+    def _run(self, spark, batches, tmp_path, portable=True, **kwargs):
         from camelot_spark.streaming import streaming_neardup_pairs
 
         inp, outp, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
@@ -422,7 +422,7 @@ class TestStreamingNeardup:
                 .coalesce(1).write.mode("append").parquet(inp)
             stream = (spark.readStream.schema("doc_id long, text string")
                       .parquet(inp))
-            q = (streaming_neardup_pairs(stream, portable=True, **kwargs)
+            q = (streaming_neardup_pairs(stream, portable=portable, **kwargs)
                  .writeStream.option("checkpointLocation", ckpt)
                  .outputMode("append").trigger(availableNow=True)
                  .format("parquet").option("path", outp).start())
@@ -431,10 +431,7 @@ class TestStreamingNeardup:
             pairs.add((r["a_id"], r["b_id"]))
         return pairs
 
-    def test_matches_batch_pairs_and_crosses_batches(self, spark, tmp_path):
-        """A streaming run over a static corpus reproduces the batch
-        LSH candidate set exactly — including the pair whose second
-        member arrives two micro-batches after the first."""
+    def _check_matches_batch(self, spark, tmp_path, portable):
         from camelot_spark.tdp.dedup import minhash_lsh_pairs
 
         docs = self._docs()
@@ -442,11 +439,23 @@ class TestStreamingNeardup:
             (r["a_id"], r["b_id"])
             for r in minhash_lsh_pairs(
                 spark.createDataFrame(docs, "doc_id long, text string"),
-                portable=True).collect()
+                portable=portable).collect()
         }
-        got = self._run(spark, [docs[:2], docs[2:4], docs[4:]], tmp_path)
+        got = self._run(spark, [docs[:2], docs[2:4], docs[4:]], tmp_path,
+                        portable=portable)
         assert got == batch_pairs
         assert (0, 4) in got          # members arrived in batches 1 and 3
+
+    def test_matches_batch_pairs_and_crosses_batches(self, spark, tmp_path):
+        """A streaming run over a static corpus reproduces the batch
+        LSH candidate set exactly — including the pair whose second
+        member arrives two micro-batches after the first."""
+        self._check_matches_batch(spark, tmp_path, portable=True)
+
+    def test_production_family_matches_batch_pairs(self, spark, tmp_path):
+        """The xxhash64 family streams through the same signature plan
+        as batch, so it reproduces the batch candidate set too."""
+        self._check_matches_batch(spark, tmp_path, portable=False)
 
     def test_redelivery_is_dropped(self, spark, tmp_path):
         docs = self._docs()
