@@ -584,13 +584,6 @@ _DRIVER_CHECKED_LAST_ROUND = frozenset({
     "top_ngrams", "topk_cap", "winnow_fingerprints",
 })
 
-# Queries with no DuckDB twin get only the weaker rows-only check —
-# sort them after oracled peers of the same recency so the
-# hash-verifying budget is spent first. EMPTY since r6: the extraction
-# flagships and the xxhash64 dedup quartet now carry expected-values
-# oracles (kernel-generated and pyhash-generated VALUES twins).
-_ROWS_ONLY: frozenset = frozenset()
-
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Registry in stable (family-grouped) order; the driver-facing
@@ -883,12 +876,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dup_substring_stats": _substr_query("stats"),
         "strip_dup_substrings": _substr_query("strip"),
     }
-    # Least-verified-first rotation: (0) oracled queries missed last
-    # round, (1) rows-only missed last round, (2) oracled re-checks,
-    # (3) rows-only re-checks. Stable within each tier.
+    # Least-verified-first rotation: queries missed last round first,
+    # then re-checks. Stable within each tier.
     def tier(name: str) -> int:
-        return (2 * (name in _DRIVER_CHECKED_LAST_ROUND)
-                + (name in _ROWS_ONLY))
+        return name in _DRIVER_CHECKED_LAST_ROUND
 
     return {k: registry[k] for k in sorted(registry, key=tier)}
 

@@ -7,7 +7,7 @@ ordered by the reference's bottom-y-descending sort
 `camelot/core.py:364-370`), prose (text not consumed by any table)
 interleaves by position, ``media`` spans pass through. Pure
 pandas/numpy — Spark-free, so it is unit-testable and reusable from
-both ``mapInPandas`` and local tests.
+both ``mapInArrow`` and local tests.
 """
 
 from __future__ import annotations

@@ -797,17 +797,6 @@ STREAM_FAMILIES = ["health", "twotables", "prose"]
 LATTICE_FAMILIES = ["foo", "rowspan"]
 
 
-def families_by_flavor() -> tuple[list[str], list[str]]:
-    """Every family split by its native flavor — the bench's
-    full-corpus (raster-weighted) tiling, vs the 5-family headline."""
-    st: list[str] = []
-    lat: list[str] = []
-    for name, make in FAMILIES.items():
-        b = make(f"{name}-probe")
-        (lat if b.flavor == "lattice" else st).append(name)
-    return st, lat
-
-
 def families_by_config() -> list[tuple[str, dict, list[str]]]:
     """Full-corpus bench tiling: (flavor, extract_kwargs, families)
     groups so every family is timed under the config its golden runs

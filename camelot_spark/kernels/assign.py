@@ -160,8 +160,9 @@ def get_table_index(
 
 
 def assign_indices_batch(grid: Grid, frame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Vectorized `get_table_index` over a whole TL frame (the hot path
-    when neither split_text nor flag_size rewrites the text).
+    """Vectorized `get_table_index` over a whole TL frame: the row,
+    column and error of every line ``assign_text`` places, whatever
+    text split_text or flag_size then chooses.
 
     Same math as the scalar version — row = first interval containing
     the y-midpoint, col = argmax x-overlap ratio, error = normalized

@@ -9,6 +9,7 @@ list scan beats numpy dispatch overhead at this size by ~30×).
 
 from __future__ import annotations
 
+import math
 from bisect import insort
 
 import numpy as np
@@ -46,7 +47,7 @@ class EdgeState:
 
 
 def _try_fast_alignment(st: EdgeState, xarr, keep, y0l, y1l, edge_tol: float) -> bool:
-    """Exact vectorized fold for the separable case; False → caller
+    """Exact cluster-wise fold for the separable case; False → caller
     runs the sequential fold.
 
     When the alignment's x-coords form clusters of diameter ≤ 0.49
@@ -63,47 +64,24 @@ def _try_fast_alignment(st: EdgeState, xarr, keep, y0l, y1l, edge_tol: float) ->
     if n == 0:
         return True
     xs_l = [xarr[i] for i in keep]
-    if n <= 96:
-        # typical documents: numpy's per-call constants (fromiter,
-        # argsort, concatenate) dominate at n≈30 — the same clustering
-        # as a pure-Python scan is ~2x faster. Semantics identical.
-        import math
-
-        if not all(map(math.isfinite, xs_l)):
+    # clustering by a sorted pure-Python scan: at the few dozen lines a
+    # page carries, numpy's per-call constants would dominate
+    if not all(map(math.isfinite, xs_l)):
+        return False
+    order = sorted(range(n), key=xs_l.__getitem__)  # stable
+    sx = [xs_l[o] for o in order]
+    gap_min = 0.52 + 1.0e-5 * max(abs(sx[0]), abs(sx[-1]))
+    cid_l = [0] * n
+    c = 0
+    cluster_lo = sx[0]
+    for t in range(1, n):
+        v = sx[t]
+        if v - sx[t - 1] > gap_min:
+            c += 1
+            cluster_lo = v
+        elif v - cluster_lo > 0.49:
             return False
-        order = sorted(range(n), key=xs_l.__getitem__)  # stable
-        sx = [xs_l[o] for o in order]
-        gap_min = 0.52 + 1.0e-5 * max(abs(sx[0]), abs(sx[-1]))
-        cid_l = [0] * n
-        c = 0
-        cluster_lo = sx[0]
-        for t in range(1, n):
-            v = sx[t]
-            if v - sx[t - 1] > gap_min:
-                c += 1
-                cluster_lo = v
-            elif v - cluster_lo > 0.49:
-                return False
-            cid_l[order[t]] = c
-    else:
-        xs = np.fromiter(xs_l, dtype=np.float64, count=n)
-        if not np.isfinite(xs).all():
-            return False
-        order = np.argsort(xs, kind="stable")
-        sx = xs[order]
-        max_abs = max(abs(float(sx[0])), abs(float(sx[-1])))
-        gap_min = 0.52 + 1.0e-5 * max_abs
-        boundaries = np.flatnonzero(np.diff(sx) > gap_min)
-        starts = np.concatenate(([0], boundaries + 1))
-        ends = np.concatenate((boundaries + 1, [n]))
-        if (sx[ends - 1] - sx[starts] > 0.49).any():
-            return False
-
-        ncl = len(starts)
-        cid_sorted = np.repeat(np.arange(ncl), ends - starts)
-        cid = np.empty(n, dtype=np.int64)
-        cid[order] = cid_sorted
-        cid_l = cid.tolist()
+        cid_l[order[t]] = c
 
     ex, ey0, ey1, eint = st.x, st.y0, st.y1, st.intersections
     edge_of: dict[int, int] = {}

@@ -40,45 +40,33 @@ def assign_text(
 ) -> list[float]:
     """Run the assignment loop; returns per-line position errors.
 
-    ``shift_text`` non-None triggers the Lattice spanning-cell shift
-    (`lattice.py:353-356`); the reference's ``indices[:2] != (-1, -1)``
-    guard is always true (list vs tuple), so assignment is
-    unconditional here too.
+    Row, column and error of every line come from one
+    ``assign_indices_batch`` pass per direction; per line only the text
+    is chosen: ``split_textline`` cuts, ``flag_font_size`` or
+    ``text_strip``. ``shift_text`` non-None triggers the Lattice
+    spanning-cell shift (`lattice.py:353-356`); the reference's
+    ``indices[:2] != (-1, -1)`` guard is always true (list vs tuple), so
+    assignment is unconditional here too.
     """
-    from ..kernels.textproc import text_strip
+    from ..kernels.textproc import flag_font_size, text_strip
 
     pos_errors: list[float] = []
-    fast = not split_text and not flag_size
     for direction in ("vertical", "horizontal"):
         frame = t_bbox[direction]
-        if fast:
-            # batched T1: one broadcast pass instead of a Python call per
-            # line; identical math to get_table_index (kernels/assign.py)
-            r_idx, c_idx, errors = asg.assign_indices_batch(grid, frame)
-            pos_errors.extend(errors.tolist())
-            for i in range(len(frame)):
-                indices = [(int(r_idx[i]), int(c_idx[i]),
-                            text_strip(frame.text[i], strip_text))]
-                if shift_text is not None:
-                    indices = asg.reduce_index(grid, indices, shift_text=shift_text)
-                for r, c, text in indices:
-                    grid.append_text(r, c, text)
-            continue
+        r_idx, c_idx, errors = asg.assign_indices_batch(grid, frame)
+        pos_errors.extend(errors.tolist())
         for i in range(len(frame)):
-            tline = frame.line_dict(i)
-            indices, error = asg.get_table_index(
-                grid,
-                tline,
-                direction,
-                split_text=split_text,
-                flag_size=flag_size,
-                strip_text=strip_text,
-            )
-            pos_errors.append(error)
+            if split_text:
+                indices = asg.split_textline(grid, frame.line_dict(i), direction,
+                                             flag_size=flag_size, strip_text=strip_text)
+            else:
+                text = (flag_font_size(frame.chars[i] or [], direction, strip_text) if flag_size
+                        else text_strip(frame.text[i], strip_text))
+                indices = [(int(r_idx[i]), int(c_idx[i]), text)]
             if shift_text is not None:
                 indices = asg.reduce_index(grid, indices, shift_text=shift_text)
-            for r_idx, c_idx, text in indices:
-                grid.append_text(r_idx, c_idx, text)
+            for r, c, text in indices:
+                grid.append_text(r, c, text)
     return pos_errors
 
 

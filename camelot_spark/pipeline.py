@@ -21,139 +21,55 @@ from __future__ import annotations
 
 import time
 import traceback
-from collections.abc import Iterator
-
-import pandas as pd
 
 from .config import LatticeConfig, StreamConfig, make_config
 from .extract_doc import extract_document
-from .schema import EXTRACTED_SCHEMA, KERNEL_VERSION
+from .schema import DOCUMENTS_SCHEMA, EXTRACTED_SCHEMA, KERNEL_VERSION
 
 
-def synthesize_documents(source_df, key_col: str = "doc_id", families: list[str] | None = None):
+def _arrow_batch(rows: list[tuple], schema):
+    """RecordBatch of the Spark ``schema`` (one of ``schema.py``'s) from
+    row tuples nested the same way: structs as tuples, arrays as lists
+    of tuples. ``to_arrow_schema`` gives the Arrow types, plain ``list``
+    and the non-null fields included."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return pa.RecordBatch.from_struct_array(
+        pa.array(rows, type=pa.struct(to_arrow_schema(schema))))
+
+
+def synthesize_documents(source_df, families: list[str] | None = None):
     """Distributed fixture-corpus synthesis: one span-document per input
-    row, deterministically derived from the row's key (FIXTURES.md §4).
+    ``doc_id``, deterministically derived from that key (FIXTURES.md §4).
     Generation happens on executors inside Arrow batches — no
     driver-side corpus materialization at any scale."""
-    from .schema import DOCUMENTS_SCHEMA
-
     ensure_shipped(source_df.sparkSession)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def gen(batches):
         from camelot_spark import fixtures as fx
 
-        for pdf in batches:
-            out = {"doc_id": [], "spans": []}
-            for k in pdf[key_col].astype(str):
-                b = fx.builder_for(k, families=families)
-                out["doc_id"].append(b.doc_id)
-                out["spans"].append(
-                    [{"kind": s["kind"], "text": s["text"],
-                      "media_ref": s["media_ref"], "offset": s["offset"]}
-                     for s in b.spans]
-                )
-            yield pd.DataFrame(out)
+        for batch in batches:
+            rows = []
+            for k in batch.column(0).to_pylist():
+                b = fx.builder_for(str(k), families=families)
+                rows.append((b.doc_id, [(s["kind"], s["text"], s["media_ref"], s["offset"])
+                                        for s in b.spans]))
+            yield _arrow_batch(rows, DOCUMENTS_SCHEMA)
 
-    return source_df.select(key_col).mapInPandas(gen, schema=DOCUMENTS_SCHEMA)
+    return source_df.select("doc_id").mapInArrow(gen, schema=DOCUMENTS_SCHEMA)
 
 
 def _results_to_arrow(results: list[tuple], flavor: str, partition_id: int, attempt: int):
-    """Build the output RecordBatch columnar-ly: flat value arrays +
-    offsets → ListArray(StructArray), skipping the pandas object path
-    (which re-boxes every span dict — measured ~2x per-doc overhead)."""
-    import pyarrow as pa
-
-    doc_ids, n_tables, accs, wss = [], [], [], []
-    sp_kind, sp_text, sp_media, sp_order = [], [], [], []
-    sp_offsets = [0]
-    tb_order, tb_acc, tb_ws, tb_nr, tb_nc = [], [], [], [], []
-    tb_x0, tb_y0, tb_x1, tb_y1 = [], [], [], []
-    tb_offsets = [0]
-    ln_elapsed, ln_nspans, ln_err = [], [], []
-
-    for doc_id, res, n_in, elapsed, err in results:
-        doc_ids.append(doc_id)
-        n_tables.append(res["n_tables"])
-        accs.append(res["accuracy"])
-        wss.append(res["whitespace"])
-        for k, t, m, o in res["spans"]:
-            sp_kind.append(k)
-            sp_text.append(t)
-            sp_media.append(m)
-            sp_order.append(o)
-        sp_offsets.append(len(sp_kind))
-        for t in res["tables"]:
-            tb_order.append(t.order)
-            tb_acc.append(t.accuracy)
-            tb_ws.append(t.whitespace)
-            tb_nr.append(t.nrows)
-            tb_nc.append(t.ncols)
-            tb_x0.append(t.bbox[0])
-            tb_y0.append(t.bbox[1])
-            tb_x1.append(t.bbox[2])
-            tb_y1.append(t.bbox[3])
-        tb_offsets.append(len(tb_order))
-        ln_elapsed.append(elapsed)
-        ln_nspans.append(n_in)
-        ln_err.append(err)
-
-    n = len(doc_ids)
-    spans = pa.ListArray.from_arrays(
-        pa.array(sp_offsets, pa.int32()),
-        pa.StructArray.from_arrays(
-            [
-                pa.array(sp_kind, pa.string()),
-                pa.array(sp_text, pa.string()),
-                pa.array(sp_media, pa.string()),
-                pa.array(sp_order, pa.int32()),
-            ],
-            names=["kind", "text", "media_ref", "order"],
-        ),
-    )
-    tables = pa.ListArray.from_arrays(
-        pa.array(tb_offsets, pa.int32()),
-        pa.StructArray.from_arrays(
-            [
-                pa.array(tb_order, pa.int32()),
-                pa.array(tb_acc, pa.float64()),
-                pa.array(tb_ws, pa.float64()),
-                pa.array(tb_nr, pa.int32()),
-                pa.array(tb_nc, pa.int32()),
-                pa.array(tb_x0, pa.float64()),
-                pa.array(tb_y0, pa.float64()),
-                pa.array(tb_x1, pa.float64()),
-                pa.array(tb_y1, pa.float64()),
-            ],
-            names=["order", "accuracy", "whitespace", "nrows", "ncols",
-                   "x0", "y0", "x1", "y1"],
-        ),
-    )
-    lineage = pa.StructArray.from_arrays(
-        [
-            pa.array([partition_id] * n, pa.int32()),
-            pa.array([KERNEL_VERSION] * n, pa.string()),
-            pa.array([flavor] * n, pa.string()),
-            pa.array([attempt] * n, pa.int32()),
-            pa.array(ln_nspans, pa.int32()),
-            pa.array(ln_elapsed, pa.int64()),
-            pa.array(ln_err, pa.string()),
-        ],
-        names=["partition_id", "kernel_version", "flavor", "attempt",
-               "n_input_spans", "elapsed_us", "error"],
-    )
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(doc_ids, pa.string()),
-            spans,
-            pa.array(n_tables, pa.int32()),
-            pa.array(accs, pa.float64()),
-            pa.array(wss, pa.float64()),
-            tables,
-            lineage,
-        ],
-        names=["doc_id", "spans", "n_tables", "accuracy", "whitespace",
-               "tables", "lineage"],
-    )
+    """One output RecordBatch (EXTRACTED_SCHEMA) from ``_run_docs``
+    results; each row tuple follows the schema's field order."""
+    return _arrow_batch(
+        [(doc_id, res["spans"], res["n_tables"], res["accuracy"], res["whitespace"],
+          [(t.order, t.accuracy, t.whitespace, t.nrows, t.ncols, *t.bbox)
+           for t in res["tables"]],
+          (partition_id, KERNEL_VERSION, flavor, attempt, n_in, elapsed, err))
+         for doc_id, res, n_in, elapsed, err in results],
+        EXTRACTED_SCHEMA)
 
 
 def _run_docs(docs_iter, cfg, fail_fast) -> list[tuple]:
@@ -206,7 +122,6 @@ def synthesize_and_extract(
     keys_df,
     flavor: str,
     families: list[str] | None = None,
-    key_col: str = "doc_id",
     fail_fast: bool = False,
     **kwargs,
 ):
@@ -233,7 +148,7 @@ def synthesize_and_extract(
 
         yield from _extract_arrow_iter(batches, cfg, fail_fast, docs_of=docs)
 
-    return keys_df.select(key_col).mapInArrow(gen, schema=EXTRACTED_SCHEMA)
+    return keys_df.select("doc_id").mapInArrow(gen, schema=EXTRACTED_SCHEMA)
 
 
 _SHIPPED_SESSIONS: set[int] = set()
@@ -268,7 +183,6 @@ def extract(
     documents,
     flavor: str = "lattice",
     salt_partitions: int | None = None,
-    salt: int = 0,
     fail_fast: bool = False,
     **kwargs,
 ):
@@ -286,7 +200,7 @@ def extract(
     df = documents.select("doc_id", "spans")
     if salt_partitions:
         df = df.repartition(
-            salt_partitions, F.pmod(F.xxhash64("doc_id", F.lit(salt)), F.lit(salt_partitions))
+            salt_partitions, F.pmod(F.xxhash64("doc_id", F.lit(0)), F.lit(salt_partitions))
         )
     return df.mapInArrow(
         lambda it: _extract_arrow_iter(it, cfg, fail_fast), schema=EXTRACTED_SCHEMA

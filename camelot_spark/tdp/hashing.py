@@ -44,7 +44,3 @@ def char_fold_sql(expr: str, modulus: int = POLY_M) -> str:
             f"list_transform(string_split({expr}, ''), "
             f"c -> CAST(ord(c) AS BIGINT))), "
             f"(a, b) -> (a * 31 + b) % {modulus})")
-
-
-def prime_mix_sql(expr: str, out_modulus: int) -> str:
-    return f"((({expr}) * {MIX_A} + {MIX_B}) % {POLY_M}) % {out_modulus}"

@@ -143,8 +143,13 @@ def quality_classifier_predictions(documents: DataFrame) -> DataFrame:
     pred, y, correct) with score2 = 2·(w·x) − bias_term (kept
     multiplicative — no division of signed values)."""
     feats, labels = _checkpointed(documents)
-    model = _train_from(documents.sparkSession, feats, labels) \
-        .localCheckpoint(eager=True)
+    return _predictions_from(documents.sparkSession, feats, labels)
+
+
+def _predictions_from(spark, feats: DataFrame, labels: DataFrame) -> DataFrame:
+    """``quality_classifier_predictions`` over already-materialized
+    features and labels (``_checkpointed``)."""
+    model = _train_from(spark, feats, labels).localCheckpoint(eager=True)
     w = model.where("bucket >= 0").withColumnRenamed("weight", "wt")
     bias = model.where("bucket = -1").select(
         F.col("weight").alias("bias_term"))

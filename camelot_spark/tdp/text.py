@@ -931,38 +931,6 @@ FROM sc ORDER BY dist, doc_id LIMIT 10
 """
 
 
-def _hashed_pivot_row(documents: DataFrame, dim: int, n_cells: int):
-    """``similarity._pivot_row`` over hashed text vectors, with the vec
-    pipeline run for ONLY the K pivot docs: pivot selection depends
-    just on hash(doc_id), so the K ids come from a TakeOrdered over
-    the raw table's DISTINCT ids (feature_hash_vec pools duplicate and
-    NULL doc_ids into one vector each, so the ranked universe must be
-    distinct ids too — and the hash ranking is the shared
-    ``_pivot_hash``, so this subset feeds ``_pivot_row`` exactly the
-    docs it would have picked from the full corpus). The null-safe
-    left_semi keeps every raw row of a pivot doc (incl. a NULL-id
-    pool), making the K pooled vectors equal the full-corpus path's
-    exactly — pinned by
-    tests/test_round6.py::test_hashed_pivot_preselection_matches_full.
-    One full corpus-wide vec compute saved; local sf0.1 timing is
-    unchanged (~4.3 s — the 8 interpreted per-pivot distance folds
-    dominate there), but at scale the removed pipeline is a full
-    scan+explode+agg of the corpus."""
-    from .similarity import _pivot_hash, _pivot_row
-
-    pivot_ids = (documents.select("doc_id").distinct()
-                 .select("doc_id", _pivot_hash(F.col("doc_id")).alias("__h"))
-                 .orderBy("__h", "doc_id").limit(n_cells)
-                 .select(F.col("doc_id").alias("__pivot_id")))
-    pivot_docs = documents.join(
-        F.broadcast(pivot_ids),
-        F.col("doc_id").eqNullSafe(F.col("__pivot_id")), "left_semi")
-    return _pivot_row(
-        feature_hash_vec(pivot_docs, dim).select(
-            F.col("doc_id").alias("vec_id"),
-            F.col("vec").alias("embedding")), n_cells)
-
-
 def hashed_ivf_topk(documents: DataFrame, query_doc_id: int = 0,
                     k: int = 10, dim: int = 64, n_cells: int = 8,
                     probes: int = 2) -> DataFrame:
@@ -980,17 +948,13 @@ def hashed_ivf_topk(documents: DataFrame, query_doc_id: int = 0,
     slice reaches the exact distance rank, whose lone-rank filter plans
     the k-row TakeOrdered pre-reduce. Output (doc_id, dist, rank).
 
-    r7: the hashed-vector projection is computed ONCE and
-    localCheckpoint'ed — the old plan recomputed the corpus-wide
-    scan+explode+partial-agg pipeline in the pivot, assignment and
-    query branches (36 Exchanges; VERDICT r6 flagged the sharing
-    candidate). Pivot selection moves onto the materialized projection:
-    ``_pivot_row`` ranks its doc_ids by the same shared ``_pivot_hash``
-    the raw-table pre-selection used, so the K pivots and their pooled
-    vectors are identical (that equality was already pinned by
-    tests/test_round6.py::test_hashed_pivot_preselection_matches_full).
-    The checkpoint is (doc_id, 64 longs) per doc — the IVF index-build
-    artifact, linear in corpus size, no text."""
+    The hashed-vector projection is computed ONCE and
+    localCheckpoint'ed, and the pivot, assignment and query branches
+    all read it (recomputing the corpus-wide scan+explode+partial-agg
+    pipeline per branch cost 36 Exchanges). ``_pivot_row`` picks the K
+    pivots from that projection, ranking its doc_ids by the shared
+    ``_pivot_hash``. The checkpoint is (doc_id, 64 longs) per doc — the
+    IVF index-build artifact, linear in corpus size, no text."""
     from .similarity import _pivot_row
 
     emb = feature_hash_vec(documents, dim).localCheckpoint()

@@ -163,14 +163,13 @@ def apply_steps(spark, docs, args):
             #   steps) PASS THROUGH via anti-join on the drop set —
             #   the classifier never decided on them, so it must not
             #   delete them (the dedup_near pass-through discipline).
-            from camelot_spark.tdp.perceptron import (
-                _features_and_labels, quality_classifier_predictions)
+            from camelot_spark.tdp.perceptron import _checkpointed, _predictions_from
 
-            _, labels = _features_and_labels(docs)
+            feats, labels = _checkpointed(docs)
             classes = {r["y"] for r in
                        labels.select("y").distinct().collect()}
             if classes == {1, -1}:
-                drop = quality_classifier_predictions(docs).where(
+                drop = _predictions_from(spark, feats, labels).where(
                     F.col("pred") == -1).select("doc_id")
                 docs = docs.join(drop, "doc_id", "left_anti")
             else:

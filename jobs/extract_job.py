@@ -58,7 +58,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--salt-partitions", type=int, default=None,
                     help="explicit salted repartition width for skew (north_rule); "
                          "omit to keep scan partitioning (no shuffle)")
-    ap.add_argument("--salt", type=int, default=0)
     ap.add_argument("--resume", action="store_true", default=True,
                     help="anti-join against existing output (default on)")
     ap.add_argument("--no-resume", dest="resume", action="store_false")

@@ -1,4 +1,4 @@
-"""Spark end-to-end: documents DataFrame → mapInPandas kernel →
+"""Spark end-to-end: documents DataFrame → mapInArrow kernel →
 extracted DataFrame; golden equality, error capture, checkpoint/resume,
 and plan shape (no unnecessary shuffle)."""
 
@@ -23,6 +23,47 @@ def stream_builders():
         fx.doc_rotated("clockwise", "rotcw-s0"),
         fx.doc_blank("blank-s0"),
     ]
+
+
+def test_results_to_arrow_follows_extracted_schema():
+    """The output batch has EXTRACTED_SCHEMA's Arrow types (plain
+    ``list``, the declared non-null fields) and exactly the input rows:
+    a Stream doc, a Lattice doc with tables, an error doc, no docs."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from camelot_spark import extract_document, make_config
+    from camelot_spark.pipeline import _results_to_arrow
+    from camelot_spark.schema import EXTRACTED_SCHEMA, KERNEL_VERSION
+
+    want_schema = to_arrow_schema(EXTRACTED_SCHEMA)
+    health, foo = fx.doc_health("health-enc"), fx.doc_foo("foo-enc")
+    lattice = extract_document(foo.spans, make_config("lattice"))
+    assert lattice["n_tables"] > 0
+    failed = {"spans": [], "tables": [], "n_tables": 0, "accuracy": None, "whitespace": None}
+    batches = {
+        "stream": [(health.doc_id, extract_document(health.spans, make_config("stream")), 11, 70, None),
+                   ("poison-enc", failed, 1, 5, "Traceback ... JSONDecodeError")],
+        "lattice": [(foo.doc_id, lattice, 9, 120, None)],
+        "empty": [],
+    }
+    for flavor, results in batches.items():
+        batch = _results_to_arrow(results, flavor, 3, 1)
+        assert batch.schema == want_schema
+        assert pa.types.is_list(batch.schema.field("spans").type)
+        assert pa.types.is_list(batch.schema.field("tables").type)
+        assert batch.to_pylist() == [
+            {"doc_id": doc_id,
+             "spans": [dict(zip(("kind", "text", "media_ref", "order"), s)) for s in res["spans"]],
+             "n_tables": res["n_tables"], "accuracy": res["accuracy"],
+             "whitespace": res["whitespace"],
+             "tables": [{"order": t.order, "accuracy": t.accuracy, "whitespace": t.whitespace,
+                         "nrows": t.nrows, "ncols": t.ncols,
+                         **dict(zip(("x0", "y0", "x1", "y1"), t.bbox))} for t in res["tables"]],
+             "lineage": {"partition_id": 3, "kernel_version": KERNEL_VERSION, "flavor": flavor,
+                         "attempt": 1, "n_input_spans": n_in, "elapsed_us": elapsed,
+                         "error": err}}
+            for doc_id, res, n_in, elapsed, err in results]
 
 
 def test_stream_spark_golden(spark, stream_builders):
@@ -236,7 +277,7 @@ def test_output_invariant_under_partitioning(spark):
     base = norm(extract(df.coalesce(1), flavor="stream"))
     for variant in (df.repartition(16), df.repartition(3, "doc_id")):
         assert norm(extract(variant, flavor="stream")) == base
-    salted = extract(df, flavor="stream", salt_partitions=8, salt=7)
+    salted = extract(df, flavor="stream", salt_partitions=8)
     assert norm(salted) == base
 
 

@@ -202,28 +202,6 @@ class TestPyXXH64:
             assert "VALUES" in sql, name
 
 
-def test_hashed_pivot_preselection_matches_full(spark):
-    """hashed_ivf_topk's raw-table pivot pre-selection must produce
-    the IDENTICAL pivot row as _pivot_row over the full hashed-vector
-    table — including under duplicate doc_ids (pooled into one vector)
-    and a NULL doc_id (pooled, hash NULL, ranks first like the full
-    path) — the two inputs the r6 review flagged."""
-    from pyspark.sql import functions as F
-
-    from camelot_spark.tdp.similarity import _pivot_row
-    from camelot_spark.tdp.text import _hashed_pivot_row, feature_hash_vec
-
-    rows = [(0, "a b c"), (1, "d e f"), (1, "g h"), (None, "x y"),
-            (2, "k l m"), (3, "n o p"), (4, "q r"), (5, "s t u")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    emb = feature_hash_vec(docs, 64).select(
-        F.col("doc_id").alias("vec_id"), F.col("vec").alias("embedding"))
-    want = _pivot_row(emb, 4).collect()[0]["pivots"]
-    got = _hashed_pivot_row(docs, 64, 4).collect()[0]["pivots"]
-    assert [tuple(p) for p in got] == [tuple(p) for p in want]
-    assert len(got) == 4
-
-
 class TestSimhashProdWiring:
     def test_simhash64_fold_matches_python_reference(self, spark,
                                                      monkeypatch):
