@@ -12,40 +12,24 @@ the ``media`` span (`media_ref` payload, FIXTURES.md §1):
 
 cv2 isn't available in this environment, and a faithful translation
 would be the wrong shape anyway: each operator below is vectorized
-numpy over the whole bitmap (cumsum box filters, run-length morphology,
-run-merge connected components) — per-pixel work never touches Python.
+numpy over the whole bitmap (separable Gaussian filters, run-length
+morphology, run-merge connected components) — per-pixel work never
+touches Python.
 
 Image convention matches the reference raster: row 0 = top of the
 page, x right / y down; PDF space is bottom-left-origin. All segment /
 table outputs are integer pixel coords until ``scale_image_to_pdf``.
 
-The local window is Gaussian-weighted by default, matching the
-reference's `cv2.ADAPTIVE_THRESH_GAUSSIAN_C` (`image_processing.py:43`):
-weights come from cv2's published sigma formula for large kernels
+The local window is Gaussian-weighted, matching the reference's
+`cv2.ADAPTIVE_THRESH_GAUSSIAN_C` (`image_processing.py:43`): weights
+come from cv2's published sigma formula for large kernels
 (sigma = 0.3·((k−1)·0.5 − 1) + 0.8, getGaussianKernel docs) as a
 separable convolution with edge replication (cv2's BORDER_REPLICATE).
-The round-1 box-mean window remains available via ``window="box"``
-(identical decisions on clean two-level line art; diverges on
-noisy/anti-aliased rasters, where Gaussian is the reference behavior).
 """
 
 from __future__ import annotations
 
 import numpy as np
-
-
-def _box_mean(g: np.ndarray, k: int) -> np.ndarray:
-    """k×k box-filter local mean via 2-D cumsum (edge-replicated pad)."""
-    pad = k // 2
-    p = np.pad(g, pad + 1, mode="edge").astype(np.float64)
-    cs = p.cumsum(axis=0).cumsum(axis=1)
-    H, W = g.shape
-    # window sum at (i, j) over rows [i-pad, i+pad] etc. in padded coords
-    a = cs[k:k + H, k:k + W]
-    b = cs[0:H, k:k + W]
-    c = cs[k:k + H, 0:W]
-    d = cs[0:H, 0:W]
-    return (a - b - c + d) / float(k * k)
 
 
 def _gaussian_kernel(k: int) -> np.ndarray:
@@ -55,35 +39,6 @@ def _gaussian_kernel(k: int) -> np.ndarray:
     x = np.arange(k, dtype=np.float64) - (k - 1) / 2.0
     w = np.exp(-(x * x) / (2.0 * sigma * sigma))
     return w / w.sum()
-
-
-def _gaussian_mean(g: np.ndarray, k: int) -> np.ndarray:
-    """k×k Gaussian-weighted local mean: separable 1-D convolutions
-    (vectorized shifted adds per axis — O(k·H·W), no scipy) with
-    edge-replicated borders.
-
-    The kernel is symmetric, so mirrored taps pair up
-    (w[t]·(x[t] + x[k-1-t])) — half the multiplies of the naive
-    k-term loop (measured 2.8×; this is 40% of the whole per-doc
-    lattice kernel). The regrouped summation differs from the naive
-    order by ≤1e-13 on a 255-scale mean — verified zero threshold
-    flips across every raster fixture, and the goldens pin it.
-
-    Accumulation runs in float32 (r6): the input is 0-255 grayscale,
-    so the weighted mean carries ~3e-5 absolute error vs float64 —
-    against the integer-pixel > (mean - c) comparison with |c| = 2 a
-    flip needs a boundary tie inside that margin, which flat regions
-    (the only exact-tie producers) miss by the full |c|; verified zero
-    flips on 1.9M-pixel noise AND exact goldens across every raster
-    fixture incl. jitters. Halved memory traffic: 86.6 → 39.8 ms on a
-    1224×1584 page (2.2×; _gaussian_mean was 38% of the fixture pass).
-    (A sliding_window_view @ w matmul form was measured too: 54 ms —
-    exact but slower than paired adds in f32.)"""
-    H = g.shape[0]
-    out = np.empty(g.shape, dtype=np.float32)
-    for r0, r1, o in _gaussian_mean_strips(g, k):
-        out[r0:r1] = o
-    return out
 
 
 # row-strip height for the separable convolution: the per-strip temps
@@ -97,9 +52,26 @@ _GAUSS_STRIP = 24
 
 def _gaussian_mean_strips(g: np.ndarray, k: int):
     """Yield (r0, r1, mean_rows) strips of the k×k Gaussian-weighted
-    local mean of ``g`` — the strip form lets adaptive_threshold fuse
-    its comparison per strip without ever materializing the full mean
-    plane."""
+    local mean of ``g``: separable 1-D convolutions (vectorized shifted
+    adds per axis — O(k·H·W), no scipy) with edge-replicated borders.
+    The strip form lets adaptive_threshold fuse its comparison per
+    strip without ever materializing the full mean plane.
+
+    The kernel is symmetric, so mirrored taps pair up
+    (w[t]·(x[t] + x[k-1-t])) — half the multiplies of the naive
+    k-term loop (measured 2.8×). The regrouped summation differs from
+    the naive order by ≤1e-13 on a 255-scale mean — verified zero
+    threshold flips across every raster fixture, and the goldens pin it.
+
+    Accumulation runs in float32 (r6): the input is 0-255 grayscale,
+    so the weighted mean carries ~3e-5 absolute error vs float64 —
+    against the integer-pixel > (mean - c) comparison with |c| = 2 a
+    flip needs a boundary tie inside that margin, which flat regions
+    (the only exact-tie producers) miss by the full |c|; verified zero
+    flips on 1.9M-pixel noise AND exact goldens across every raster
+    fixture incl. jitters. Halved memory traffic: 86.6 → 39.8 ms on a
+    1224×1584 page (2.2×). (A sliding_window_view @ w matmul form was
+    measured too: 54 ms — exact but slower than paired adds in f32.)"""
     w = _gaussian_kernel(k).astype(np.float32)
     pad = k // 2
     p = np.pad(g, pad, mode="edge")
@@ -129,33 +101,28 @@ def _gaussian_mean_strips(g: np.ndarray, k: int):
 
 def adaptive_threshold(
     img: np.ndarray, process_background: bool = False, blocksize: int = 15,
-    c: int = -2, window: str = "gaussian"
+    c: int = -2,
 ) -> np.ndarray:
     """Grayscale (H, W) uint8 → binary ruling mask — `image_processing.py:9-53`.
 
     Foreground lines (dark on light) are inverted first unless
-    ``process_background``; a pixel passes when it exceeds its local
-    window mean minus ``c`` (cv2 THRESH_BINARY semantics). ``window``
-    picks the local-mean weighting: "gaussian" (reference
-    ADAPTIVE_THRESH_GAUSSIAN_C behavior, default) or "box".
+    ``process_background``; a pixel passes when it exceeds its
+    Gaussian-weighted local window mean minus ``c`` (cv2 THRESH_BINARY
+    semantics, ADAPTIVE_THRESH_GAUSSIAN_C weighting).
     """
-    # float32 end to end on the gaussian path: 0-255 pixels are exact
-    # in f32 and _gaussian_mean accumulates in f32 anyway — one pad
-    # copy instead of pad + astype (the box path re-casts to f64 for
-    # its cumsum, where f32 would genuinely lose integer exactness)
+    # float32 end to end: 0-255 pixels are exact in f32 and the mean
+    # accumulates in f32 anyway — one pad copy instead of pad + astype
     g = np.asarray(img, dtype=np.float32)
     if not process_background:
         g = np.float32(255.0) - g
-    if window == "gaussian":
-        # fused strip compare (r7): the mean plane is never
-        # materialized — each L2-resident strip is compared as soon as
-        # its mean rows exist (same expression, so the f32-mean vs
-        # f64-comparison semantics are unchanged)
-        out = np.empty(g.shape, dtype=bool)
-        for r0, r1, mean_rows in _gaussian_mean_strips(g, blocksize):
-            out[r0:r1] = g[r0:r1] > (mean_rows - float(c))
-        return out
-    return g > (_box_mean(g, blocksize) - float(c))
+    # fused strip compare (r7): the mean plane is never materialized —
+    # each L2-resident strip is compared as soon as its mean rows exist
+    # (same expression, so the f32-mean vs f64-comparison semantics
+    # are unchanged)
+    out = np.empty(g.shape, dtype=bool)
+    for r0, r1, mean_rows in _gaussian_mean_strips(g, blocksize):
+        out[r0:r1] = g[r0:r1] > (mean_rows - float(c))
+    return out
 
 
 def _runs_along_rows(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -193,29 +160,14 @@ def _runs_along_rows(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarr
 def _mask_from_runs(rows, starts, ends, shape) -> np.ndarray:
     """Rebuild an int8 mask from disjoint maximal runs (row, start, end).
 
-    Disjoint maximal runs (next start >= end + 1) mean the running sum
-    is only ever 0/1 (int8-exact) AND the boundary indices never
-    collide — plain fancy assignment is equivalent to (and much faster
-    than) the unbuffered np.add.at scatter. (_dilate_along_axis must
-    keep add.at: its clamped extended boundaries can collide.)"""
+    Disjoint runs never overlap, so one slice fill per run rebuilds the
+    mask exactly. Post-open masks hold a few dozen line runs (at most
+    24 per call over 15 keys of each raster fixture family), where
+    slice fills beat any full-plane pass."""
     out = np.zeros(shape, dtype=np.int8)
-    n = len(rows)
-    if n == 0:
-        return out
-    if n <= 2048:
-        # post-open masks hold a few dozen line runs: direct slice
-        # fills beat three full-plane passes of the cumsum rebuild
-        for r, s0, e0 in zip(rows.tolist(), starts.tolist(),
-                             ends.tolist()):
-            out[r, s0:e0] = 1
-        return out
-    delta = np.zeros((shape[0], shape[1] + 1), dtype=np.int8)
-    delta[rows, starts] = 1
-    delta[rows, ends] = -1
-    # numpy promotes integer cumsum to the platform int unless the
-    # dtype is pinned; 0/1 values make int8 exact. The bool compare
-    # VIEWS as int8 (same 0/1 bytes) instead of an astype copy.
-    return (delta.cumsum(axis=1, dtype=np.int8)[:, :-1] > 0).view(np.int8)
+    for r, s0, e0 in zip(rows.tolist(), starts.tolist(), ends.tolist()):
+        out[r, s0:e0] = 1
+    return out
 
 
 def _open_runs(m: np.ndarray, size: int):

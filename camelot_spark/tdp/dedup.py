@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .arrow_seams import list_parts
+
 
 def dedup_exact(documents: DataFrame) -> DataFrame:
     """Per-source doc/distinct counts via content hash (exact dedup)."""
@@ -169,8 +171,7 @@ def _portable_sig_arrow(ex: DataFrame, num_hashes: int) -> DataFrame:
             nrows = batch.num_rows
             if nrows == 0:
                 continue
-            idc = batch.column("__mh_id" if "__mh_id" in batch.schema.names
-                               else "doc_id")
+            idc = batch.column("doc_id")
             id_null = np.asarray(idc.is_null())
             ids = np.asarray(idc.fill_null(0))
             phc = batch.column("__mh_ph")
@@ -396,8 +397,9 @@ def _majority_sim_arrow(src: DataFrame, n_bits: int) -> DataFrame:
     """(doc_id, __sh_h array<long>) → (doc_id, simhash): per-bit
     majority vote (bit b set ⟺ 2·set_b > n_tokens) vectorized in one
     mapInArrow stage — per bit, a cumsum over the Arrow list VALUES
-    buffer (zero-copy int64) differenced at the list offsets yields
-    every doc's set-bit count in one pass. No explode, no shuffle, no
+    buffer (``arrow_seams.list_parts``: zero-copy int64) differenced
+    at the list offsets yields every doc's set-bit count in one pass.
+    No explode, no shuffle, no
     per-token interpreted work. The majority bit pattern viewed as
     int64 equals the ±1-fold weight sum bit for bit (for n_bits = 64
     the top weight −2⁶³ IS the sign bit; for fewer bits all weights
@@ -413,13 +415,9 @@ def _majority_sim_arrow(src: DataFrame, n_bits: int) -> DataFrame:
         one = np.uint64(1)
         for batch in it:
             ids = batch.column("doc_id")
-            hcol = batch.column("__sh_h")
-            offs = np.asarray(hcol.offsets, dtype=np.int64)
-            vals = np.asarray(hcol.values, dtype=np.int64) if len(
-                hcol.values) else np.empty(0, np.int64)
+            offs, vals, lens, valid = list_parts(batch.column("__sh_h"),
+                                                 np.int64)
             uv = vals.view(np.uint64)
-            null_row = np.asarray(hcol.is_null())
-            lens = offs[1:] - offs[:-1]
             sims = np.zeros(batch.num_rows, dtype=np.uint64)
             cs = np.empty(len(vals) + 1, dtype=np.int64)
             cs[0] = 0
@@ -428,7 +426,7 @@ def _majority_sim_arrow(src: DataFrame, n_bits: int) -> DataFrame:
                 np.cumsum(bit, out=cs[1:])
                 cnt = cs[offs[1:]] - cs[offs[:-1]]
                 sims |= (2 * cnt > lens).astype(np.uint64) << np.uint64(b)
-            out = pa.array(sims.view(np.int64), pa.int64(), mask=null_row)
+            out = pa.array(sims.view(np.int64), pa.int64(), mask=~valid)
             yield pa.RecordBatch.from_arrays([ids, out],
                                              names=["doc_id", "simhash"])
 

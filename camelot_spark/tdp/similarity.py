@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .arrow_seams import by_length, fold_dot, fold_norm, list_parts
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -45,12 +47,10 @@ def cosine_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10) -> Da
     result. Output (vec_id, rank) — integer-typed.
 
     r7: the per-row interpreted dot/norm folds moved to mapInArrow
-    numpy with the exact IEEE operation order of the old expression
-    (ascending-dimension acc = acc + x_i·q_i, norms likewise,
-    denominator norm_x·norm_q then one division) — bit-identical
-    cosines; the rank window stays in SQL, so ordering semantics
-    (NaN-first desc, NULLs last) are untouched. Multiple/zero rows
-    matching the query id reproduce the old crossJoin cardinality."""
+    numpy (``_np_cos_to_queries``) — bit-identical cosines; the rank
+    window stays in SQL, so ordering semantics (NaN-first desc, NULLs
+    last) are untouched. Multiple/zero rows matching the query id
+    reproduce the old crossJoin cardinality."""
     import pyarrow as pa
 
     q_rows = embeddings.where(F.col("vec_id") == query_vec_id) \
@@ -70,65 +70,39 @@ def cosine_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10) -> Da
 def _np_cos_to_queries(embeddings: DataFrame, qs: list) -> DataFrame:
     """(vec_id, cos) rows — each input row scored against EVERY query
     vector in ``qs`` (the old broadcast-crossJoin cardinality), cosines
-    computed in numpy with ``_dot``/``_norm``'s exact fold order. A
-    NULL query or NULL/length-mismatched embedding scores NULL, like
-    the expression form's NULL propagation."""
+    folded like ``_dot``/``_norm`` (``arrow_seams``), denominator
+    norm_x·norm_q then one division. A NULL query or NULL/length-
+    mismatched embedding scores NULL, like the expression form's NULL
+    propagation."""
     import numpy as np
     import pyarrow as pa
 
-    q_states = []
-    for q in qs:
-        if q is None:
-            q_states.append(None)
-            continue
-        s = 0.0
-        for v in q:
-            s = s + v * v
-        q_states.append((np.asarray(q, dtype=np.float64), np.sqrt(s)))
+    nq = len(qs)
+    q_vecs = [None if q is None else np.asarray(q, dtype=np.float64)
+              for q in qs]
 
     def batches(it):
         for batch in it:
             ids = batch.column("vec_id").cast(pa.int64())
-            emb = batch.column("embedding")
             n = len(ids)
-            out_ids: list = []
-            out_cos: list = []
-            if n:
-                offs = emb.offsets.to_numpy()
-                flat = emb.values.to_numpy(zero_copy_only=False) \
-                    .astype(np.float64)
-                lens = np.diff(offs)
-                notnull = ~np.asarray(emb.is_null())
-                idv = ids.to_numpy(zero_copy_only=False)
-                cos_cols = np.full((n, max(len(q_states), 1)), np.nan)
-                okmask = np.zeros((n, max(len(q_states), 1)), dtype=bool)
-                for L in np.unique(lens[notnull]):
-                    rows_ = np.flatnonzero(notnull & (lens == L))
-                    Li = int(L)
-                    X = flat[offs[rows_, None] + np.arange(Li)[None, :]]
-                    nx = np.zeros(len(rows_))
-                    for i in range(Li):
-                        nx += X[:, i] * X[:, i]
-                    nx = np.sqrt(nx)
-                    for j, st in enumerate(q_states):
-                        if st is None or len(st[0]) != Li:
-                            continue  # NULL score (zip/NULL semantics)
-                        qv, qn = st
-                        dot = np.zeros(len(rows_))
-                        for i in range(Li):
-                            dot += X[:, i] * qv[i]
-                        with np.errstate(divide="ignore",
-                                         invalid="ignore"):
-                            cos_cols[rows_, j] = dot / (nx * qn)
-                        okmask[rows_, j] = True
-                for j in range(len(q_states)):
-                    out_ids.extend(idv.tolist())
-                    out_cos.extend(
-                        float(c) if ok else None
-                        for c, ok in zip(cos_cols[:, j], okmask[:, j]))
+            cos = np.full((nq, n), np.nan)
+            ok = np.zeros((nq, n), dtype=bool)
+            offs, vals, lens, valid = list_parts(batch.column("embedding"))
+            for L, rows, X in by_length(offs, vals, lens, valid):
+                # length-matched queries only: NULL score otherwise
+                js = [j for j, q in enumerate(q_vecs)
+                      if q is not None and len(q) == L]
+                if not js:
+                    continue
+                Q = np.stack([q_vecs[j] for j in js])
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    cos[np.ix_(js, rows)] = (
+                        fold_dot(X, Q.T)
+                        / (fold_norm(X)[:, None] * fold_norm(Q)[None, :])).T
+                ok[np.ix_(js, rows)] = True
             yield pa.RecordBatch.from_arrays(
-                [pa.array(out_ids, pa.int64()),
-                 pa.array(out_cos, pa.float64())],
+                [ids.take(np.tile(np.arange(n), nq)),
+                 pa.array(cos.ravel(), pa.float64(), mask=~ok.ravel())],
                 names=["vec_id", "cos"])
 
     return embeddings.select(
@@ -181,13 +155,11 @@ def lsh_signatures(embeddings: DataFrame, n_planes: int = 16) -> DataFrame:
     r7: computed in ``mapInArrow`` with numpy (guide §4.2 — hand whole
     batches to vectorized native code instead of interpreted HOF
     lambdas; the per-plane aggregate folds were ~1.4 s of every
-    consumer at sf0.1, this is 0.19 s). BIT-IDENTICAL to the old
-    expression form: the inner loop runs over dimensions in ascending
-    order doing acc = acc + (x_i · w_ib) elementwise — the exact IEEE
-    double operation sequence of Spark's left-to-right aggregate fold
-    (multiply rounded, then add rounded), so every projection, sign
-    and signature matches bit-for-bit; NULL/empty embeddings yield
-    sig 0 like the old when(NULL > 0)/empty-fold path. Pinned by
+    consumer at sf0.1, this is 0.19 s). The projections are
+    ``arrow_seams.fold_dot``, Spark's fold order, so every projection,
+    sign and signature is bit-identical to the old expression form;
+    NULL/empty embeddings yield sig 0 like the old when(NULL > 0)/
+    empty-fold path. Pinned by
     tests/test_round7.py::test_lsh_signatures_numpy_matches_expression.
     """
     import pyarrow as pa
@@ -197,28 +169,15 @@ def lsh_signatures(embeddings: DataFrame, n_planes: int = 16) -> DataFrame:
 
         for batch in it:
             ids = batch.column("vec_id")
-            emb = batch.column("embedding")
-            n = len(ids)
-            sigs = np.zeros(n, dtype=np.int64)
-            if n:
-                # ragged-safe: vectorize per distinct row length
-                offs = emb.offsets.to_numpy()
-                flat = emb.values.to_numpy(zero_copy_only=False) \
-                    .astype(np.float64)
-                lens = np.diff(offs)
-                valid = ~np.asarray(emb.is_null())
-                for L in np.unique(lens[valid]):
-                    rows = np.flatnonzero(valid & (lens == L))
-                    X = flat[offs[rows, None] + np.arange(L)[None, :]]
-                    W = _lsh_plane_weights(int(L), n_planes)
-                    acc = np.zeros((len(rows), n_planes), dtype=np.float64)
-                    for i in range(int(L)):  # ascending: the fold order
-                        acc += X[:, i, None] * W[i, None, :]
-                    bits = (acc > 0).astype(np.int64)
-                    s = np.zeros(len(rows), dtype=np.int64)
-                    for b in range(n_planes):
-                        s |= bits[:, b] << b
-                    sigs[rows] = s
+            sigs = np.zeros(len(ids), dtype=np.int64)
+            offs, vals, lens, valid = list_parts(batch.column("embedding"))
+            for L, rows, X in by_length(offs, vals, lens, valid):
+                bits = (fold_dot(X, _lsh_plane_weights(L, n_planes)) > 0
+                        ).astype(np.int64)
+                s = np.zeros(len(rows), dtype=np.int64)
+                for b in range(n_planes):
+                    s |= bits[:, b] << b
+                sigs[rows] = s
             yield pa.RecordBatch.from_arrays(
                 [ids, pa.array(sigs, pa.int64())],
                 names=["vec_id", "lsh_sig"])
@@ -309,19 +268,18 @@ def _assign_with_embedding(
 
     r7: the per-row K×dim interpreted cosine fold moved to
     ``mapInArrow``/numpy (guide §4.2), BIT-IDENTICAL by construction:
-    the dimension loop runs ascending doing acc = acc + (x_i · p_i)
-    elementwise — the exact IEEE sequence of ``_dot``'s left-to-right
-    fold — norms the same way, denominator norm_x·norm_p then one
-    division like ``_cos_to``, and the first-max argmax (numpy's
-    argmax, first-NaN-wins like Spark's array_max/array_position pair
-    on all-NaN zero-norm rows). NULL embeddings yield NULL ivf_cell
-    as the old NULL-propagating fold did. Pinned by
+    dots and norms fold in Spark's order (``arrow_seams``), denominator
+    norm_x·norm_p then one division like ``_cos_to``, and the first-max
+    argmax (numpy's argmax, first-NaN-wins like Spark's
+    array_max/array_position pair on all-NaN zero-norm rows). NULL
+    embeddings yield NULL ivf_cell as the old NULL-propagating fold
+    did. Pinned by
     tests/test_round7.py::test_assign_with_embedding_numpy_matches_expression."""
+    import numpy as np
     import pyarrow as pa
 
     rows = _pivot_row(embeddings, n_cells).collect()
     pivots = rows[0]["pivots"] if rows else []
-    import numpy as np
 
     # NULL or ragged pivots reproduce the expression semantics: a
     # zip_with against a length-mismatched/NULL pivot yields a NULL
@@ -335,61 +293,35 @@ def _assign_with_embedding(
     for j, v in enumerate(pv):
         if v:
             P[j, :len(v)] = v
-    # per-pivot norms: the same sequential left-to-right sum of squares
-    p_norms = np.zeros(len(pv))
-    for j, v in enumerate(pv):
-        s = 0.0
-        for x in (v or []):
-            s = s + x * x
-        p_norms[j] = np.sqrt(s)
+    p_norms = fold_norm(P)  # zero padding leaves each norm unchanged
     emb_type = embeddings.schema["embedding"].dataType.simpleString()
 
     def batches(it):
-        import numpy as np
-
-        K = len(P)
         for batch in it:
             ids = batch.column("vec_id")
             emb = batch.column("embedding")
             n = len(ids)
-            cell = np.full(n, -1, dtype=np.int64)
+            cell = np.zeros(n, dtype=np.int32)
             cosv = np.full(n, np.nan)
             valid = np.zeros(n, dtype=bool)
-            if n and K:
-                offs = emb.offsets.to_numpy()
-                flat = emb.values.to_numpy(zero_copy_only=False) \
-                    .astype(np.float64)
-                lens = np.diff(offs)
-                notnull = ~np.asarray(emb.is_null())
-                for L in np.unique(lens[notnull]):
-                    rows_ = np.flatnonzero(notnull & (lens == L))
-                    Li = int(L)
-                    ok = plens == Li  # length-matched, non-NULL pivots
-                    if not ok.any():
-                        continue  # every score NULL -> NULL cell
-                    X = flat[offs[rows_, None] + np.arange(Li)[None, :]]
-                    dot = np.zeros((len(rows_), K))
-                    nx = np.zeros(len(rows_))
-                    for i in range(Li):  # ascending: the fold order
-                        xi = X[:, i]
-                        dot += xi[:, None] * P[None, :, i]
-                        nx += xi * xi
-                    nx = np.sqrt(nx)
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        sc = dot / (nx[:, None] * p_norms[None, :])
-                    sc[:, ~ok] = -np.inf  # NULL-score columns: skipped
-                    am = np.argmax(sc, axis=1)
-                    cell[rows_] = am
-                    cosv[rows_] = sc[np.arange(len(rows_)), am]
-                    valid[rows_] = True
+            offs, vals, lens, notnull = list_parts(emb)
+            for L, rows_, X in by_length(offs, vals, lens, notnull):
+                ok = plens == L  # length-matched, non-NULL pivots
+                if not ok.any():
+                    continue  # every score NULL -> NULL cell
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    sc = fold_dot(X, P[:, :L].T) / (
+                        fold_norm(X)[:, None] * p_norms[None, :])
+                sc[:, ~ok] = -np.inf  # NULL-score columns: skipped
+                am = np.argmax(sc, axis=1)
+                cell[rows_] = am
+                cosv[rows_] = sc[np.arange(len(rows_)), am]
+                valid[rows_] = True
             arrs = [ids.cast(pa.int64()), emb,
-                    pa.array([int(c) if v else None
-                              for c, v in zip(cell, valid)], pa.int32())]
+                    pa.array(cell, pa.int32(), mask=~valid)]
             names = ["vec_id", "embedding", "ivf_cell"]
             if with_cos:
-                arrs.append(pa.array(
-                    [float(c) if v else None
-                     for c, v in zip(cosv, valid)], pa.float64()))
+                arrs.append(pa.array(cosv, pa.float64(), mask=~valid))
                 names.append("cos")
             yield pa.RecordBatch.from_arrays(arrs, names=names)
 
@@ -1133,45 +1065,34 @@ def _pq_staged_np(embeddings: DataFrame, m: int = _PQ_M,
     def batches(it):
         for batch in it:
             ids = batch.column("vec_id").cast(pa.int64())
-            emb = batch.column("embedding")
-            n = len(ids)
-            codes: list = [None] * n
-            if n:
-                offs = emb.offsets.to_numpy()
-                flat = emb.values.to_numpy(zero_copy_only=False) \
-                    .astype(np.float64)
-                lens = np.diff(offs)
-                notnull = ~np.asarray(emb.is_null())
-                fast = np.flatnonzero(notnull & (lens == full))
-                if len(fast) and K and ok_piv.any():
-                    X = flat[offs[fast, None] + np.arange(full)[None, :]]
-                    dists = np.zeros((len(fast), m, K))
-                    for j in range(m):
-                        acc = np.zeros((len(fast), K))
-                        for i in range(dsub):
-                            col = j * dsub + i
-                            dxp = X[:, col, None] - P[None, :, col]
-                            acc += dxp * dxp
-                        dists[:, j, :] = acc
-                    dists[:, :, ~ok_piv] = np.inf  # NULL-dist: skipped
-                    cm = np.argmin(dists, axis=2)
-                    for r_i, row in enumerate(fast):
-                        codes[row] = [int(c) for c in cm[r_i]]
-                elif len(fast):
-                    # no usable pivot: every subspace argmin is over
-                    # NULL distances -> [NULL]*m per the expression path
-                    for row in fast:
-                        codes[row] = _pq_codes_of(
-                            flat[offs[row]:offs[row + 1]].tolist(),
-                            pivots, m, dsub)
-                # ragged / odd rows: per-row expression-semantics replay
-                for row in np.flatnonzero(notnull & (lens != full)):
-                    xs = flat[offs[row]:offs[row + 1]].tolist()
-                    codes[row] = _pq_codes_of(xs, pivots, m, dsub)
-                # NULL embedding: the expression path's outer transform
-                # still yields an ARRAY of m NULL codes, not a NULL array
-                for row in np.flatnonzero(~notnull):
-                    codes[row] = [None] * m
+            offs, flat, lens, notnull = list_parts(batch.column("embedding"))
+            # NULL embedding: the expression path's outer transform
+            # still yields an ARRAY of m NULL codes, not a NULL array
+            codes: list = [[None] * m for _ in range(len(ids))]
+            fast = np.flatnonzero(notnull & (lens == full))
+            if len(fast) and K and ok_piv.any():
+                X = flat[offs[fast, None] + np.arange(full)[None, :]]
+                dists = np.zeros((len(fast), m, K))
+                for j in range(m):
+                    acc = np.zeros((len(fast), K))
+                    for i in range(dsub):
+                        col = j * dsub + i
+                        dxp = X[:, col, None] - P[None, :, col]
+                        acc += dxp * dxp
+                    dists[:, j, :] = acc
+                dists[:, :, ~ok_piv] = np.inf  # NULL-dist: skipped
+                cm = np.argmin(dists, axis=2)
+                for r_i, row in enumerate(fast):
+                    codes[row] = [int(c) for c in cm[r_i]]
+                slow = notnull & (lens != full)
+            else:
+                # no usable pivot: every subspace argmin is over NULL
+                # distances -> [NULL]*m, per the replay below
+                slow = notnull
+            # ragged / odd rows: per-row expression-semantics replay
+            for row in np.flatnonzero(slow):
+                xs = flat[offs[row]:offs[row + 1]].tolist()
+                codes[row] = _pq_codes_of(xs, pivots, m, dsub)
             yield pa.RecordBatch.from_arrays(
                 [ids, pa.array(codes, pa.list_(pa.int64()))],
                 names=["vec_id", "codes"])
