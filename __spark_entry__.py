@@ -14,9 +14,12 @@ hash-compared, none is rows-only.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
 import sys
 from collections.abc import Callable
+from types import MappingProxyType
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -33,27 +36,20 @@ from camelot_spark.tdp import html as tdp_html
 from camelot_spark.tdp import text as tdp_text
 
 
-# DataFrame-HANDLE memo for the base tables (r7). spark.read.parquet
-# costs ~100 ms (footer/schema read + analysis) and most queries call
-# _load 1-3 times inside their timed region — ~15 s across a bench
-# sweep. This caches ONLY the immutable plan object: no rows, no
-# .cache()/persist — every action still scans the parquet files, so
-# nothing computed is reused across runs. Keyed on the session object:
-# sessions of one application (spark.newSession()) share an
-# applicationId but not conf or catalog, so each gets its own handles.
-_LOAD_MEMO: dict[tuple[SparkSession, str, str], DataFrame] = {}
+# Base-table handles: one spark.read.parquet (footer read + analysis,
+# ~100 ms) per (session, sf_dir, table), never cached rows — every
+# action still scans the files. Keyed by session because sessions of
+# one application (spark.newSession()) share neither conf nor catalog.
+@functools.cache
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # session timeZone pins timestamp rendering for the oracle compares;
     # set on every call so no session reaches a query without it
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = (spark, sf_dir, name)
-    df = _LOAD_MEMO.get(key)
-    if df is None:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        _LOAD_MEMO[key] = df
-    return df
+    return _read_table(spark, sf_dir, name)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -67,14 +63,18 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
+def _extracted(spark: SparkSession, sf_dir: str, flavor: str,
+               families: list[str]) -> DataFrame:
+    src = _load(spark, sf_dir, "documents")
+    # small local parquet = one split; spread keys across cores so
+    # synthesis+extraction parallelize (no-op on a real cluster scan)
+    src = src.select("doc_id").repartition(spark.sparkContext.defaultParallelism * 4)
+    return synthesize_and_extract(src, flavor, families=families, fail_fast=True)
+
+
 def _extract_corpus(flavor: str, families: list[str]):
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        src = _load(spark, sf_dir, "documents")
-        # small local parquet = one split; spread keys across cores so
-        # synthesis+extraction parallelize (no-op on a real cluster scan)
-        src = src.select("doc_id").repartition(spark.sparkContext.defaultParallelism * 4)
-        extracted = synthesize_and_extract(src, flavor, families=families, fail_fast=True)
-        return extracted.select(
+        return _extracted(spark, sf_dir, flavor, families).select(
             # the pipeline's doc_id is the builder's "{family}-{key}"
             # string; the numeric tail is the source key the
             # expected-values oracle joins on
@@ -106,13 +106,10 @@ def _extract_corpus(flavor: str, families: list[str]):
 # (sf0.1's 0..4999) fails the rowcount compare loudly — never a
 # silent pass.
 _EXTRACT_ORACLE_KEYS = 500
-_EXTRACT_EXPECTED_SQL: dict[tuple, str] = {}
 
 
-def _extract_corpus_expected_sql(flavor: str, families: list[str]) -> str:
-    key = (flavor, tuple(families))
-    if key in _EXTRACT_EXPECTED_SQL:
-        return _EXTRACT_EXPECTED_SQL[key]
+@functools.cache
+def _extract_corpus_expected_sql(flavor: str, families: tuple[str, ...]) -> str:
     import math
     import warnings
 
@@ -128,7 +125,7 @@ def _extract_corpus_expected_sql(flavor: str, families: list[str]) -> str:
             ws = res["whitespace"] or 0.0
             rows.append(f"({k},{res['n_tables']},{len(res['spans'])},"
                         f"{math.floor(ws * 100)})")
-    sql = f"""
+    return f"""
 SELECT CAST(v.k AS BIGINT) AS doc_id,
        CAST(v.nt AS BIGINT) AS n_tables,
        CAST(v.ns AS BIGINT) AS n_spans,
@@ -136,8 +133,6 @@ SELECT CAST(v.k AS BIGINT) AS doc_id,
 FROM (VALUES {",".join(rows)}) v(k, nt, ns, ws)
 JOIN documents d ON d.doc_id = v.k
 """
-    _EXTRACT_EXPECTED_SQL[key] = sql
-    return sql
 
 
 # Expected-values oracles for the four xxhash64 production dedup
@@ -160,7 +155,6 @@ JOIN documents d ON d.doc_id = v.k
 # cannot tell them apart). On any OTHER corpus every gate is false and
 # the twin returns zero rows — a loud rowcount failure, never a silent
 # pass.
-_PROD_DEDUP_SQL: dict[str, str] = {}
 _PROD_DEDUP_NAMES = ("minhash_lsh_pairs", "minhash_neardup_verified",
                      "dedup_groups", "simhash_near_dups")
 _PROD_DEDUP_CORPORA = ("/root/testdata/sf0.001/documents.parquet",
@@ -287,8 +281,12 @@ def _prod_dedup_expected_sql(name: str) -> str:
     if name not in _PROD_DEDUP_NAMES:
         raise ValueError(f"no expected-values twin for {name!r} "
                          f"(known: {_PROD_DEDUP_NAMES})")
-    if _PROD_DEDUP_SQL:
-        return _PROD_DEDUP_SQL[name]
+    return _prod_dedup_sqls()[name]
+
+
+@functools.cache
+def _prod_dedup_sqls() -> MappingProxyType[str, str]:
+    """All four twins' SQL, built in one pass over the compare corpora."""
     import duckdb
 
     per_corpus = []  # (fingerprint, {name: rows})
@@ -303,6 +301,7 @@ def _prod_dedup_expected_sql(name: str) -> str:
         per_corpus.append((fp, _prod_dedup_expected_rows(docs)))
     con.close()
 
+    sqls = {}
     for qname, (cols, proj) in _PROD_DEDUP_SHAPES.items():
         branches = []
         for fp, rows_by_name in per_corpus:
@@ -317,35 +316,66 @@ def _prod_dedup_expected_sql(name: str) -> str:
             branches = [f"SELECT {proj} FROM (VALUES "
                         "(0,0,0,0,0,0,0)) v(a, b, j, d, c, k, h) "
                         "WHERE FALSE"]
-        _PROD_DEDUP_SQL[qname] = "\nUNION ALL\n".join(branches)
-    return _PROD_DEDUP_SQL[name]
+        sqls[qname] = "\nUNION ALL\n".join(branches)
+    return MappingProxyType(sqls)
 
 
-# The sink queries persist their (deterministic) extracted corpus here
-# so the DuckDB oracle can verify the RESHAPING — CSV assembly, report
-# flattening — on byte-identical input. The Spark query runs before its
-# oracle in the driver harness, so the parquet is always fresh.
+# Shared prefixes: several queries share one expensive deterministic
+# prefix (the sink queries' extracted corpus, substring k-gram islands,
+# MinHash-LSH pairs, embedding LSH signatures, the 8-round PageRank).
+# The query that IS the pipeline returns it live, so bench timings and
+# the plan audit see the real shuffles; the others read the parquet it
+# was written to. A path is rewritten only when it last held another
+# sf_dir's prefix.
+_PREFIX_PERSISTED_FOR: dict[str, str] = {}
+
+
+def _shared_prefix(path: str, spark: SparkSession, sf_dir: str,
+                   build) -> DataFrame:
+    """Write ``build()`` to ``path`` unless the path already holds this
+    sf_dir's prefix, and return it as a parquet read."""
+    if _PREFIX_PERSISTED_FOR.get(path) != sf_dir:
+        build().write.mode("overwrite").parquet(path)
+        _PREFIX_PERSISTED_FOR[path] = sf_dir
+    return spark.read.parquet(path)
+
+
+def _prefix_path(name: str, sf_dir: str) -> str:
+    # pid and sf_dir hashed in: concurrent bench / oracle processes, or
+    # two sf_dirs in one process, never read each other's parquet
+    import hashlib
+
+    digest = hashlib.sha1(sf_dir.encode()).hexdigest()[:12]
+    return f"/tmp/camelot_spark_{name}_oracle_{os.getpid()}_{digest}"
+
+
+def _cleanup_prefix_caches() -> None:
+    import glob
+    import shutil
+
+    for p in glob.glob(f"/tmp/camelot_spark_*_oracle_{os.getpid()}_*"):
+        shutil.rmtree(p, ignore_errors=True)
+        _PREFIX_PERSISTED_FOR.pop(p, None)
+
+
+atexit.register(_cleanup_prefix_caches)
+
+
+# The one fixed prefix path: the sink queries' DuckDB oracles read it to
+# verify the RESHAPING (CSV assembly, report flattening) on the same
+# input. Each compare (tools/check_oracles.py, tests/test_oracles.py) runs
+# the Spark query before its oracle, so the parquet is always fresh.
 ORACLE_EXTRACT_PATH = "/tmp/camelot_spark_extracted_oracle"
-
-
-# one persist per (process, sf_dir): the corpus is deterministic, so
-# every sink query in a run reshapes byte-identical input — re-running
-# the extraction per sink query would only re-write the same bytes
-_SINK_PERSISTED_FOR: list[str] = []
 
 
 def _sink_query(kind: str):
     from camelot_spark import sinks
 
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        if _SINK_PERSISTED_FOR != [sf_dir]:
-            src = _load(spark, sf_dir, "documents")
-            src = src.select("doc_id").repartition(spark.sparkContext.defaultParallelism * 4)
-            ext = synthesize_and_extract(src, "stream", families=fx.STREAM_FAMILIES, fail_fast=True)
-            ext.select("doc_id", "spans", "tables", "n_tables", "lineage").write.mode(
-                "overwrite").parquet(ORACLE_EXTRACT_PATH)
-            _SINK_PERSISTED_FOR[:] = [sf_dir]
-        persisted = spark.read.parquet(ORACLE_EXTRACT_PATH)
+        persisted = _shared_prefix(
+            ORACLE_EXTRACT_PATH, spark, sf_dir,
+            lambda: _extracted(spark, sf_dir, "stream", fx.STREAM_FAMILIES).select(
+                "doc_id", "spans", "tables", "n_tables", "lineage"))
         if kind == "lineage":
             return sinks.lineage_report(persisted)
         if kind == "span_stats":
@@ -365,58 +395,11 @@ def _sink_query(kind: str):
     return q
 
 
-# Shared-prefix cache: several query families share one expensive
-# deterministic prefix (substring k-gram islands, MinHash-LSH pairs,
-# embedding LSH signatures, the 8-round PageRank). The query that IS
-# the pipeline returns it live — bench timings and the plan audit see
-# the real shuffles — and the other family members read the prefix
-# persisted once per (process, sf_dir). Paths are keyed on
-# (pid, sf_dir-hash) so concurrent bench / driver processes — or two
-# sf_dirs in one process — can never read each other's (or a stale
-# corpus's) parquet, and an atexit hook removes this process's cache
-# dirs so repeated runs don't litter /tmp.
-_PREFIX_PERSISTED_FOR: dict[str, str] = {}
-
-
-def _prefix_path(name: str, sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    digest = hashlib.sha1(sf_dir.encode()).hexdigest()[:12]
-    return f"/tmp/camelot_spark_{name}_oracle_{os.getpid()}_{digest}"
-
-
-def _cleanup_prefix_caches() -> None:
-    import glob
-    import os
-    import shutil
-
-    for p in glob.glob(f"/tmp/camelot_spark_*_oracle_{os.getpid()}_*"):
-        shutil.rmtree(p, ignore_errors=True)
-
-
-import atexit  # noqa: E402
-
-atexit.register(_cleanup_prefix_caches)
-
-
-def _shared_prefix(name: str, spark: SparkSession, sf_dir: str,
-                   build) -> DataFrame:
-    """Persist ``build()`` once per (process, sf_dir) under ``name``
-    and return it as a parquet read; re-materializes when the sf_dir
-    changes within a process."""
-    path = _prefix_path(name, sf_dir)
-    if _PREFIX_PERSISTED_FOR.get(name) != sf_dir:
-        build().write.mode("overwrite").parquet(path)
-        _PREFIX_PERSISTED_FOR[name] = sf_dir
-    return spark.read.parquet(path)
-
-
 def _portable_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the expensive prefix of six dedup-family queries (signature
     # fold + band shuffle); minhash_lsh_pairs_portable stays live
     return _shared_prefix(
-        "lsh_pairs", spark, sf_dir,
+        _prefix_path("lsh_pairs", sf_dir), spark, sf_dir,
         lambda: dedup.minhash_lsh_pairs(
             _load(spark, sf_dir, "documents").where(F.col("doc_id") % 2 == 0),
             portable=True))
@@ -428,7 +411,7 @@ def _emb_sigs32(spark: SparkSession, sf_dir: str) -> DataFrame:
     # embedding_neardup_pairs stays live) and the 16-plane ANN (low 16
     # bits masked) with bit-identical results
     return _shared_prefix(
-        "emb_sigs32", spark, sf_dir,
+        _prefix_path("emb_sigs32", sf_dir), spark, sf_dir,
         lambda: similarity.lsh_signatures(
             _load(spark, sf_dir, "embeddings"), 32))
 
@@ -437,7 +420,7 @@ def _link_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # link_rank stays the live 8-round iteration; rank_weighted_sample
     # joins against its persisted output
     return _shared_prefix(
-        "link_rank", spark, sf_dir,
+        _prefix_path("link_rank", sf_dir), spark, sf_dir,
         lambda: ranking.link_rank(
             ranking.doc_link_edges(_load(spark, sf_dir, "documents"))))
 
@@ -447,7 +430,7 @@ def _bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # encodes with its persisted 8-row merge table (a tokenizer is
     # trained once and applied everywhere)
     return _shared_prefix(
-        "bpe_merges", spark, sf_dir,
+        _prefix_path("bpe_merges", sf_dir), spark, sf_dir,
         lambda: bpe.bpe_train(
             _load(spark, sf_dir, "documents").where(F.col("doc_id") % 8 == 0)))
 
@@ -460,7 +443,7 @@ def _substr_query(kind: str):
             # timings and the plan audit see the real k-gram shuffles
             return substr_dedup.duplicate_substring_spans(docs, portable=True)
         spans = _shared_prefix(
-            "substr_spans", spark, sf_dir,
+            _prefix_path("substr_spans", sf_dir), spark, sf_dir,
             lambda: substr_dedup.duplicate_substring_spans(
                 docs, portable=True))
         if kind == "stats":
@@ -991,9 +974,9 @@ def oracle_sql() -> dict[str, str]:
     # static oracles with an import-time exception.
     generated = {
         "extract_stream_corpus": lambda: _extract_corpus_expected_sql(
-            "stream", fx.STREAM_FAMILIES),
+            "stream", tuple(fx.STREAM_FAMILIES)),
         "extract_lattice_corpus": lambda: _extract_corpus_expected_sql(
-            "lattice", fx.LATTICE_FAMILIES),
+            "lattice", tuple(fx.LATTICE_FAMILIES)),
         "minhash_lsh_pairs": lambda: _prod_dedup_expected_sql(
             "minhash_lsh_pairs"),
         "minhash_neardup_verified": lambda: _prod_dedup_expected_sql(

@@ -19,6 +19,7 @@ Scale posture:
 
 from __future__ import annotations
 
+import os
 import time
 import traceback
 
@@ -151,32 +152,27 @@ def synthesize_and_extract(
     return keys_df.select("doc_id").mapInArrow(gen, schema=EXTRACTED_SCHEMA)
 
 
-_SHIPPED_SESSIONS: set[int] = set()
-
-
 def ensure_shipped(spark) -> None:
     """Ship the ``camelot_spark`` package to executors via addPyFile.
 
     The production deployment is ``spark-submit --py-files
     camelot_spark.zip`` (north_rule); this makes ad-hoc sessions
-    (notebooks, tests launched from any cwd) behave the same way.
+    (notebooks, tests launched from any cwd) behave the same way. The
+    SparkContext's file list is the record of what was shipped, so
+    every session of one application shares the one zip.
     """
-    key = id(spark)
-    if key in _SHIPPED_SESSIONS:
-        return
-    import os
     import shutil
     import tempfile
 
+    sc = spark.sparkContext
+    if any(os.path.basename(f) == "camelot_spark.zip" for f in sc.listFiles):
+        return
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     if not os.path.isdir(pkg_root):
-        # already imported from a --py-files zip: shipped by spark-submit
-        _SHIPPED_SESSIONS.add(key)
-        return
+        return  # already imported from a --py-files zip: shipped by spark-submit
     base = os.path.join(tempfile.mkdtemp(prefix="camelot_spark_ship_"), "camelot_spark")
     zip_path = shutil.make_archive(base, "zip", root_dir=pkg_root, base_dir="camelot_spark")
-    spark.sparkContext.addPyFile(zip_path)
-    _SHIPPED_SESSIONS.add(key)
+    sc.addPyFile(zip_path)
 
 
 def extract(
@@ -263,16 +259,17 @@ def run_extraction(
     from pyspark.sql import functions as F
 
     is_table = is_table_identifier(output_path)
+    # first run = no output yet; an output that exists but cannot be
+    # read raises here, before any extraction or write
+    exists = (spark.catalog.tableExists(output_path) if is_table
+              else os.path.exists(output_path))
 
     docs = documents
-    if resume:
-        try:
-            done = read_extracted(spark, output_path).select("doc_id")
-            # plain left_anti: AQE picks broadcast when `done` is small;
-            # at 10^12 docs a forced broadcast would be wrong.
-            docs = documents.join(done, "doc_id", "left_anti")
-        except Exception:
-            pass  # first run: nothing to resume from
+    if resume and exists:
+        done = read_extracted(spark, output_path).select("doc_id")
+        # plain left_anti: AQE picks broadcast when `done` is small;
+        # at 10^12 docs a forced broadcast would be wrong.
+        docs = documents.join(done, "doc_id", "left_anti")
 
     result = extract(docs, flavor=flavor, salt_partitions=salt_partitions,
                      fail_fast=fail_fast, **kwargs)
@@ -293,7 +290,7 @@ def run_extraction(
         # at analysis time — fall back to the v1 writer there.
         from pyspark.errors import AnalysisException
 
-        if spark.catalog.tableExists(output_path):
+        if exists:
             try:
                 observed.writeTo(output_path).append()
             except AnalysisException:

@@ -14,7 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text import LANG_PROFILES, STOPWORDS
+from .dedup import EXACT_KEY, exact_key
+from .text import _lang_vote, _profile_hits, _quality_x100, _tokens
 
 
 def clean_corpus(documents: DataFrame, min_quality_x100: int = 50) -> DataFrame:
@@ -27,50 +28,22 @@ def clean_corpus(documents: DataFrame, min_quality_x100: int = 50) -> DataFrame:
     base = documents.select(
         F.col("doc_id").cast("bigint").alias("id"),
         "text",
-        F.split("text", " ").alias("toks"),
+        _tokens(F.col("text")).alias("toks"),
     )
-    toks = F.col("toks")
-    n_tok = F.size(toks).cast("double")
-    stop_ratio = (
-        F.size(F.filter(toks, lambda w: F.array_contains(F.array(*[F.lit(s) for s in STOPWORDS]), w))).cast("double")
-        / n_tok
-    )
-    long_ratio = F.size(F.filter(toks, lambda w: F.length(w) > 5)).cast("double") / n_tok
-    len_term = F.least(n_tok, F.lit(100.0)) / F.lit(100.0)
-    quality = F.floor((stop_ratio * 40 + long_ratio * 30 + len_term * 30) * 100).cast("bigint")
-
-    # group key carries two independent hashes + length as collision
-    # discriminators (see dedup_keep_first) — still never ships bodies
+    # the dedup groupBy ships the key and id, never bodies (see dedup.exact_key)
     scored = base.select(
-        "id",
-        F.xxhash64("text").alias("h"),
-        F.length("text").alias("n_len"),
-        F.crc32("text").alias("h2"),
-        quality.alias("quality_x100"),
-        "text",
+        "id", *exact_key(), _quality_x100(F.col("toks")).alias("quality_x100"), "text",
     ).where(F.col("quality_x100") >= min_quality_x100)
 
     survivors = (
-        scored.groupBy("h", "n_len", "h2")
+        scored.groupBy(*EXACT_KEY)
         .agg(F.min("id").alias("keep_id"),
              F.count(F.lit(1)).cast("bigint").alias("group_size"))
     )
     kept = survivors.join(
-        scored.withColumnRenamed("id", "keep_id"), ["h", "n_len", "h2", "keep_id"]
+        scored.withColumnRenamed("id", "keep_id"), [*EXACT_KEY, "keep_id"]
     )
-
-    def profile_pred(words):
-        # close over the word list: Spark's HOF wrapper substitutes a
-        # Column for every lambda PARAMETER, defaults included
-        return lambda w: F.array_contains(F.array(*[F.lit(x) for x in words]), w)
-
-    pred = F.lit(None).cast("string")
-    best = F.lit(-1)
-    for p in sorted(LANG_PROFILES):
-        score_p = F.size(F.filter(F.split("text", " "), profile_pred(LANG_PROFILES[p])))
-        pred = F.when(score_p > best, F.lit(p)).otherwise(pred)
-        best = F.greatest(best, score_p)
-
+    pred = _lang_vote(lambda p: _profile_hits(_tokens(F.col("text")), p))
     return kept.select("keep_id", "group_size", "quality_x100", pred.alias("pred_lang"))
 
 

@@ -631,25 +631,28 @@ FROM sh a JOIN sh b ON b.id = a.id + 1
 """
 
 
-def dedup_keep_first(documents: DataFrame) -> DataFrame:
-    """Canonical-doc selection: per exact content group keep the lowest
-    doc_id (the standard keep-first exact-dedup output). Shuffles the
-    group key + id only — never the document bodies.
+EXACT_KEY = ("h", "n_len", "h2")
 
-    Group key = (xxhash64(text), length(text), crc32(text)): two
-    independent hashes plus the length as collision discriminators — a
-    single 64-bit hash silently merges distinct documents on collision,
-    and at 10^12 docs expected xxhash64 collisions number in the
-    thousands. The combined ~96+ bits push expected collisions below
-    10^-8 while the shuffled key stays 20 bytes."""
+
+def exact_key():
+    """The exact-content group key of ``text`` as columns ``EXACT_KEY``:
+    (xxhash64, length, crc32) — two independent hashes plus the length
+    as collision discriminators. A single 64-bit hash silently merges
+    distinct documents on collision, and at 10^12 docs expected
+    xxhash64 collisions number in the thousands; the combined ~96+ bits
+    push expected collisions below 10^-8 while the shuffled key stays
+    20 bytes."""
+    return [F.xxhash64("text").alias("h"), F.length("text").alias("n_len"),
+            F.crc32("text").alias("h2")]
+
+
+def dedup_keep_first(documents: DataFrame) -> DataFrame:
+    """Canonical-doc selection: per exact content group (``exact_key``)
+    keep the lowest doc_id (the standard keep-first exact-dedup output).
+    Shuffles the group key + id only — never the document bodies."""
     return (
-        documents.select(
-            F.xxhash64("text").alias("h"),
-            F.length("text").alias("n_len"),
-            F.crc32("text").alias("h2"),
-            F.col("doc_id").cast("bigint").alias("id"),
-        )
-        .groupBy("h", "n_len", "h2")
+        documents.select(*exact_key(), F.col("doc_id").cast("bigint").alias("id"))
+        .groupBy(*EXACT_KEY)
         .agg(F.min("id").alias("keep_id"), F.count(F.lit(1)).cast("bigint").alias("group_size"))
         .select("keep_id", "group_size")
     )

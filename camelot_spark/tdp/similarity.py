@@ -15,6 +15,8 @@ order in the DuckDB oracles.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -127,23 +129,17 @@ def embedding_neardup_adjacent(embeddings: DataFrame) -> DataFrame:
     )
 
 
+@functools.cache
 def _lsh_plane_weights(dim: int, n_planes: int):
     """W[i, b] = ((i·2654435761 + b·40503 + 12345) mod 7) − 3 as
-    float64 — cached per (dim, n_planes) so a reused Python worker
-    builds each table once."""
+    float64, read-only: a reused Python worker builds each table once."""
     import numpy as np
 
-    key = (dim, n_planes)
-    w = _LSH_W_CACHE.get(key)
-    if w is None:
-        i = np.arange(dim, dtype=np.int64)[:, None]
-        b = np.arange(n_planes, dtype=np.int64)[None, :]
-        w = (((i * 2654435761 + b * 40503 + 12345) % 7) - 3).astype(np.float64)
-        _LSH_W_CACHE[key] = w
+    i = np.arange(dim, dtype=np.int64)[:, None]
+    b = np.arange(n_planes, dtype=np.int64)[None, :]
+    w = (((i * 2654435761 + b * 40503 + 12345) % 7) - 3).astype(np.float64)
+    w.flags.writeable = False
     return w
-
-
-_LSH_W_CACHE: dict = {}
 
 
 def lsh_signatures(embeddings: DataFrame, n_planes: int = 16) -> DataFrame:

@@ -82,38 +82,32 @@ def portable_token_hash(t):
         h.otherwise(F.lit(0).cast("long")) % F.lit(_POLY_M))
 
 
-def langid(documents: DataFrame) -> DataFrame:
-    """N-gram/stopword-profile language vote: per doc, count profile-word
-    occurrences per profile; predict the argmax (ties → lexicographically
-    smallest profile name)."""
-    base = documents.select("doc_id", _tokens(F.col("text")).alias("toks"))
+def _in_profile(words):
+    # factory, not a lambda default: Spark's HOF wrapper binds every
+    # lambda PARAMETER to a Column (see minhash_signatures)
+    return lambda w: F.array_contains(F.array(*[F.lit(x) for x in words]), w)
 
-    def _in_profile(words):
-        # factory, not a lambda default: Spark's HOF wrapper binds every
-        # lambda PARAMETER to a Column (see minhash_signatures)
-        return lambda w: F.array_contains(F.array(*[F.lit(x) for x in words]), w)
 
-    scored = base.select(
-        "doc_id",
-        *[
-            F.size(F.filter("toks", _in_profile(ws))).alias(f"score_{p}")
-            for p, ws in LANG_PROFILES.items()
-        ],
-    )
-    # argmax with lexicographic tie-break: compare (score, reversed-name)
+def _profile_hits(toks, p: str):
+    """Occurrences of profile ``p``'s words in the token array ``toks``."""
+    return F.size(F.filter(toks, _in_profile(LANG_PROFILES[p])))
+
+
+def _lang_vote(score_of):
+    """Argmax profile name over the Columns ``score_of(p)``, ties →
+    lexicographically smallest name."""
     pred = F.lit(None).cast("string")
     best = F.lit(-1)
     for p in sorted(LANG_PROFILES):  # later names only win with strictly higher score
-        pred = F.when(F.col(f"score_{p}") > best, F.lit(p)).otherwise(pred)
-        best = F.greatest(best, F.col(f"score_{p}"))
-    return scored.select("doc_id", pred.alias("pred_lang"))
+        pred = F.when(score_of(p) > best, F.lit(p)).otherwise(pred)
+        best = F.greatest(best, score_of(p))
+    return pred
 
 
-def quality_score(documents: DataFrame) -> DataFrame:
-    """Composite quality score from stopword ratio, long-token ratio and
-    length; ×100 floored to BIGINT for exact oracle comparison."""
-    base = documents.select("doc_id", _tokens(F.col("text")).alias("toks"))
-    toks = F.col("toks")
+def _quality_x100(toks):
+    """Composite quality of the token array ``toks``: stopword ratio
+    ×40 + long-token ratio ×30 + length term ×30, ×100 floored to
+    BIGINT."""
     n_tok = F.size(toks).cast("double")
     stop_ratio = (
         F.size(F.filter(toks, lambda w: F.array_contains(F.array(*[F.lit(s) for s in STOPWORDS]), w))).cast("double")
@@ -122,10 +116,27 @@ def quality_score(documents: DataFrame) -> DataFrame:
     long_ratio = F.size(F.filter(toks, lambda w: F.length(w) > 5)).cast("double") / n_tok
     len_term = F.least(n_tok, F.lit(100.0)) / F.lit(100.0)
     score = stop_ratio * 40 + long_ratio * 30 + len_term * 30
-    return base.select(
+    return F.floor(score * 100).cast("bigint")
+
+
+def langid(documents: DataFrame) -> DataFrame:
+    """N-gram/stopword-profile language vote: per doc, count profile-word
+    occurrences per profile; predict the argmax (ties → lexicographically
+    smallest profile name)."""
+    base = documents.select("doc_id", _tokens(F.col("text")).alias("toks"))
+    scored = base.select(
         "doc_id",
-        F.floor(score * 100).cast("bigint").alias("quality_x100"),
+        *[_profile_hits("toks", p).alias(f"score_{p}") for p in LANG_PROFILES],
     )
+    pred = _lang_vote(lambda p: F.col(f"score_{p}"))
+    return scored.select("doc_id", pred.alias("pred_lang"))
+
+
+def quality_score(documents: DataFrame) -> DataFrame:
+    """Composite quality score (``_quality_x100``) per document, as
+    BIGINT for exact oracle comparison."""
+    base = documents.select("doc_id", _tokens(F.col("text")).alias("toks"))
+    return base.select("doc_id", _quality_x100(F.col("toks")).alias("quality_x100"))
 
 
 def token_stats(documents: DataFrame) -> DataFrame:

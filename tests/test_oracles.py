@@ -69,3 +69,37 @@ def test_load_binds_each_session_and_pins_utc(spark):
     df = entrymod._load(other, SF_DIR, "documents")
     assert df.sparkSession is other
     assert other.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+def _count_builds(spark, paths_of, sf_dirs):
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.range(1)
+
+    for sf in sf_dirs:
+        assert entrymod._shared_prefix(paths_of(sf), spark, sf, build).count() == 1
+    return len(builds)
+
+
+def test_shared_prefix_rebuilds_fixed_path_per_sf_dir_change(spark, tmp_path):
+    """One fixed path (the sink queries' oracle path) holds one sf_dir's
+    prefix at a time: A, B, A builds three times."""
+    a, b = str(tmp_path / "A"), str(tmp_path / "B")
+    fixed = str(tmp_path / "prefix")
+    assert _count_builds(spark, lambda sf: fixed, [a, b, a]) == 3
+
+
+def test_shared_prefix_keeps_each_prefix_path(spark, tmp_path):
+    """``_prefix_path`` hashes the sf_dir in, so A, B, A builds twice:
+    returning to A reads A's parquet again. Once the cleanup has removed
+    the directories, A builds again."""
+    a, b = str(tmp_path / "A"), str(tmp_path / "B")
+
+    def paths_of(sf):
+        return entrymod._prefix_path("unittest_count", sf)
+
+    assert _count_builds(spark, paths_of, [a, b, a]) == 2
+    entrymod._cleanup_prefix_caches()
+    assert _count_builds(spark, paths_of, [a]) == 1

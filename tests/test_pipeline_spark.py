@@ -130,6 +130,55 @@ def test_checkpoint_resume(spark, tmp_path):
     assert hist[0]["metrics"]["docs"] == 1.0 and hist[1]["metrics"]["docs"] == 1.0
 
 
+def test_resume_raises_on_unreadable_output_before_writing(spark, tmp_path):
+    """An output that exists but cannot be read is not a first run: the
+    resume read raises before any extraction, and no data directory is
+    written."""
+    import json
+    import os
+
+    out_path = str(tmp_path / "extracted")
+    run_extraction(spark, docs_df(spark, [fx.doc_health("cr-1")]), out_path, flavor="stream")
+    with open(os.path.join(out_path, "_snapshots", "v1.json"), "w") as f:
+        f.write("{not json")
+    data_dirs = sorted(os.listdir(os.path.join(out_path, "data")))
+    with pytest.raises(json.JSONDecodeError):
+        run_extraction(spark, docs_df(spark, [fx.doc_health(f"cr-{i}") for i in range(3)]),
+                       out_path, flavor="stream")
+    assert sorted(os.listdir(os.path.join(out_path, "data"))) == data_dirs
+
+
+def test_ensure_shipped_once_per_spark_context(spark):
+    """Sessions of one application share the SparkContext, so the
+    package zip is shipped to it once, whichever session asks."""
+    import os
+
+    from camelot_spark.pipeline import ensure_shipped
+
+    ensure_shipped(spark)
+    ensure_shipped(spark.newSession())
+    shipped = [f for f in spark.sparkContext.listFiles
+               if os.path.basename(f) == "camelot_spark.zip"]
+    assert len(shipped) == 1, shipped
+
+
+def test_benchmark_traced_names_resolve():
+    """Every function the benchmark's tracer patches still exists, so a
+    rename or deletion fails here rather than inside ``Tracer.install``
+    on a traced benchmark run. No Spark session needed."""
+    import importlib
+
+    from perfbench.tracing import EXTRACTION_LAYERS
+    from perfbench.workloads import SNAPSHOT_LAYERS
+
+    for layer, mod_name, attrs in EXTRACTION_LAYERS + SNAPSHOT_LAYERS:
+        mod = importlib.import_module(mod_name)
+        for attr in attrs:
+            owner, _, fn_name = attr.rpartition(".")
+            target = getattr(mod, owner) if owner else mod
+            assert callable(vars(target).get(fn_name)), f"{layer}: {mod_name}.{attr}"
+
+
 def test_snapshot_isolation_and_atomic_commit(spark, tmp_path):
     """Uncommitted data files are invisible to readers; a commit is an
     atomic manifest publish; version conflicts are detected, not

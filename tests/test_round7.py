@@ -8,6 +8,7 @@ inputs (the goldens pin the fixture corpus separately).
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from camelot_spark.kernels import raster as rk
 
@@ -164,6 +165,18 @@ def test_bpe_token_counts_from_merge_table_matches_inplace(spark):
     from_table = {r["doc_id"]: r["n_tokens"]
                   for r in bpe.bpe_token_counts(docs, merges=merges).collect()}
     assert inplace == from_table
+
+
+def test_lsh_plane_weights_built_once_read_only():
+    """Repeat calls return the one cached table, which no caller can
+    modify in place."""
+    from camelot_spark.tdp.similarity import _lsh_plane_weights
+
+    w = _lsh_plane_weights(7, 16)
+    assert _lsh_plane_weights(7, 16) is w
+    assert w.shape == (7, 16) and not w.flags.writeable
+    with pytest.raises(ValueError):
+        w[0, 0] = 1.0
 
 
 def test_lsh_signatures_numpy_matches_expression(spark):
