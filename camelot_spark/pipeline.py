@@ -259,10 +259,17 @@ def run_extraction(
     from pyspark.sql import functions as F
 
     is_table = is_table_identifier(output_path)
-    # first run = no output yet; an output that exists but cannot be
-    # read raises here, before any extraction or write
-    exists = (spark.catalog.tableExists(output_path) if is_table
-              else os.path.exists(output_path))
+    # first run = nothing committed yet: a path counts only once it holds
+    # a manifest or legacy parquet files, since a failed first run leaves
+    # an uncommitted data directory behind. Committed output that cannot
+    # be read raises here, before any extraction or write.
+    if is_table:
+        exists = spark.catalog.tableExists(output_path)
+    else:
+        from .snapshots import SnapshotLog
+
+        log = SnapshotLog(output_path)
+        exists = bool(log._versions() or log._legacy_files())
 
     docs = documents
     if resume and exists:
@@ -301,9 +308,6 @@ def run_extraction(
             except AnalysisException:
                 observed.write.saveAsTable(output_path)
         return obs.get
-    from .snapshots import SnapshotLog
-
-    log = SnapshotLog(output_path)
     data_dir = log.new_data_dir()
     observed.write.mode("error").parquet(data_dir)
     metrics = {k: (float(v) if v is not None else None) for k, v in dict(obs.get).items()}

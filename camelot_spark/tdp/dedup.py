@@ -642,8 +642,8 @@ def exact_key():
     xxhash64 collisions number in the thousands; the combined ~96+ bits
     push expected collisions below 10^-8 while the shuffled key stays
     20 bytes."""
-    return [F.xxhash64("text").alias("h"), F.length("text").alias("n_len"),
-            F.crc32("text").alias("h2")]
+    cols = (F.xxhash64("text"), F.length("text"), F.crc32("text"))
+    return [c.alias(name) for name, c in zip(EXACT_KEY, cols)]
 
 
 def dedup_keep_first(documents: DataFrame) -> DataFrame:

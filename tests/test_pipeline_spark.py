@@ -148,6 +148,29 @@ def test_resume_raises_on_unreadable_output_before_writing(spark, tmp_path):
     assert sorted(os.listdir(os.path.join(out_path, "data"))) == data_dirs
 
 
+def test_resume_after_failed_first_run(spark, tmp_path):
+    """A first run that fails commits nothing, whatever it leaves under
+    the output path, so the next run is again a first run and commits
+    v1."""
+    from camelot_spark.pipeline import read_extracted
+    from camelot_spark.snapshots import SnapshotLog
+
+    out_path = str(tmp_path / "extracted")
+    b = fx.doc_health("ff-1")
+    poisoned = spark.createDataFrame(
+        [(b.doc_id, [tuple(s.values()) for s in b.spans]),
+         ("poison-ff", [("text_h", "not json", "", 0)])],
+        schema=DOCUMENTS_SCHEMA)
+    with pytest.raises(Exception):
+        run_extraction(spark, poisoned, out_path, flavor="stream", fail_fast=True)
+    assert SnapshotLog(out_path).latest() is None
+
+    metrics = run_extraction(spark, docs_df(spark, [b]), out_path, flavor="stream")
+    assert metrics["docs"] == 1
+    assert [m["version"] for m in SnapshotLog(out_path).history()] == [1]
+    assert [r["doc_id"] for r in read_extracted(spark, out_path).collect()] == ["ff-1"]
+
+
 def test_ensure_shipped_once_per_spark_context(spark):
     """Sessions of one application share the SparkContext, so the
     package zip is shipped to it once, whichever session asks."""
