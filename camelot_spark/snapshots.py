@@ -295,15 +295,16 @@ class SnapshotLog:
         live: set[str] = set()
         for m in self.history():
             for d in m["data_dirs"]:
-                # normalize both top-level dirs and streaming epoch dirs
+                # normalized: a listed dir may be nested (see below)
                 live.add(os.path.normpath(os.path.join(self.root, d)))
         out = []
         for name in sorted(os.listdir(data_root)):
             p = os.path.normpath(os.path.join(data_root, name))
             if p in live:
                 continue
-            # a streaming run base dir is live if ANY of its epoch
-            # subdirs is referenced
+            # tables written by earlier catalog versions list nested
+            # data/<run>/epoch-<n> dirs: <run> holds committed data
+            # whenever any dir below it is referenced
             if any(l.startswith(p + os.sep) for l in live):
                 continue
             out.append(p)

@@ -232,14 +232,11 @@ def minhash_signatures(
     in SQL, so the banded-LSH candidate logic is hash-verified by the
     DuckDB oracle.
 
-    Batch and streaming inputs run the same plan. The PORTABLE family
-    explodes shingle rows, hashes each once in a codegen projection and
-    folds the 32 seed mixes per doc in one ``mapInArrow`` seam; the
-    PRODUCTION family folds ``array_min(transform(xxhash64))`` per row
-    (see the branch comments for the measured choice of each shape).
-    Neither shape aggregates across rows, so a stream needs no
-    watermark and emits each signature in the micro-batch its doc
-    arrives in.
+    The PORTABLE family explodes shingle rows, hashes each once in a
+    codegen projection and folds the 32 seed mixes per doc in one
+    ``mapInArrow`` seam; the PRODUCTION family folds
+    ``array_min(transform(xxhash64))`` per row (see the branch comments
+    for the measured choice of each shape).
 
     ``doc_id`` is a PRIMARY KEY (same contract as feature_hash_vec):
     the portable seam folds each contiguous run of one doc_id's shingle
@@ -304,9 +301,8 @@ def minhash_signatures(
 def banded_signatures(sigs: DataFrame, bands: int,
                       rows_per_band: int) -> DataFrame:
     """(doc_id, band, band_sig) rows from a (doc_id, sig-array) frame —
-    the banding step shared by the batch self-join pair builder and the
-    streaming stateful bucket operator (identical band keys, so a
-    streaming run over a static corpus reproduces the batch buckets)."""
+    the banding step shared by ``minhash_lsh_pairs`` and
+    ``dedup_incremental``."""
     return sigs.select(
         "doc_id",
         F.posexplode(
@@ -326,8 +322,7 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """LSH candidate pairs: split the K-wide signature into bands, join
     docs sharing any (band_id, band_signature) bucket. ``portable``
-    picks the hash family (see minhash_signatures). Batch input only;
-    ``streaming.streaming_neardup_pairs`` is the stream counterpart."""
+    picks the hash family (see minhash_signatures)."""
     if num_hashes % bands != 0:
         # silently truncating the signature would pay for num_hashes
         # folds while delivering the recall of bands*(num_hashes//bands)

@@ -303,10 +303,6 @@ public class SnapshotCatalog implements TableCatalog {
       return false;
     }
     deleteRecursively(dir.toFile());
-    // a later table recreated at the same path must not inherit this
-    // table's streaming-epoch idempotency state (a restarted stream
-    // with the same queryId/epochs would silently skip its writes)
-    ManifestLog.invalidateEpochCache(dir);
     return true;
   }
 
@@ -352,8 +348,7 @@ public class SnapshotCatalog implements TableCatalog {
     public Set<TableCapability> capabilities() {
       return Collections.unmodifiableSet(
           EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-              TableCapability.MICRO_BATCH_READ,
-              TableCapability.STREAMING_WRITE, TableCapability.TRUNCATE));
+              TableCapability.TRUNCATE));
     }
 
     @Override
@@ -395,14 +390,6 @@ public class SnapshotCatalog implements TableCatalog {
         @Override
         public BatchWrite toBatch() {
           return new SnapBatchWrite(tableDir, info.schema(), rep);
-        }
-
-        @Override
-        public org.apache.spark.sql.connector.write.streaming.StreamingWrite toStreaming() {
-          // Complete output mode: Spark calls truncate() and expects
-          // every epoch to replace the table — one replacing snapshot
-          // per micro-batch (the streaming-aggregation sink shape)
-          return new SnapStreamingWrite(tableDir, info.schema(), info.queryId(), rep);
         }
       };
     }
@@ -458,13 +445,13 @@ public class SnapshotCatalog implements TableCatalog {
         // expose crashed-attempt orphan .bin files as committed data
         // (an empty INSERT OVERWRITE is the standard truncate idiom)
         deleteRecursively(tableDir.resolve(dataDirRel).toFile());
-        ManifestLog.commit(tableDir, null, metrics, null, null, replace);
+        ManifestLog.commit(tableDir, null, metrics, null, replace);
         return;
       }
       writeSchemaSidecar(tableDir.resolve(dataDirRel), schema);
       // record the committed FILES, not just the dir: a crashed task
       // attempt's orphan .bin in the same dir must never be scanned
-      ManifestLog.commit(tableDir, dataDirRel, metrics, null, committed, replace);
+      ManifestLog.commit(tableDir, dataDirRel, metrics, committed, replace);
     }
 
     @Override
@@ -472,91 +459,6 @@ public class SnapshotCatalog implements TableCatalog {
       // data files are unreferenced until a manifest lands; clean the
       // orphaned commit directory
       deleteRecursively(tableDir.resolve(dataDirRel).toFile());
-    }
-  }
-
-  /**
-   * Streaming epoch commits: one snapshot per micro-batch, IDEMPOTENT
-   * on (streaming query id, epoch id) — Spark replays the last
-   * uncommitted epoch after a restart, and a replayed epoch that
-   * already has a committed manifest must not double its rows (the
-   * Iceberg streaming-sink contract). Each query run writes epochs
-   * under a fresh base dir, so partial files from a crashed attempt
-   * are never swept into a later commit.
-   */
-  static class SnapStreamingWrite
-      implements org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-    private final Path tableDir;
-    private final StructType schema;
-    private final String queryId;
-    private final String runBase;
-    private final boolean replace;
-
-    SnapStreamingWrite(Path tableDir, StructType schema, String queryId) {
-      this(tableDir, schema, queryId, false);
-    }
-
-    SnapStreamingWrite(Path tableDir, StructType schema, String queryId,
-        boolean replace) {
-      this.tableDir = tableDir;
-      this.schema = schema;
-      this.queryId = queryId;
-      this.replace = replace;
-      this.runBase = "data/stream-" + UUID.randomUUID().toString().replace("-", "");
-    }
-
-    private String epochDirRel(long epochId) {
-      return runBase + "/epoch-" + epochId;
-    }
-
-    @Override
-    public org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
-        createStreamingWriterFactory(PhysicalWriteInfo info) {
-      final String base = tableDir.resolve(runBase).toString();
-      final String schemaJson = schema.json();
-      return (partitionId, taskId, epochId) -> {
-        StructType s =
-            (StructType) org.apache.spark.sql.types.DataType$.MODULE$.fromJson(schemaJson);
-        return new BlobWriter(base + "/epoch-" + epochId, partitionId, taskId, s);
-      };
-    }
-
-    @Override
-    public void commit(long epochId, WriterCommitMessage[] messages) {
-      if (ManifestLog.epochCommitted(tableDir, queryId, epochId)) {
-        return; // replayed epoch after restart: already durable
-      }
-      long rows = 0;
-      List<String> committed = new ArrayList<>();
-      String epochRel = epochDirRel(epochId);
-      for (WriterCommitMessage m : messages) {
-        if (m instanceof FileCommit) {
-          rows += ((FileCommit) m).rowCount;
-          if (((FileCommit) m).rowCount > 0) {
-            committed.add(epochRel + "/" + new File(((FileCommit) m).path).getName());
-          }
-        }
-      }
-      Map<String, Object> metrics = new HashMap<>();
-      metrics.put("rows", rows);
-      if (replace) {
-        metrics.put("operation", "replace");
-      }
-      Map<String, String> extras = new HashMap<>();
-      extras.put("streaming_query", queryId);
-      extras.put("streaming_epoch", Long.toString(epochId));
-      if (committed.isEmpty()) {
-        deleteRecursively(tableDir.resolve(epochDirRel(epochId)).toFile());
-        ManifestLog.commit(tableDir, null, metrics, extras, null, replace);
-        return;
-      }
-      writeSchemaSidecar(tableDir.resolve(epochRel), schema);
-      ManifestLog.commit(tableDir, epochRel, metrics, extras, committed, replace);
-    }
-
-    @Override
-    public void abort(long epochId, WriterCommitMessage[] messages) {
-      deleteRecursively(tableDir.resolve(epochDirRel(epochId)).toFile());
     }
   }
 
@@ -938,49 +840,6 @@ public class SnapshotCatalog implements TableCatalog {
       // files without stats are never pruned.
       int latestV = ManifestLog.latestVersion(tableDir);
       String manifest = latestV == 0 ? "" : ManifestLog.readManifest(tableDir, latestV);
-      return partitionsForManifest(manifest, java.util.Collections.emptySet());
-    }
-
-    /** The ONE per-dir committed-file resolution rule: the manifest's
-     * exact file list when it carries entries for the dir, else the
-     * legacy dir-listing fallback (pre-data_files manifests; safe
-     * because every write commits into a fresh UUID dir, so legacy
-     * dirs are immutable). Shared by the batch scan and the streaming
-     * source so their file sets can never desynchronize. */
-    static File[] resolveDirFiles(Path tableDir, String rel, List<String> committed) {
-      List<File> listed = new ArrayList<>();
-      for (String cf : committed) {
-        if (cf.startsWith(rel + "/")) {
-          listed.add(tableDir.resolve(cf).toFile());
-        }
-      }
-      if (!listed.isEmpty()) {
-        // exact committed file set: an orphan .bin from a crashed
-        // task attempt in the same dir is invisible to the scan
-        return listed.toArray(new File[0]);
-      }
-      return tableDir.resolve(rel).toFile()
-          .listFiles(f -> f.isFile() && f.getName().endsWith(".bin"));
-    }
-
-    /** Absolute paths of every committed .bin a snapshot version
-     * exposes (via {@link #resolveDirFiles}). */
-    static java.util.Set<String> filesOfManifest(Path tableDir, String manifest) {
-      java.util.Set<String> out = new java.util.HashSet<>();
-      List<String> committed = ManifestLog.dataFiles(manifest);
-      for (String rel : ManifestLog.dataDirs(manifest)) {
-        File[] files = resolveDirFiles(tableDir, rel, committed);
-        if (files != null) {
-          for (File f : files) {
-            out.add(f.getAbsolutePath());
-          }
-        }
-      }
-      return out;
-    }
-
-    InputPartition[] partitionsForManifest(String manifest,
-        java.util.Set<String> excludePaths) {
       List<String> dataDirs = ManifestLog.dataDirs(manifest);
       List<String> committedFiles = ManifestLog.dataFiles(manifest);
       List<InputPartition> parts = new ArrayList<>();
@@ -1004,9 +863,6 @@ public class SnapshotCatalog implements TableCatalog {
         }
         Arrays.sort(files);
         for (File f : files) {
-          if (excludePaths.contains(f.getAbsolutePath())) {
-            continue;  // streamed in an earlier micro-batch
-          }
           if (filters.length > 0) {
             FileStats stats = FileStats.read(f);
             if (stats != null) {
@@ -1028,153 +884,30 @@ public class SnapshotCatalog implements TableCatalog {
       return parts.toArray(new InputPartition[0]);
     }
 
-    @Override
-    public PartitionReaderFactory createReaderFactory() {
-      return new BlobReaderFactory(fullSchema.json(), schema.json());
-    }
-
-    @Override
-    public org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-        toMicroBatchStream(String checkpointLocation) {
-      return new SnapMicroBatchStream(this, tableDir);
-    }
-  }
-
-  /** Incremental streaming SOURCE over the snapshot chain (the
-   * Iceberg streaming-read analogue): offsets are (version, snapshot
-   * id) pairs; each micro-batch plans exactly the files the version
-   * range ADDED. Replacing snapshots (compaction / INSERT OVERWRITE)
-   * fail the stream loudly — their files rewrite existing rows and
-   * streaming them would duplicate data (Iceberg's default stance).
-   * Exactly-once comes from the stream checkpoint persisting the
-   * offsets; the snapshot id pins them to one manifest chain. */
-  static class SnapMicroBatchStream
-      implements org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-    private final SnapScan scan;
-    private final Path tableDir;
-
-    SnapMicroBatchStream(SnapScan scan, Path tableDir) {
-      this.scan = scan;
-      this.tableDir = tableDir;
-    }
-
-    /** Version + that version's snapshot id: the id pins the offset to
-     * ONE manifest chain, so a checkpoint from a dropped/recreated
-     * table fails loudly instead of silently misreading the new
-     * chain's coincidentally-matching version numbers. */
-    static class VOffset extends org.apache.spark.sql.connector.read.streaming.Offset {
-      final long v;
-      final String snapshotId;  // "" for version 0
-
-      VOffset(long v, String snapshotId) {
-        this.v = v;
-        this.snapshotId = snapshotId == null ? "" : snapshotId;
-      }
-
-      @Override
-      public String json() {
-        return v + ":" + snapshotId;
-      }
-    }
-
-    @Override
-    public org.apache.spark.sql.connector.read.streaming.Offset initialOffset() {
-      return new VOffset(0, "");  // stream-from-beginning
-    }
-
-    @Override
-    public org.apache.spark.sql.connector.read.streaming.Offset latestOffset() {
-      int v = ManifestLog.latestVersion(tableDir);
-      String id = v == 0 ? "" : ManifestLog.stringField(
-          ManifestLog.readManifest(tableDir, v), "snapshot_id");
-      return new VOffset(v, id);
-    }
-
-    @Override
-    public org.apache.spark.sql.connector.read.streaming.Offset deserializeOffset(String json) {
-      int sep = json.indexOf(':');
-      if (sep < 0) {  // pre-chain-id offset format
-        return new VOffset(Long.parseLong(json.trim()), "");
-      }
-      return new VOffset(Long.parseLong(json.substring(0, sep).trim()),
-          json.substring(sep + 1).trim());
-    }
-
-    /** Every version in a batch's (start, end] range must still have
-     * its manifest: the start manifest defines the already-read file
-     * set, and each intermediate manifest must be inspected for
-     * replacing snapshots. A missing version — expire_snapshots
-     * removed it while the stream had not read past it, or the table
-     * was dropped and recreated — makes the batch unplannable without
-     * risking silent duplicates or data loss, so planning fails
-     * loudly instead of planning an empty or partial range. */
-    private String manifestAt(long v) {
-      if (!Files.isRegularFile(
-          ManifestLog.metaDir(tableDir).resolve("v" + v + ".json"))) {
-        throw new IllegalStateException(
-            "stream checkpoint references snapshot version " + v
-                + " which no longer exists under " + tableDir
-                + " — either expire_snapshots removed versions the"
-                + " stream had not read yet, or the table was dropped"
-                + " and recreated; the batch cannot be planned without"
-                + " risking data loss. Restart the stream from a fresh"
-                + " checkpoint (full re-read) or keep snapshots until"
-                + " all streams have read past them");
-      }
-      return ManifestLog.readManifest(tableDir, (int) v);
-    }
-
-    @Override
-    public InputPartition[] planInputPartitions(
-        org.apache.spark.sql.connector.read.streaming.Offset start,
-        org.apache.spark.sql.connector.read.streaming.Offset end) {
-      VOffset so = (VOffset) start;
-      long sv = so.v;
-      long ev = ((VOffset) end).v;
-      if (ev <= sv) {
-        return new InputPartition[0];
-      }
-      java.util.Set<String> prior = java.util.Collections.emptySet();
-      if (sv > 0) {
-        String startManifest = manifestAt(sv);
-        if (!so.snapshotId.isEmpty()
-            && !so.snapshotId.equals(
-                ManifestLog.stringField(startManifest, "snapshot_id"))) {
-          throw new IllegalStateException(
-              "stream checkpoint snapshot id does not match version " + sv
-                  + " under " + tableDir + " — the table was dropped and"
-                  + " recreated; restart the stream from a fresh checkpoint");
-        }
-        prior = SnapScan.filesOfManifest(tableDir, startManifest);
-      }
-      // a replacing snapshot (compaction / INSERT OVERWRITE) rewrites
-      // rows into new files; streaming them as additions would emit
-      // duplicates downstream. Match Iceberg's default: fail loudly.
-      for (long v = sv + 1; v <= ev; v++) {
-        String m = manifestAt(v);
-        if (m.contains("\"operation\": \"replace\"")) {
-          throw new UnsupportedOperationException(
-              "streaming read cannot cross the replacing snapshot v" + v
-                  + " (compaction / INSERT OVERWRITE rewrites rows; streaming"
-                  + " its files would duplicate them) — restart the stream"
-                  + " from a fresh checkpoint after the rewrite");
+    /** The ONE per-dir committed-file resolution rule: the manifest's
+     * exact file list when it carries entries for the dir, else the
+     * legacy dir-listing fallback (pre-data_files manifests; safe
+     * because every write commits into a fresh UUID dir, so legacy
+     * dirs are immutable). */
+    static File[] resolveDirFiles(Path tableDir, String rel, List<String> committed) {
+      List<File> listed = new ArrayList<>();
+      for (String cf : committed) {
+        if (cf.startsWith(rel + "/")) {
+          listed.add(tableDir.resolve(cf).toFile());
         }
       }
-      return scan.partitionsForManifest(manifestAt(ev), prior);
+      if (!listed.isEmpty()) {
+        // exact committed file set: an orphan .bin from a crashed
+        // task attempt in the same dir is invisible to the scan
+        return listed.toArray(new File[0]);
+      }
+      return tableDir.resolve(rel).toFile()
+          .listFiles(f -> f.isFile() && f.getName().endsWith(".bin"));
     }
 
     @Override
     public PartitionReaderFactory createReaderFactory() {
-      return scan.createReaderFactory();
-    }
-
-    @Override
-    public void commit(org.apache.spark.sql.connector.read.streaming.Offset end) {
-      // the stream checkpoint owns offset durability
-    }
-
-    @Override
-    public void stop() {
+      return new BlobReaderFactory(fullSchema.json(), schema.json());
     }
   }
 
@@ -1402,67 +1135,6 @@ public class SnapshotCatalog implements TableCatalog {
       return dataDirs(readManifest(tableDir, v));
     }
 
-    /** Per (table, query) incremental-scan state: highest manifest
-     * version already inspected + the committed epochs found there.
-     * Commits for one streaming query come from one driver JVM, so
-     * the cache is authoritative after its first full scan — without
-     * it every epoch commit re-reads the whole manifest chain
-     * (quadratic I/O over a stream's lifetime). */
-    private static final Map<String, long[]> epochScanTop = new java.util.concurrent.ConcurrentHashMap<>();
-    private static final Map<String, Set<Long>> epochSeen = new java.util.concurrent.ConcurrentHashMap<>();
-    // identity of the manifest chain the cache was built against:
-    // version 1's snapshot_id (a recreated table starts a fresh chain
-    // with a new v1 id even if it quickly grows past the cached scan
-    // top — the case cross-JVM drops can hit, since another JVM's
-    // dropTable cannot invalidate this JVM's static maps)
-    private static final Map<String, String> epochChainId = new java.util.concurrent.ConcurrentHashMap<>();
-
-    /** Drop all cached epoch state for one table (every queryId). */
-    static synchronized void invalidateEpochCache(Path tableDir) {
-      String prefix = tableDir.toString() + "|";
-      epochScanTop.keySet().removeIf(k -> k.startsWith(prefix));
-      epochSeen.keySet().removeIf(k -> k.startsWith(prefix));
-      epochChainId.keySet().removeIf(k -> k.startsWith(prefix));
-    }
-
-    /** True when some committed manifest already records this
-     * (streaming query, epoch) pair — the idempotency key for
-     * replayed micro-batches. */
-    static synchronized boolean epochCommitted(Path tableDir, String queryId, long epochId) {
-      String key = tableDir.toString() + "|" + queryId;
-      Set<Long> seen = epochSeen.computeIfAbsent(key, k -> new java.util.HashSet<>());
-      long scanned = epochScanTop.computeIfAbsent(key, k -> new long[] {0})[0];
-      int latest = latestVersion(tableDir);
-      String chain = latest >= 1
-          ? stringField(readManifest(tableDir, 1), "snapshot_id") : null;
-      if (latest < scanned
-          || !java.util.Objects.equals(chain, epochChainId.get(key))) {
-        // the manifest chain regressed below the cached scan top OR its
-        // v1 identity changed: the table was dropped and recreated out
-        // from under the cache (possibly by another JVM, which
-        // dropTable's invalidation cannot see). Cached epochs belong to
-        // the dead table — rebuild from disk.
-        seen.clear();
-        scanned = 0;
-      }
-      if (chain != null) {
-        epochChainId.put(key, chain);
-      } else {
-        epochChainId.remove(key);
-      }
-      for (int v = latest; v > scanned; v--) {
-        String m = readManifest(tableDir, v);
-        if (queryId.equals(stringField(m, "streaming_query"))) {
-          String epoch = stringField(m, "streaming_epoch");
-          if (epoch != null) {
-            seen.add(Long.parseLong(epoch));
-          }
-        }
-      }
-      epochScanTop.get(key)[0] = Math.max(scanned, latest);
-      return seen.contains(epochId);
-    }
-
     static List<String> dataFiles(String json) {
       List<String> out = new ArrayList<>();
       String marker = "\"data_files\": [";
@@ -1481,15 +1153,6 @@ public class SnapshotCatalog implements TableCatalog {
       return out;
     }
 
-    static void commit(Path tableDir, String newDataDir, Map<String, Object> metrics) {
-      commit(tableDir, newDataDir, metrics, null, null);
-    }
-
-    static void commit(Path tableDir, String newDataDir, Map<String, Object> metrics,
-        Map<String, String> extras) {
-      commit(tableDir, newDataDir, metrics, extras, null);
-    }
-
     /**
      * Publish one snapshot: parent's data dirs + the new one, via an
      * atomic hard-link (link(2) fails with EEXIST instead of
@@ -1498,19 +1161,15 @@ public class SnapshotCatalog implements TableCatalog {
      * committed task attempts wrote — an orphan from a crashed
      * attempt sits in the same directory but is never listed, so the
      * scan cannot read it as committed data.
-     */
-    static void commit(Path tableDir, String newDataDir, Map<String, Object> metrics,
-        Map<String, String> extras, List<String> newFiles) {
-      commit(tableDir, newDataDir, metrics, extras, newFiles, false);
-    }
-
-    /** ``replace=true`` publishes a snapshot whose live data is ONLY
+     *
+     * <p>``replace=true`` publishes a snapshot whose live data is ONLY
      * the new dir/files (parent chain intact — old versions stay
      * readable for time travel): the INSERT OVERWRITE / compaction
      * commit. Serializable like appends: the loser of a publish race
-     * retries on top of the new latest. */
+     * retries on top of the new latest.
+     */
     static void commit(Path tableDir, String newDataDir, Map<String, Object> metrics,
-        Map<String, String> extras, List<String> newFiles, boolean replace) {
+        List<String> newFiles, boolean replace) {
       Path meta = metaDir(tableDir);
       try {
         Files.createDirectories(meta);
@@ -1537,7 +1196,7 @@ public class SnapshotCatalog implements TableCatalog {
           files.addAll(newFiles);
         }
         int version = parentVersion + 1;
-        String json = renderManifest(version, parentId, dirs, files, metrics, extras);
+        String json = renderManifest(version, parentId, dirs, files, metrics);
         Path tmp = meta.resolve(".tmp-" + UUID.randomUUID().toString().replace("-", "") + ".json");
         try {
           Files.write(tmp, json.getBytes(StandardCharsets.UTF_8));
@@ -1558,7 +1217,7 @@ public class SnapshotCatalog implements TableCatalog {
 
     static String renderManifest(
         int version, String parentId, List<String> dirs, List<String> files,
-        Map<String, Object> metrics, Map<String, String> extras) {
+        Map<String, Object> metrics) {
       StringBuilder sb = new StringBuilder();
       sb.append("{\n");
       sb.append(" \"committed_at_ms\": ").append(System.currentTimeMillis()).append(",\n");
@@ -1602,12 +1261,6 @@ public class SnapshotCatalog implements TableCatalog {
           .append(parentId == null ? "null" : "\"" + parentId + "\"").append(",\n");
       sb.append(" \"snapshot_id\": \"")
           .append(UUID.randomUUID().toString().replace("-", "")).append("\",\n");
-      if (extras != null) {
-        for (Map.Entry<String, String> e : new java.util.TreeMap<>(extras).entrySet()) {
-          sb.append(" \"").append(e.getKey()).append("\": \"")
-              .append(e.getValue()).append("\",\n");
-        }
-      }
       sb.append(" \"version\": ").append(version).append("\n");
       sb.append("}");
       return sb.toString();

@@ -204,61 +204,6 @@ def test_jpeg_non_interleaved_baseline_decodes_exactly():
         assert np.array_equal(split, base), (shape, ss)
 
 
-def test_assembly_stray_part_index_does_not_complete():
-    """An out-of-range part index must not satisfy completeness by
-    count; the doc stays pending (later timeout flushes it partial)."""
-    import pandas as pd
-
-    from camelot_spark import streaming as st
-
-    captured = {}
-
-    class FakeGrouped:
-        def applyInPandasWithState(self, fn, *a, **k):
-            captured["fn"] = fn
-
-    class FakeDF:
-        def groupBy(self, *_):
-            return FakeGrouped()
-
-    class StubState:
-        value, hasTimedOut, removed = None, False, False
-
-        @property
-        def exists(self):
-            return self.value is not None
-
-        @property
-        def get(self):
-            return self.value
-
-        def update(self, v):
-            self.value = v
-
-        def remove(self):
-            self.value, self.removed = None, True
-
-        def setTimeoutDuration(self, ms):
-            pass
-
-    st.assemble_multipart_stream(FakeDF())
-    fn = captured["fn"]
-    state = StubState()
-    pdf = pd.DataFrame([
-        {"doc_id": "d", "part_idx": 0, "n_parts": 3, "payload": "a"},
-        {"doc_id": "d", "part_idx": 1, "n_parts": 3, "payload": "b"},
-        {"doc_id": "d", "part_idx": 5, "n_parts": 3, "payload": "STRAY"},
-    ])
-    assert list(fn(("d",), [pdf], state)) == []     # 3 distinct != complete
-    assert state.exists
-    # the missing part arrives: complete, stray excluded from the text
-    pdf2 = pd.DataFrame([{"doc_id": "d", "part_idx": 2, "n_parts": 3,
-                          "payload": "c"}])
-    [out] = list(fn(("d",), [pdf2], state))
-    assert out.iloc[0]["text"] == "abc"
-    assert out.iloc[0]["complete"] == 1 and out.iloc[0]["n_received"] == 4
-
-
 def test_sqlite_skips_empty_grid_and_sheet_names_stay_bounded(spark, tmp_path):
     import sqlite3
 

@@ -1,10 +1,6 @@
 """Round-5 fixes: single-component JPEG scan routing (T.81 A.2),
-factor-3 sampling, frame_sample best-effort AVI fallback, corrupt
-multipart headers, and the event-time assembly timeout."""
-import time
-
+factor-3 sampling, and frame_sample best-effort AVI fallback."""
 import numpy as np
-import pandas as pd
 import pytest
 
 
@@ -130,108 +126,3 @@ def test_frame_sample_degrades_unsupported_avi_per_row(spark):
     # the bad row fell back to deterministic 64-byte chunking of the
     # raw container bytes instead of killing the task
     assert len(rows["bad"]) == len(bad) // 64
-
-
-def test_multipart_n_parts_zero_flushes_immediately():
-    """ADVICE r4: n_parts<=0 (corrupt header) can never complete — it
-    must flush complete=0 NOW rather than leak state forever."""
-    from camelot_spark import streaming as st
-
-    captured = {}
-
-    class FakeGrouped:
-        def applyInPandasWithState(self, fn, *a, **k):
-            captured["fn"] = fn
-            return None
-
-    class FakeDF:
-        def groupBy(self, *_):
-            return FakeGrouped()
-
-    class StubState:
-        value, hasTimedOut, removed = None, False, False
-        exists = property(lambda s: s.value is not None)
-        get = property(lambda s: s.value)
-
-        def update(self, v):
-            self.value = v
-
-        def remove(self):
-            self.value, self.removed = None, True
-
-    st.assemble_multipart_stream(FakeDF(), timeout_ms=0)
-    fn = captured["fn"]
-    pdf = pd.DataFrame([{"doc_id": "z", "part_idx": 0,
-                         "n_parts": 0, "payload": "junk"}])
-    state = StubState()
-    [out] = list(fn(("z",), [pdf], state))
-    assert out.iloc[0]["complete"] == 0 and out.iloc[0]["n_parts"] == 0
-    assert out.iloc[0]["n_received"] == 1
-    assert state.removed and not state.exists
-
-
-def _write_ts_parts(spark, rows, path):
-    spark.createDataFrame(
-        rows,
-        "doc_id string, part_idx int, n_parts int, payload string, ts timestamp",
-    ).coalesce(1).write.mode("append").parquet(path)
-
-
-def _run_event_assembly(spark, inp, outp, ckpt, timeout_ms):
-    from camelot_spark.streaming import assemble_multipart_stream
-
-    parts = (spark.readStream
-             .schema("doc_id string, part_idx int, n_parts int, "
-                     "payload string, ts timestamp")
-             .parquet(inp)
-             .withWatermark("ts", "0 seconds"))
-    q = (assemble_multipart_stream(parts, timeout_ms=timeout_ms,
-                                   timeout_mode="event")
-         .writeStream.option("checkpointLocation", ckpt)
-         .outputMode("append").trigger(availableNow=True)
-         .format("parquet").option("path", outp).start())
-    q.awaitTermination(120)
-
-
-def test_multipart_event_time_timeout_survives_backfill(spark, tmp_path):
-    """Round-5 item 5: with EventTimeTimeout, a backfilled/paused
-    stream (watermark frozen) flushes NOTHING on wall-clock idleness;
-    only watermark advance past (last event time + timeout) flushes a
-    partial doc — the replay-safe production mode."""
-    import glob
-    import os
-    from datetime import datetime, timedelta
-
-    def ts(s):
-        return datetime(2026, 1, 1, 10, 0) + timedelta(seconds=s)
-
-    inp, outp, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-    timeout_ms = 5000  # 5 s of EVENT time
-
-    # batch 1: doc A incomplete at t=0
-    _write_ts_parts(spark, [("A", 0, 2, "a0", ts(0))], inp)
-    _run_event_assembly(spark, inp, outp, ckpt, timeout_ms)
-
-    # backfill: wall-clock idle >> timeout, but event time barely moves
-    time.sleep(1.0)
-    _write_ts_parts(spark, [("C", 0, 2, "c0", ts(1))], inp)
-    _run_event_assembly(spark, inp, outp, ckpt, timeout_ms)
-    time.sleep(1.0)
-    _write_ts_parts(spark, [("C", 1, 2, "c1", ts(2))], inp)
-    _run_event_assembly(spark, inp, outp, ckpt, timeout_ms)
-
-    done = ({r["doc_id"]: r for r in spark.read.parquet(outp).collect()}
-            if glob.glob(os.path.join(outp, "*.parquet")) else {})
-    # C completed normally; A was NOT flushed by the wall-clock pauses
-    assert set(done) == {"C"} and done["C"]["complete"] == 1
-
-    # now event time jumps: watermark passes A's t=0 + 5 s
-    _write_ts_parts(spark, [("D", 0, 9, "d0", ts(60))], inp)
-    _run_event_assembly(spark, inp, outp, ckpt, timeout_ms)
-    # one more batch so the advanced watermark is applied to timeouts
-    _write_ts_parts(spark, [("D", 1, 9, "d1", ts(61))], inp)
-    _run_event_assembly(spark, inp, outp, ckpt, timeout_ms)
-
-    flushed = {r["doc_id"]: r for r in spark.read.parquet(outp).collect()}
-    assert "A" in flushed
-    assert flushed["A"]["complete"] == 0 and flushed["A"]["n_received"] == 1

@@ -1,105 +1,9 @@
-"""Round-5 code-review regressions: corrupt-part-row state safety,
-event-timeout anchoring for null-ts docs, malformed-container
+"""Round-5 code-review regressions: malformed-container
 best-effort in frame_sample, idx1 fallback robustness, plan-audit
 window classification default-closed, and prefix-cache cleanup."""
 
 import numpy as np
-import pandas as pd
 import pytest
-
-
-class _StubState:
-    def __init__(self, value=None, timed_out=False, watermark_ms=0):
-        self.value = value
-        self.hasTimedOut = timed_out
-        self.removed = False
-        self.timeout_duration = None
-        self.timeout_ts = None
-        self._wm = watermark_ms
-
-    exists = property(lambda s: s.value is not None)
-    get = property(lambda s: s.value)
-
-    def update(self, v):
-        self.value = v
-
-    def remove(self):
-        self.value, self.removed = None, True
-
-    def setTimeoutDuration(self, ms):
-        self.timeout_duration = ms
-
-    def setTimeoutTimestamp(self, ts):
-        self.timeout_ts = ts
-
-    def getCurrentWatermarkMs(self):
-        return self._wm
-
-
-def _assemble_fn(**kwargs):
-    from camelot_spark import streaming as st
-
-    captured = {}
-
-    class FakeGrouped:
-        def applyInPandasWithState(self, fn, *a, **k):
-            captured["fn"] = fn
-            return None
-
-    class FakeDF:
-        def groupBy(self, *_):
-            return FakeGrouped()
-
-    st.assemble_multipart_stream(FakeDF(), **kwargs)
-    return captured["fn"]
-
-
-def test_corrupt_row_does_not_destroy_known_good_state():
-    """A stray n_parts<=0 row must NOT overwrite a known-good header
-    and force-flush a mid-assembly doc: the doc keeps accumulating and
-    completes when its real parts arrive."""
-    fn = _assemble_fn(timeout_ms=60000)
-    state = _StubState(value=([0, 1], ["a", "b"], 3, 0))
-    corrupt = pd.DataFrame([{"doc_id": "d", "part_idx": 7,
-                             "n_parts": 0, "payload": "junk"}])
-    assert list(fn(("d",), [corrupt], state)) == []  # no forced flush
-    assert state.exists and state.value[2] == 3      # n survives
-    good = pd.DataFrame([{"doc_id": "d", "part_idx": 2,
-                          "n_parts": 3, "payload": "c"}])
-    [out] = list(fn(("d",), [good], state))
-    assert out.iloc[0]["complete"] == 1 and out.iloc[0]["text"] == "abc"
-    assert state.removed
-
-
-def test_never_valid_header_still_flushes_immediately():
-    """The r4 leak fix stands: a doc whose rows ONLY ever carried
-    n_parts<=0 flushes complete=0 now instead of leaking state."""
-    fn = _assemble_fn(timeout_ms=0)
-    state = _StubState()
-    pdf = pd.DataFrame([{"doc_id": "z", "part_idx": 0,
-                         "n_parts": 0, "payload": "junk"}])
-    [out] = list(fn(("z",), [pdf], state))
-    assert out.iloc[0]["complete"] == 0 and state.removed
-
-
-def test_event_timeout_null_ts_anchors_to_watermark():
-    """Event mode: a doc whose parts all carry null ts must time out
-    a full timeout_ms past the CURRENT watermark — not at watermark+1,
-    which would flush it on the very next watermark advance."""
-    fn = _assemble_fn(timeout_ms=5000, timeout_mode="event")
-    wm = 1_700_000_000_000
-    state = _StubState(watermark_ms=wm)
-    pdf = pd.DataFrame([{"doc_id": "d", "part_idx": 0, "n_parts": 2,
-                         "payload": "a", "ts": pd.NaT}])
-    assert list(fn(("d",), [pdf], state)) == []
-    assert state.timeout_ts == wm + 5000
-    # and a doc WITH event times still anchors to its max event time
-    state2 = _StubState(watermark_ms=wm)
-    ts = pd.Timestamp((wm + 9000) * 1_000_000)
-    pdf2 = pd.DataFrame([{"doc_id": "e", "part_idx": 0, "n_parts": 2,
-                          "payload": "a", "ts": ts}])
-    assert list(fn(("e",), [pdf2], state2)) == []
-    assert state2.timeout_ts == wm + 9000 + 5000
 
 
 class TestAviRobustness:
@@ -401,96 +305,6 @@ def test_decontaminate_bloom_matches_python_mirror(spark):
         assert got[d] == want, (d, got[d], want)
     # sanity: doc 1 shares grams with doc 0, doc 3 shares none
     assert got[1] >= 1 and got[3] == 0
-
-
-class TestStreamingNeardup:
-    def _docs(self):
-        # 0 & 2 near-identical (share almost all shingles), 1 & 3
-        # unrelated, 4 a copy of 0 arriving LATER
-        t = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-        return [(0, t), (1, "one two three four five six seven eight"),
-                (2, t + " lambda"), (3, "nine ten eleven twelve thirteen"),
-                (4, t)]
-
-    def _run(self, spark, batches, tmp_path, portable=True, **kwargs):
-        from camelot_spark.streaming import streaming_neardup_pairs
-
-        inp, outp, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-        pairs = set()
-        for rows in batches:
-            spark.createDataFrame(rows, "doc_id long, text string") \
-                .coalesce(1).write.mode("append").parquet(inp)
-            stream = (spark.readStream.schema("doc_id long, text string")
-                      .parquet(inp))
-            q = (streaming_neardup_pairs(stream, portable=portable, **kwargs)
-                 .writeStream.option("checkpointLocation", ckpt)
-                 .outputMode("append").trigger(availableNow=True)
-                 .format("parquet").option("path", outp).start())
-            q.awaitTermination(120)
-        for r in spark.read.parquet(outp).collect():
-            pairs.add((r["a_id"], r["b_id"]))
-        return pairs
-
-    def _check_matches_batch(self, spark, tmp_path, portable):
-        from camelot_spark.tdp.dedup import minhash_lsh_pairs
-
-        docs = self._docs()
-        batch_pairs = {
-            (r["a_id"], r["b_id"])
-            for r in minhash_lsh_pairs(
-                spark.createDataFrame(docs, "doc_id long, text string"),
-                portable=portable).collect()
-        }
-        got = self._run(spark, [docs[:2], docs[2:4], docs[4:]], tmp_path,
-                        portable=portable)
-        assert got == batch_pairs
-        assert (0, 4) in got          # members arrived in batches 1 and 3
-
-    def test_matches_batch_pairs_and_crosses_batches(self, spark, tmp_path):
-        """A streaming run over a static corpus reproduces the batch
-        LSH candidate set exactly — including the pair whose second
-        member arrives two micro-batches after the first."""
-        self._check_matches_batch(spark, tmp_path, portable=True)
-
-    def test_production_family_matches_batch_pairs(self, spark, tmp_path):
-        """The xxhash64 family streams through the same signature plan
-        as batch, so it reproduces the batch candidate set too."""
-        self._check_matches_batch(spark, tmp_path, portable=False)
-
-    def test_redelivery_is_dropped(self, spark, tmp_path):
-        docs = self._docs()
-        got = self._run(spark, [docs[:3], docs[:3], docs[3:]], tmp_path)
-        # re-shipping batch 1 must not re-emit or self-pair
-        assert all(a != b for a, b in got)
-        from camelot_spark.tdp.dedup import minhash_lsh_pairs
-        batch_pairs = {
-            (r["a_id"], r["b_id"])
-            for r in minhash_lsh_pairs(
-                spark.createDataFrame(docs, "doc_id long, text string"),
-                portable=True).collect()
-        }
-        assert got == batch_pairs
-
-    def test_hot_bucket_cap_bounds_state(self, spark, tmp_path):
-        """With bucket_cap=2, a bucket seeing 4 identical docs pairs
-        only the first two — bounded state AND bounded pair fan-out."""
-        t = "same same same text in every doc word word word word"
-        docs = [(i, t) for i in range(4)]
-        got = self._run(spark, [docs], tmp_path, bucket_cap=2)
-        assert got == {(0, 1)}
-
-    def test_short_docs_never_pair(self, spark, tmp_path):
-        """Shingle-less (<n tokens) docs bucket to band_sig='' — the
-        guard must drop them before state, so unrelated short docs
-        across batches emit NO pairs and cannot saturate bucket_cap."""
-        t = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-        short = [(10, "hi"), (11, "ok"), (12, "yo there")]
-        real = [(0, t), (2, t + " lambda")]
-        got = self._run(spark, [short[:2], [short[2]] + real],
-                        tmp_path, bucket_cap=2)
-        # with cap=2 a saturated '' bucket would also have blocked
-        # nothing here — but the spurious (10,11) pair is the signal
-        assert got == {(0, 2)}
 
 
 class TestQualityClassifier:

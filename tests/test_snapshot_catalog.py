@@ -7,12 +7,16 @@ anti-join resume. These tests FAIL if the append path stops committing
 snapshots — the verification the v1-session-catalog fallback could
 never give (round-2 verdict item #1)."""
 
+import json
 import os
+import re
 import sys
+import zipfile
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from camelot_spark import fixtures as fx
 from camelot_spark.pipeline import read_extracted, run_extraction
@@ -144,48 +148,6 @@ def test_catalog_concurrent_appends_serialize(spark):
     assert got == {"rc-0", "rc-1", "rc-2"}
 
 
-def test_streaming_write_commits_idempotent_epoch_snapshots(spark, tmp_path):
-    """writeStream into a catalog table: ONE snapshot per micro-batch
-    epoch, manifests tagged (streaming_query, streaming_epoch), and a
-    checkpointed restart with no new data commits nothing — the Iceberg
-    streaming-sink contract."""
-    from camelot_spark.streaming import start_extraction_stream
-    from tests.test_streaming import _write_docs
-
-    table = "snap.ns.stream_v2"
-    inp, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
-    b1 = fx.doc_health("sw-1")
-    _write_docs(spark, [b1], inp)
-
-    q = start_extraction_stream(spark, inp, table, ckpt, flavor="stream", fail_fast=True)
-    q.awaitTermination(120)
-    log = _table_log(spark, table)
-    hist = log.history()
-    epoch_manifests = [m for m in hist if "streaming_epoch" in m]
-    assert len(epoch_manifests) == 1
-    assert epoch_manifests[0]["metrics"]["rows"] == 1
-    rows = spark.read.table(table)
-    got = [(s["kind"], s["text"], s["media_ref"], s["order"])
-           for s in rows.collect()[0]["spans"]]
-    assert got == b1.golden()
-
-    # second run, new doc: exactly one more epoch snapshot
-    _write_docs(spark, [fx.doc_twotables("sw-2")], inp)
-    q = start_extraction_stream(spark, inp, table, ckpt, flavor="stream", fail_fast=True)
-    q.awaitTermination(120)
-    assert spark.read.table(table).count() == 2
-    n_after_two = len(_table_log(spark, table).history())
-
-    # third run, no new data: no rows and no new DATA snapshots
-    q = start_extraction_stream(spark, inp, table, ckpt, flavor="stream", fail_fast=True)
-    q.awaitTermination(120)
-    assert spark.read.table(table).count() == 2
-    hist = _table_log(spark, table).history()
-    with_rows = [m for m in hist if m["metrics"].get("rows", 0) > 0]
-    assert len(with_rows) == 2, [m.get("streaming_epoch") for m in hist]
-    assert n_after_two <= len(hist) <= n_after_two + 1  # at most an empty epoch
-
-
 def test_snapshot_maintenance_expire_and_orphans(spark, tmp_path):
     """Iceberg-style maintenance: expire_snapshots bounds the metadata
     log without touching live data; remove_orphans deletes only
@@ -211,6 +173,29 @@ def test_snapshot_maintenance_expire_and_orphans(spark, tmp_path):
     assert [m["version"] for m in log.history()] == [3, 4]
     # latest manifest still lists every live dir: reads unaffected
     assert read_extracted(spark, out_path).count() == 4
+    assert log.orphan_dirs() == []
+
+
+def test_orphan_dirs_keep_run_dir_of_listed_epoch_dir(tmp_path):
+    """Tables written by earlier catalog versions list nested
+    data/<run>/epoch-<n> dirs. Their <run> base holds committed data:
+    orphan maintenance must report and delete only the real orphan."""
+    root = tmp_path / "tbl"
+    epoch = root / "data" / "run-x" / "epoch-0"
+    epoch.mkdir(parents=True)
+    (epoch / "part-0.bin").write_bytes(b"rows")
+    orphan = root / "data" / "snap-dead"
+    orphan.mkdir()
+    (root / "_snapshots").mkdir()
+    (root / "_snapshots" / "v1.json").write_text(json.dumps({
+        "version": 1, "snapshot_id": "s1", "parent_id": None,
+        "data_dirs": ["data/run-x/epoch-0"], "metrics": {}}))
+
+    log = SnapshotLog(str(root))
+    assert log.orphan_dirs() == [str(orphan)]
+    assert log.remove_orphans() == [str(orphan)]
+    assert not orphan.exists()
+    assert (epoch / "part-0.bin").read_bytes() == b"rows"
     assert log.orphan_dirs() == []
 
 
@@ -329,36 +314,6 @@ def test_orphan_task_file_in_committed_dir_is_not_scanned(spark):
     assert {r["id"] for r in spark.table(table).collect()} == set(range(5))
 
 
-def test_drop_and_recreate_does_not_inherit_epoch_state(spark, tmp_path):
-    """Drop table + restart the SAME stream (same queryId, replayed
-    epoch 0 after the checkpoint's commit log is cleared): the recreated
-    table must receive the epoch's rows — stale per-(table, query)
-    idempotency caches in the catalog JVM must not skip the write."""
-    import shutil
-
-    from camelot_spark.streaming import start_extraction_stream
-    from tests.test_streaming import _write_docs
-
-    table = "snap.ns.dropre_v2"
-    inp, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
-    b1 = fx.doc_health("dr-1")
-    _write_docs(spark, [b1], inp)
-
-    q = start_extraction_stream(spark, inp, table, ckpt, flavor="stream", fail_fast=True)
-    q.awaitTermination(120)
-    assert spark.read.table(table).count() == 1
-
-    spark.sql(f"DROP TABLE {table}")
-    # clear the stream's progress (keep metadata => same queryId): the
-    # restarted query replays epoch 0 against the recreated table
-    for sub in ("commits", "offsets", "sources", "state"):
-        shutil.rmtree(os.path.join(ckpt, sub), ignore_errors=True)
-    q = start_extraction_stream(spark, inp, table, ckpt, flavor="stream", fail_fast=True)
-    q.awaitTermination(120)
-    assert spark.read.table(table).count() == 1, \
-        "recreated table lost the replayed epoch write (stale epoch cache)"
-
-
 def test_alter_column_type_widening_int_to_long(spark):
     """Iceberg-parity type widening: write INT, ALTER COLUMN TYPE
     BIGINT — old files read back widened (Cast at scan, exact values),
@@ -474,56 +429,6 @@ def test_compaction_through_the_write_path(spark):
     assert len(hist) == 4
 
 
-def test_externally_recreated_table_does_not_inherit_epoch_state(spark, tmp_path):
-    """Cross-JVM drop simulation: the table directory is removed on
-    DISK (bypassing dropTable, so this JVM's cache invalidation never
-    runs), recreated, and batch-appended past the cached manifest
-    version before the stream replays. The chain-identity check (v1
-    snapshot_id) must reject the stale epoch cache and let the
-    replayed write through."""
-    import shutil
-
-    from camelot_spark.streaming import start_extraction_stream
-    from tests.test_streaming import _write_docs
-
-    table = "snap.ns.extdrop_v2"
-    wh = _require_catalog(spark)
-    tdir = os.path.join(wh, "ns", "extdrop_v2")
-    inp, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
-    _write_docs(spark, [fx.doc_health("xd-1")], inp)
-
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    q = start_extraction_stream(spark, inp, table, ckpt, flavor="stream", fail_fast=True)
-    q.awaitTermination(120)
-    assert spark.read.table(table).count() == 1
-
-    # "another JVM" drops + recreates: wipe the dir without dropTable
-    spark.catalog.clearCache()
-    shutil.rmtree(tdir)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")   # clear catalog entry too
-    spark.sql(
-        "CREATE TABLE snap.ns.extdrop_v2 "
-        "(doc_id STRING, spans ARRAY<STRUCT<kind: STRING, text: STRING, "
-        "media_ref: STRING, `order`: INT>>, n_tables INT, accuracy DOUBLE, "
-        "whitespace DOUBLE, tables ARRAY<STRUCT<`order`: INT, accuracy: DOUBLE, "
-        "whitespace: DOUBLE, nrows: INT, ncols: INT, x0: DOUBLE, y0: DOUBLE, "
-        "x1: DOUBLE, y1: DOUBLE>>, lineage STRUCT<partition_id: INT, "
-        "kernel_version: STRING, salt: INT, attempt: INT, elapsed_us: BIGINT, "
-        "n_input_spans: INT, error: STRING, flavor: STRING>)")
-    # grow the NEW chain past the cached scan top with empty appends
-    empty = spark.read.table(table).limit(0)
-    for _ in range(3):
-        empty.writeTo(table).append()
-
-    # replay epoch 0 from the same checkpoint (same queryId)
-    for sub in ("commits", "offsets", "sources", "state"):
-        shutil.rmtree(os.path.join(ckpt, sub), ignore_errors=True)
-    q = start_extraction_stream(spark, inp, table, ckpt, flavor="stream", fail_fast=True)
-    q.awaitTermination(120)
-    assert spark.read.table(table).count() == 1, \
-        "replayed epoch write was skipped by a stale cross-JVM epoch cache"
-
-
 def test_empty_overwrite_truncates_without_orphan_exposure(spark):
     """INSERT OVERWRITE ... WHERE false (the truncate idiom): the
     replacing snapshot references NO data dir, so the legacy per-dir
@@ -545,259 +450,23 @@ def test_empty_overwrite_truncates_without_orphan_exposure(spark):
     assert spark.table(table).count() == 1
 
 
-def test_complete_mode_streaming_aggregation(spark, tmp_path):
-    """outputMode('complete') streaming aggregation into a catalog
-    table: each epoch commits a REPLACING snapshot, so the table always
-    holds the latest full aggregate (the TRUNCATE-capability streaming
-    contract)."""
-    _require_catalog(spark)
-    table = "snap.ns.agg_complete"
-    inp, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"CREATE TABLE {table} (lang STRING, n BIGINT)")
-
-    def run_batch():
-        from pyspark.sql import functions as F
-
-        stream = (spark.readStream.schema("doc_id long, lang string")
-                  .parquet(inp))
-        q = (stream.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-             .writeStream.option("checkpointLocation", ckpt)
-             .outputMode("complete").trigger(availableNow=True)
-             .toTable(table))
-        q.awaitTermination(120)
-
-    spark.createDataFrame([(1, "en"), (2, "en"), (3, "fr")],
-                          "doc_id long, lang string") \
-        .coalesce(1).write.mode("append").parquet(inp)
-    run_batch()
-    got = {r["lang"]: r["n"] for r in spark.table(table).collect()}
-    assert got == {"en": 2, "fr": 1}
-
-    spark.createDataFrame([(4, "en"), (5, "de")], "doc_id long, lang string") \
-        .coalesce(1).write.mode("append").parquet(inp)
-    run_batch()
-    got = {r["lang"]: r["n"] for r in spark.table(table).collect()}
-    assert got == {"en": 3, "fr": 1, "de": 1}   # replaced, not stacked
-    hist = _table_log(spark, table).history()
-    assert hist[-1]["metrics"].get("operation") == "replace"
-
-
-def test_streaming_read_consumes_snapshots_incrementally(spark, tmp_path):
-    """The catalog as a streaming SOURCE (Iceberg streaming-read
-    analogue): offsets are snapshot versions, each micro-batch reads
-    exactly the files the version range added, and a checkpointed
-    restart resumes from the committed version — appends between runs
-    flow through exactly once."""
-    _require_catalog(spark)
-    table = "snap.ns.stream_src"
-    outp, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"CREATE TABLE {table} (id BIGINT, v STRING)")
-    spark.range(3).selectExpr("id", "concat('a', id) AS v").writeTo(table).append()
-    spark.range(3, 5).selectExpr("id", "concat('a', id) AS v").writeTo(table).append()
-
-    def drain():
-        q = (spark.readStream.table(table)
-             .writeStream.option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True)
-             .format("parquet").option("path", outp).start())
-        q.awaitTermination(120)
-
-    drain()
-    got = {r["id"] for r in spark.read.parquet(outp).collect()}
-    assert got == {0, 1, 2, 3, 4}
-
-    # appends between runs: only the NEW snapshot's rows flow through
-    spark.range(10, 12).selectExpr("id", "concat('b', id) AS v").writeTo(table).append()
-    drain()
-    rows = spark.read.parquet(outp).collect()
-    assert len(rows) == 7                       # exactly once, no re-reads
-    assert {r["id"] for r in rows} == {0, 1, 2, 3, 4, 10, 11}
-
-    # no new snapshots: nothing re-emitted
-    drain()
-    assert spark.read.parquet(outp).count() == 7
-
-
-def test_catalog_to_catalog_streaming_extraction(spark, tmp_path):
-    """The fully catalog-native continuous pipeline: documents land in
-    a snapshot table, the extraction stream reads it INCREMENTALLY
-    through the DSv2 micro-batch source and appends extracted rows to
-    another snapshot table — new document snapshots flow through on
-    the next trigger, exactly once."""
-    from camelot_spark.streaming import start_extraction_stream
-    from camelot_spark.schema import DOCUMENTS_SCHEMA
-
-    src, dst = "snap.ns.docs_in", "snap.ns.extracted_out"
-    ckpt = str(tmp_path / "ckpt")
-    _require_catalog(spark)
-    for t in (src, dst):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-    def put(builders):
-        rows = [(b.doc_id, [tuple(s.values()) for s in b.spans]) for b in builders]
-        spark.createDataFrame(rows, schema=DOCUMENTS_SCHEMA).writeTo(src).append()
-
-    b1 = fx.doc_health("cc-1")
-    spark.createDataFrame([], schema=DOCUMENTS_SCHEMA).writeTo(src).create()
-    put([b1])
-    q = start_extraction_stream(spark, src, dst, ckpt, flavor="stream", fail_fast=True)
-    q.awaitTermination(120)
-    got = {r["doc_id"] for r in spark.read.table(dst).select("doc_id").collect()}
-    assert got == {"cc-1"}
-    row = spark.read.table(dst).collect()[0]
-    assert [(s["kind"], s["text"], s["media_ref"], s["order"])
-            for s in row["spans"]] == b1.golden()
-
-    # a second documents snapshot flows through incrementally
-    put([fx.doc_twotables("cc-2")])
-    q = start_extraction_stream(spark, src, dst, ckpt, flavor="stream", fail_fast=True)
-    q.awaitTermination(120)
-    assert spark.read.table(dst).count() == 2
-
-    # no new snapshots -> nothing re-extracted
-    q = start_extraction_stream(spark, src, dst, ckpt, flavor="stream", fail_fast=True)
-    q.awaitTermination(120)
-    assert spark.read.table(dst).count() == 2
-
-
-def test_streaming_read_fails_loudly_across_replacing_snapshot(spark, tmp_path):
-    """A replacing snapshot (compaction / INSERT OVERWRITE) rewrites
-    rows into new files; streaming them as additions would duplicate
-    data. The source must fail the query loudly (Iceberg's default
-    stance), not silently re-emit."""
-    _require_catalog(spark)
-    table = "snap.ns.stream_replace"
-    outp, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"CREATE TABLE {table} (id BIGINT, v STRING)")
-    spark.range(3).selectExpr("id", "'a' AS v").writeTo(table).append()
-
-    def drain():
-        q = (spark.readStream.table(table)
-             .writeStream.option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True)
-             .format("parquet").option("path", outp).start())
-        q.awaitTermination(120)
-
-    drain()
-    assert spark.read.parquet(outp).count() == 3
-
-    spark.sql(f"INSERT OVERWRITE TABLE {table} "
-              f"SELECT /*+ REPARTITION(1) */ id, v FROM {table}")
-    with pytest.raises(Exception, match="replacing snapshot|replace"):
-        drain()
-    # nothing duplicated by the failed attempt
-    assert spark.read.parquet(outp).count() == 3
-
-
-def test_streaming_read_rejects_foreign_checkpoint(spark, tmp_path):
-    """A checkpoint whose (version, snapshot id) offset belongs to a
-    dropped table's chain must fail with a clear history-mismatch
-    error when the recreated chain reaches the same version."""
-    import shutil
-
-    _require_catalog(spark)
-    wh = _require_catalog(spark)
-    table = "snap.ns.stream_chain"
-    outp, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"CREATE TABLE {table} (id BIGINT)")
-    spark.range(2).writeTo(table).append()
-
-    def drain():
-        q = (spark.readStream.table(table)
-             .writeStream.option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True)
-             .format("parquet").option("path", outp).start())
-        q.awaitTermination(120)
-
-    drain()
-    assert spark.read.parquet(outp).count() == 2
-
-    # drop + recreate (new chain) and grow it past the old offset
-    spark.sql(f"DROP TABLE {table}")
-    spark.sql(f"CREATE TABLE {table} (id BIGINT)")
-    spark.range(10, 12).writeTo(table).append()
-    spark.range(12, 14).writeTo(table).append()
-    with pytest.raises(Exception, match="checkpoint|history|recreated"):
-        drain()
-
-
-def test_table_stream_rejects_max_files_per_trigger(spark):
-    from camelot_spark.streaming import read_document_stream
-
-    with pytest.raises(ValueError, match="snapshot"):
-        read_document_stream(spark, "snap.ns.whatever", max_files_per_trigger=5)
-
-
-def test_streaming_read_fails_loudly_when_unread_snapshots_expired(spark, tmp_path):
-    """expire_snapshots x streaming read: if maintenance removes
-    manifest versions inside a stream's UNREAD offset range, batch
-    planning must fail loudly (the already-read file set and the
-    replace-detection walk both need those manifests) — never plan an
-    empty or partial range, which would silently lose or duplicate
-    data. Iceberg's stance, pinned here for both shapes: an expired
-    START offset and an expired intermediate version."""
-    _require_catalog(spark)
-    table = "snap.ns.stream_expire"
-    outp, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"CREATE TABLE {table} (id BIGINT)")
-    spark.range(2).writeTo(table).append()
-
-    def drain():
-        q = (spark.readStream.table(table)
-             .writeStream.option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True)
-             .format("parquet").option("path", outp).start())
-        q.awaitTermination(120)
-
-    drain()
-    assert spark.read.parquet(outp).count() == 2
-
-    # grow the chain past the checkpoint, then expire everything but
-    # the newest version — including the checkpointed start offset
-    spark.range(10, 12).writeTo(table).append()
-    spark.range(12, 14).writeTo(table).append()
-    log = _table_log(spark, table)
-    expired = log.expire_snapshots(keep_last=1)
-    assert expired  # the checkpointed version is among the removed
-    with pytest.raises(Exception, match="expire|no longer exists"):
-        drain()
-    # the failed attempt must not have emitted anything
-    assert spark.read.parquet(outp).count() == 2
-
-
-def test_streaming_read_fails_when_intermediate_snapshot_expired(spark, tmp_path):
-    """Even when the START manifest survives, a missing INTERMEDIATE
-    version is fatal: without its manifest the source cannot prove the
-    snapshot was not a replacing one (whose files would stream as
-    duplicates), so it must refuse rather than assume."""
-    import os
-
-    _require_catalog(spark)
-    table = "snap.ns.stream_expire_mid"
-    outp, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"CREATE TABLE {table} (id BIGINT)")
-    spark.range(2).writeTo(table).append()
-
-    def drain():
-        q = (spark.readStream.table(table)
-             .writeStream.option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True)
-             .format("parquet").option("path", outp).start())
-        q.awaitTermination(120)
-
-    drain()
-    log = _table_log(spark, table)
-    start_v = log.latest()["version"]
-    spark.range(10, 12).writeTo(table).append()
-    spark.range(12, 14).writeTo(table).append()
-    # surgically remove ONLY the intermediate version's manifest
-    os.unlink(log._manifest_path(start_v + 1))
-    with pytest.raises(Exception, match="expire|no longer exists"):
-        drain()
-    assert spark.read.parquet(outp).count() == 2
+def test_committed_catalog_jar_matches_java_source():
+    """The committed jar ships exactly the classes SnapshotCatalog.java
+    declares (anonymous ``$<digit>`` classes aside), so a source edit
+    without a ``java/build.sh`` rebuild fails here."""
+    src = os.path.join(REPO, "java", "src", "camelotspark", "snapcat",
+                       "SnapshotCatalog.java")
+    with open(src, encoding="utf-8") as f:
+        declared = set(re.findall(
+            r"^\s*(?:(?:public|private|static|final|abstract)\s+)*class\s+(\w+)",
+            f.read(), re.M))
+    shipped = set()
+    with zipfile.ZipFile(os.path.join(REPO, "dist",
+                                      "camelot-snapshot-catalog.jar")) as z:
+        for name in z.namelist():
+            base = os.path.basename(name)
+            if base.startswith("SnapshotCatalog") and base.endswith(".class"):
+                parts = base[:-len(".class")].split("$")
+                if not any(p.isdigit() for p in parts):
+                    shipped.add(parts[-1])
+    assert shipped == declared
