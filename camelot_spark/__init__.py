@@ -3,7 +3,7 @@
 From-scratch reimplementation of the capabilities of atlanhq/camelot
 (reference at /root/reference, v0.7.3): Stream (whitespace-gap
 text-alignment clustering) and Lattice (ruling-line grid construction)
-table extraction, re-expressed as vectorized pandas/Arrow kernels over
+table extraction, re-expressed as vectorized numpy/Arrow kernels over
 Spark DataFrames of interleaved text+media documents.
 """
 

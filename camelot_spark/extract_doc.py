@@ -5,9 +5,9 @@ document's tables become ``cell`` spans in reading order (tables
 ordered by the reference's bottom-y-descending sort
 `camelot/parsers/stream.py:455-456`, cells row-major
 `camelot/core.py:364-370`), prose (text not consumed by any table)
-interleaves by position, ``media`` spans pass through. Pure
-pandas/numpy — Spark-free, so it is unit-testable and reusable from
-both ``mapInArrow`` and local tests.
+interleaves by position, ``media`` spans pass through. Pure numpy —
+Spark-free, so it is unit-testable and reusable from both
+``mapInArrow`` and local tests.
 """
 
 from __future__ import annotations

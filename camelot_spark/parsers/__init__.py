@@ -1,1 +1,1 @@
-"""Per-document parser kernels (pure pandas/numpy, no pyspark)."""
+"""Per-document parser kernels (pure numpy, no pyspark)."""

@@ -26,18 +26,7 @@ import traceback
 from .config import LatticeConfig, StreamConfig, make_config
 from .extract_doc import extract_document
 from .schema import DOCUMENTS_SCHEMA, EXTRACTED_SCHEMA, KERNEL_VERSION
-
-
-def _arrow_batch(rows: list[tuple], schema):
-    """RecordBatch of the Spark ``schema`` (one of ``schema.py``'s) from
-    row tuples nested the same way: structs as tuples, arrays as lists
-    of tuples. ``to_arrow_schema`` gives the Arrow types, plain ``list``
-    and the non-null fields included."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    return pa.RecordBatch.from_struct_array(
-        pa.array(rows, type=pa.struct(to_arrow_schema(schema))))
+from .tdp.arrow_seams import map_rows, rows_batch
 
 
 def synthesize_documents(source_df, families: list[str] | None = None):
@@ -47,24 +36,20 @@ def synthesize_documents(source_df, families: list[str] | None = None):
     driver-side corpus materialization at any scale."""
     ensure_shipped(source_df.sparkSession)
 
-    def gen(batches):
+    def doc(k):
         from camelot_spark import fixtures as fx
 
-        for batch in batches:
-            rows = []
-            for k in batch.column(0).to_pylist():
-                b = fx.builder_for(str(k), families=families)
-                rows.append((b.doc_id, [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                                        for s in b.spans]))
-            yield _arrow_batch(rows, DOCUMENTS_SCHEMA)
+        b = fx.builder_for(str(k), families=families)
+        return [(b.doc_id, [(s["kind"], s["text"], s["media_ref"], s["offset"])
+                            for s in b.spans])]
 
-    return source_df.select("doc_id").mapInArrow(gen, schema=DOCUMENTS_SCHEMA)
+    return map_rows(source_df.select("doc_id"), doc, DOCUMENTS_SCHEMA)
 
 
 def _results_to_arrow(results: list[tuple], flavor: str, partition_id: int, attempt: int):
     """One output RecordBatch (EXTRACTED_SCHEMA) from ``_run_docs``
     results; each row tuple follows the schema's field order."""
-    return _arrow_batch(
+    return rows_batch(
         [(doc_id, res["spans"], res["n_tables"], res["accuracy"], res["whitespace"],
           [(t.order, t.accuracy, t.whitespace, t.nrows, t.ncols, *t.bbox)
            for t in res["tables"]],

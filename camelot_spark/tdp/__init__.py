@@ -3,9 +3,9 @@ multimodal plumbing — the at-scale companions to the extraction engine.
 
 Each operator is a DataFrame→DataFrame function built from built-in
 ``pyspark.sql.functions`` (JVM-side, codegen-friendly); Python appears
-only in Arrow-batched ``mapInPandas`` where semantics require it
-(multimodal decode). Deterministic outputs, integer-typed where a
-DuckDB oracle must hash-match.
+only in Arrow-batched ``mapInArrow`` seams (``arrow_seams``) where
+semantics require it (multimodal decode, numpy folds). Deterministic
+outputs, integer-typed where a DuckDB oracle must hash-match.
 """
 
 from pyspark.sql import DataFrame

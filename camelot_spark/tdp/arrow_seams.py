@@ -1,21 +1,52 @@
-"""The Arrow ``list<…>`` reading and Spark fold order shared by the
-``mapInArrow`` seams (similarity, dedup).
+"""The two seam shapes of the Python stages that run on ``mapInArrow``.
 
-A seam reads a list column as flat buffers (offsets, values, null mask),
-densifies the rows of each distinct length into one matrix, and folds
-over it. Spark's ``aggregate(zip_with(...), 0.0, acc + x)`` is a
-left-to-right IEEE fold: ``acc = acc + x_i·w_i`` over ascending i, the
-product rounded, then the sum rounded. ``fold_dot``/``fold_norm`` run
-exactly that sequence elementwise (one multiply, one add per step, no
-reassociation), so their results equal the expression form bit for bit.
-Zero-padding a row appends ``+ 0.0`` squares, which leave its norm
-unchanged (a sum of squares is never −0.0).
+Row seams (multimodal decode, decontamination, fixture synthesis):
+``map_rows`` calls a per-row function over each Arrow batch and builds
+the output batch from the seam's one Spark schema (``rows_batch``), with
+no pandas round-trip.
+
+Column seams (similarity, dedup) read a list column as flat buffers
+(offsets, values, null mask), densify the rows of each distinct length
+into one matrix, and fold over it. Spark's
+``aggregate(zip_with(...), 0.0, acc + x)`` is a left-to-right IEEE fold:
+``acc = acc + x_i·w_i`` over ascending i, the product rounded, then the
+sum rounded. ``fold_dot``/``fold_norm`` run exactly that sequence
+elementwise (one multiply, one add per step, no reassociation), so their
+results equal the expression form bit for bit. Zero-padding a row
+appends ``+ 0.0`` squares, which leave its norm unchanged (a sum of
+squares is never −0.0).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+
+
+def rows_batch(rows: list[tuple], schema):
+    """RecordBatch of the Spark ``schema`` (one of ``schema.py``'s) from
+    row tuples nested the same way: structs as tuples, arrays as lists
+    of tuples. ``to_arrow_schema`` gives the Arrow types, plain ``list``
+    and the non-null fields included."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return pa.RecordBatch.from_struct_array(
+        pa.array(rows, type=pa.struct(to_arrow_schema(schema))))
+
+
+def map_rows(df, fn, schema):
+    """``df.mapInArrow`` with a per-row ``fn``: each input row's values,
+    in ``df``'s column order, go to ``fn(*row)``, which returns that
+    row's output tuples (any number of them, in ``schema``'s field
+    order); each input batch yields one ``rows_batch`` of them."""
+
+    def batches(it):
+        for batch in it:
+            cols = [c.to_pylist() for c in batch.columns]
+            yield rows_batch([out for row in zip(*cols) for out in fn(*row)],
+                             schema)
+
+    return df.mapInArrow(batches, schema)
 
 
 def list_parts(col, dtype=np.float64):

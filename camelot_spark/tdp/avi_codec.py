@@ -25,7 +25,7 @@ and an ``idx1`` index (offsets relative to the ``movi`` fourcc, the
 common writer convention; the reader also accepts absolute offsets).
 
 Scale note: like every codec here, decode runs inside Arrow-batched
-``mapInPandas`` workers; per-video cost stays executor-local and each
+``mapInArrow`` workers; per-video cost stays executor-local and each
 frame is an independent JPEG decode.
 """
 

@@ -18,8 +18,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
+from .arrow_seams import map_rows
 from .dedup import _shingles
+
+_GRAM_COUNT_SCHEMA = StructType([StructField("doc_id", LongType()),
+                                 StructField("c", LongType())])
 
 
 def _default_split(documents: DataFrame, benchmark: DataFrame | None):
@@ -82,28 +87,18 @@ def _py_gram_counts(corpus: DataFrame, n: int, count_fn, out_name: str) -> DataF
     row's distinct word-n-gram set in mapInArrow, then summed per
     doc_id — the same pooling the old explode + groupBy(doc_id) did
     for duplicate ids (each row's distinct set counts separately)."""
-    import pyarrow as pa
 
-    def batches(it):
-        for batch in it:
-            ids = batch.column("doc_id")
-            texts = batch.column("text").to_pylist()
-            counts = []
-            for text in texts:
-                grams: set = set()
-                if text is not None:
-                    toks = text.split(" ")
-                    if len(toks) >= n:
-                        grams = {" ".join(toks[i:i + n])
-                                 for i in range(len(toks) - n + 1)}
-                counts.append(int(count_fn(grams)))
-            yield pa.RecordBatch.from_arrays(
-                [ids.cast(pa.int64()), pa.array(counts, pa.int64())],
-                names=["doc_id", "c"])
+    def count(doc_id, text):
+        grams: set = set()
+        if text is not None:
+            toks = text.split(" ")
+            if len(toks) >= n:
+                grams = {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
+        return [(doc_id, int(count_fn(grams)))]
 
-    per_row = corpus.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"), "text"
-    ).mapInArrow(batches, "doc_id bigint, c bigint")
+    per_row = map_rows(
+        corpus.select(F.col("doc_id").cast("bigint").alias("doc_id"), "text"),
+        count, _GRAM_COUNT_SCHEMA)
     return per_row.groupBy("doc_id").agg(
         F.sum("c").cast("bigint").alias(out_name))
 
@@ -187,9 +182,8 @@ def decontaminate_bloom(
         .distinct()
     )
     # the m-bit filter assembles on the driver (<= m bounded position
-    # rows — the same object the old plan built in a one-partition
-    # mapInPandas and broadcast) and rides to the executors in the
-    # task closure as one bytes blob
+    # rows) and rides to the executors in the task closure as one
+    # bytes blob
     import numpy as np
 
     bf = np.zeros(_BLOOM_M, dtype=bool)

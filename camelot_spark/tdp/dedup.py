@@ -1152,28 +1152,37 @@ def kmv_distinct_partial(documents: DataFrame, k: int = 64) -> DataFrame:
     (``KMV_DISTINCT_SQL``) verifies both.
 
     The hash itself stays JVM-side (same portable char fold); the
-    Arrow-batched Python stage only does the numpy per-partition
-    cap over (source, h) longs — O(k · sources) state, vectorized."""
-    import pandas as pd
+    Arrow-batched Python stage only does the numpy per-partition cap
+    over (source, h) — O(k · sources) state, vectorized. A NULL source
+    is a group of its own and a NULL hash sorts first, as in the
+    plain variant's window."""
+    import numpy as np
+    import pyarrow as pa
 
     from .hashing import char_fold
 
     h = char_fold(F.col("text"), _KMV_M)
     hashes = documents.select("source", h.alias("h"))
 
-    def _cap_partition(batches):
-        acc = None
-        for pdf in batches:
-            both = pdf if acc is None else pd.concat((acc, pdf), ignore_index=True)
-            both = both.drop_duplicates()
-            # keep the k smallest h per source; kth duplicates can't
-            # matter (values are distinct after drop_duplicates)
-            acc = (both.sort_values(["source", "h"], kind="mergesort")
-                   .groupby("source", sort=False).head(k))
-        if acc is not None and len(acc):
-            yield acc
+    def _k_smallest(t):
+        # distinct rows sorted on (source group, h non-NULL, h); keep
+        # each group's first k
+        src = t.column("source").combine_chunks().dictionary_encode().indices
+        hv = t.column("h").combine_chunks()
+        key, first = np.unique(np.stack(
+            [src.fill_null(-1).to_numpy(), hv.is_valid().to_numpy(zero_copy_only=False),
+             hv.fill_null(0).to_numpy()], axis=1), axis=0, return_index=True)
+        pos = np.arange(len(first))
+        start = np.diff(key[:, 0], prepend=key[:1, 0] - 1) != 0
+        return t.take(first[pos - np.maximum.accumulate(np.where(start, pos, 0)) < k])
 
-    capped = hashes.mapInPandas(_cap_partition, schema="source string, h long")
+    def _cap_partition(batches):
+        acc = []
+        for batch in batches:
+            acc = _k_smallest(pa.Table.from_batches([*acc, batch])).to_batches()
+        yield from acc
+
+    capped = hashes.mapInArrow(_cap_partition, schema="source string, h long")
     return _kmv_estimate(capped, k)
 
 

@@ -17,7 +17,7 @@ any conforming decoder accepts (the spec's dictionary is optional for
 writers) — trading compression for ~60 lines of code.
 
 Scale note: like every codec here, decode runs inside Arrow-batched
-``mapInPandas`` workers; the LZW inner loop is sequential per frame
+``mapInArrow`` workers; the LZW inner loop is sequential per frame
 (as in any GIF library), the palette mapping is numpy."""
 
 from __future__ import annotations

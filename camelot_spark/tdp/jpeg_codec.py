@@ -34,7 +34,7 @@ Annex-K constant blocks. JPEG is lossy: round-trip tests assert a
 pixel tolerance, not equality.
 
 Scale note: like the PNG path, decode runs inside Arrow-batched
-``mapInPandas`` workers — per-image cost stays executor-local; the
+``mapInArrow`` workers — per-image cost stays executor-local; the
 block DCT/IDCT and dequantization are numpy matrix ops, the entropy
 scan is the inherently sequential part (same trade PIL makes in C).
 """

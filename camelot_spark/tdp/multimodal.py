@@ -1,12 +1,13 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Image/audio/video payloads are opaque ``binary`` columns; decode /
-feature-extract / resize / frame-sample run as Arrow-batched
-``mapInPandas`` kernels. ``decode_image`` routes by container magic
-bytes: PIL when installed, else the pure-stdlib codecs — ``png_codec``
-for PNG and ``jpeg_codec`` (baseline sequential) for JPEG — so the
-REAL decode path executes for both containers even in this codec-less
-sandbox; non-baseline JPEG without PIL fails loudly.
+feature-extract / resize / frame-sample run as per-row functions on the
+``arrow_seams.map_rows`` seam. ``decode_image`` routes by container
+magic bytes: PIL when installed, else the pure-stdlib codecs —
+``png_codec`` for PNG, ``gif_codec`` for GIF and ``jpeg_codec``
+(baseline and progressive) for JPEG — so the REAL decode path executes
+for every container even without an image library; lossless,
+arithmetic-coded and hierarchical JPEG without PIL fail loudly.
 Synthetic text payloads take the deterministic fake. The
 Spark-side plumbing (schema, batch shape, partitioning, UDF
 signatures) is identical on every path, and a production deployment
@@ -16,10 +17,8 @@ gets full codec coverage by installing PIL, with zero plan change.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -30,6 +29,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .arrow_seams import map_rows
 
 MEDIA_META_SCHEMA = StructType(
     [
@@ -79,17 +80,19 @@ def _looks_like_image(payload: bytes) -> bool:
 def decode_image(payload: bytes) -> np.ndarray:
     """Real image bytes → (H, W) uint8 grayscale.
 
-    Codec priority: PIL when installed (covers progressive/subsampled
-    JPEG + exotic PNGs), else the pure-stdlib decoders — ``png_codec``
-    (zlib inflate + all five filter reconstructions) for PNG and
-    ``jpeg_codec`` (baseline sequential Huffman + IDCT) for JPEG — so
-    the real decode path executes for BOTH containers even in codec-
-    less environments. Raises ValueError for non-image payloads (the
-    synthetic corpus — callers route those to the deterministic fake)
-    and NotImplementedError only for non-baseline JPEG without PIL.
+    Codec priority: PIL when installed (covers exotic PNGs and every
+    JPEG process), else the pure-stdlib decoders — ``png_codec`` (zlib
+    inflate + all five filter reconstructions) for PNG, ``gif_codec``
+    (LZW, first frame) for GIF and ``jpeg_codec`` (baseline and
+    progressive Huffman + IDCT) for JPEG — so the real decode path
+    executes for every container even in codec-less environments.
+    Raises ValueError for non-image payloads (the synthetic corpus —
+    callers route those to the deterministic fake) and
+    NotImplementedError for lossless, arithmetic-coded or hierarchical
+    JPEG (or 16-bit quantization tables) without PIL.
     """
     if not _looks_like_image(payload):
-        raise ValueError("payload is not a PNG/JPEG container")
+        raise ValueError("payload is not a PNG/GIF/JPEG container")
     if _PILImage is not None:
         import io
 
@@ -139,27 +142,13 @@ def _decode_pixels(payload: bytes) -> np.ndarray:
     return src if src.size else np.zeros(1, dtype=np.uint8)
 
 
-def _media_meta_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        payloads = pdf["payload"]
-        n_bytes = payloads.str.len().astype("int64")
-        meta = [_decode_meta(p) for p in payloads]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "n_bytes": n_bytes,
-                "header_byte": np.asarray([m[0] for m in meta], dtype="int32"),
-                "fake_width": np.asarray([m[1] for m in meta], dtype="int32"),
-                "fake_height": np.asarray([m[2] for m in meta], dtype="int32"),
-            }
-        )
-
-
 def media_metadata(documents: DataFrame) -> DataFrame:
-    """Binary payload → typed metadata via Arrow-batched mapInPandas —
-    the decode/feature-extract plan shape for real media columns."""
-    with_payload = attach_fake_payload(documents)
-    return with_payload.mapInPandas(_media_meta_batches, schema=MEDIA_META_SCHEMA)
+    """Binary payload → typed metadata, one row per payload — the
+    decode/feature-extract plan shape for real media columns."""
+    return map_rows(
+        attach_fake_payload(documents),
+        lambda doc_id, payload: [(doc_id, len(payload), *_decode_meta(payload))],
+        MEDIA_META_SCHEMA)
 
 
 MEDIA_META_SQL = """
@@ -210,26 +199,17 @@ def resize_media(documents: DataFrame, width: int = 32, height: int = 24) -> Dat
         pows[k] = p
         p = (p * 31) % _POLY_M
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"doc_id": [], "width": [], "height": [], "pixels": [],
-                   "pixels_sum": [], "pixels_poly": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                # decode seam: real raster when a codec is installed,
-                # 1×N byte strip otherwise; either way the resample is
-                # the same nearest-neighbor index gather
-                src = _decode_pixels(payload)
-                idx = (np.arange(n_px) * src.size) // n_px
-                flat = src[idx].astype(np.int64)
-                out["doc_id"].append(doc_id)
-                out["width"].append(width)
-                out["height"].append(height)
-                out["pixels"].append(flat.astype(np.uint8).reshape(height, width).tobytes())
-                out["pixels_sum"].append(int(flat.sum()))
-                out["pixels_poly"].append(int((flat * pows % _POLY_M).sum() % _POLY_M))
-            yield pd.DataFrame(out)
+    def resize(doc_id, payload):
+        # decode seam: real raster when a codec is installed, 1×N byte
+        # strip otherwise; either way the resample is the same
+        # nearest-neighbor index gather
+        src = _decode_pixels(payload)
+        flat = src[(np.arange(n_px) * src.size) // n_px].astype(np.int64)
+        return [(doc_id, width, height,
+                 flat.astype(np.uint8).reshape(height, width).tobytes(),
+                 int(flat.sum()), int((flat * pows % _POLY_M).sum() % _POLY_M))]
 
-    return attach_fake_payload(documents).mapInPandas(batches, schema=RESIZED_SCHEMA)
+    return map_rows(attach_fake_payload(documents), resize, RESIZED_SCHEMA)
 
 
 MEDIA_RESIZE_SQL = """
@@ -269,51 +249,31 @@ def frame_sample(documents: DataFrame, frame_bytes: int = 64, every_n: int = 4) 
     from .avi_codec import AVI_MAGIC, sample_video_frames
     from .gif_codec import GIF_MAGIC, decode_gif
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"doc_id": [], "frame_idx": [], "frame": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                head = bytes(payload[:4])
-                if head == GIF_MAGIC or (
-                    head == AVI_MAGIC and bytes(payload[8:12]) == b"AVI "
-                ):
-                    try:
-                        if head == GIF_MAGIC:
-                            # GIF frames are deltas — sampling still
-                            # needs the sequential composite
-                            frames = list(enumerate(
-                                decode_gif(bytes(payload))))[::every_n]
-                        else:
-                            # AVI: idx1-seek sampling — skipped frames
-                            # are never read or JPEG-decoded
-                            frames = sample_video_frames(
-                                bytes(payload), every_n)
-                    except (NotImplementedError, ValueError,
-                            IndexError, struct.error):
-                        # decode-best-effort, matching the image path:
-                        # an unsupported OR malformed flavor (non-MJPEG
-                        # AVI, truncated container — struct/index
-                        # errors from header parsing) degrades this ROW
-                        # to the fixed-size-chunk route instead of
-                        # failing the whole task
-                        frames = None
-                    if frames is not None:
-                        for i, frame in frames:
-                            out["doc_id"].append(doc_id)
-                            out["frame_idx"].append(i)
-                            out["frame"].append(frame.tobytes())
-                        continue
-                n_frames = len(payload) // frame_bytes
-                for i in range(0, n_frames, every_n):
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(i)
-                    out["frame"].append(payload[i * frame_bytes:(i + 1) * frame_bytes])
-            yield pd.DataFrame(out) if out["doc_id"] else pd.DataFrame(
-                {k: pd.Series([], dtype=o) for k, o in
-                 (("doc_id", "object"), ("frame_idx", "int32"), ("frame", "object"))}
-            )
+    def sample(doc_id, payload):
+        head = payload[:4]
+        if head == GIF_MAGIC or (head == AVI_MAGIC and payload[8:12] == b"AVI "):
+            try:
+                if head == GIF_MAGIC:
+                    # GIF frames are deltas — sampling still needs the
+                    # sequential composite
+                    frames = list(enumerate(decode_gif(payload)))[::every_n]
+                else:
+                    # AVI: idx1-seek sampling — skipped frames are never
+                    # read or JPEG-decoded
+                    frames = sample_video_frames(payload, every_n)
+                return [(doc_id, i, frame.tobytes()) for i, frame in frames]
+            except (NotImplementedError, ValueError, IndexError, struct.error):
+                # decode-best-effort, matching the image path: an
+                # unsupported OR malformed flavor (non-MJPEG AVI,
+                # truncated container — struct/index errors from header
+                # parsing) degrades this ROW to the fixed-size-chunk
+                # route instead of failing the whole task
+                pass
+        n_frames = len(payload) // frame_bytes
+        return [(doc_id, i, payload[i * frame_bytes:(i + 1) * frame_bytes])
+                for i in range(0, n_frames, every_n)]
 
-    return attach_fake_payload(documents).mapInPandas(batches, schema=FRAME_SCHEMA)
+    return map_rows(attach_fake_payload(documents), sample, FRAME_SCHEMA)
 
 
 def media_features(documents: DataFrame, dim: int = 8) -> DataFrame:
@@ -440,21 +400,15 @@ def audio_metadata(documents: DataFrame, sample_rate: int = 8000) -> DataFrame:
     whole encode→decode→stats loop from the text bytes."""
     from .wav_codec import decode_wav
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in AUDIO_META_SCHEMA.fields}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                sr, _, s = decode_wav(_payload_to_wav(payload, sample_rate))
-                s64 = s.astype(np.int64)
-                out["doc_id"].append(int(doc_id))
-                out["sample_rate"].append(sr)
-                out["n_samples"].append(int(s.size))
-                out["duration_ms"].append(int(s.size * 1000 // sr) if sr else 0)
-                out["peak_abs"].append(int(np.abs(s64).max()) if s.size else 0)
-                out["energy"].append(int((s64 * s64).sum()))
-            yield pd.DataFrame(out)
+    def stats(doc_id, payload):
+        sr, _, s = decode_wav(_payload_to_wav(payload, sample_rate))
+        s64 = s.astype(np.int64)
+        return [(int(doc_id), sr, int(s.size),
+                 int(s.size * 1000 // sr) if sr else 0,
+                 int(np.abs(s64).max()) if s.size else 0,
+                 int((s64 * s64).sum()))]
 
-    return attach_fake_payload(documents).mapInPandas(batches, schema=AUDIO_META_SCHEMA)
+    return map_rows(attach_fake_payload(documents), stats, AUDIO_META_SCHEMA)
 
 
 # the SQL mirror of _payload_to_wav's synthetic branch — shared by
@@ -501,27 +455,15 @@ def audio_features(documents: DataFrame, frame_len: int = 400,
     trailing partial frames are dropped (both engines)."""
     from .wav_codec import decode_wav
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in AUDIO_FEATURES_SCHEMA.fields}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _, _, s = decode_wav(_payload_to_wav(payload, sample_rate))
-                n_frames = s.size // frame_len
-                if n_frames == 0:
-                    continue
-                fr = s[:n_frames * frame_len].astype(np.int64) \
-                    .reshape(n_frames, frame_len)
-                energy = (fr * fr).sum(axis=1)
-                zc = ((fr[:, :-1] * fr[:, 1:]) < 0).sum(axis=1)
-                for k in range(n_frames):
-                    out["doc_id"].append(int(doc_id))
-                    out["frame_idx"].append(k)
-                    out["frame_energy"].append(int(energy[k]))
-                    out["zero_crossings"].append(int(zc[k]))
-            yield pd.DataFrame(out)
+    def frames(doc_id, payload):
+        _, _, s = decode_wav(_payload_to_wav(payload, sample_rate))
+        n_frames = s.size // frame_len
+        fr = s[:n_frames * frame_len].astype(np.int64).reshape(n_frames, frame_len)
+        energy = (fr * fr).sum(axis=1).tolist()
+        zc = ((fr[:, :-1] * fr[:, 1:]) < 0).sum(axis=1).tolist()
+        return [(int(doc_id), k, energy[k], zc[k]) for k in range(n_frames)]
 
-    return attach_fake_payload(documents).mapInPandas(
-        batches, schema=AUDIO_FEATURES_SCHEMA)
+    return map_rows(attach_fake_payload(documents), frames, AUDIO_FEATURES_SCHEMA)
 
 
 AUDIO_FEATURES_SQL = _AUDIO_PCM_CTE + """,
@@ -569,34 +511,22 @@ def avi_audio_roundtrip(documents: DataFrame, every_n: int = 3) -> DataFrame:
     index and the sampling arithmetic are data-dependent."""
     from .avi_codec import encode_avi, extract_audio, sample_video_frames
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "doc_id", "sample_rate", "n_channels", "n_samples",
-                "audio_sum", "n_frames", "n_sampled", "last_frame_idx")}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                pcm = np.clip(
-                    (np.array([ord(c) for c in text], dtype=np.int64)
-                     - 97) * 256, -32768, 32767).astype("<i2")
-                n_frames = 2 + len(text) % 3
-                frames = [np.full((8, 8), len(text) % 256, dtype=np.uint8)
-                          ] * n_frames
-                avi = encode_avi(frames, audio=pcm)
-                sampled = sample_video_frames(avi, every_n=every_n)
-                sr, nch, samples = extract_audio(avi)
-                out["doc_id"].append(int(doc_id))
-                out["sample_rate"].append(sr)
-                out["n_channels"].append(nch)
-                out["n_samples"].append(len(samples))
-                out["audio_sum"].append(int(samples.sum()))
-                out["n_frames"].append(n_frames)
-                out["n_sampled"].append(len(sampled))
-                out["last_frame_idx"].append(sampled[-1][0])
-            yield pd.DataFrame(out)
+    def roundtrip(doc_id, text):
+        pcm = np.clip(
+            (np.array([ord(c) for c in text], dtype=np.int64) - 97) * 256,
+            -32768, 32767).astype("<i2")
+        n_frames = 2 + len(text) % 3
+        frames = [np.full((8, 8), len(text) % 256, dtype=np.uint8)] * n_frames
+        avi = encode_avi(frames, audio=pcm)
+        sampled = sample_video_frames(avi, every_n=every_n)
+        sr, nch, samples = extract_audio(avi)
+        return [(int(doc_id), sr, nch, len(samples), int(samples.sum()),
+                 n_frames, len(sampled), sampled[-1][0])]
 
-    return documents.select("doc_id", "text").repartition(
-        documents.sparkSession.sparkContext.defaultParallelism
-    ).mapInPandas(batches, schema=AVI_AUDIO_SCHEMA)
+    return map_rows(
+        documents.select("doc_id", "text").repartition(
+            documents.sparkSession.sparkContext.defaultParallelism),
+        roundtrip, AVI_AUDIO_SCHEMA)
 
 
 AVI_AUDIO_SQL = """

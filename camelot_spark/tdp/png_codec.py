@@ -12,7 +12,7 @@ PIL, when installed, still takes priority (it covers JPEG and every
 exotic PNG variant); this codec is the correctness-first fallback and
 the in-test generator.
 
-Scale note: decode runs inside Arrow-batched ``mapInPandas`` workers —
+Scale note: decode runs inside Arrow-batched ``mapInArrow`` workers —
 per-image cost is local to the executor, and numpy vectorizes the
 column direction of the filter reconstruction (the row direction is an
 inherent data dependency in PNG).

@@ -4,7 +4,7 @@ alone, so the audio decode seam executes for real in this
 dependency-less sandbox. 16-bit and 8-bit PCM, any channel count;
 an encoder for test/bench payload synthesis.
 
-Scale note: decode runs inside Arrow-batched ``mapInPandas`` workers;
+Scale note: decode runs inside Arrow-batched ``mapInArrow`` workers;
 numpy handles the sample math.
 """
 

@@ -1,14 +1,24 @@
-"""camelot_spark.tdp.arrow_seams: the list-column reading and Spark fold
-order shared by the tdp mapInArrow seams. Pure numpy/pyarrow, no Spark."""
+"""camelot_spark.tdp.arrow_seams: the row-seam batch builder, the
+list-column reading and Spark fold order shared by the mapInArrow seams,
+and the guard that keeps every Python seam on them. Pure numpy/pyarrow,
+no Spark session."""
 
+import ast
 import math
+import pathlib
 import struct
 
 import numpy as np
 import pyarrow as pa
 import pytest
 
-from camelot_spark.tdp.arrow_seams import by_length, fold_dot, fold_norm, list_parts
+from camelot_spark.tdp.arrow_seams import (
+    by_length,
+    fold_dot,
+    fold_norm,
+    list_parts,
+    rows_batch,
+)
 
 
 def _bits(x):
@@ -120,3 +130,47 @@ def test_list_parts_casts_float32_values():
 def test_list_parts_rejects_large_list():
     with pytest.raises(TypeError, match="large_list"):
         list_parts(pa.array([[1]], pa.large_list(pa.int64())), np.int64)
+
+
+def test_rows_batch_of_no_rows_keeps_the_schema_types():
+    from camelot_spark.tdp.multimodal import FRAME_SCHEMA
+
+    batch = rows_batch([], FRAME_SCHEMA)
+    assert batch.num_rows == 0
+    assert batch.schema.names == ["doc_id", "frame_idx", "frame"]
+    assert batch.schema.types == [pa.string(), pa.int32(), pa.binary()]
+    assert [f.nullable for f in batch.schema] == [False, False, False]
+
+
+_REPO = pathlib.Path(__file__).resolve().parent.parent
+_PANDAS_SEAMS = {"mapInPandas", "applyInPandas", "pandas_udf"}
+
+
+def _pandas_uses(path):
+    """(line, what) for each pandas seam call or pandas import in ``path``."""
+    found = []
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if name in _PANDAS_SEAMS:
+                found.append((node.lineno, name))
+        elif isinstance(node, ast.Import):
+            found += [(node.lineno, "import " + a.name) for a in node.names
+                      if a.name.split(".")[0] == "pandas"]
+        elif isinstance(node, ast.ImportFrom) and node.level == 0 and (
+                node.module.split(".")[0] == "pandas"):
+            found.append((node.lineno, "from " + node.module))
+    return found
+
+
+def test_product_code_has_no_pandas_seam():
+    """Every per-row Python seam runs on mapInArrow (``map_rows`` or a
+    numpy column seam): no product file calls a pandas UDF API or
+    imports pandas."""
+    files = [_REPO / "__spark_entry__.py",
+             *sorted((_REPO / "camelot_spark").rglob("*.py")),
+             *sorted((_REPO / "jobs").rglob("*.py"))]
+    assert len(files) > 40
+    bad = {str(p.relative_to(_REPO)): uses for p in files if (uses := _pandas_uses(p))}
+    assert bad == {}

@@ -139,6 +139,14 @@ def test_frame_sample_fanout(docs):
     assert sorted(r["frame_idx"] for r in by_doc["0"]) == [0, 2]
 
 
+def test_frame_sample_no_frames_when_payloads_shorter_than_frame(docs):
+    """Every payload (at most 90 bytes) is shorter than one frame, so
+    every batch is empty: the stage still returns FRAME_SCHEMA, 0 rows."""
+    out = mm.frame_sample(docs, frame_bytes=1000, every_n=1)
+    assert out.schema == mm.FRAME_SCHEMA
+    assert out.collect() == []
+
+
 def test_media_features_histogram(docs, spark):
     out = {r["doc_id"]: r["features"] for r in mm.media_features(docs, dim=4).collect()}
     assert all(len(v) == 4 for v in out.values())

@@ -378,7 +378,8 @@ def test_kmv_partial_agg_identical_to_plain(spark):
     """Per-partition k-cap before the shuffle loses nothing: on a
     many-partition input where every partition holds far more than k
     distinct hashes, the partial-agg sketch is bit-identical to the
-    plain one (same estimate AND same kth hash)."""
+    plain one (same estimate AND same kth hash). A NULL source is a
+    group of its own in both."""
     import random
 
     from camelot_spark.tdp.dedup import kmv_distinct, kmv_distinct_partial
@@ -386,13 +387,15 @@ def test_kmv_partial_agg_identical_to_plain(spark):
     rng = random.Random(23)
     rows = [(i, "s%d" % (i % 3), "doc %d" % rng.randint(0, 2999))
             for i in range(6000)]
+    rows += [(i, None, "doc %d" % rng.randint(0, 2999))
+             for i in range(6000, 7500)]
     df = spark.createDataFrame(
         rows, "doc_id long, source string, text string").repartition(16)
     plain = {r["source"]: (r["distinct_est"], r["kth_hash"])
              for r in kmv_distinct(df, k=32).collect()}
     partial = {r["source"]: (r["distinct_est"], r["kth_hash"])
                for r in kmv_distinct_partial(df, k=32).collect()}
-    assert partial == plain and len(plain) == 3
+    assert partial == plain and len(plain) == 4
 
 
 def test_kmv_partial_agg_bounds_shuffle_rows(spark):
