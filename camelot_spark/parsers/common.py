@@ -26,8 +26,6 @@ class TableResult:
     nrows: int
     ncols: int
     flavor: str
-    cols: list | None = None        # x intervals (asc) — grid/debug plot
-    rows: list | None = None        # y intervals (desc)
 
 
 def assign_text(
@@ -87,6 +85,4 @@ def finish_table(
         nrows=grid.nrows,
         ncols=grid.ncols,
         flavor=flavor,
-        cols=grid.cols,
-        rows=grid.rows,
     )

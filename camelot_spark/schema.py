@@ -64,7 +64,7 @@ TABLE_REPORT = StructType(
         StructField("whitespace", DoubleType(), False),
         StructField("nrows", IntegerType(), False),
         StructField("ncols", IntegerType(), False),
-        # bbox in PDF space for debugging / plotting parity
+        # table bbox in PDF space
         StructField("x0", DoubleType(), False),
         StructField("y0", DoubleType(), False),
         StructField("x1", DoubleType(), False),

@@ -1,12 +1,11 @@
 """Sinks: per-table exports + parsing report (K1/K2/K3).
 
-Reference: ``Table.to_csv/to_json/to_html/to_excel/to_sqlite``
-(`camelot/core.py:571-655`, pandas writers, one local file per table)
-and ``TableList.export`` (`camelot/core.py:689-758`, one file per
-``(page, order)``). Excel/SQLite are single-machine formats: their
-sinks here are explicitly DRIVER-SIDE convenience exports over a
-bounded, deterministic sample (``max_tables`` guard) — full-corpus
-output goes to the distributed parquet/snapshot path.
+Reference: ``Table.to_csv/to_json/to_html`` (`camelot/core.py:571-636`,
+pandas writers, one local file per table) and ``TableList.export``
+(`camelot/core.py:689-758`, one file per ``(page, order)``). The
+reference's single-machine Excel and SQLite writers have no
+counterpart: full-corpus output goes to the distributed
+parquet/snapshot path.
 
 Spark shape: everything below is built from array expressions on the
 ``extracted`` row (slice/transform/aggregate) — per-doc work stays
@@ -144,160 +143,6 @@ def export(extracted: DataFrame, path: str, fmt: str = "csv", mode: str = "overw
         raise ValueError(f"Format {fmt} is not supported (csv, json, html)")
     df = _FORMATS[fmt](extracted)
     df.write.mode(mode).partitionBy("doc_id").parquet(path)
-
-
-def _collect_tables(extracted: DataFrame, max_tables: int):
-    """Deterministically-ordered (doc_id, table_order, rows) sample for
-    the single-machine sinks; refuses unbounded collects."""
-    rows = (
-        table_rows(extracted)
-        .orderBy("doc_id", "table_order")
-        .limit(max_tables + 1)
-        .collect()
-    )
-    if len(rows) > max_tables:
-        raise ValueError(
-            f"to_excel/to_sqlite are driver-side sample exports; got more "
-            f"than max_tables={max_tables} tables — filter the DataFrame "
-            f"or raise max_tables explicitly, or use export() for the "
-            f"distributed path")
-    return rows
-
-
-def _sheet_names(rows):
-    """'page-{doc}-table-{order}' per the reference (`core.py:614,650`),
-    bounded to Excel's 31-char sheet-name limit with a collision-proof
-    numeric suffix (the counter advances every probe, so the loop
-    terminates and the suffix always fits inside the 31 chars)."""
-    names = []
-    seen = set()
-    for r in rows:
-        base = f"page-{r['doc_id']}-table-{r['table_order']}"[:31]
-        name, k = base, 0
-        while name in seen:
-            k += 1
-            suffix = f"~{k}"
-            name = base[:31 - len(suffix)] + suffix
-        seen.add(name)
-        names.append(name)
-    return names
-
-
-def to_sqlite(extracted: DataFrame, path: str, max_tables: int = 10000) -> int:
-    """`Table.to_sqlite` (`camelot/core.py:637-655`): one SQLite table
-    named page-{doc}-table-{order} per extracted table, columns "0".."n"
-    of TEXT (the reference's pandas ``to_sql`` layout). Driver-side
-    sample export; returns the number of tables written."""
-    import sqlite3
-
-    rows = _collect_tables(extracted, max_tables)
-    names = _sheet_names(rows)
-    conn = sqlite3.connect(path)
-    written = 0
-    try:
-        for name, r in zip(names, rows):
-            grid = r["rows"]
-            ncols = len(grid[0]) if grid else 0
-            if ncols == 0:
-                # a zero-column CREATE TABLE is a SQLite syntax error;
-                # an empty grid carries no data — skip, don't abort
-                continue
-            cols = ", ".join(f'"{i}" TEXT' for i in range(ncols))
-            conn.execute(f'DROP TABLE IF EXISTS "{name}"')
-            conn.execute(f'CREATE TABLE "{name}" ({cols})')
-            ph = ", ".join("?" for _ in range(ncols))
-            conn.executemany(f'INSERT INTO "{name}" VALUES ({ph})',
-                             [tuple(row) for row in grid])
-            written += 1
-        conn.commit()
-    finally:
-        conn.close()
-    return written
-
-
-def _xml_escape(s: str) -> str:
-    return (s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-            .replace('"', "&quot;"))
-
-
-def _col_letter(i: int) -> str:
-    out = ""
-    i += 1
-    while i:
-        i, rem = divmod(i - 1, 26)
-        out = chr(ord("A") + rem) + out
-    return out
-
-
-def to_excel(extracted: DataFrame, path: str, max_tables: int = 200) -> int:
-    """`Table.to_excel` / `TableList.export(f='excel')`
-    (`camelot/core.py:603-628,741-747`): one worksheet per table named
-    page-{doc}-table-{order}, written as a minimal OOXML .xlsx (pure
-    stdlib zipfile + inline strings — no openpyxl dependency).
-    Driver-side sample export; returns the number of sheets written.
-
-    Deviation: cells carry the raw grid (no pandas index/header rows)."""
-    import zipfile
-
-    rows = _collect_tables(extracted, max_tables)
-    names = _sheet_names(rows)
-    n = len(rows)
-    content_types = (
-        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-        '<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">'
-        '<Default Extension="rels" ContentType="application/vnd.openxmlformats-package.relationships+xml"/>'
-        '<Default Extension="xml" ContentType="application/xml"/>'
-        '<Override PartName="/xl/workbook.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.sheet.main+xml"/>'
-        + "".join(
-            f'<Override PartName="/xl/worksheets/sheet{i + 1}.xml" '
-            'ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>'
-            for i in range(n))
-        + "</Types>")
-    root_rels = (
-        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-        '<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">'
-        '<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/officeDocument" Target="xl/workbook.xml"/>'
-        "</Relationships>")
-    workbook = (
-        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-        '<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" '
-        'xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"><sheets>'
-        + "".join(
-            f'<sheet name="{_xml_escape(nm)}" sheetId="{i + 1}" r:id="rId{i + 1}"/>'
-            for i, nm in enumerate(names))
-        + "</sheets></workbook>")
-    wb_rels = (
-        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-        '<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">'
-        + "".join(
-            f'<Relationship Id="rId{i + 1}" '
-            'Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" '
-            f'Target="worksheets/sheet{i + 1}.xml"/>'
-            for i in range(n))
-        + "</Relationships>")
-
-    def sheet_xml(grid) -> str:
-        body = []
-        for ri, row in enumerate(grid):
-            cells = "".join(
-                f'<c r="{_col_letter(ci)}{ri + 1}" t="inlineStr">'
-                f"<is><t{' xml:space=' + chr(34) + 'preserve' + chr(34) if c != c.strip() else ''}>"
-                f"{_xml_escape(c)}</t></is></c>"
-                for ci, c in enumerate(row))
-            body.append(f'<row r="{ri + 1}">{cells}</row>')
-        return (
-            '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-            '<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">'
-            f"<sheetData>{''.join(body)}</sheetData></worksheet>")
-
-    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as z:
-        z.writestr("[Content_Types].xml", content_types)
-        z.writestr("_rels/.rels", root_rels)
-        z.writestr("xl/workbook.xml", workbook)
-        z.writestr("xl/_rels/workbook.xml.rels", wb_rels)
-        for i, r in enumerate(rows):
-            z.writestr(f"xl/worksheets/sheet{i + 1}.xml", sheet_xml(r["rows"]))
-    return n
 
 
 def parsing_report(extracted: DataFrame) -> DataFrame:

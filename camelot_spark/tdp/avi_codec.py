@@ -310,20 +310,3 @@ def encode_avi(frames: list[np.ndarray], fps: int = 10,
 
     body = b"AVI " + hdrl + movi + idx1
     return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def avi_metadata(payload: bytes) -> dict:
-    """Header-only peek: (width, height, n_frames, fps) from the avih
-    main header — no frame decode, the O(header-bytes) metadata scan a
-    large pipeline runs before deciding what to decode."""
-    _require_avi(payload)
-
-    got = _find_chunk(payload, b"avih")
-    if got is None or got[1] < 40:
-        raise ValueError("AVI without an avih header")
-    avih = payload[got[0]:got[0] + got[1]]
-    vals = struct.unpack("<10I", avih[:40])
-    usec_per_frame, _, _, _, n_frames, _, _, _, width, height = vals
-    fps = 1_000_000 // usec_per_frame if usec_per_frame else 0
-    return {"width": width, "height": height, "n_frames": n_frames,
-            "fps": fps}

@@ -1129,7 +1129,7 @@ agg AS (
   FROM ranked GROUP BY source)
 SELECT source,
        CAST(CASE WHEN n_min < 64 THEN n_min
-                 WHEN hk > 0 THEN FLOOR(63 * 1000000007 / hk)
+                 WHEN hk > 0 THEN FLOOR(CAST(63 AS BIGINT) * 1000000007 / hk)
                  ELSE n_min END AS BIGINT) AS distinct_est,
        CAST(COALESCE(hk, -1) AS BIGINT) AS kth_hash
 FROM agg
@@ -1152,17 +1152,24 @@ def kmv_distinct_partial(documents: DataFrame, k: int = 64) -> DataFrame:
     (``KMV_DISTINCT_SQL``) verifies both.
 
     The hash itself stays JVM-side (same portable char fold); the
-    Arrow-batched Python stage only does the numpy per-partition cap
-    over (source, h) — O(k · sources) state, vectorized. A NULL source
-    is a group of its own and a NULL hash sorts first, as in the
-    plain variant's window."""
-    import numpy as np
-    import pyarrow as pa
-
+    Arrow-batched Python stage (``_kmv_cap``) only does the numpy
+    per-partition cap over (source, h) — O(k · sources) state,
+    vectorized."""
     from .hashing import char_fold
 
     h = char_fold(F.col("text"), _KMV_M)
     hashes = documents.select("source", h.alias("h"))
+    capped = hashes.mapInArrow(lambda batches: _kmv_cap(batches, k),
+                               schema="source string, h long")
+    return _kmv_estimate(capped, k)
+
+
+def _kmv_cap(batches, k: int):
+    """One partition's (source, h) batches → its k smallest distinct
+    rows per source. A NULL source is a group of its own and a NULL
+    hash sorts first, as in ``kmv_distinct``'s window."""
+    import numpy as np
+    import pyarrow as pa
 
     def _k_smallest(t):
         # distinct rows sorted on (source group, h non-NULL, h); keep
@@ -1176,14 +1183,10 @@ def kmv_distinct_partial(documents: DataFrame, k: int = 64) -> DataFrame:
         start = np.diff(key[:, 0], prepend=key[:1, 0] - 1) != 0
         return t.take(first[pos - np.maximum.accumulate(np.where(start, pos, 0)) < k])
 
-    def _cap_partition(batches):
-        acc = []
-        for batch in batches:
-            acc = _k_smallest(pa.Table.from_batches([*acc, batch])).to_batches()
-        yield from acc
-
-    capped = hashes.mapInArrow(_cap_partition, schema="source string, h long")
-    return _kmv_estimate(capped, k)
+    acc = []
+    for batch in batches:
+        acc = _k_smallest(pa.Table.from_batches([*acc, batch])).to_batches()
+    yield from acc
 
 
 def dedup_incremental(

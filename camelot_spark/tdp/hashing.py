@@ -7,9 +7,9 @@ round-5 lesson: reducing an affine family of the SAME residue mod a
 power of two collapses k hashes to one fingerprint).
 
 Kept in one place after the third copy appeared — a fix to the fold
-(e.g. the prefix-collapse bug class) must land once. The matching
-DuckDB twin text comes from :func:`char_fold_sql` so both engines'
-definitions move together.
+(e.g. the prefix-collapse bug class) must land once. The DuckDB
+oracles spell the same fold as ``list_reduce`` over ``ord`` of each
+char.
 """
 
 from __future__ import annotations
@@ -35,12 +35,3 @@ def prime_mix(h, out_modulus: int):
     """((h·A + B) mod P) mod m — decorrelates the big-prime residue
     before a small modulus."""
     return ((h * MIX_A + MIX_B) % POLY_M) % out_modulus
-
-
-def char_fold_sql(expr: str, modulus: int = POLY_M) -> str:
-    """DuckDB twin text of :func:`char_fold` over SQL expression
-    ``expr``."""
-    return (f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
-            f"list_transform(string_split({expr}, ''), "
-            f"c -> CAST(ord(c) AS BIGINT))), "
-            f"(a, b) -> (a * 31 + b) % {modulus})")

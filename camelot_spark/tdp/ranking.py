@@ -244,9 +244,10 @@ def link_rank(edges: DataFrame, iters: int = 8,
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("c"))
     e_out = (e.join(outdeg, "src").repartition("src")
              .localCheckpoint(eager=True))
+    # the join on outdeg keeps every edge of e
     nodes = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
+        e_out.select(F.col("src").alias("id"))
+        .union(e_out.select(F.col("dst").alias("id")))
         .distinct()
         .repartition("id")
         .localCheckpoint(eager=True)

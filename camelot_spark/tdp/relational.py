@@ -240,23 +240,6 @@ FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
 """
 
 
-def write_bucketed(df, table: str, buckets: int, key: str, sort: bool = True) -> None:
-    """Persist a DataFrame hash-bucketed (and optionally sorted) by
-    ``key`` — the co-location contract for repeated big joins: two
-    tables bucketed on the join key with the same bucket count join
-    with ZERO Exchange (each task reads matching bucket files from both
-    sides; with sortBy the sort vanishes too). At 100 TB this turns the
-    nightly fact-to-fact join from a full-corpus shuffle into a
-    scan-local merge — the biggest single shuffle eliminator Spark
-    offers for repeated workloads. Parquet bucketed tables registered
-    in the session catalog (Iceberg's bucket partition transform is the
-    catalog-native equivalent)."""
-    writer = df.write.mode("overwrite").bucketBy(buckets, key)
-    if sort:
-        writer = writer.sortBy(key)
-    writer.format("parquet").saveAsTable(table)
-
-
 def bucketized_interval_join(
     points: DataFrame, intervals: DataFrame,
     point_col: str, lo_col: str, hi_col: str, bucket_width: float,

@@ -509,154 +509,3 @@ class TestRasterKernels:
         assert k == (5.0, 5.0, 145.0, 95.0)      # y flipped about img_h
         assert joints == [(25.0, 50.0)]
         assert v2[0].tolist() == [25.0, 20.0, 25.0, 80.0]
-
-
-# ---------------------------------------------------------------------------
-# debug geometry (plotting data path, `camelot/plotting.py` parity)
-# ---------------------------------------------------------------------------
-
-class TestDebugGeometry:
-    def test_stream_geometry(self):
-        from camelot_spark import fixtures as fx
-        from camelot_spark.plotting import debug_geometry
-        b = fx.doc_health()
-        g = debug_geometry(b.spans, flavor="stream")
-        assert g["width"] == 612.0 and len(g["text"]) == 34
-        valid = [te for te in g["textedges"] if te["is_valid"]]
-        assert len(valid) >= 4  # one valid left-edge per table column
-        assert len(g["table_areas"]) == 1
-
-    def test_lattice_geometry(self):
-        from camelot_spark import fixtures as fx
-        from camelot_spark.plotting import debug_geometry
-        b = fx.doc_foo()
-        g = debug_geometry(b.spans, flavor="lattice")
-        assert len(g["tables"]) == 1
-        t = g["tables"][0]
-        assert len(t["joints"]) == 64  # 8x8 grid crossings
-        assert len(g["segments"]["vertical"]) == 8
-
-    def test_grid_cells_geometry(self):
-        """`PlotMethods.grid` parity: per-table cell rectangles = the
-        cols x rows interval product of the extracted grid."""
-        from camelot_spark import fixtures as fx
-        from camelot_spark.plotting import debug_geometry
-        g = debug_geometry(fx.doc_health().spans, flavor="stream")
-        assert len(g["cells"]) == 1
-        rects = g["cells"][0]["rects"]
-        assert len(rects) == 8 * 4
-        # rectangles tile: row-major, x asc within a row, y desc across
-        assert rects[0][0] < rects[1][0] and rects[0][3] > rects[4 * 4][3]
-        gl = debug_geometry(fx.doc_foo().spans, flavor="lattice")
-        assert len(gl["cells"][0]["rects"]) == 7 * 7
-
-    def test_plot_kind_flavor_validation(self):
-        """`PlotMethods.__call__` (`camelot/plotting.py:36-43`):
-        textedge is stream-only; joint/line are lattice-only."""
-        from camelot_spark import fixtures as fx
-        from camelot_spark.plotting import debug_geometry, plot_geometry
-        import pytest as _pytest
-        gs = debug_geometry(fx.doc_health().spans, flavor="stream")
-        gl = debug_geometry(fx.doc_foo().spans, flavor="lattice")
-        with _pytest.raises(NotImplementedError, match="textedge"):
-            plot_geometry(gl, kind="textedge")
-        for kind in ("joint", "line"):
-            with _pytest.raises(NotImplementedError, match=kind):
-                plot_geometry(gs, kind=kind)
-
-    def test_plot_falls_back_to_raster_without_matplotlib(self):
-        import numpy as np
-
-        from camelot_spark import fixtures as fx
-        from camelot_spark.plotting import debug_geometry, plot_geometry
-        g = debug_geometry(fx.doc_health().spans, flavor="stream")
-        try:
-            import matplotlib  # noqa: F401
-        except ImportError:
-            out = plot_geometry(g, kind="text")
-            assert isinstance(out, np.ndarray) and (out < 255).any()
-
-
-class TestRenderGeometry:
-    """One rendered-pixel assertion per overlay kind — the full
-    `PlotMethods` surface (`camelot/plotting.py:12-223`), drawn by the
-    built-in rasterizer (no matplotlib in this environment)."""
-
-    @staticmethod
-    def _ink_at(canvas, x, y, height):
-        import numpy as np
-
-        r = canvas.shape[0] - 1 - int(round(min(max(y, 0), height - 1)))
-        c = int(round(x))
-        return bool(np.any(canvas[max(r - 1, 0):r + 2, max(c - 1, 0):c + 2] < 255))
-
-    def _stream_geom(self):
-        from camelot_spark import fixtures as fx
-        from camelot_spark.plotting import debug_geometry
-        return debug_geometry(fx.doc_health().spans, flavor="stream")
-
-    def _lattice_geom(self):
-        from camelot_spark import fixtures as fx
-        from camelot_spark.plotting import debug_geometry
-        return debug_geometry(fx.doc_foo().spans, flavor="lattice")
-
-    def test_text_kind(self):
-        from camelot_spark.plotting import render_geometry
-        g = self._stream_geom()
-        canvas = render_geometry(g, "text")
-        x0, y0, x1, y1 = g["text"][0]
-        assert self._ink_at(canvas, x0, y0, g["height"])       # corner
-        assert self._ink_at(canvas, (x0 + x1) / 2, y0, g["height"])  # bottom edge
-
-    def test_grid_kind(self):
-        from camelot_spark.plotting import render_geometry
-        g = self._stream_geom()
-        canvas = render_geometry(g, "grid")
-        for rect in g["cells"][0]["rects"][:3]:
-            assert self._ink_at(canvas, rect[0], rect[1], g["height"])
-
-    def test_contour_kind(self):
-        from camelot_spark.plotting import render_geometry
-        g = self._stream_geom()
-        canvas = render_geometry(g, "contour")
-        x0, y0, x1, y1 = g["table_areas"][0]
-        assert self._ink_at(canvas, x0, y0, g["height"])
-        assert self._ink_at(canvas, x1, y1, g["height"])
-        # lattice contour comes from table bboxes
-        gl = self._lattice_geom()
-        cl = render_geometry(gl, "contour")
-        bx0, by0, bx1, by1 = gl["tables"][0]["bbox"]
-        assert self._ink_at(cl, bx0, by0, gl["height"])
-
-    def test_textedge_kind(self):
-        from camelot_spark.plotting import render_geometry
-        g = self._stream_geom()
-        canvas = render_geometry(g, "textedge")
-        te = next(t for t in g["textedges"] if t["is_valid"])
-        assert self._ink_at(canvas, te["x"], (te["y0"] + te["y1"]) / 2, g["height"])
-
-    def test_joint_kind(self):
-        from camelot_spark.plotting import render_geometry
-        g = self._lattice_geom()
-        canvas = render_geometry(g, "joint")
-        for j in g["tables"][0]["joints"][:5]:
-            assert self._ink_at(canvas, j[0], j[1], g["height"])
-
-    def test_line_kind(self):
-        from camelot_spark.plotting import render_geometry
-        g = self._lattice_geom()
-        canvas = render_geometry(g, "line")
-        x0, y0, x1, y1 = g["segments"]["vertical"][0]
-        assert self._ink_at(canvas, x0, (y0 + y1) / 2, g["height"])
-        hx0, hy0, hx1, hy1 = g["segments"]["horizontal"][0]
-        assert self._ink_at(canvas, (hx0 + hx1) / 2, hy0, g["height"])
-
-    def test_save_debug_png_roundtrip(self, tmp_path):
-        from camelot_spark.plotting import render_geometry, save_debug_png
-        from camelot_spark.tdp.png_codec import decode_png
-        g = self._stream_geom()
-        p = str(tmp_path / "overlay.png")
-        save_debug_png(g, "text", p)
-        with open(p, "rb") as f:
-            arr = decode_png(f.read())
-        assert (arr == render_geometry(g, "text")).all()

@@ -768,18 +768,6 @@ class TestAviCodec:
                       - frames[0].astype(int)).max() <= 3
 
 
-def test_avi_metadata_header_peek():
-    """Header-only metadata (no frame decode): dims/frames/fps from
-    avih."""
-    from camelot_spark.tdp.avi_codec import avi_metadata, encode_avi
-
-    frames = [np.zeros((12, 20), np.uint8)] * 7
-    assert avi_metadata(encode_avi(frames, fps=25)) == {
-        "width": 20, "height": 12, "n_frames": 7, "fps": 25}
-    with pytest.raises(ValueError):
-        avi_metadata(b"RIFF\x08\x00\x00\x00WAVEdata")
-
-
 class TestAviIndexAndAudio:
     """AVI 1.0 idx1 index (seek-accurate every-Nth sampling, skipped
     frames never decoded) and interleaved PCM audio demux routed

@@ -240,39 +240,6 @@ def test_dedup_groups_default_joins_12_hop_chain(spark):
     assert got == {i: (0, int(i == 0)) for i in range(13)}
 
 
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """Two tables bucketed on the join key: the join plan has NO
-    Exchange (co-located scan-local join) and matches the plain-join
-    result exactly."""
-    from pyspark.sql import functions as F
-
-    from camelot_spark.tdp.relational import write_bucketed
-
-    left = spark.range(500).select(
-        (F.col("id") % 40).alias("user_id"), F.col("id").alias("event_id"))
-    right = spark.range(40).select(
-        F.col("id").alias("user_id"), (F.col("id") * 7).alias("score"))
-    write_bucketed(left, "bkt_left", buckets=8, key="user_id")
-    write_bucketed(right, "bkt_right", buckets=8, key="user_id")
-    try:
-        a, b = spark.table("bkt_left"), spark.table("bkt_right")
-        # disable broadcast so the co-location (not a broadcast) kills
-        # the shuffle — the shape that matters when BOTH sides are huge
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = a.join(b, "user_id")
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" not in plan, plan
-            got = sorted(map(tuple, joined.collect()))
-        finally:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        want = sorted(map(tuple, left.join(right, "user_id").collect()))
-        assert got == want and len(got) == 500
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_left")
-        spark.sql("DROP TABLE IF EXISTS bkt_right")
-
-
 def test_bucketized_interval_join_is_equi_not_nested_loop(spark):
     """The banded re-expression plans an equi-join; the naive range
     join on the same data plans a BroadcastNestedLoopJoin — the shape
@@ -407,8 +374,6 @@ def test_kmv_partial_agg_bounds_shuffle_rows(spark):
     df = spark.createDataFrame(
         [(i, "only", "doc %d" % i) for i in range(5000)],
         "doc_id long, source string, text string").repartition(8)
-    # reach into the pre-merge stage: replicate the capped mapInPandas
-    # output by counting rows the estimator's input would carry
     est = kmv_distinct_partial(df, k=16)
     row = {r["source"]: r for r in est.collect()}["only"]
     # capping must not change the estimate (accuracy itself is covered
@@ -418,24 +383,12 @@ def test_kmv_partial_agg_bounds_shuffle_rows(spark):
     assert (row["distinct_est"], row["kth_hash"]) == (
         plain["distinct_est"], plain["kth_hash"])
     # structural bound: 8 partitions x 1 source x k=16 = 128 rows max
-    # entering the merge — assert via the capped stage itself
+    # entering the merge — assert on the product's cap itself
     from camelot_spark.tdp import dedup as D
     h = F.aggregate(F.split(F.col("text"), ""), F.lit(0).cast("long"),
                     lambda a, c: (a * 31 + F.coalesce(F.ascii(c), F.lit(0))) % D._KMV_M)
-    import pandas as pd
-
-    def _cap(batches, k=16):
-        acc = None
-        for pdf in batches:
-            both = pdf if acc is None else pd.concat((acc, pdf), ignore_index=True)
-            both = both.drop_duplicates()
-            acc = (both.sort_values(["source", "h"], kind="mergesort")
-                   .groupby("source", sort=False).head(k))
-        if acc is not None and len(acc):
-            yield acc
-
-    capped = df.select("source", h.alias("h")).mapInPandas(
-        _cap, schema="source string, h long")
+    capped = df.select("source", h.alias("h")).mapInArrow(
+        lambda batches: D._kmv_cap(batches, 16), schema="source string, h long")
     assert capped.count() <= 8 * 16
 
 

@@ -204,47 +204,6 @@ def test_jpeg_non_interleaved_baseline_decodes_exactly():
         assert np.array_equal(split, base), (shape, ss)
 
 
-def test_sqlite_skips_empty_grid_and_sheet_names_stay_bounded(spark, tmp_path):
-    import sqlite3
-
-    from pyspark.sql import functions as F
-
-    from camelot_spark import sinks
-
-    # extracted row with one real table and one zero-cell table
-    df = spark.range(1).select(
-        F.lit("d").alias("doc_id"),
-        F.array(F.struct(
-            F.lit("cell").alias("kind"), F.lit("v").alias("text"),
-            F.lit("").alias("media_ref"), F.lit(0).alias("order"))).alias("spans"),
-        F.lit(2).alias("n_tables"),
-        F.lit(100.0).alias("accuracy"), F.lit(0.0).alias("whitespace"),
-        F.array(
-            F.struct(
-                F.lit(1).alias("order"), F.lit(100.0).alias("accuracy"),
-                F.lit(0.0).alias("whitespace"), F.lit(1).alias("nrows"),
-                F.lit(1).alias("ncols"), F.lit(0.0).alias("x0"), F.lit(0.0).alias("y0"),
-                F.lit(0.0).alias("x1"), F.lit(0.0).alias("y1")),
-            F.struct(
-                F.lit(2).alias("order"), F.lit(0.0).alias("accuracy"),
-                F.lit(100.0).alias("whitespace"), F.lit(0).alias("nrows"),
-                F.lit(0).alias("ncols"), F.lit(0.0).alias("x0"), F.lit(0.0).alias("y0"),
-                F.lit(0.0).alias("x1"), F.lit(0.0).alias("y1")),
-        ).alias("tables"),
-    )
-    db = str(tmp_path / "t.db")
-    assert sinks.to_sqlite(df, db) == 1          # empty grid skipped, no crash
-    conn = sqlite3.connect(db)
-    assert [r[0] for r in conn.execute(
-        "SELECT name FROM sqlite_master WHERE type='table'")] == ["page-d-table-1"]
-    conn.close()
-
-    # sheet-name collisions terminate and stay within 31 chars
-    rows = [{"doc_id": "x" * 40, "table_order": 1}] * 5
-    names = sinks._sheet_names(rows)
-    assert len(set(names)) == 5 and all(len(n) <= 31 for n in names)
-
-
 def test_jpeg_restart_markers_in_all_scan_layouts():
     """restart_interval must compose with every scan layout (the DRI
     segment promises RSTn markers; missing ones crash the decoder's

@@ -107,52 +107,3 @@ def test_no_shuffle_in_sink_plans(extracted):
     for fn in (sinks.to_csv, sinks.to_json, sinks.to_html, sinks.parsing_report):
         plan = fn(extracted)._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, fn.__name__
-
-
-def test_to_sqlite_roundtrip(extracted, tmp_path):
-    """Reference `Table.to_sqlite` parity: one SQLite table per
-    extracted table, named page-{doc}-table-{order}, TEXT columns
-    '0'..'n' (core.py:637-655)."""
-    import sqlite3
-
-    db = str(tmp_path / "tables.db")
-    n = sinks.to_sqlite(extracted, db)
-    assert n == 3
-    conn = sqlite3.connect(db)
-    names = {r[0] for r in conn.execute(
-        "SELECT name FROM sqlite_master WHERE type='table'")}
-    assert names == {"page-h1-table-1", "page-t1-table-1", "page-t1-table-2"}
-    got = list(conn.execute('SELECT * FROM "page-h1-table-1"'))
-    want = {(r["doc_id"], r["table_order"]): r["rows"]
-            for r in sinks.table_rows(extracted).collect()}[("h1", 1)]
-    assert [list(r) for r in got] == [list(r) for r in want]
-    conn.close()
-
-
-def test_to_excel_roundtrip(extracted, tmp_path):
-    """Minimal OOXML workbook: sheet per table, inline-string cells
-    matching the reconstructed grids (no openpyxl needed to read)."""
-    import re
-    import zipfile
-
-    xlsx = str(tmp_path / "tables.xlsx")
-    assert sinks.to_excel(extracted, xlsx) == 3
-    with zipfile.ZipFile(xlsx) as z:
-        wb = z.read("xl/workbook.xml").decode()
-        assert '<sheet name="page-h1-table-1"' in wb
-        sheet1 = z.read("xl/worksheets/sheet1.xml").decode()
-    texts = re.findall(r"<t[^>]*>(.*?)</t>", sheet1)
-    want = {(r["doc_id"], r["table_order"]): r["rows"]
-            for r in sinks.table_rows(extracted).collect()}[("h1", 1)]
-    flat = [c for row in want for c in row]
-    # every non-empty cell appears in document order
-    assert [t for t in texts] == [c.replace("&", "&amp;").replace("<", "&lt;")
-                                  .replace(">", "&gt;").replace('"', "&quot;")
-                                  for c in flat]
-
-
-def test_driver_side_sinks_refuse_unbounded_collect(extracted):
-    with pytest.raises(ValueError, match="max_tables"):
-        sinks.to_sqlite(extracted, "/tmp/should_not_exist.db", max_tables=1)
-    with pytest.raises(ValueError, match="max_tables"):
-        sinks.to_excel(extracted, "/tmp/should_not_exist.xlsx", max_tables=2)
