@@ -21,35 +21,33 @@ import zlib
 H = 10.0       # textline height
 CW = 5.0       # char width
 ROW_H = 14.0   # stream table row pitch
+# pathological-skew knob (FIXTURES.md §4): this share of builder_for
+# keys builds the multi-table family
+SKEW_FAMILY, SKEW_FRAC = "twotables", 0.05
 
 
 # ---------------------------------------------------------------------------
 # low-level builders
 # ---------------------------------------------------------------------------
 
-def make_line(text: str, x0: float, y0: float, h: float = H, char_w: float = CW,
-              small: set | None = None, m: list | None = None) -> dict:
+def make_line(text: str, x0: float, y0: float, small: set | None = None) -> dict:
     """One textline payload with per-char boxes + trailing anno.
 
     ``small``: char indices rendered at 60% height (superscript model).
-    ``m``: CTM (b, c) pair attached to every char (rotation vote).
     """
     chars = []
     x = x0
     for i, c in enumerate(text):
-        ch_h = h * 0.6 if small and i in small else h
-        ch = {"c": c, "x0": x, "y0": y0, "x1": x + char_w, "y1": y0 + ch_h}
-        if m is not None:
-            ch["m"] = m
-        chars.append(ch)
-        x += char_w
+        ch_h = H * 0.6 if small and i in small else H
+        chars.append({"c": c, "x0": x, "y0": y0, "x1": x + CW, "y1": y0 + ch_h})
+        x += CW
     chars.append({"c": "\n"})
     return {
         "t": text + "\n",
         "x0": x0,
         "y0": y0,
-        "x1": x0 + len(text) * char_w,
-        "y1": y0 + h,
+        "x1": x0 + len(text) * CW,
+        "y1": y0 + H,
         "chars": chars,
     }
 
@@ -115,9 +113,9 @@ class DocBuilder:
                         "media_ref": s["media_ref"], "offset": s["offset"]})
         return out
 
-    def add_prose(self, text: str, x0: float, y0: float, kind: str = "prose") -> None:
+    def add_prose(self, text: str, x0: float, y0: float) -> None:
         line = make_line(text, x0, y0)
-        off = self.add_span(kind, line)
+        off = self.add_span("prose", line)
         self.golden_units.append((y0, x0, 1, off, text))
 
     def add_table_golden(self, anchor_y: float, x_anchor: float, order: int,
@@ -172,7 +170,7 @@ def add_stream_table(b: DocBuilder, cells: list[list[str]], col_x: list[float],
 
 
 def _rasterize_segments(segments: list[tuple], width: float, height: float,
-                        scale: int, thickness: int = 3) -> dict:
+                        scale: int) -> dict:
     """Draw ruling segments as black strokes on a white page bitmap —
     the fixture stand-in for the ghostscript page render
     (`camelot/parsers/lattice.py:211-221`). Image space: row 0 = top."""
@@ -182,7 +180,7 @@ def _rasterize_segments(segments: list[tuple], width: float, height: float,
 
     img_w, img_h = int(width * scale), int(height * scale)
     mask = np.zeros((img_h, img_w), dtype=bool)
-    t = thickness // 2
+    t = 1  # half-width of the 3 px ruling stroke
     for (x0, y0, x1, y1) in segments:
         c0, c1 = int(round(min(x0, x1) * scale)), int(round(max(x0, x1) * scale))
         r0 = img_h - int(round(max(y0, y1) * scale))
@@ -191,15 +189,16 @@ def _rasterize_segments(segments: list[tuple], width: float, height: float,
     return encode_bitmap(mask)
 
 
-def make_vline(text: str, x0: float, y0: float, y1: float, w: float = 10.0) -> dict:
-    """Vertical textline payload (text_v kind): chars stacked top→down."""
+def make_vline(text: str, x0: float, y0: float, y1: float) -> dict:
+    """Vertical textline payload (text_v kind): chars stacked top→down,
+    one textline height ``H`` wide."""
     chars = []
     ch_h = (y1 - y0) / max(len(text), 1)
     for i, c in enumerate(text):
         cy1 = y1 - i * ch_h
-        chars.append({"c": c, "x0": x0, "y0": cy1 - ch_h, "x1": x0 + w, "y1": cy1})
+        chars.append({"c": c, "x0": x0, "y0": cy1 - ch_h, "x1": x0 + H, "y1": cy1})
     chars.append({"c": "\n"})
-    return {"t": text + "\n", "x0": x0, "y0": y0, "x1": x0 + w, "y1": y1, "chars": chars}
+    return {"t": text + "\n", "x0": x0, "y0": y0, "x1": x0 + H, "y1": y1, "chars": chars}
 
 
 def add_lattice_table(b: DocBuilder, cells: list[list[str]], xs: list[float],
@@ -820,7 +819,6 @@ def families_by_config() -> list[tuple[str, dict, list[str]]]:
 
 
 def builder_for(doc_key: str, families: list[str] | None = None,
-                skew_family: str = "twotables", skew_frac: float = 0.05,
                 raw: bool = False) -> DocBuilder:
     """Deterministic builder for an arbitrary key (corpus synthesis from
     driver tables): family + jitter seeded by crc32(doc_key).
@@ -829,8 +827,8 @@ def builder_for(doc_key: str, families: list[str] | None = None,
     ``raw_spans()`` is valid on the result (the fused pipeline path)."""
     fams = families or BENCH_FAMILIES
     seed = zlib.crc32(doc_key.encode())
-    if (seed % 1000) / 1000.0 < skew_frac:
-        fam = skew_family if skew_family in fams else fams[0]
+    if (seed % 1000) / 1000.0 < SKEW_FRAC:
+        fam = SKEW_FAMILY if SKEW_FAMILY in fams else fams[0]
     else:
         fam = fams[(seed >> 4) % len(fams)]
     dx = float((seed >> 8) % 40)
@@ -842,27 +840,3 @@ def builder_for(doc_key: str, families: list[str] | None = None,
         return FAMILIES[fam](f"{fam}-{doc_key}", dx, dy)
     finally:
         _RAW_BUILD.reset(token)
-
-
-def replicate(n_docs: int, families: list[str] | None = None, skew_family: str = "twotables",
-              skew_frac: float = 0.05) -> list[tuple[str, list[dict], str]]:
-    """Tile families to ``n_docs`` with deterministic per-doc jitter.
-
-    Returns [(doc_id, spans, flavor)]. A ``skew_frac`` fraction of docs
-    are the multi-table family (pathological skew knob, FIXTURES.md §4).
-    Jitter is seeded from crc32(doc_id) — stable across runs/processes.
-    """
-    fams = families or BENCH_FAMILIES
-    out = []
-    for i in range(n_docs):
-        seed = zlib.crc32(f"doc-{i:08d}".encode())
-        if (seed % 1000) / 1000.0 < skew_frac:
-            fam = skew_family
-        else:
-            fam = fams[i % len(fams)]
-        dx = float((seed >> 8) % 40)         # 0..39 pt shift, safe margins
-        dy = float((seed >> 16) % 60)
-        doc_id = f"{fam}-{i:08d}"
-        b = FAMILIES[fam](doc_id, dx, dy)
-        out.append((doc_id, b.spans, b.flavor))
-    return out

@@ -133,7 +133,7 @@ def to_html(extracted: DataFrame) -> DataFrame:
 _FORMATS = {"csv": to_csv, "json": to_json, "html": to_html}
 
 
-def export(extracted: DataFrame, path: str, fmt: str = "csv", mode: str = "overwrite") -> None:
+def export(extracted: DataFrame, path: str, fmt: str = "csv") -> None:
     """Bulk export — `TableList.export` (`camelot/core.py:689-735`).
 
     One output partition dir per doc (distributed analogue of one file
@@ -142,7 +142,7 @@ def export(extracted: DataFrame, path: str, fmt: str = "csv", mode: str = "overw
     if fmt not in _FORMATS:
         raise ValueError(f"Format {fmt} is not supported (csv, json, html)")
     df = _FORMATS[fmt](extracted)
-    df.write.mode(mode).partitionBy("doc_id").parquet(path)
+    df.write.mode("overwrite").partitionBy("doc_id").parquet(path)
 
 
 def parsing_report(extracted: DataFrame) -> DataFrame:
@@ -230,7 +230,6 @@ def span_stats(extracted: DataFrame) -> DataFrame:
 
 def write_training_shards(documents: DataFrame, path: str,
                           n_shards: int = 64,
-                          mode: str = "overwrite",
                           epoch: int = 0) -> None:
     """Materialize the deterministic training shuffle
     (``tdp.sampling.shuffle_shards``): one directory per shard, rows
@@ -259,5 +258,5 @@ def write_training_shards(documents: DataFrame, path: str,
     (
         keyed.repartition(n_shards, F.col("shard"))
         .sortWithinPartitions("shard", "order_key", "doc_id")
-        .write.mode(mode).partitionBy("shard").parquet(path)
+        .write.mode("overwrite").partitionBy("shard").parquet(path)
     )

@@ -47,6 +47,9 @@ import os
 import time
 import uuid
 
+# optimistic-concurrency retries before an append gives up
+MAX_COMMIT_RETRIES = 20
+
 
 class CommitConflict(Exception):
     """Another writer published this version first (caller retries)."""
@@ -98,24 +101,13 @@ class SnapshotLog:
         # log, folded into manifest v1 so they stay visible (see commit)
         return dirs + [os.path.join(self.root, f) for f in m.get("legacy_files", [])]
 
-    def read(self, spark, version: int | None = None, merge_schema: bool = False):
+    def read(self, spark):
         """DataFrame of the latest snapshot (snapshot-isolated: files
-        not referenced by a committed manifest are never read).
-
-        ``version`` time-travels to a specific committed manifest.
-        ``merge_schema=True`` reconciles appends made with EVOLVED
-        schemas (added columns read as NULL for older files) — Iceberg
-        resolves this from table metadata for free; plain parquet needs
-        the footer-merging scan, so it stays opt-in: at 100 TB you only
-        pay it on tables that actually evolved."""
-        m = self.manifest(version) if version is not None else None
-        paths = self.data_paths(m)
+        not referenced by a committed manifest are never read)."""
+        paths = self.data_paths()
         if not paths:
             raise FileNotFoundError(f"no committed snapshot under {self.root}")
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*paths)
+        return spark.read.parquet(*paths)
 
     # -- write side ------------------------------------------------------
 
@@ -155,12 +147,11 @@ class SnapshotLog:
                 out.append(name)
         return sorted(out)
 
-    def commit(self, data_dir: str, metrics: dict | None = None,
-               max_retries: int = 20) -> dict:
+    def commit(self, data_dir: str, metrics: dict | None = None) -> dict:
         """Publish ONE new snapshot whose data = parent's data + the new
         directory. Returns the committed manifest."""
         rel = os.path.relpath(data_dir, self.root)
-        for _ in range(max_retries):
+        for _ in range(MAX_COMMIT_RETRIES):
             parent = self.latest()
             version = (parent["version"] + 1) if parent else 1
             manifest = {
@@ -184,7 +175,7 @@ class SnapshotLog:
                 return manifest
             except CommitConflict:
                 continue  # re-read the new latest and retry on top
-        raise CommitConflict(f"gave up after {max_retries} conflicts under {self.root}")
+        raise CommitConflict(f"gave up after {MAX_COMMIT_RETRIES} conflicts under {self.root}")
 
     def append(self, df, metrics: dict | None = None) -> dict:
         """Write ``df`` as data files + commit exactly one snapshot."""
@@ -194,8 +185,7 @@ class SnapshotLog:
         df.write.mode("error").parquet(data_dir)
         return self.commit(data_dir, metrics=metrics)
 
-    def compact(self, spark, target_partitions: int = 1,
-                metrics: dict | None = None) -> dict:
+    def compact(self, spark, target_partitions: int = 1) -> dict:
         """Rewrite the table's accumulated small data files into
         ``target_partitions`` files and commit ONE replacing snapshot —
         Iceberg's ``rewrite_data_files`` maintenance action. Long
@@ -205,12 +195,14 @@ class SnapshotLog:
 
         Unlike ``commit``, a replace must NOT retry past a concurrent
         append (retrying would silently drop the appended rows — the
-        rewrite read never saw them). The commit validates that the
-        parent observed at read time is still the latest and raises
-        ``CommitConflict`` otherwise; the caller re-runs the compaction
-        on the new state (same serializable-rewrite rule as Iceberg's
-        action). Old snapshots still reference the old dirs for time
-        travel until ``expire_snapshots`` + ``remove_orphans``.
+        rewrite read never saw them). The publish targets exactly
+        parent+1 after checking that the parent observed at read time
+        is still the latest, and raises ``CommitConflict`` otherwise;
+        the caller re-runs the compaction on the new state (same
+        serializable-rewrite rule as Iceberg's action). Legacy files
+        are deliberately not carried: the rewrite read folded them into
+        the new files. Old snapshots still reference the old dirs until
+        ``expire_snapshots`` + ``remove_orphans``.
         """
         parent = self.latest()
         if parent is None:
@@ -218,61 +210,26 @@ class SnapshotLog:
         df = spark.read.parquet(*self.data_paths(parent))
         data_dir = self.new_data_dir()
         df.repartition(target_partitions).write.mode("error").parquet(data_dir)
-        return self._replace_commit(parent, data_dir, metrics, "compaction")
-
-    def _replace_commit(self, parent: dict, data_dir: str,
-                        metrics: dict | None, what: str) -> dict:
-        """Shared serializable-replace tail for compact/merge: publish a
-        snapshot whose data is ONLY ``data_dir``, at exactly
-        parent+1 — a concurrent commit makes the publish fail (version
-        taken / parent moved) instead of its rows being dropped. Legacy
-        files are deliberately not carried: the rewrite read folded
-        them into the new files."""
         manifest = {
             "version": parent["version"] + 1,
             "snapshot_id": uuid.uuid4().hex,
             "parent_id": parent["snapshot_id"],
             "data_dirs": [os.path.relpath(data_dir, self.root)],
             "operation": "replace",
-            "metrics": metrics or {},
+            "metrics": {},
             "committed_at_ms": int(time.time() * 1000),
         }
-        latest = self.latest()
-        if latest["snapshot_id"] != parent["snapshot_id"]:
-            raise CommitConflict(
-                f"concurrent commit during {what}; re-run on the new state")
+        if self.latest()["snapshot_id"] != parent["snapshot_id"]:
+            raise CommitConflict("concurrent commit during compaction; re-run on the new state")
         self._publish(manifest["version"], manifest)
         return manifest
-
-    def merge(self, spark, updates, key: str = "doc_id",
-              metrics: dict | None = None) -> dict:
-        """Copy-on-write MERGE (Iceberg ``MERGE INTO`` upsert): rows in
-        ``updates`` replace current rows with the same ``key``; new keys
-        append. One replacing snapshot — the resumable-correction shape
-        (re-extract a batch of poisoned docs and publish atomically,
-        readers never see a mix of old and new rows for one key).
-
-        Same serializable rule as ``compact``: the rewrite read saw the
-        parent snapshot, so the publish targets exactly parent+1 and a
-        concurrent commit makes it fail with ``CommitConflict`` rather
-        than silently dropping that commit's rows. An empty table just
-        appends."""
-        parent = self.latest()
-        if parent is None:
-            return self.append(updates, metrics=metrics)
-        current = spark.read.parquet(*self.data_paths(parent))
-        kept = current.join(updates.select(key).distinct(), key, "left_anti")
-        merged = kept.unionByName(updates)
-        data_dir = self.new_data_dir()
-        merged.write.mode("error").parquet(data_dir)
-        return self._replace_commit(parent, data_dir, metrics, "merge")
 
     # -- maintenance (Iceberg expire_snapshots / remove_orphan_files) ----
 
     def expire_snapshots(self, keep_last: int) -> list[int]:
         """Drop manifest versions older than the newest ``keep_last``
-        (time travel to them ends; readers always resolve the latest
-        manifest, so current reads are unaffected). Data stays: dirs are
+        (their data paths can no longer be resolved; readers always
+        resolve the latest manifest, so current reads are unaffected). Data stays: dirs are
         cumulative, every live dir is still listed by newer manifests.
         Bounds metadata growth on long checkpoint chains — the
         Iceberg ``expire_snapshots`` maintenance action. Returns the

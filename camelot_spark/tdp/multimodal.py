@@ -276,33 +276,10 @@ def frame_sample(documents: DataFrame, frame_bytes: int = 64, every_n: int = 4) 
     return map_rows(attach_fake_payload(documents), sample, FRAME_SCHEMA)
 
 
-def media_features(documents: DataFrame, dim: int = 8) -> DataFrame:
-    """Byte-histogram feature vector (array<double>) per payload — the
-    embed step that feeds the similarity operators; pure JVM array
-    expressions, no Python.
-
-    The bucket array is computed once under its own column name before
-    the per-bucket counting, so codegen holds it in a local instead of
-    re-deriving the split+hash chain in each of the ``dim`` count
-    expressions (measured ~12% at sf0.1; also keeps the expression tree
-    linear in dim instead of quadratic)."""
-    b = F.transform(
-        F.split(F.encode(F.col("text"), "utf-8").cast("string"), ""),
-        lambda c: F.ascii(c) % dim,
-    )
-    staged = documents.select(
-        F.col("doc_id").cast("string").alias("doc_id"), b.alias("bs")
-    )
-    counts = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda k: F.size(F.filter(F.col("bs"), lambda x: x == k)).cast("double"),
-    )
-    return staged.select("doc_id", counts.alias("features"))
-
-
 def media_features_hist(documents: DataFrame, dim: int = 8) -> DataFrame:
-    """media_features as exploded (doc_id, bucket, cnt) rows — the
-    hash-oracled view of the histogram (integer outputs).
+    """Byte-histogram features per payload as exploded (doc_id, bucket,
+    cnt) rows — the embed step that feeds the similarity operators;
+    pure JVM expressions, no Python.
 
     Restructured r7 (guide §4.1): the per-row form ran dim×|chars|
     INTERPRETED filter-lambda evals per document (~80M at sf0.1,

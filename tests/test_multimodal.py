@@ -148,11 +148,14 @@ def test_frame_sample_no_frames_when_payloads_shorter_than_frame(docs):
 
 
 def test_media_features_histogram(docs, spark):
-    out = {r["doc_id"]: r["features"] for r in mm.media_features(docs, dim=4).collect()}
-    assert all(len(v) == 4 for v in out.values())
+    out = {}
+    for r in mm.media_features_hist(docs, dim=4).collect():
+        out.setdefault(r["doc_id"], {})[r["bucket"]] = r["cnt"]
+    assert len(out) == 6
+    assert all(sorted(v) == [0, 1, 2, 3] for v in out.values())
     # histogram sums to the character count of the text
     row = docs.where("doc_id = 1").collect()[0]
-    assert sum(out["1"]) == len(row["text"])
+    assert sum(out[1].values()) == len(row["text"])
 
 
 class TestWavCodec:

@@ -268,9 +268,7 @@ def test_no_shuffle_without_salt(spark, stream_builders):
 
 
 def test_salted_repartition_balances(spark):
-    docs = fx.replicate(64)
-    rows = [(d, [tuple(s.values()) for s in spans]) for d, spans, _ in docs]
-    df = spark.createDataFrame(rows, schema=DOCUMENTS_SCHEMA).coalesce(1)
+    df = docs_df(spark, [fx.builder_for(str(i)) for i in range(64)]).coalesce(1)
     out = extract(df, flavor="stream", salt_partitions=8)
     pids = [r["lineage"]["partition_id"] for r in out.collect()]
     # AQE may coalesce the small partitions; docs must still spread
@@ -336,9 +334,7 @@ def test_output_invariant_under_partitioning(spark):
     """Span sequences must be byte-identical no matter how docs are
     partitioned — extraction is doc-local, so partitioning is pure
     physics. Guards against any accidental cross-doc state."""
-    docs = fx.replicate(40)
-    rows = [(d, [tuple(s.values()) for s in spans]) for d, spans, _ in docs]
-    df = spark.createDataFrame(rows, schema=DOCUMENTS_SCHEMA)
+    df = docs_df(spark, [fx.builder_for(str(i)) for i in range(40)])
 
     def norm(out):
         return {

@@ -394,8 +394,8 @@ def test_kmv_partial_agg_bounds_shuffle_rows(spark):
 
 def test_snapshot_compaction_rewrites_files_and_preserves_rows(spark, tmp_path):
     """compact() = Iceberg rewrite_data_files: many small append dirs
-    become one replacing snapshot with the same rows; time travel to
-    pre-compaction versions still works, and expire + remove_orphans
+    become one replacing snapshot with the same rows; pre-compaction
+    versions stay readable until they expire, and expire + remove_orphans
     reclaims the old dirs without touching the live data."""
     import os as _os
 
@@ -413,8 +413,9 @@ def test_snapshot_compaction_rewrites_files_and_preserves_rows(spark, tmp_path):
     assert m["operation"] == "replace" and len(m["data_dirs"]) == 1
     after = {r["id"] for r in log.read(spark).collect()}
     assert after == before == set(range(40))
-    # time travel: version 4 (pre-compaction) still lists 4 dirs
-    assert {r["id"] for r in log.read(spark, version=4).collect()} == before
+    # version 4 (pre-compaction) still lists 4 readable dirs
+    v4 = spark.read.parquet(*log.data_paths(log.manifest(4)))
+    assert {r["id"] for r in v4.collect()} == before
 
     # maintenance: expire old snapshots, then the 4 original dirs are
     # orphans; removing them leaves the compacted table intact
@@ -457,66 +458,6 @@ def test_snapshot_compaction_refuses_to_drop_concurrent_append(spark, tmp_path):
         log.compact(spark)
     # nothing lost: both commits' rows are visible
     assert log.read(spark).count() == 20
-
-
-def test_snapshot_schema_evolution_reads_added_column_as_null(spark, tmp_path):
-    """Appends with an evolved (added-column) schema: merge_schema=True
-    reconciles old files with NULLs, default read stays cheap."""
-    from camelot_spark.snapshots import SnapshotLog
-
-    log = SnapshotLog(str(tmp_path / "tbl"))
-    log.append(spark.range(5).selectExpr("id"))
-    log.append(spark.range(5, 10).selectExpr("id", "id * 3 AS extra"))
-    merged = log.read(spark, merge_schema=True)
-    assert set(merged.columns) == {"id", "extra"}
-    rows = {r["id"]: r["extra"] for r in merged.collect()}
-    assert rows[2] is None and rows[7] == 21 and len(rows) == 10
-
-
-def test_snapshot_merge_upserts_by_key(spark, tmp_path):
-    """Copy-on-write MERGE: updated keys replace, new keys append, one
-    replacing snapshot; time travel still shows the pre-merge rows."""
-    from camelot_spark.snapshots import SnapshotLog
-
-    log = SnapshotLog(str(tmp_path / "tbl"))
-    log.append(spark.createDataFrame(
-        [(1, "old1"), (2, "old2"), (3, "old3")], "doc_id long, text string"))
-    m = log.merge(spark, spark.createDataFrame(
-        [(2, "new2"), (9, "new9")], "doc_id long, text string"))
-    assert m["operation"] == "replace" and m["version"] == 2
-    rows = {r["doc_id"]: r["text"] for r in log.read(spark).collect()}
-    assert rows == {1: "old1", 2: "new2", 3: "old3", 9: "new9"}
-    old = {r["doc_id"]: r["text"] for r in log.read(spark, version=1).collect()}
-    assert old == {1: "old1", 2: "old2", 3: "old3"}
-    # merge into an empty table is a plain append
-    log2 = SnapshotLog(str(tmp_path / "tbl2"))
-    m2 = log2.merge(spark, spark.createDataFrame([(5, "x")],
-                                                 "doc_id long, text string"))
-    assert m2["version"] == 1 and log2.read(spark).count() == 1
-
-
-def test_snapshot_merge_refuses_concurrent_commit(spark, tmp_path):
-    import pytest
-
-    from camelot_spark.snapshots import CommitConflict, SnapshotLog
-
-    root = str(tmp_path / "tbl")
-    log = SnapshotLog(root)
-    log.append(spark.range(5).selectExpr("id AS doc_id", "'a' AS text"))
-    orig_latest = log.latest
-    calls = {"n": 0}
-
-    def racing_latest():
-        if calls["n"] == 1:
-            SnapshotLog(root).append(
-                spark.range(100, 103).selectExpr("id AS doc_id", "'b' AS text"))
-        calls["n"] += 1
-        return orig_latest()
-
-    log.latest = racing_latest
-    with pytest.raises(CommitConflict):
-        log.merge(spark, spark.range(2).selectExpr("id AS doc_id", "'c' AS text"))
-    assert log.read(spark).count() == 8  # nothing lost
 
 
 def test_pack_sequences_global_matches_serial_scan(spark):

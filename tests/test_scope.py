@@ -5,16 +5,24 @@ Product files are ``camelot_spark/``, ``jobs/``, ``tools/``,
 ``bench*.py``. Every module under ``camelot_spark/`` must be imported
 by a product file other than itself, and every top-level ``def`` or
 ``class`` there must be referenced (an AST ``Name`` or ``Attribute``,
-outside its own body) by a product file. Code only tests reach is
-deleted, moved under ``tests/``, or kept in ``KEEP`` with its reason.
-Spark-free.
+outside its own body) by a product file. Every public method of a
+class there must be referenced as an ``Attribute`` by a product file.
+Outside ``camelot_spark/tdp/``, every parameter with a default must be
+passed by at least one product call of that name. Code only tests
+reach is deleted, moved under ``tests/``, or kept in ``KEEP`` with its
+reason: a bare name exempts that definition, ``func.param`` one
+parameter. Spark-free.
 """
 
 import ast
+import functools
 import glob
 import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_ENCODER = ("decoder-input generator for the codec round-trip tests; "
+            "moving it under tests/ removes no lines")
 
 KEEP = {
     "decode_avi": "every decoder stays: user media may be any container layout",
@@ -26,12 +34,10 @@ KEEP = {
                        "perfbench's tracer wraps it by name",
     "_sqdist": "Spark fold-order reference the numpy PQ distance folds are tested against",
     "empty_textlines": "three-line constructor a test builds pages with",
-    "replicate": "decision pending: corpus tiler only the Spark pipeline tests call",
-    "media_features": "decision pending: array form of the registry's media_features_hist, "
-                      "only tests call it",
-    "encode_gif": "encoder decision pending: move under tests/ as a decoder-input helper",
-    "encode_jpeg_progressive": "encoder decision pending: move under tests/ as a decoder-input helper",
-    "encode_png": "encoder decision pending: move under tests/ as a decoder-input helper",
+    "encode_gif": _ENCODER,
+    "encode_jpeg_progressive": _ENCODER,
+    "encode_png": _ENCODER,
+    "add_stream_table.row_h": "tests/test_golden.py builds its tall-row golden with row_h=80.0",
 }
 
 
@@ -98,6 +104,7 @@ def _referenced_names(tree):
     return out
 
 
+@functools.cache
 def _scan():
     """(parsed product files, camelot_spark module name → path,
     identifiers referenced anywhere in the product)."""
@@ -113,6 +120,86 @@ def _scan():
 def _definitions(tree):
     return [stmt.name for stmt in tree.body if isinstance(
         stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))]
+
+
+_FUNC = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _is_static(fn):
+    return any(isinstance(d, ast.Name) and d.id == "staticmethod"
+               for d in fn.decorator_list)
+
+
+# tdp/ is left out: its registry queries take size knobs (k, n_cells,
+# num_hashes, bands, ...) that only tests set, small, so they run on
+# tiny corpora. Folding those into constants rewrites test inputs
+# across dozens of files and is a change of its own.
+def _unpassed_parameters():
+    """``func.param`` → its dotted path, for every defaulted parameter
+    outside ``tdp/`` that no product call of that name passes."""
+    trees, modules, _ = _scan()
+    calls, loaded = _calls_and_bare_loads(trees)
+    tdp = os.path.join(REPO, "camelot_spark", "tdp") + os.sep
+    out = {}
+    for m, p in modules.items():
+        if p.startswith(tdp):
+            continue
+        for stmt in trees[p].body:
+            if isinstance(stmt, _FUNC) and stmt.name not in loaded:
+                targets = [(stmt, stmt.name, 0, m)]
+            elif isinstance(stmt, ast.ClassDef):
+                targets = [(fn, stmt.name if fn.name == "__init__" else fn.name,
+                            0 if _is_static(fn) else 1, f"{m}.{stmt.name}")
+                           for fn in stmt.body if isinstance(fn, _FUNC)]
+            else:
+                continue
+            for fn, callee, implicit, where in targets:
+                for param in _unpassed(fn, calls.get(callee), implicit):
+                    out[f"{fn.name}.{param}"] = f"{where}.{fn.name}.{param}"
+    return out
+
+
+def _calls_and_bare_loads(trees):
+    """(call name → (most positional arguments, keyword names, whether
+    some call spreads ``*args``/``**kwargs``), names loaded outside
+    call position)."""
+    calls, loaded = {}, set()
+    for tree in trees.values():
+        callees = set()
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            callees.add(id(node.func))
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name is None:
+                continue
+            npos, kws, spread = calls.get(name, (0, set(), False))
+            calls[name] = (
+                max(npos, len(node.args)),
+                kws | {k.arg for k in node.keywords if k.arg},
+                spread or any(isinstance(a, ast.Starred) for a in node.args)
+                or any(k.arg is None for k in node.keywords))
+        loaded.update(node.id for node in ast.walk(tree)
+                      if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load)
+                      and id(node) not in callees)
+    return calls, loaded
+
+
+def _unpassed(fn, call, implicit):
+    """Defaulted parameters of ``fn`` that ``call`` never reaches;
+    ``implicit`` counts the bound ``self``/``cls``."""
+    npos, kws, spread = call or (0, set(), False)
+    if spread:
+        return []
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    out = [arg.arg for i, arg in enumerate(pos[first:], first)
+           if arg.arg not in kws and npos <= i - implicit]
+    out += [arg.arg for arg, d in zip(a.kwonlyargs, a.kw_defaults)
+            if d is not None and arg.arg not in kws]
+    return out
 
 
 def test_every_module_is_imported_by_another_product_file():
@@ -139,5 +226,30 @@ def test_keep_lists_only_unreferenced_definitions():
     no longer exists, is stale."""
     trees, modules, referenced = _scan()
     defined = {name for p in modules.values() for name in _definitions(trees[p])}
-    stale = sorted(n for n in KEEP if n in referenced or n not in defined)
+    stale = sorted(n for n in KEEP if "." not in n and (n in referenced or n not in defined))
+    assert not stale, f"stale KEEP entries: {stale}"
+
+
+def test_every_public_method_is_referenced_by_a_product_file():
+    trees, modules, _ = _scan()
+    attrs = {node.attr for tree in trees.values() for node in ast.walk(tree)
+             if isinstance(node, ast.Attribute)}
+    unreached = sorted(f"{m}.{cls.name}.{fn.name}" for m, p in modules.items()
+                       for cls in trees[p].body if isinstance(cls, ast.ClassDef)
+                       for fn in cls.body if isinstance(fn, _FUNC)
+                       and not fn.name.startswith("_") and fn.name not in attrs)
+    assert not unreached, f"methods no product file references: {unreached}"
+
+
+def test_every_defaulted_parameter_is_passed_by_a_product_call():
+    unpassed = sorted(where for key, where in _unpassed_parameters().items()
+                      if key not in KEEP and key.partition(".")[0] not in KEEP)
+    assert not unpassed, f"parameters no product call passes: {unpassed}"
+
+
+def test_keep_lists_only_unpassed_parameters():
+    """A ``func.param`` KEEP entry that a product call now passes, or
+    whose parameter no longer has a default, is stale."""
+    unpassed = _unpassed_parameters()
+    stale = sorted(k for k in KEEP if "." in k and k not in unpassed)
     assert not stale, f"stale KEEP entries: {stale}"

@@ -199,91 +199,6 @@ def test_orphan_dirs_keep_run_dir_of_listed_epoch_dir(tmp_path):
     assert log.orphan_dirs() == []
 
 
-def test_filter_pushdown_prunes_files(spark):
-    """Per-file min/max stats sidecars + pushed filters skip whole data
-    files at planning time (Iceberg-style data-file pruning): three
-    appends with disjoint doc_id ranges, a point filter plans ONE
-    input partition and still returns exact results."""
-    table = "snap.ns.fileprune_v2"
-    for lo in (0, 100, 200):
-        w = spark.range(lo, lo + 100).selectExpr(
-            "cast(id as string) as doc_id", "id as n").coalesce(1).writeTo(table)
-        (w.create if lo == 0 else w.append)()
-    t = spark.read.table(table)
-    assert t.rdd.getNumPartitions() == 3  # one file per append
-
-    point = t.where("n = 250")
-    assert point.rdd.getNumPartitions() == 1
-    assert [(r["doc_id"], r["n"]) for r in point.collect()] == [("250", 250)]
-    plan = point._jdf.queryExecution().executedPlan().toString()
-    assert "pushed=" in plan, plan
-
-    rng = t.where("n >= 250")
-    assert rng.rdd.getNumPartitions() == 1 and rng.count() == 50
-    s = t.where("doc_id = '42'")
-    assert s.rdd.getNumPartitions() == 1 and s.count() == 1
-    # filters are re-evaluated per row: a file-internal miss returns 0,
-    # never a stale row
-    assert t.where("n = 101 and doc_id = 'nope'").count() == 0
-
-
-def test_alter_table_add_column_null_fills_old_files(spark):
-    """Schema evolution, Iceberg-style: ADD COLUMN back-stamps existing
-    data dirs with their write-time schema, old rows read the new
-    column as NULL, new appends store it for real, and column pruning
-    still works across mixed-layout files."""
-    _require_catalog(spark)
-    table = "snap.ns.evolve_tbl"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"CREATE TABLE {table} (id BIGINT, name STRING)")
-    spark.range(3).selectExpr("id", "concat('n', id) AS name") \
-        .writeTo(table).append()
-    spark.sql(f"ALTER TABLE {table} ADD COLUMN extra BIGINT")
-    spark.range(3, 5).selectExpr(
-        "id", "concat('n', id) AS name", "id * 10 AS extra") \
-        .writeTo(table).append()
-
-    rows = {r["id"]: r for r in spark.table(table).collect()}
-    assert len(rows) == 5
-    assert rows[1]["extra"] is None and rows[1]["name"] == "n1"
-    assert rows[4]["extra"] == 40 and rows[4]["name"] == "n4"
-    # predicates over the evolved column span both layouts
-    assert {r["id"] for r in spark.table(table).where("extra IS NULL").collect()} \
-        == {0, 1, 2}
-    # pruned scan of only the evolved column
-    got = sorted(r["extra"] for r in spark.table(table).select("extra").collect()
-                 if r["extra"] is not None)
-    assert got == [30, 40]
-    # evolution stays append-only: anything but ADD COLUMN refuses
-    with pytest.raises(Exception, match="ADD COLUMN|append-only|not supported|Unsupported"):
-        spark.sql(f"ALTER TABLE {table} DROP COLUMN name")
-
-
-def test_range_clustered_write_prunes_files(spark):
-    """Data clustering composes with the catalog's min/max file stats:
-    a range-clustered write (repartitionByRange + sortWithinPartitions,
-    the sort-order/Z-order analogue) gives each file a disjoint id
-    range, so a point-range filter plans ~1 file; the same data written
-    round-robin plans every file. One InputPartition per planned file."""
-    _require_catalog(spark)
-    for table, clustered in (("snap.ns.clustered", True),
-                             ("snap.ns.roundrobin", False)):
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql(f"CREATE TABLE {table} (id BIGINT, payload STRING)")
-        df = spark.range(4000).selectExpr("id", "repeat('x', 20) AS payload")
-        df = (df.repartitionByRange(8, "id").sortWithinPartitions("id")
-              if clustered else df.repartition(8))
-        df.writeTo(table).append()
-        planned = (spark.table(table)
-                   .where("id >= 100 AND id <= 200")
-                   .rdd.getNumPartitions())
-        if clustered:
-            assert planned <= 2, planned    # file skipping fired
-        else:
-            assert planned == 8, planned    # nothing skippable
-        assert spark.table(table).where("id >= 100 AND id <= 200").count() == 101
-
-
 def test_orphan_task_file_in_committed_dir_is_not_scanned(spark):
     """Exactly-once vs crashed task attempts: manifests record the
     committed FILES, so a leftover .bin in the same data dir (a task
@@ -312,142 +227,6 @@ def test_orphan_task_file_in_committed_dir_is_not_scanned(spark):
     # must not
     assert spark.table(table).count() == 5
     assert {r["id"] for r in spark.table(table).collect()} == set(range(5))
-
-
-def test_alter_column_type_widening_int_to_long(spark):
-    """Iceberg-parity type widening: write INT, ALTER COLUMN TYPE
-    BIGINT — old files read back widened (Cast at scan, exact values),
-    new appends store longs natively, filters + file-level min/max
-    pruning still work across the mixed layouts."""
-    _require_catalog(spark)
-    table = "snap.ns.widen_tbl"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"CREATE TABLE {table} (id BIGINT, v INT)")
-    spark.range(4).selectExpr("id", "CAST(id * 7 AS INT) AS v") \
-        .writeTo(table).append()
-    spark.sql(f"ALTER TABLE {table} ALTER COLUMN v TYPE BIGINT")
-    # post-widening append exceeds int range — the point of widening
-    spark.range(4, 6).selectExpr(
-        "id", "id * 7 + CAST(5e9 AS BIGINT) AS v").writeTo(table).append()
-
-    assert dict(spark.table(table).dtypes)["v"] == "bigint"
-    rows = {r["id"]: r["v"] for r in spark.table(table).collect()}
-    assert rows == {0: 0, 1: 7, 2: 14, 3: 21,
-                    4: 4 * 7 + 5_000_000_000, 5: 5 * 7 + 5_000_000_000}
-    # predicates span both layouts
-    assert {r["id"] for r in spark.table(table).where("v > 10").collect()} \
-        == {2, 3, 4, 5}
-    # min/max stats written as ints still prune against long predicates
-    assert spark.table(table).where("v = 7").count() == 1
-    # narrowing refuses
-    with pytest.raises(Exception, match="widening|not supported|Unsupported"):
-        spark.sql(f"ALTER TABLE {table} ALTER COLUMN id TYPE INT")
-
-
-def test_alter_table_nested_add_column(spark):
-    """Nested evolution: ADD COLUMN into a struct — old rows read the
-    struct with the added field null-filled (null structs stay null),
-    new appends carry it."""
-    _require_catalog(spark)
-    table = "snap.ns.nested_evolve"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"CREATE TABLE {table} (id BIGINT, s STRUCT<a: BIGINT, b: STRING>)")
-    spark.range(3).selectExpr(
-        "id", "IF(id = 2, NULL, named_struct('a', id, 'b', concat('x', id))) AS s") \
-        .writeTo(table).append()
-    spark.sql(f"ALTER TABLE {table} ADD COLUMN s.c BIGINT")
-    spark.range(3, 5).selectExpr(
-        "id", "named_struct('a', id, 'b', concat('x', id), 'c', id * 100) AS s") \
-        .writeTo(table).append()
-
-    rows = {r["id"]: r["s"] for r in spark.table(table).collect()}
-    assert rows[0]["a"] == 0 and rows[0]["b"] == "x0" and rows[0]["c"] is None
-    assert rows[2] is None                      # null struct stays null
-    assert rows[4]["c"] == 400 and rows[4]["b"] == "x4"
-    # filter through the evolved nested field across both layouts
-    assert {r["id"] for r in spark.table(table).where("s.c IS NULL").collect()} \
-        == {0, 1, 2}
-
-
-def test_insert_overwrite_commits_replacing_snapshot(spark):
-    """INSERT OVERWRITE through the DSv2 write path: one REPLACING
-    snapshot (only the new data live, parent chain intact), previous
-    versions still readable by time travel."""
-    _require_catalog(spark)
-    table = "snap.ns.overwrite_tbl"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"CREATE TABLE {table} (id BIGINT, v STRING)")
-    spark.range(3).selectExpr("id", "concat('a', id) AS v").writeTo(table).append()
-    spark.range(3, 5).selectExpr("id", "concat('a', id) AS v").writeTo(table).append()
-    assert spark.table(table).count() == 5
-
-    spark.sql(f"INSERT OVERWRITE TABLE {table} VALUES (100, 'x'), (101, 'y')")
-    rows = {r["id"]: r["v"] for r in spark.table(table).collect()}
-    assert rows == {100: "x", 101: "y"}
-
-    log = _table_log(spark, table)
-    hist = log.history()
-    assert [m["version"] for m in hist] == [1, 2, 3]
-    assert hist[2]["parent_id"] == hist[1]["snapshot_id"]
-    assert hist[2]["metrics"].get("operation") == "replace"
-    # time travel: version 2 still references the pre-overwrite data
-    # dirs, the replacing version 3 references ONLY its own, and the
-    # replaced .bin files remain on disk (expiry, not replace, deletes)
-    wh = _require_catalog(spark)
-    v2_dirs = set(log.history()[1]["data_dirs"])
-    v3_dirs = set(log.history()[2]["data_dirs"])
-    assert len(v2_dirs) == 2 and len(v3_dirs) == 1
-    assert not (v2_dirs & v3_dirs)
-    for d in v2_dirs:
-        assert os.path.isdir(os.path.join(wh, "ns", "overwrite_tbl", d))
-    # further appends stack on the replaced state
-    spark.range(200, 201).selectExpr("id", "'z' AS v").writeTo(table).append()
-    assert spark.table(table).count() == 3
-
-
-def test_compaction_through_the_write_path(spark):
-    """rewrite_data_files as a DSv2 write: read the (multi-file) table,
-    INSERT OVERWRITE it with a coalesced SELECT of itself — same rows,
-    one replacing snapshot, fewer planned files."""
-    _require_catalog(spark)
-    table = "snap.ns.compact_v2"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"CREATE TABLE {table} (id BIGINT, payload STRING)")
-    for lo in (0, 1000, 2000):
-        (spark.range(lo, lo + 1000).selectExpr("id", "repeat('x', 10) AS payload")
-         .repartition(4).writeTo(table).append())
-    files_before = spark.table(table).rdd.getNumPartitions()
-    assert files_before >= 12
-
-    spark.sql(
-        f"INSERT OVERWRITE TABLE {table} "
-        f"SELECT /*+ REPARTITION(1) */ id, payload FROM {table}")
-    assert spark.table(table).count() == 3000
-    assert spark.table(table).rdd.getNumPartitions() <= 2
-    hist = _table_log(spark, table).history()
-    assert hist[-1]["metrics"].get("operation") == "replace"
-    assert len(hist) == 4
-
-
-def test_empty_overwrite_truncates_without_orphan_exposure(spark):
-    """INSERT OVERWRITE ... WHERE false (the truncate idiom): the
-    replacing snapshot references NO data dir, so the legacy per-dir
-    scan fallback cannot resurrect crashed-attempt orphan files."""
-    _require_catalog(spark)
-    table = "snap.ns.truncate_tbl"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"CREATE TABLE {table} (id BIGINT, v STRING)")
-    spark.range(4).selectExpr("id", "'x' AS v").writeTo(table).append()
-    assert spark.table(table).count() == 4
-
-    spark.sql(f"INSERT OVERWRITE TABLE {table} SELECT id, v FROM {table} WHERE false")
-    assert spark.table(table).count() == 0
-    hist = _table_log(spark, table).history()
-    assert hist[-1]["metrics"].get("operation") == "replace"
-    assert hist[-1]["data_dirs"] == []
-    # appends resume on the truncated state
-    spark.range(9, 10).selectExpr("id", "'y' AS v").writeTo(table).append()
-    assert spark.table(table).count() == 1
 
 
 def test_committed_catalog_jar_matches_java_source():
