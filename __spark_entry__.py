@@ -246,7 +246,7 @@ def _prod_dedup_expected_rows(docs: list) -> dict[str, list[str]]:
     sim_pairs = {}
     for (c, _), ids in chunk_buckets.items():
         if len(ids) > 10000:
-            continue  # bucket_cap (never binds at 500 docs)
+            continue  # the bucket cap (never binds at 500 docs)
         ids = sorted(ids)
         for i, a in enumerate(ids):
             for b in ids[i + 1:]:

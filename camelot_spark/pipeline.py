@@ -197,6 +197,18 @@ def is_table_identifier(target: str) -> bool:
     return "/" not in target
 
 
+def job_session(app_name: str):
+    """The SparkSession of a ``jobs/`` entry point: adaptive query
+    execution on, and the session time zone pinned to UTC so timestamps
+    render the same on every cluster."""
+    from pyspark.sql import SparkSession
+
+    return (SparkSession.builder.appName(app_name)
+            .config("spark.sql.adaptive.enabled", "true")
+            .config("spark.sql.session.timeZone", "UTC")
+            .getOrCreate())
+
+
 def load_documents(spark, source: str):
     """Read a documents table: catalog table or parquet path, by the
     same rule as the writer (``is_table_identifier``). Shared by the

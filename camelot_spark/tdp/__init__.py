@@ -58,7 +58,7 @@ def _estimated_scan_splits(df: DataFrame) -> int | None:
     return splits
 
 
-def spread(df: DataFrame, factor: int = 1) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition when the scan is under-partitioned.
 
     Small local parquet files arrive as a single input split, which
@@ -75,7 +75,7 @@ def spread(df: DataFrame, factor: int = 1) -> DataFrame:
     the files can't be stat'd, so non-file-backed DataFrames are still
     spread when genuinely narrow.
     """
-    target = df.sparkSession.sparkContext.defaultParallelism * factor
+    target = df.sparkSession.sparkContext.defaultParallelism
     splits = _estimated_scan_splits(df)
     if splits is None:
         try:

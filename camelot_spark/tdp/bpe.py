@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+_N_MERGES = 8  # merges learned per tokenizer; the twin replays as many
+
 
 def _initial_state(documents: DataFrame) -> DataFrame:
     """(doc_id, s): chars spaced out, words joined by the | guard,
@@ -74,13 +76,13 @@ def _pair_counts(state: DataFrame) -> DataFrame:
     )
 
 
-def bpe_train(documents: DataFrame, n_merges: int = 8) -> DataFrame:
-    """Learn ``n_merges`` BPE merges; returns (merge_rank, left, right,
+def bpe_train(documents: DataFrame) -> DataFrame:
+    """Learn ``_N_MERGES`` BPE merges; returns (merge_rank, left, right,
     pair_count) ordered by rank."""
     spark = documents.sparkSession
     state = _initial_state(documents).localCheckpoint(eager=False)
     learned = []
-    for rank in range(1, n_merges + 1):
+    for rank in range(1, _N_MERGES + 1):
         best = (
             _pair_counts(state)
             .orderBy(F.col("c").desc(), F.col("l").asc(), F.col("r").asc())
@@ -99,16 +101,16 @@ def bpe_train(documents: DataFrame, n_merges: int = 8) -> DataFrame:
         learned, "merge_rank int, left string, right string, pair_count long")
 
 
-def bpe_token_counts(documents: DataFrame, n_merges: int = 8,
+def bpe_token_counts(documents: DataFrame,
                      merges: DataFrame | None = None) -> DataFrame:
-    """Train ``n_merges`` merges on the given corpus, then ENCODE that
+    """Train ``_N_MERGES`` merges on the given corpus, then ENCODE that
     corpus with them: per document, the number of BPE tokens after all
     merges apply (guards excluded) — the sequence-length statistic that
     drives packing/quota decisions once a tokenizer exists.
 
     ``merges``: an already-learned merge table (bpe_train's output
     schema). When given, the per-round count→argmax→replace jobs are
-    skipped entirely and the ≤``n_merges`` literal replaces apply in
+    skipped entirely and the ≤``_N_MERGES`` literal replaces apply in
     ONE chained projection — replace is associative-in-sequence, so
     chaining in rank order equals the per-round application exactly.
     This is how a production encode pass runs (the tokenizer is
@@ -118,7 +120,7 @@ def bpe_token_counts(documents: DataFrame, n_merges: int = 8,
     if merges is not None:
         rows = sorted(merges.collect(), key=lambda r: r["merge_rank"])
         s = F.col("s")
-        for m in rows[:n_merges]:
+        for m in rows[:_N_MERGES]:
             l, r = m["left"], m["right"]
             s = F.replace(s, F.lit(f" {l} {r} "), F.lit(f" {l}{r} "))
         toks = F.filter(F.split(s, " "),
@@ -127,7 +129,7 @@ def bpe_token_counts(documents: DataFrame, n_merges: int = 8,
             "doc_id", F.size(toks).cast("bigint").alias("n_tokens"))
     spark = documents.sparkSession
     state = _initial_state(documents).localCheckpoint(eager=False)
-    for _ in range(n_merges):
+    for _ in range(_N_MERGES):
         best = (
             _pair_counts(state)
             .orderBy(F.col("c").desc(), F.col("l").asc(), F.col("r").asc())
@@ -147,8 +149,9 @@ def bpe_token_counts(documents: DataFrame, n_merges: int = 8,
         "doc_id", F.size(toks).cast("bigint").alias("n_tokens"))
 
 
-def bpe_sql(n_merges: int = 8, sample_clause: str = "doc_id % 8 = 0") -> str:
-    """Generate the DuckDB twin: the same loop as chained CTE rounds."""
+def bpe_sql() -> str:
+    """Generate the DuckDB twin: the same loop as chained CTE rounds,
+    over the registry query's doc_id % 8 = 0 sample."""
     head = f"""
 WITH c0 AS MATERIALIZED (
   SELECT doc_id,
@@ -158,9 +161,9 @@ WITH c0 AS MATERIALIZED (
                          w -> length(w) > 0),
              w -> array_to_string(string_split(w, ''), ' ')),
            ' | ') || ' ' AS s
-  FROM documents WHERE {sample_clause})"""
+  FROM documents WHERE doc_id % 8 = 0)"""
     rounds = []
-    for k in range(1, n_merges + 1):
+    for k in range(1, _N_MERGES + 1):
         prev = f"c{k - 1}"
         rounds.append(f""",
 p{k} AS MATERIALIZED (
@@ -185,11 +188,11 @@ c{k} AS MATERIALIZED (
     selects = " UNION ALL ".join(
         f"SELECT CAST({k} AS INTEGER) AS merge_rank, l AS left, r AS right, "
         f"c AS pair_count FROM b{k}"
-        for k in range(1, n_merges + 1))
+        for k in range(1, _N_MERGES + 1))
     return head + "".join(rounds) + "\n" + selects
 
 
-BPE_TRAIN_SQL = bpe_sql(8)
+BPE_TRAIN_SQL = bpe_sql()
 
 # encode twin: the training chain's final state c8 IS the encoded
 # corpus; count its non-guard tokens per document

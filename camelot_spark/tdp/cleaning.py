@@ -18,11 +18,11 @@ from .dedup import EXACT_KEY, exact_key
 from .text import _lang_vote, _profile_hits, _quality_x100, _tokens
 
 
-def clean_corpus(documents: DataFrame, min_quality_x100: int = 50) -> DataFrame:
+def clean_corpus(documents: DataFrame) -> DataFrame:
     """(keep_id, group_size, quality_x100, pred_lang) for surviving docs.
 
     Survivors = per exact-content group, the lowest doc_id among docs
-    whose quality score ≥ threshold."""
+    whose quality score ≥ 50 (x100)."""
     # tokens projected once (each reference of a split() expression
     # re-tokenizes the row — see tdp/text.py intermediate-projection rule)
     base = documents.select(
@@ -33,7 +33,7 @@ def clean_corpus(documents: DataFrame, min_quality_x100: int = 50) -> DataFrame:
     # the dedup groupBy ships the key and id, never bodies (see dedup.exact_key)
     scored = base.select(
         "id", *exact_key(), _quality_x100(F.col("toks")).alias("quality_x100"), "text",
-    ).where(F.col("quality_x100") >= min_quality_x100)
+    ).where(F.col("quality_x100") >= 50)
 
     survivors = (
         scored.groupBy(*EXACT_KEY)

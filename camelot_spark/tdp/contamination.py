@@ -9,9 +9,8 @@ counts in ONE mapInArrow pass over (doc_id, text) — ZERO shuffle of
 corpus grams, no join. The only corpus shuffle carries (doc_id, count)
 longs; the only benchmark-side shuffle is its bounded distinct.
 
-The synthetic "benchmark" is a deterministic slice of the corpus itself
-(doc_id % 50 == 0) so the DuckDB oracle reproduces it exactly; a real
-deployment passes an actual eval-set DataFrame.
+The "benchmark" is a deterministic slice of the corpus itself
+(doc_id % 50 == 0) so the DuckDB oracle reproduces it exactly.
 """
 
 from __future__ import annotations
@@ -26,34 +25,29 @@ from .dedup import _shingles
 _GRAM_COUNT_SCHEMA = StructType([StructField("doc_id", LongType()),
                                  StructField("c", LongType())])
 
+# word-3-grams; a doc is contaminated at 5 shared distinct grams
+_GRAM_N = 3
+_CONTAMINATED_AT = 5
 
-def _default_split(documents: DataFrame, benchmark: DataFrame | None):
-    """(benchmark, corpus) for both decontamination variants. The %50
-    slice is ONLY the synthetic default benchmark; a caller's real eval
-    set shares no doc_ids with the corpus by construction, so filtering
-    the corpus there would silently drop 2% of real docs from
-    decontamination (round-2 advice). One definition so the exact and
+
+def _default_split(documents: DataFrame):
+    """(benchmark, corpus) for both decontamination variants: the
+    doc_id % 50 == 0 slice and the rest. One definition so the exact and
     Bloom operators can never decontaminate different corpora."""
-    if benchmark is None:
-        return (documents.where(F.col("doc_id") % 50 == 0),
-                documents.where(F.col("doc_id") % 50 != 0))
-    return benchmark, documents
+    return (documents.where(F.col("doc_id") % 50 == 0),
+            documents.where(F.col("doc_id") % 50 != 0))
 
 
-def decontaminate(
-    documents: DataFrame,
-    benchmark: DataFrame | None = None,
-    n: int = 3,
-    threshold: int = 5,
-) -> DataFrame:
+def decontaminate(documents: DataFrame) -> DataFrame:
     """(doc_id, overlap, contaminated) per corpus doc.
 
-    ``overlap`` = number of distinct word-``n``-grams shared with the
-    benchmark set; ``contaminated`` = 1 when overlap ≥ threshold.
-    Benchmark docs themselves are excluded from the output (they would
-    trivially self-match).
+    ``overlap`` = number of distinct word-``_GRAM_N``-grams shared with
+    the benchmark set; ``contaminated`` = 1 when overlap ≥
+    ``_CONTAMINATED_AT``. Benchmark docs themselves are excluded from
+    the output (they would trivially self-match).
     """
-    benchmark, corpus = _default_split(documents, benchmark)
+    n = _GRAM_N
+    benchmark, corpus = _default_split(documents)
     # r7 (guide §4.2): the benchmark gram set is collected once
     # (bounded by the eval suite's vocabulary — the same object the
     # old plan broadcast) and the corpus side counts per-row distinct
@@ -77,7 +71,7 @@ def decontaminate(
         .select(
             "doc_id",
             "overlap",
-            F.when(F.col("overlap") >= threshold, 1).otherwise(0).cast("int").alias("contaminated"),
+            F.when(F.col("overlap") >= _CONTAMINATED_AT, 1).otherwise(0).cast("int").alias("contaminated"),
         )
     )
 
@@ -150,18 +144,14 @@ def _bloom_positions(h):
     )
 
 
-def decontaminate_bloom(
-    documents: DataFrame,
-    benchmark: DataFrame | None = None,
-    n: int = 3,
-    threshold: int = 5,
-) -> DataFrame:
+def decontaminate_bloom(documents: DataFrame) -> DataFrame:
     """Bloom-filter decontamination — the broadcast-SCALE variant of
     ``decontaminate``: instead of broadcasting the benchmark's distinct
     n-gram STRINGS (which grows with the eval suite), aggregate them
     into a fixed m-bit Bloom filter (m=65536, k=3 — ~2700 set bits for the
     sf0.01 benchmark, fill 0.04, per-gram FP ~7e-5) and flag corpus docs
-    whose count of filter-passing distinct grams reaches the threshold.
+    whose count of filter-passing distinct grams reaches
+    ``_CONTAMINATED_AT``.
 
     Scale shape: the filter build is a bounded distinct over k·|bench
     grams| positions; the corpus side is scan-local codegen against the
@@ -173,7 +163,8 @@ def decontaminate_bloom(
 
     Output: (doc_id, overlap_bloom, contaminated) over the
     non-benchmark corpus, like ``decontaminate``."""
-    benchmark, corpus = _default_split(documents, benchmark)
+    n = _GRAM_N
+    benchmark, corpus = _default_split(documents)
 
     set_bits = (
         benchmark.select(F.explode(_shingles(F.col("text"), n)).alias("g"))
@@ -224,7 +215,7 @@ def decontaminate_bloom(
             "doc_id",
             F.coalesce("overlap_bloom", F.lit(0)).cast("bigint")
             .alias("overlap_bloom"),
-            F.when(F.coalesce("overlap_bloom", F.lit(0)) >= threshold, 1)
+            F.when(F.coalesce("overlap_bloom", F.lit(0)) >= _CONTAMINATED_AT, 1)
             .otherwise(0).cast("int").alias("contaminated"),
         )
     )

@@ -23,6 +23,13 @@ from pyspark.sql import functions as F
 
 from .arrow_seams import list_parts
 
+# One value per setting, replayed by the twins: word 3-gram shingles,
+# 32 minhashes in 8 bands; simhash pairs within 3 bits with hot chunk
+# buckets above the cap dropped; the KMV sketch keeps 64 minimums.
+_SHINGLE_N, _NUM_HASHES, _BANDS = 3, 32, 8
+_SIMHASH_MAX_HAMMING, _SIMHASH_BUCKET_CAP = 3, 10000
+_KMV_K = 64
+
 
 def dedup_exact(documents: DataFrame) -> DataFrame:
     """Per-source doc/distinct counts via content hash (exact dedup)."""
@@ -61,15 +68,15 @@ def _shingles(col, n: int = 3):
     ).otherwise(F.array().cast("array<string>"))
 
 
-def ngram_jaccard_adjacent(documents: DataFrame, n: int = 3) -> DataFrame:
+def ngram_jaccard_adjacent(documents: DataFrame) -> DataFrame:
     """Exact word-3-gram Jaccard between consecutive doc_ids — the
     exact-similarity baseline the MinHash path approximates. Output
     floor(J*10000) for oracle-exact comparison."""
     from . import spread
 
-    d = spread(documents).where(F.size(F.split("text", " ")) >= n).select(
-        F.col("doc_id").cast("bigint").alias("id"), _shingles(F.col("text"), n).alias("sh")
-    )
+    d = spread(documents).where(F.size(F.split("text", " ")) >= _SHINGLE_N).select(
+        F.col("doc_id").cast("bigint").alias("id"),
+        _shingles(F.col("text"), _SHINGLE_N).alias("sh"))
     a = d.alias("a")
     b = d.select((F.col("id") - 1).alias("id"), F.col("sh").alias("sh_b")).alias("b")
     pairs = a.join(b, "id")
@@ -220,9 +227,7 @@ def _portable_sig_arrow(ex: DataFrame, num_hashes: int) -> DataFrame:
     return ex.mapInArrow(batches, "doc_id bigint, sig array<bigint>")
 
 
-def minhash_signatures(
-    documents: DataFrame, num_hashes: int = 32, n: int = 3, portable: bool = False
-) -> DataFrame:
+def minhash_signatures(documents: DataFrame, portable: bool = False) -> DataFrame:
     """K minhashes per doc: min over shingles of hash_k(shingle).
 
     ``portable=False`` (default, the scale path) uses xxhash64(s, k) —
@@ -247,6 +252,7 @@ def minhash_signatures(
     from . import spread
     from .text import portable_token_hash
 
+    num_hashes, n = _NUM_HASHES, _SHINGLE_N
     if portable:
         # Portable: explode-first shingle rows → one codegen hash
         # projection → numpy seed-mix + segment-MIN seam (r7; guide
@@ -298,43 +304,34 @@ def minhash_signatures(
     return d.select("doc_id", sig.alias("sig"))
 
 
-def banded_signatures(sigs: DataFrame, bands: int,
-                      rows_per_band: int) -> DataFrame:
+def banded_signatures(sigs: DataFrame) -> DataFrame:
     """(doc_id, band, band_sig) rows from a (doc_id, sig-array) frame —
     the banding step shared by ``minhash_lsh_pairs`` and
     ``dedup_incremental``."""
+    rows_per_band = _NUM_HASHES // _BANDS
     return sigs.select(
         "doc_id",
         F.posexplode(
             F.array(
                 *[
                     F.concat_ws(",", F.slice("sig", b * rows_per_band + 1, rows_per_band).cast("array<string>"))
-                    for b in range(bands)
+                    for b in range(_BANDS)
                 ]
             )
         ).alias("band", "band_sig"),
     )
 
 
-def minhash_lsh_pairs(
-    documents: DataFrame, num_hashes: int = 32, bands: int = 8, n: int = 3,
-    portable: bool = False,
-) -> DataFrame:
+def minhash_lsh_pairs(documents: DataFrame, portable: bool = False) -> DataFrame:
     """LSH candidate pairs: split the K-wide signature into bands, join
     docs sharing any (band_id, band_signature) bucket. ``portable``
     picks the hash family (see minhash_signatures)."""
-    if num_hashes % bands != 0:
-        # silently truncating the signature would pay for num_hashes
-        # folds while delivering the recall of bands*(num_hashes//bands)
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands ({bands})")
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(documents, num_hashes, n, portable=portable)
+    sigs = minhash_signatures(documents, portable=portable)
     # materialize the slim (doc_id, band, band_sig) rows once (r7): the
     # plan otherwise embeds the whole shingle+signature pipeline once
     # per self-join side (AQE exchange reuse is not guaranteed across
     # differently-projected branches)
-    banded = banded_signatures(sigs, bands, rows_per_band).localCheckpoint()
+    banded = banded_signatures(sigs).localCheckpoint()
     # one explicit shuffle on the join key so both self-join branches
     # reuse the same exchange instead of recomputing the signatures
     banded = banded.repartition("band", "band_sig")
@@ -457,13 +454,12 @@ def simhash64(documents: DataFrame) -> DataFrame:
 
 def _chunked_hamming_pairs(
     sigs: DataFrame, n_chunks: int, chunk_bits: int,
-    max_hamming: int, bucket_cap: int | None,
     materialize: bool = True,
 ) -> DataFrame:
     """Pigeonhole chunk-bucket join over a ``simhash`` column: a pair
-    within ``max_hamming`` < n_chunks shares ≥1 exact chunk.
+    within ``_SIMHASH_MAX_HAMMING`` < n_chunks shares ≥1 exact chunk.
 
-    ``bucket_cap`` drops (chunk_id, chunk) buckets bigger than the cap
+    The bucket cap drops (chunk_id, chunk) buckets bigger than 10000
     before the self-join: simhash values cluster on near-dup-heavy
     corpora, and one hot bucket would otherwise go quadratic on a
     single key (unbounded straggler at 100 TB). The chunk rows are
@@ -489,14 +485,13 @@ def _chunked_hamming_pairs(
     if materialize:
         chunks = chunks.localCheckpoint()
     chunks = chunks.repartition("chunk_id", "chunk")
-    if bucket_cap is not None:
-        small = (
-            chunks.groupBy("chunk_id", "chunk")
-            .agg(F.count(F.lit(1)).alias("bucket_n"))
-            .where(F.col("bucket_n") <= bucket_cap)
-            .select("chunk_id", "chunk")
-        )
-        chunks = chunks.join(small, ["chunk_id", "chunk"], "left_semi")
+    small = (
+        chunks.groupBy("chunk_id", "chunk")
+        .agg(F.count(F.lit(1)).alias("bucket_n"))
+        .where(F.col("bucket_n") <= _SIMHASH_BUCKET_CAP)
+        .select("chunk_id", "chunk")
+    )
+    chunks = chunks.join(small, ["chunk_id", "chunk"], "left_semi")
     a, b = chunks.alias("a"), chunks.alias("b")
     hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     # hamming filter BEFORE the dedup exchange: most chunk-collisions
@@ -504,7 +499,7 @@ def _chunked_hamming_pairs(
     # surviving near-dup pairs instead of every candidate
     return (
         a.join(b, ["chunk_id", "chunk"])
-        .where((F.col("a.doc_id") < F.col("b.doc_id")) & (hamming <= max_hamming))
+        .where((F.col("a.doc_id") < F.col("b.doc_id")) & (hamming <= _SIMHASH_MAX_HAMMING))
         .select(
             F.col("a.doc_id").alias("a_id"),
             F.col("b.doc_id").alias("b_id"),
@@ -514,15 +509,10 @@ def _chunked_hamming_pairs(
     )
 
 
-def simhash_near_dups(
-    documents: DataFrame, max_hamming: int = 3, bucket_cap: int | None = 10000
-) -> DataFrame:
-    """Near-dup pairs by 64-bit SimHash hamming distance ≤ k, bucketed
+def simhash_near_dups(documents: DataFrame) -> DataFrame:
+    """Near-dup pairs by 64-bit SimHash hamming distance ≤ 3, bucketed
     by 16-bit chunks (see _chunked_hamming_pairs)."""
-    return _chunked_hamming_pairs(
-        simhash64(documents), n_chunks=4, chunk_bits=16,
-        max_hamming=max_hamming, bucket_cap=bucket_cap,
-    )
+    return _chunked_hamming_pairs(simhash64(documents), n_chunks=4, chunk_bits=16)
 
 
 def simhash_portable32(documents: DataFrame) -> DataFrame:
@@ -553,9 +543,7 @@ def simhash_portable32(documents: DataFrame) -> DataFrame:
         32)
 
 
-def simhash_near_dups_portable(
-    documents: DataFrame, max_hamming: int = 3, bucket_cap: int | None = 10000
-) -> DataFrame:
+def simhash_near_dups_portable(documents: DataFrame) -> DataFrame:
     """Portable-hash simhash near-dups: 4 × 8-bit chunks over the 32-bit
     signature; fully reproduced by SIMHASH_PORTABLE_SQL."""
     # materialize=False: the portable twin folds a quarter corpus with
@@ -564,7 +552,6 @@ def simhash_near_dups_portable(
     # at sf0.1; the prod 64-bit path measures the opposite way)
     return _chunked_hamming_pairs(
         simhash_portable32(documents), n_chunks=4, chunk_bits=8,
-        max_hamming=max_hamming, bucket_cap=bucket_cap,
         materialize=False,
     )
 
@@ -661,8 +648,7 @@ FROM documents GROUP BY text
 
 
 def verify_pairs_jaccard(
-    documents: DataFrame, cand: DataFrame, n: int = 3,
-    threshold_x10k: int = 3000,
+    documents: DataFrame, cand: DataFrame, threshold_x10k: int = 3000,
 ) -> DataFrame:
     """Exact n-gram Jaccard verification of candidate (a_id, b_id)
     pairs → thresholded near-dup pairs with ``jaccard_x10k``.
@@ -682,14 +668,14 @@ def verify_pairs_jaccard(
     d = (
         documents.select(F.col("doc_id").cast("bigint").alias("id"), "text")
         .join(ids, "id", "left_semi")
-        .select("id", _shingles(F.col("text"), n).alias("sh"))
+        .select("id", _shingles(F.col("text"), _SHINGLE_N).alias("sh"))
     )
     a = d.select(F.col("id").alias("a_id"), F.col("sh").alias("sh_a"))
     b = d.select(F.col("id").alias("b_id"), F.col("sh").alias("sh_b"))
     pairs = cand.join(F.broadcast(a), "a_id").join(F.broadcast(b), "b_id")
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    # try_divide: two shingle-less docs (< n tokens) pair through the
+    # try_divide: two shingle-less docs (< 3 tokens) pair through the
     # '' band bucket with union == 0 — plain division THROWS under
     # ANSI (default since Spark 4). NULL jaccard fails the threshold
     # filter, matching DuckDB's 0/0 -> NULL in the twins; for
@@ -704,16 +690,11 @@ def verify_pairs_jaccard(
     )
 
 
-def minhash_neardup_verified(
-    documents: DataFrame, num_hashes: int = 32, bands: int = 8, n: int = 3,
-    threshold_x10k: int = 3000,
-) -> DataFrame:
+def minhash_neardup_verified(documents: DataFrame) -> DataFrame:
     """Complete MinHash dedup pipeline: LSH candidates → exact n-gram
-    Jaccard verification (``verify_pairs_jaccard``) → thresholded
-    near-dup pairs."""
-    cand = minhash_lsh_pairs(documents, num_hashes=num_hashes, bands=bands, n=n)
-    return verify_pairs_jaccard(documents, cand, n=n,
-                                threshold_x10k=threshold_x10k)
+    Jaccard verification (``verify_pairs_jaccard``, default threshold)
+    → thresholded near-dup pairs."""
+    return verify_pairs_jaccard(documents, minhash_lsh_pairs(documents))
 
 
 # Min-label propagation needs one round per hop of a component's
@@ -791,8 +772,7 @@ def connected_components(pairs):
         f"rounds (a component's diameter exceeds the cap)")
 
 
-def dedup_groups(documents, num_hashes: int = 32, bands: int = 8, n: int = 3,
-                 portable: bool = False,
+def dedup_groups(documents, portable: bool = False,
                  verify_threshold_x10k: int | None = None,
                  pairs: DataFrame | None = None):
     """Full dedup grouping: MinHash-LSH candidate pairs → connected
@@ -816,10 +796,9 @@ def dedup_groups(documents, num_hashes: int = 32, bands: int = 8, n: int = 3,
     from pyspark.sql import functions as F
 
     if pairs is None:
-        pairs = minhash_lsh_pairs(documents, num_hashes=num_hashes,
-                                  bands=bands, n=n, portable=portable)
+        pairs = minhash_lsh_pairs(documents, portable=portable)
     if verify_threshold_x10k is not None:
-        pairs = verify_pairs_jaccard(documents, pairs, n=n,
+        pairs = verify_pairs_jaccard(documents, pairs,
                                      threshold_x10k=verify_threshold_x10k)
     return connected_components(pairs).select(
         "doc_id", "component",
@@ -828,8 +807,7 @@ def dedup_groups(documents, num_hashes: int = 32, bands: int = 8, n: int = 3,
     )
 
 
-def dedup_report(documents, num_hashes: int = 32, bands: int = 8,
-                 n: int = 3, verify_threshold_x10k: int = 3000,
+def dedup_report(documents, verify_threshold_x10k: int = 3000,
                  portable: bool = False, pairs=None):
     """Pre-delete audit of a verified dedup run: one row per would-be
     dedup GROUP — the report a curation pipeline reads BEFORE running
@@ -850,10 +828,9 @@ def dedup_report(documents, num_hashes: int = 32, bands: int = 8,
     from pyspark.sql import functions as F
 
     if pairs is None:
-        pairs = minhash_lsh_pairs(documents, num_hashes=num_hashes,
-                                  bands=bands, n=n, portable=portable)
+        pairs = minhash_lsh_pairs(documents, portable=portable)
     verified = verify_pairs_jaccard(
-        documents, pairs, n=n, threshold_x10k=verify_threshold_x10k)
+        documents, pairs, threshold_x10k=verify_threshold_x10k)
     # feeds BOTH the label propagation and the pair-stats aggregation:
     # materialize once (same pattern as verify's cand)
     verified = verified.localCheckpoint(eager=True)
@@ -1070,7 +1047,7 @@ FROM dstats d JOIN pstats p USING (component)
 _KMV_M = 1_000_000_007
 
 
-def kmv_distinct(documents: DataFrame, k: int = 64) -> DataFrame:
+def kmv_distinct(documents: DataFrame) -> DataFrame:
     """K-minimum-values distinct-count sketch per source — the
     mergeable theta-family sketch behind approx-distinct at scale: keep
     the k smallest (distinct) hash values of a group; the k-th minimum
@@ -1088,7 +1065,7 @@ def kmv_distinct(documents: DataFrame, k: int = 64) -> DataFrame:
     from .hashing import char_fold
 
     h = char_fold(F.col("text"), _KMV_M)
-    return _kmv_estimate(documents.select("source", h.alias("h")), k)
+    return _kmv_estimate(documents.select("source", h.alias("h")), _KMV_K)
 
 
 def _kmv_estimate(hashes: DataFrame, k: int) -> DataFrame:
@@ -1136,7 +1113,7 @@ FROM agg
 """
 
 
-def kmv_distinct_partial(documents: DataFrame, k: int = 64) -> DataFrame:
+def kmv_distinct_partial(documents: DataFrame) -> DataFrame:
     """``kmv_distinct`` with datasketches-style PARTIAL AGGREGATION:
     each input partition locally keeps only its k smallest distinct
     hash values per source before anything shuffles, so the exchange
@@ -1157,6 +1134,7 @@ def kmv_distinct_partial(documents: DataFrame, k: int = 64) -> DataFrame:
     vectorized."""
     from .hashing import char_fold
 
+    k = _KMV_K  # read on the driver: the worker closure gets the value
     h = char_fold(F.col("text"), _KMV_M)
     hashes = documents.select("source", h.alias("h"))
     capped = hashes.mapInArrow(lambda batches: _kmv_cap(batches, k),
@@ -1190,10 +1168,7 @@ def _kmv_cap(batches, k: int):
 
 
 def dedup_incremental(
-    new_docs: DataFrame, ref_docs: DataFrame, num_hashes: int = 32,
-    bands: int = 8, n: int = 3, portable: bool = False,
-    new_banded: DataFrame | None = None,
-    ref_banded: DataFrame | None = None,
+    new_docs: DataFrame, ref_docs: DataFrame, portable: bool = False,
 ) -> DataFrame:
     """Cross-snapshot dedup: classify each NEW document against an
     existing reference corpus — the continuous-ingest shape (each crawl
@@ -1209,23 +1184,14 @@ def dedup_incremental(
       ref corpus's DISTINCT (band, band_sig) set. Distinct caps a
       stop-bucket's ref side at ONE row, so a hot bucket costs one
       probe, not |bucket|² — the asymmetry that makes incremental
-      dedup linear in the new batch. Docs under ``n`` tokens carry no
-      shingles and never match the near path (both engines filter).
+      dedup linear in the new batch. Docs under ``_SHINGLE_N`` tokens
+      carry no shingles and never match the near path (both engines
+      filter them before the signature fold, so no side bands a
+      shingle-less doc to the degenerate '' bucket).
 
-    Band buckets are append-only across snapshots, so production
-    persists them once and passes ``ref_banded`` (and ``new_banded``
-    when the new batch's buckets were already built by an upstream
-    step) — skipping the signature fold entirely; when both corpora
-    come from one table, build banded rows in ONE pass and slice. Left
-    to None, each side minhashes here. Degenerate empty band_sigs
-    (shingle-less short docs bucket to '' under both hash families)
-    are dropped from BOTH sides regardless of who built the buckets —
-    the short-doc guard holds for passed-in tables too.
+    Each side minhashes here; the registry query measured that a
+    persisted banded prefix costs more than the fold it saves.
     """
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands ({bands})")
-    rows_per_band = num_hashes // bands
     ids = new_docs.select(F.col("doc_id").cast("bigint").alias("doc_id"))
 
     exact_ref = ref_docs.select(F.md5("text").alias("h")).distinct()
@@ -1236,17 +1202,14 @@ def dedup_incremental(
         .select("doc_id").withColumn("is_exact", F.lit(1))
     )
 
-    long_enough = F.size(F.split("text", " ")) >= n
-    real_bucket = F.col("band_sig") != ""
-    new_b = (new_banded if new_banded is not None else banded_signatures(
-        minhash_signatures(new_docs.where(long_enough), num_hashes, n,
-                           portable=portable), bands, rows_per_band)
-    ).where(real_bucket)
-    if ref_banded is None:
-        ref_banded = banded_signatures(
-            minhash_signatures(ref_docs.where(long_enough), num_hashes, n,
-                               portable=portable), bands, rows_per_band)
-    ref_b = ref_banded.where(real_bucket).select("band", "band_sig").distinct()
+    long_enough = F.size(F.split("text", " ")) >= _SHINGLE_N
+
+    def buckets(docs):
+        return banded_signatures(
+            minhash_signatures(docs.where(long_enough), portable=portable))
+
+    new_b = buckets(new_docs)
+    ref_b = buckets(ref_docs).select("band", "band_sig").distinct()
     near = (
         new_b.join(ref_b, ["band", "band_sig"], "left_semi")
         .select("doc_id").distinct().withColumn("is_near", F.lit(1))

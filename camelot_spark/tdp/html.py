@@ -95,16 +95,11 @@ def strip_html(documents: DataFrame, decorate: bool = False) -> DataFrame:
     )
 
 
-def main_content(
-    documents: DataFrame,
-    decorate: bool = False,
-    min_words: int = 5,
-    max_link_density_x10k: int = 3333,
-) -> DataFrame:
+def main_content(documents: DataFrame, decorate: bool = False) -> DataFrame:
     """jusText-style block classification: split the DOM on block-level
     closing tags; per block compute word count and link density (chars
     inside <a> / text chars); a block is CONTENT iff it has at least
-    ``min_words`` words and link density <= the threshold. Output one
+    5 words and link density <= 1/3 (3333 x10⁻⁴). Output one
     row per doc: (doc_id, n_blocks, n_content_blocks, main_text) with
     main_text = content blocks joined in document order.
 
@@ -150,8 +145,7 @@ def main_content(
         scored.alias("__blocks"))
     content = F.filter(
         F.col("__blocks"),
-        lambda s: (s["n_words"] >= min_words)
-        & (s["density_x10k"] <= max_link_density_x10k),
+        lambda s: (s["n_words"] >= 5) & (s["density_x10k"] <= 3333),
     )
     staged = staged.select(
         "doc_id", "__blocks", content.alias("__content"))

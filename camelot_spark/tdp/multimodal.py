@@ -178,8 +178,14 @@ RESIZED_SCHEMA = StructType(
 
 _POLY_M = 1_000_000_007
 
+# One value per setting, mirrored by the twins. An operator reads its
+# values on the driver and closes over them for the Python worker.
+_RESIZE_W, _RESIZE_H, _HIST_DIM = 32, 24, 8
+_FRAME_BYTES, _EVERY_N, _AVI_EVERY_N = 64, 4, 3
+_SAMPLE_RATE, _FRAME_LEN = 8000, 400  # 50 ms frames at 8 kHz
 
-def resize_media(documents: DataFrame, width: int = 32, height: int = 24) -> DataFrame:
+
+def resize_media(documents: DataFrame) -> DataFrame:
     """Decode → nearest-neighbor resize → re-encode, Arrow-batched.
 
     Decode is the deterministic fake (bytes as a 1×N grayscale strip);
@@ -191,6 +197,7 @@ def resize_media(documents: DataFrame, width: int = 32, height: int = 24) -> Dat
     bytes) so a DuckDB oracle can verify the gather exactly without
     binary-column support.
     """
+    width, height = _RESIZE_W, _RESIZE_H
     n_px = width * height
     # 31^(n-1-i) mod M per position: the vectorized form of the fold
     pows = np.empty(n_px, dtype=np.int64)
@@ -238,7 +245,7 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def frame_sample(documents: DataFrame, frame_bytes: int = 64, every_n: int = 4) -> DataFrame:
+def frame_sample(documents: DataFrame) -> DataFrame:
     """Video-style frame sampling: keep every Nth frame, one input row
     fanning out to many output rows. REAL multi-frame containers
     decode for real — GIF magic through ``gif_codec``, AVI (RIFF)
@@ -248,6 +255,8 @@ def frame_sample(documents: DataFrame, frame_bytes: int = 64, every_n: int = 4) 
     schema and plan either way."""
     from .avi_codec import AVI_MAGIC, sample_video_frames
     from .gif_codec import GIF_MAGIC, decode_gif
+
+    frame_bytes, every_n = _FRAME_BYTES, _EVERY_N
 
     def sample(doc_id, payload):
         head = payload[:4]
@@ -276,7 +285,7 @@ def frame_sample(documents: DataFrame, frame_bytes: int = 64, every_n: int = 4) 
     return map_rows(attach_fake_payload(documents), sample, FRAME_SCHEMA)
 
 
-def media_features_hist(documents: DataFrame, dim: int = 8) -> DataFrame:
+def media_features_hist(documents: DataFrame) -> DataFrame:
     """Byte-histogram features per payload as exploded (doc_id, bucket,
     cnt) rows — the embed step that feeds the similarity operators;
     pure JVM expressions, no Python.
@@ -285,10 +294,10 @@ def media_features_hist(documents: DataFrame, dim: int = 8) -> DataFrame:
     INTERPRETED filter-lambda evals per document (~80M at sf0.1,
     measured 3.1 s); this shape explodes each character's bucket to a
     codegen row and partial-aggregates map-side, so the shuffle carries
-    at most ``dim`` short rows per doc — the same explode+partial-agg
+    at most ``_HIST_DIM`` short rows per doc — the same explode+partial-agg
     restructure that fixed the r5 minhash regression. The doc × bucket
     grid join restores the zero-count rows, and a NULL text yields the
-    same ``dim`` NULL-count rows the old size(filter(NULL)) produced.
+    same ``_HIST_DIM`` NULL-count rows the old size(filter(NULL)) produced.
     ``doc_id`` is the table's primary key (package-wide contract), so
     the per-key aggregate equals the old per-row counting."""
     chars = F.split(F.encode(F.col("text"), "utf-8").cast("string"), "")
@@ -296,13 +305,13 @@ def media_features_hist(documents: DataFrame, dim: int = 8) -> DataFrame:
         F.col("doc_id").cast("bigint").alias("doc_id"), chars.alias("cs"))
     counts = (
         base.select("doc_id", F.explode("cs").alias("c"))
-        .select("doc_id", (F.ascii("c") % dim).cast("int").alias("bucket"))
+        .select("doc_id", (F.ascii("c") % _HIST_DIM).cast("int").alias("bucket"))
         .groupBy("doc_id", "bucket")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
     grid = base.select(
         "doc_id", F.col("cs").isNotNull().alias("has"),
-        F.explode(F.sequence(F.lit(0), F.lit(dim - 1)).cast("array<int>"))
+        F.explode(F.sequence(F.lit(0), F.lit(_HIST_DIM - 1)).cast("array<int>"))
         .alias("bucket"))
     return grid.join(counts, ["doc_id", "bucket"], "left").select(
         "doc_id", "bucket",
@@ -364,7 +373,7 @@ def _payload_to_wav(payload, sample_rate: int) -> bytes:
     return encode_wav(pcm.astype("<i2"), sample_rate=sample_rate)
 
 
-def audio_metadata(documents: DataFrame, sample_rate: int = 8000) -> DataFrame:
+def audio_metadata(documents: DataFrame) -> DataFrame:
     """Audio stats per payload: (sample_rate, n_samples, duration_ms,
     peak_abs, energy=Σ sample²) — the audio-modality decode/feature
     plan shape, Arrow-batched.
@@ -376,6 +385,8 @@ def audio_metadata(documents: DataFrame, sample_rate: int = 8000) -> DataFrame:
     codec executes on every row and the DuckDB oracle verifies the
     whole encode→decode→stats loop from the text bytes."""
     from .wav_codec import decode_wav
+
+    sample_rate = _SAMPLE_RATE
 
     def stats(doc_id, payload):
         sr, _, s = decode_wav(_payload_to_wav(payload, sample_rate))
@@ -417,11 +428,10 @@ AUDIO_FEATURES_SCHEMA = StructType([
 ])
 
 
-def audio_features(documents: DataFrame, frame_len: int = 400,
-                   sample_rate: int = 8000) -> DataFrame:
+def audio_features(documents: DataFrame) -> DataFrame:
     """Framed audio featurization — the classic windowed-DSP plan shape
-    (50 ms frames at 8 kHz with the defaults): per full frame of
-    ``frame_len`` samples, the energy (Σ sample², int64) and the
+    (50 ms frames at 8 kHz): per full frame of ``_FRAME_LEN`` samples,
+    the energy (Σ sample², int64) and the
     zero-crossing count (sign products < 0) — the features VAD /
     speech-music discrimination pipelines start from, kept integer so
     the DuckDB twin hash-matches.
@@ -431,6 +441,8 @@ def audio_features(documents: DataFrame, frame_len: int = 400,
     codec. Per-row framing is a numpy reshape inside the Arrow batch;
     trailing partial frames are dropped (both engines)."""
     from .wav_codec import decode_wav
+
+    frame_len, sample_rate = _FRAME_LEN, _SAMPLE_RATE
 
     def frames(doc_id, payload):
         _, _, s = decode_wav(_payload_to_wav(payload, sample_rate))
@@ -472,7 +484,7 @@ AVI_AUDIO_SCHEMA = StructType(
 )
 
 
-def avi_audio_roundtrip(documents: DataFrame, every_n: int = 3) -> DataFrame:
+def avi_audio_roundtrip(documents: DataFrame) -> DataFrame:
     """End-to-end multimodal-container exercise, per doc: build a REAL
     two-stream AVI (MJPEG video + interleaved 16-bit PCM audio + idx1
     index) whose audio is the corpus's deterministic text→PCM contract
@@ -487,6 +499,8 @@ def avi_audio_roundtrip(documents: DataFrame, every_n: int = 3) -> DataFrame:
     Video stream: 2 + (char_len % 3) constant-gray 8x8 frames, so the
     index and the sampling arithmetic are data-dependent."""
     from .avi_codec import encode_avi, extract_audio, sample_video_frames
+
+    every_n = _AVI_EVERY_N
 
     def roundtrip(doc_id, text):
         pcm = np.clip(

@@ -7,7 +7,7 @@ dataloader.
   retrieval training). Pure per-row array algebra + one explode; no
   shuffle, the fan-out stays on the scan.
 - ``pack_sequences``: concatenate documents in a deterministic order
-  and cut at ``seq_len`` token boundaries (GPT-style packing),
+  and cut at ``_SEQ_LEN`` token boundaries (GPT-style packing),
   assigning every document its (sequence id, offset). The running
   token count is a window cumsum PARTITIONED BY ``source`` — a global
   (unpartitioned) cumsum would serialize 100 TB through one task, so
@@ -27,15 +27,16 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def chunk_documents(
-    documents: DataFrame, chunk_tokens: int = 64, overlap: int = 16
-) -> DataFrame:
-    """One row per (doc, window): sliding token windows of
-    ``chunk_tokens`` with ``overlap`` tokens shared between neighbors
-    (stride = chunk_tokens − overlap); the final partial window is kept.
+_SEQ_LEN = 512  # tokens per training sequence
+
+
+def chunk_documents(documents: DataFrame) -> DataFrame:
+    """One row per (doc, window): sliding token windows of 64 tokens
+    with 16 shared between neighbors (stride 48); the final partial
+    window is kept.
     Output: (doc_id, chunk_idx, n_chunk_tokens, first_token, last_token).
     """
-    stride = chunk_tokens - overlap
+    chunk_tokens, stride = 64, 48
     toks = F.split(F.col("text"), " ")
     n = F.size(toks)
     starts = F.filter(
@@ -77,10 +78,11 @@ FROM c
 
 
 def pack_sequences(
-    documents: DataFrame, seq_len: int = 512, shard_docs: int | None = None
+    documents: DataFrame, shard_docs: int | None = None
 ) -> DataFrame:
-    """Concatenate-and-cut packing: documents ordered by doc_id within
-    each shard are laid end-to-end; every document gets the
+    """Concatenate-and-cut packing into ``_SEQ_LEN``-token sequences:
+    documents ordered by doc_id within each shard are laid end-to-end;
+    every document gets the
     training-sequence id and intra-sequence offset where it starts.
     Output: (source, doc_id, n_tokens, seq_id, seq_offset).
 
@@ -110,8 +112,8 @@ def pack_sequences(
     cum_prev = F.coalesce(F.sum("n_tokens").over(w), F.lit(0).cast("bigint"))
     return base.select(
         "source", "doc_id", "n_tokens",
-        F.floor(cum_prev / seq_len).cast("bigint").alias("seq_id"),
-        (cum_prev % seq_len).cast("bigint").alias("seq_offset"),
+        F.floor(cum_prev / _SEQ_LEN).cast("bigint").alias("seq_id"),
+        (cum_prev % _SEQ_LEN).cast("bigint").alias("seq_offset"),
     )
 
 
@@ -137,11 +139,11 @@ FROM c
 
 
 def pack_sequences_global(
-    documents: DataFrame, seq_len: int = 512, shard_docs: int = 128
+    documents: DataFrame, shard_docs: int = 128
 ) -> DataFrame:
     """Globally contiguous concatenate-and-cut packing: the whole
     corpus ordered by (source, doc_id) is one token stream, cut at
-    ``seq_len`` boundaries; every document gets the global sequence id
+    ``_SEQ_LEN`` boundaries; every document gets the global sequence id
     and intra-sequence offset where it starts. Output:
     (source, doc_id, n_tokens, seq_id, seq_offset).
 
@@ -217,8 +219,8 @@ def pack_sequences_global(
         .join(F.broadcast(src_base), F.col("source").eqNullSafe(F.col("src_b")))
         .select(
             "source", "doc_id", "n_tokens",
-            F.floor(gp / seq_len).cast("bigint").alias("seq_id"),
-            (gp % seq_len).cast("bigint").alias("seq_offset"),
+            F.floor(gp / _SEQ_LEN).cast("bigint").alias("seq_id"),
+            (gp % _SEQ_LEN).cast("bigint").alias("seq_offset"),
         )
     )
 

@@ -33,6 +33,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _MU = 1_000_000
+# posting lists keep 20 ids; BM25 k1 = 1.2 and b = 0.75 in thousandths;
+# link_rank runs 8 fixed rounds at damping 0.85 (as its twin does)
+_MAX_POSTINGS, _BM25_K1_X1000, _BM25_B_X1000 = 20, 1200, 750
+_RANK_ITERS, _DAMPING_PCT = 8, 85
 
 
 def _terms(col):
@@ -41,9 +45,9 @@ def _terms(col):
         F.split(F.lower(col), "[^a-z]+"), lambda t: F.length(t) > 0)
 
 
-def inverted_index(documents: DataFrame, max_postings: int = 20) -> DataFrame:
+def inverted_index(documents: DataFrame) -> DataFrame:
     """(term, df, postings) — document frequency per term plus the
-    ``max_postings`` smallest doc_ids holding it (bounded row size).
+    ``_MAX_POSTINGS`` smallest doc_ids holding it (bounded row size).
 
     Scale shape (round-5 restructure; the old single window computed
     exact df with an unordered count-over-window on the raw term key,
@@ -56,7 +60,7 @@ def inverted_index(documents: DataFrame, max_postings: int = 20) -> DataFrame:
     - postings come from a LONE ``row_number`` window: with the rank
       as the only window function and a direct ``rn <= k`` filter,
       Spark inserts WindowGroupLimit BELOW the exchange, so each map
-      partition ships at most ``max_postings`` rows per term and the
+      partition ships at most ``_MAX_POSTINGS`` rows per term and the
       final per-term task sorts <= k * n_map_partitions rows — bounded
       regardless of df.
     - the two branches join on term; both sides arrive hash-partitioned
@@ -73,7 +77,7 @@ def inverted_index(documents: DataFrame, max_postings: int = 20) -> DataFrame:
     w = W.partitionBy("term").orderBy("doc_id")
     plist = (
         toks.select("term", "doc_id", F.row_number().over(w).alias("rn"))
-        .where(F.col("rn") <= max_postings)
+        .where(F.col("rn") <= _MAX_POSTINGS)
         .groupBy("term")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("plist"))
     )
@@ -87,11 +91,9 @@ def inverted_index(documents: DataFrame, max_postings: int = 20) -> DataFrame:
     )
 
 
-def bm25_topk(documents: DataFrame, query_terms: list[str], k: int = 10,
-              k1_x1000: int = 1200, b_x1000: int = 750) -> DataFrame:
-    """Top-k (doc_id, score_micro) for the query terms under the
-    integer BM25 variant described in the module docstring. k1 and b
-    arrive in thousandths (defaults 1.2 / 0.75)."""
+def bm25_topk(documents: DataFrame, query_terms: list[str]) -> DataFrame:
+    """Top-10 (doc_id, score_micro) for the query terms under the
+    integer BM25 variant described in the module docstring."""
     import re
 
     spark = documents.sparkSession
@@ -130,9 +132,9 @@ def bm25_topk(documents: DataFrame, query_terms: list[str], k: int = 10,
         .selectExpr(
             "doc_id", "term",
             f"((n_docs - df) * CAST({_MU} AS BIGINT)) DIV n_docs AS idf_ppm",
-            f"tf * (1000 + {int(k1_x1000)}) AS num_x1000",
-            f"tf * 1000 + ({int(k1_x1000)} * (1000 - {int(b_x1000)}"
-            f" + ({int(b_x1000)} * dl * n_docs) DIV total_len)) DIV 1000"
+            f"tf * (1000 + {_BM25_K1_X1000}) AS num_x1000",
+            f"tf * 1000 + ({_BM25_K1_X1000} * (1000 - {_BM25_B_X1000}"
+            f" + ({_BM25_B_X1000} * dl * n_docs) DIV total_len)) DIV 1000"
             " AS den_x1000",
         )
         .selectExpr("doc_id",
@@ -142,7 +144,7 @@ def bm25_topk(documents: DataFrame, query_terms: list[str], k: int = 10,
     )
     return (
         scored.orderBy(F.col("score_micro").desc(), F.col("doc_id").asc())
-        .limit(k)
+        .limit(10)
         .select(F.col("doc_id").cast("bigint").alias("doc_id"), "score_micro")
     )
 
@@ -214,13 +216,12 @@ def doc_link_edges(documents: DataFrame) -> DataFrame:
         .select("src", "dst")
 
 
-def link_rank(edges: DataFrame, iters: int = 8,
-              damping_pct: int = 85) -> DataFrame:
+def link_rank(edges: DataFrame) -> DataFrame:
     """Deterministic integer PageRank over a (src, dst) edge list —
     the classic web-graph quality prior for crawl-corpus curation
     (rank-weighted sampling, frontier prioritization), kept EXACTLY
     engine-portable: all arithmetic is integer micro-units with floor
-    division, so the fixed-``iters`` result hash-matches a SQL twin
+    division, so the fixed-``_RANK_ITERS`` result hash-matches a SQL twin
     (transcendental/float PageRank cannot — float sums are shuffle-
     order-dependent; integer sums are not).
 
@@ -252,13 +253,13 @@ def link_rank(edges: DataFrame, iters: int = 8,
         .repartition("id")
         .localCheckpoint(eager=True)
     )
-    base = _MU * (100 - damping_pct) // 100
+    base = _MU * (100 - _DAMPING_PCT) // 100
     ranks = nodes.select("id", F.lit(_MU).cast("long").alias("rank"))
-    for _ in range(iters):
+    for _ in range(_RANK_ITERS):
         contrib = (
             e_out.join(ranks, e_out.src == ranks.id)
             .selectExpr("dst",
-                        f"((rank * {damping_pct}) DIV 100) DIV c AS contrib")
+                        f"((rank * {_DAMPING_PCT}) DIV 100) DIV c AS contrib")
         )
         agg = contrib.groupBy("dst").agg(F.sum("contrib").alias("s"))
         ranks = (
@@ -272,9 +273,10 @@ def link_rank(edges: DataFrame, iters: int = 8,
                         F.col("rank").alias("rank_ppm"))
 
 
-def link_rank_sql(iters: int = 8, damping_pct: int = 85) -> str:
+def link_rank_sql() -> str:
     """Generated DuckDB twin: the same fixed integer-PageRank rounds as
     chained CTEs over the same derived edge set."""
+    iters, damping_pct = _RANK_ITERS, _DAMPING_PCT
     base = _MU * (100 - damping_pct) // 100
     head = f"""
 WITH ids AS (SELECT CAST(doc_id AS BIGINT) AS doc_id FROM documents),
@@ -307,4 +309,4 @@ r{k} AS MATERIALIZED (
             + f"\nSELECT id AS doc_id, rank AS rank_ppm FROM r{iters}\n")
 
 
-LINK_RANK_SQL = link_rank_sql(8)
+LINK_RANK_SQL = link_rank_sql()

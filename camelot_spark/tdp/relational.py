@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 SESSION_GAP_S = 1800
+_HOT_KEYS = 10
 
 
 def sessionize_gaps(events: DataFrame) -> DataFrame:
@@ -85,13 +86,13 @@ def argmax_vote(orders: DataFrame) -> DataFrame:
     )
 
 
-def topk_cap(part: DataFrame, k: int = 10) -> DataFrame:
-    """L3 analog (`image_processing.py:168`): keep the k largest by
+def topk_cap(part: DataFrame) -> DataFrame:
+    """L3 analog (`image_processing.py:168`): keep the 10 largest by
     retail price (deterministic tie-break on key)."""
     w = Window.orderBy(F.desc("p_retailprice"), F.asc("p_partkey"))
     return (
         part.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 10)
         .select(
             F.col("p_partkey").cast("bigint").alias("partkey"),
             F.col("rank").cast("bigint").alias("rank"),
@@ -182,9 +183,9 @@ GROUP BY event_type
 """
 
 
-def asof_join(events, left_type: str = "purchase", right_type: str = "signup"):
-    """As-of join — each ``left_type`` event matched to the latest
-    ``right_type`` event of the same user at-or-before its timestamp.
+def asof_join(events):
+    """As-of join — each purchase event matched to the latest signup
+    event of the same user at-or-before its timestamp.
 
     Spark has no ASOF JOIN operator; the standard scalable re-expression
     is the sort-based union trick: tag both sides, one window pass per
@@ -197,6 +198,7 @@ def asof_join(events, left_type: str = "purchase", right_type: str = "signup"):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    left_type, right_type = "purchase", "signup"
     e = events.select("event_id", "ts", "user_id", "event_type").where(
         F.col("event_type").isin([left_type, right_type])
     )
@@ -267,21 +269,21 @@ def bucketized_interval_join(
     )
 
 
-def range_join_agg(events: DataFrame, part: DataFrame, bucket_width: float = 1.0) -> DataFrame:
+def range_join_agg(events: DataFrame, part: DataFrame) -> DataFrame:
     """Driver query for the interval join: events.value against
     per-part bands [0.5·(p_partkey % 1120), +0.45] — partkey-derived so
     the 20k intervals tile the [0, 560] value domain in near-disjoint
     lanes (p_size-derived bands would stack 400 parts per lane and the
     TRUE join result would be ~10^8 pairs at sf0.1 — a data-modeling
     problem, not an operator one). Per matched part: point count and
-    the id range (exact-integer outputs for the oracle)."""
+    the id range (exact-integer outputs for the oracle); 1.0-wide buckets."""
     intervals = part.select(
         F.col("p_partkey").cast("bigint").alias("partkey"),
         ((F.col("p_partkey") % 1120) * 0.5).alias("lo"),
         ((F.col("p_partkey") % 1120) * 0.5 + 0.45).alias("hi"),
     )
     pts = events.select(F.col("event_id").cast("bigint").alias("event_id"), "value")
-    matched = bucketized_interval_join(pts, intervals, "value", "lo", "hi", bucket_width)
+    matched = bucketized_interval_join(pts, intervals, "value", "lo", "hi", 1.0)
     return matched.groupBy("partkey").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_points"),
         F.min("event_id").cast("bigint").alias("min_event_id"),
@@ -387,7 +389,7 @@ SELECT 'day', user_id, strftime(day_ts, '%Y-%m-%d %H:%M:%S'), n_events, sum_valu
 """
 
 
-def histogram_quantiles(documents, qs_ppm=(500_000, 900_000, 990_000)):
+def histogram_quantiles(documents):
     """Mergeable histogram-sketch quantiles of ``n_chars`` per source —
     the scale-correct quantile design: a true per-group quantile needs
     a full sort per group (the wrong 100-TB shape), and classic sketches
@@ -400,7 +402,7 @@ def histogram_quantiles(documents, qs_ppm=(500_000, 900_000, 990_000)):
       interpolation in integer thousandths — the DuckDB twin matches
       bit-for-bit.
 
-    Estimate per requested quantile q (ppm): find the first bucket
+    Estimate per quantile q (ppm; p50, p90, p99): find the first bucket
     whose cumulative count reaches ceil(q·n/1e6), then linearly
     interpolate inside the bucket's value range [2^b - 1, 2^(b+1) - 1)
     by the position within the bucket (integer x1000).
@@ -420,7 +422,7 @@ def histogram_quantiles(documents, qs_ppm=(500_000, 900_000, 990_000)):
         F.sum("c").over(W.partitionBy("source")).alias("n"),
     )
     qdf = documents.sparkSession.createDataFrame(
-        [(int(q),) for q in sorted(qs_ppm)], "q_ppm long")
+        [(500_000,), (900_000,), (990_000,)], "q_ppm long")
     # target rank (1-based, ceil): the first bucket with cum >= target
     ranked = (
         cum.crossJoin(F.broadcast(qdf))
@@ -506,12 +508,12 @@ FROM events GROUP BY event_type
 """
 
 
-def session_rollup(events: DataFrame, gap_s: int = SESSION_GAP_S) -> DataFrame:
+def session_rollup(events: DataFrame) -> DataFrame:
     """Per-session rollup via Spark's NATIVE ``session_window``
     operator (the streaming-capable session primitive — in batch it
     plans UpdatingSessions/MergingSessions aggs): one row per (user,
     session) with the session start, event count, and span. Gap
-    semantics pinned by test: a gap of EXACTLY ``gap_s`` merges,
+    semantics pinned by test: a gap of EXACTLY ``SESSION_GAP_S`` merges,
     strictly greater splits — the same ``> gap`` convention as
     ``sessionize_gaps``, so the classic gaps-and-islands SQL is the
     exact cross-engine twin of the built-in operator.
@@ -521,7 +523,7 @@ def session_rollup(events: DataFrame, gap_s: int = SESSION_GAP_S) -> DataFrame:
     functions, no second shuffle — ``session_window.start`` IS the
     session's min event time."""
     return (
-        events.groupBy("user_id", F.session_window("ts", f"{gap_s} seconds"))
+        events.groupBy("user_id", F.session_window("ts", f"{SESSION_GAP_S} seconds"))
         .agg(F.count(F.lit(1)).alias("n"),
              F.max("ts").alias("ts_max"))
         .select(
@@ -584,8 +586,8 @@ def key_skew_profile(df: DataFrame, key_col: str) -> DataFrame:
     )
 
 
-def hot_keys(df: DataFrame, key_col: str, k: int = 10) -> DataFrame:
-    """The k hottest keys of a prospective shuffle, with their row
+def hot_keys(df: DataFrame, key_col: str) -> DataFrame:
+    """The 10 hottest keys of a prospective shuffle, with their row
     counts and corpus share in ppm — the companion readout to
     ``key_skew_profile`` naming WHICH keys need the salt/cap. Per-key
     partial-agg count, then orderBy+limit compiles to
@@ -602,7 +604,7 @@ def hot_keys(df: DataFrame, key_col: str, k: int = 10) -> DataFrame:
             .cast("bigint").alias("share_ppm"),
         )
         .orderBy(F.desc("c"), "k")
-        .limit(k)
+        .limit(_HOT_KEYS)
     )
 
 

@@ -29,6 +29,11 @@ _PPM = 1_000_000
 # Knuth multiplicative hash (2^32 golden ratio); doc_id * KNUTH stays
 # far inside int64 for any realistic id space
 _KNUTH = 2654435761
+# rank-weighted acceptance doubles rank_ppm, unranked docs sit at the
+# PageRank floor; the salts of the ppl mix and of the shard hashes; the
+# registry's shard count
+_RANK_MULT, _RANK_BASE_PPM = 2, 150_000
+_PPL_SALT, _SHARD_SALT, _N_SHARDS = 77773, 50923, 64
 
 
 def _accept_ppm_hash(col, salt: int = 0):
@@ -39,13 +44,12 @@ def _accept_ppm_hash(col, salt: int = 0):
 
 
 def stratified_sample(documents: DataFrame, rates: dict[str, int],
-                      strata_col: str = "lang",
-                      default_ppm: int = _PPM) -> DataFrame:
+                      strata_col: str = "lang") -> DataFrame:
     """Keep each document with a per-stratum probability given in parts
     per million — the quota knob of corpus curation ("keep 25% of web,
     all of books"). Pure filter: no shuffle, no RNG, reproducible under
-    any partitioning. Unknown strata fall back to ``default_ppm``."""
-    rate = F.lit(default_ppm)
+    any partitioning. Unknown strata are kept whole."""
+    rate = F.lit(_PPM)
     for key, ppm in sorted(rates.items()):
         rate = F.when(F.col(strata_col) == key, F.lit(int(ppm))).otherwise(rate)
     return (
@@ -56,8 +60,8 @@ def stratified_sample(documents: DataFrame, rates: dict[str, int],
 
 
 def corpus_mix(documents: DataFrame, targets: dict[str, int],
-               sample_total: int, strata_col: str = "lang") -> DataFrame:
-    """Sample toward TARGET PROPORTIONS: given per-stratum target
+               sample_total: int) -> DataFrame:
+    """Sample toward TARGET PROPORTIONS: given per-``lang`` target
     shares (ppm of ``sample_total``), derive each stratum's acceptance
     rate from its actual count and keep documents deterministically —
     the "mix 50% web, 30% books, 20% code" step of building a training
@@ -69,6 +73,7 @@ def corpus_mix(documents: DataFrame, targets: dict[str, int],
     twin reproduces acceptance exactly. One tiny count aggregate (one
     row per stratum) broadcast back onto the corpus; the corpus itself
     never shuffles."""
+    strata_col = "lang"
     targets_df = documents.sparkSession.createDataFrame(
         sorted(targets.items()), f"{strata_col} string, target_ppm long")
     counts = documents.groupBy(strata_col).agg(F.count(F.lit(1)).alias("n"))
@@ -90,21 +95,20 @@ def corpus_mix(documents: DataFrame, targets: dict[str, int],
     )
 
 
-def stratified_topk_sample(documents: DataFrame, k: int = 10,
-                           strata_col: str = "lang") -> DataFrame:
-    """Exactly-k-per-stratum deterministic sample: rank documents by
+def stratified_topk_sample(documents: DataFrame, k: int = 10) -> DataFrame:
+    """Exactly-k-per-``lang`` deterministic sample: rank documents by
     hash within each stratum and keep the k smallest — a fixed-size
     uniform-without-replacement sample that is stable across runs and
     cluster layouts (the reservoir-sampling use case, without reservoir
     state). Ties are impossible on distinct doc_ids; Catalyst plans the
     rank window as per-group top-k, not a global sort."""
-    w = Window.partitionBy(strata_col).orderBy(
+    w = Window.partitionBy("lang").orderBy(
         _accept_ppm_hash(F.col("doc_id")).asc(), F.col("doc_id").asc())
     return (
         documents
         .withColumn("sample_rank", F.row_number().over(w))
         .where(F.col("sample_rank") <= k)
-        .select("doc_id", strata_col, F.col("sample_rank").cast("int").alias("sample_rank"))
+        .select("doc_id", "lang", F.col("sample_rank").cast("int").alias("sample_rank"))
     )
 
 
@@ -175,8 +179,7 @@ GROUP BY source, len_bucket
 """
 
 
-def rank_weighted_sample(documents: DataFrame, ranks: DataFrame,
-                         mult: int = 2, base_ppm: int = 150_000) -> DataFrame:
+def rank_weighted_sample(documents: DataFrame, ranks: DataFrame) -> DataFrame:
     """Quality-prior sampling: keep each document with probability
     proportional to its link-graph rank (``tdp.ranking.link_rank``
     output) — the rank-weighted corpus-selection step of a web-crawl
@@ -185,15 +188,15 @@ def rank_weighted_sample(documents: DataFrame, ranks: DataFrame,
     accept_ppm = least(1e6, rank_ppm · mult) — all integer math on the
     same deterministic acceptance hash as ``stratified_sample``, so the
     DuckDB twin reproduces the kept set exactly. Docs missing from the
-    rank table fall back to ``base_ppm`` (the PageRank floor). One
+    rank table fall back to ``_RANK_BASE_PPM`` (the PageRank floor). One
     equi-join on doc_id (both sides shuffle 8-byte keys + a long);
     the filter itself stays a pure scan predicate."""
     r = ranks.select(F.col("doc_id").cast("bigint").alias("doc_id"),
                      F.col("rank_ppm").cast("bigint").alias("rank_ppm"))
     d = documents.select(F.col("doc_id").cast("bigint").alias("doc_id"),
                          "lang", "source", "n_chars")
-    eff = F.coalesce("rank_ppm", F.lit(int(base_ppm))).cast("long")
-    accept = F.least(F.lit(_PPM).cast("long"), eff * int(mult))
+    eff = F.coalesce("rank_ppm", F.lit(_RANK_BASE_PPM)).cast("long")
+    accept = F.least(F.lit(_PPM).cast("long"), eff * _RANK_MULT)
     return (
         d.join(r, "doc_id", "left")
         .where(_accept_ppm_hash(F.col("doc_id")) < accept)
@@ -202,7 +205,7 @@ def rank_weighted_sample(documents: DataFrame, ranks: DataFrame,
     )
 
 
-def _rank_weighted_sql(mult: int = 2, base_ppm: int = 150_000) -> str:
+def _rank_weighted_sql() -> str:
     from .ranking import LINK_RANK_SQL
 
     return f"""
@@ -210,19 +213,17 @@ WITH ranks AS ({LINK_RANK_SQL}),
 docs AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, lang, source, n_chars
          FROM documents)
 SELECT d.doc_id, d.lang, d.source, d.n_chars,
-       CAST(COALESCE(r.rank_ppm, {base_ppm}) AS BIGINT) AS rank_ppm
+       CAST(COALESCE(r.rank_ppm, {_RANK_BASE_PPM}) AS BIGINT) AS rank_ppm
 FROM docs d LEFT JOIN ranks r USING (doc_id)
 WHERE (d.doc_id * 2654435761) % 4294967296 % 1000000 <
-      LEAST(1000000, COALESCE(r.rank_ppm, {base_ppm}) * {mult})
+      LEAST(1000000, COALESCE(r.rank_ppm, {_RANK_BASE_PPM}) * {_RANK_MULT})
 """
 
 
 RANK_WEIGHTED_SAMPLE_SQL = _rank_weighted_sql()
 
 
-def dataset_split(documents: DataFrame, train_ppm: int = 800_000,
-                  val_ppm: int = 100_000,
-                  id_col: str = "doc_id") -> DataFrame:
+def dataset_split(documents: DataFrame) -> DataFrame:
     """Deterministic train/val/test assignment — the split every
     training pipeline needs to be REPRODUCIBLE and GROWTH-STABLE: the
     bucket is a pure function of the id (salted multiplicative hash),
@@ -232,16 +233,17 @@ def dataset_split(documents: DataFrame, train_ppm: int = 800_000,
 
     The salt decorrelates the split from ``stratified_sample``'s
     unsalted acceptance hash (a doc's keep decision and its split are
-    independent). To prevent near-duplicate leakage across splits,
-    pass the canonical id from ``dedup_groups`` as ``id_col`` — every
-    member of a duplicate cluster then lands in the same split.
+    independent). ``split_expr`` takes the id column and rates: to
+    prevent near-duplicate leakage across splits, hash the canonical id
+    from ``dedup_groups`` there (curate_job's ``--split-id-col``) —
+    every member of a duplicate cluster then lands in the same split.
 
     Pure projection: zero shuffle, zero aggregation; throughput =
     scan speed at any scale. Output: (doc_id, split).
     """
     return documents.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
-        split_expr(id_col, train_ppm, val_ppm).alias("split"),
+        split_expr().alias("split"),
     )
 
 
@@ -272,7 +274,6 @@ FROM (SELECT doc_id,
 def perplexity_bucket_mix(
     documents: DataFrame, head_ppm: int = 1_000_000,
     middle_ppm: int = 500_000, tail_ppm: int = 100_000,
-    salt: int = 77773,
 ) -> DataFrame:
     """CCNet-style perplexity-bucketed corpus mixing: per language,
     split documents into head/middle/tail TERTILES of LM surprisal
@@ -342,16 +343,14 @@ def perplexity_bucket_mix(
         .when(bucket == "middle", F.lit(int(middle_ppm)))
         .otherwise(F.lit(int(tail_ppm)))
     )
-    kept = (_accept_ppm_hash(F.col("doc_id"), salt=salt) < rate).cast("int")
+    kept = (_accept_ppm_hash(F.col("doc_id"), salt=_PPL_SALT) < rate).cast("int")
     return sc.join(F.broadcast(th), "lang").select(
         "doc_id", "lang", "bits_x1000",
         bucket.alias("bucket"), kept.alias("kept"))
 
 
-def _perplexity_bucket_mix_sql(head_ppm: int = 1_000_000,
-                               middle_ppm: int = 500_000,
-                               tail_ppm: int = 100_000,
-                               salt: int = 77773) -> str:
+def _perplexity_bucket_mix_sql() -> str:
+    """The twin of ``perplexity_bucket_mix`` at its default rates."""
     from .text import LM_BIGRAM_SQL
 
     return f"""
@@ -378,10 +377,10 @@ b AS (
               ELSE 'tail' END AS bucket
   FROM sc JOIN th USING (lang))
 SELECT doc_id, lang, bits_x1000, bucket,
-       CAST(CASE WHEN (doc_id * 2654435761 + {salt}) % 4294967296 % 1000000
-                      < (CASE bucket WHEN 'head' THEN {head_ppm}
-                                     WHEN 'middle' THEN {middle_ppm}
-                                     ELSE {tail_ppm} END)
+       CAST(CASE WHEN (doc_id * 2654435761 + {_PPL_SALT}) % 4294967296 % 1000000
+                      < (CASE bucket WHEN 'head' THEN 1000000
+                                     WHEN 'middle' THEN 500000
+                                     ELSE 100000 END)
                  THEN 1 ELSE 0 END AS INT) AS kept
 FROM b
 """
@@ -390,17 +389,17 @@ FROM b
 PERPLEXITY_BUCKET_MIX_SQL = _perplexity_bucket_mix_sql()
 
 
-def shuffle_shards(documents: DataFrame, n_shards: int = 64,
-                   salt: int = 50923, epoch: int = 0) -> DataFrame:
+def shuffle_shards(documents: DataFrame) -> DataFrame:
     """Deterministic global training-shuffle assignment: every doc gets
     a shard and a within-shard order key, both pure functions of
     doc_id — the reproducible corpus shuffle every training-data
     export needs (examples decorrelated from ingest order, identical
     across reruns/cluster sizes, growth-stable: new docs never move
-    existing ones). ``epoch`` swaps in per-epoch hash MULTIPLIERS
-    (``_epoch_mults``) so each training epoch gets an independent
-    (still fully deterministic) shard assignment and order — same
-    epoch, same order, forever.
+    existing ones). This is the epoch-0 assignment into ``_N_SHARDS``
+    shards; ``sinks.write_training_shards`` swaps in per-epoch hash
+    MULTIPLIERS (``_epoch_mults``) so each training epoch gets an
+    independent (still fully deterministic) shard assignment and order
+    — same epoch, same order, forever.
 
     shard = multiply-shift on the salted multiplicative hash's HIGH
     bits (uniform for any n_shards and any structured id space — see
@@ -412,11 +411,10 @@ def shuffle_shards(documents: DataFrame, n_shards: int = 64,
     (``sinks.write_training_shards``, which annotates rows in place
     with these same expressions — no join back). Output
     (doc_id, shard, order_key)."""
-    m1, m2 = _epoch_mults(epoch)
     return documents.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
-        shard_expr(n_shards, salt, mult=m1).alias("shard"),
-        order_key_expr(salt, mult=m2).alias("order_key"),
+        shard_expr(_N_SHARDS).alias("shard"),
+        order_key_expr().alias("order_key"),
     )
 
 
@@ -442,8 +440,7 @@ def _epoch_mults(epoch: int) -> tuple[int, int]:
 _PRIME2 = 2246822519
 
 
-def shard_expr(n_shards: int = 64, salt: int = 50923,
-               mult: int = _KNUTH):
+def shard_expr(n_shards: int, mult: int = _KNUTH):
     """The shard id as a bare Column (cf. ``split_expr``) — lets the
     shard writer annotate rows in place instead of joining
     ``shuffle_shards`` output back on doc_id.
@@ -457,28 +454,28 @@ def shard_expr(n_shards: int = 64, salt: int = 50923,
     uniform; works for ANY n_shards, no power-of-two requirement.
     ``mult`` must be odd (bijective mod 2^32); per-epoch variants
     come from ``_epoch_mults``."""
-    h = (F.col("doc_id") * F.lit(int(mult)) + F.lit(salt)) \
+    h = (F.col("doc_id") * F.lit(int(mult)) + F.lit(_SHARD_SALT)) \
         % F.lit(4294967296)
     return F.shiftright(h * F.lit(int(n_shards)), 32).cast("bigint")
 
 
-def order_key_expr(salt: int = 50923, mult: int = _PRIME2):
+def order_key_expr(mult: int = _PRIME2):
     """The within-shard order key as a bare Column; a DIFFERENT
     multiplier (not just a different salt — an affine re-salt of the
     same hash is the shard hash plus a constant) so shard and
     in-shard order are genuinely decorrelated. Injective over a
     2^32 id window; the writer adds doc_id as the final sort
     tiebreaker so collisions beyond it stay deterministic."""
-    return ((F.col("doc_id") * F.lit(int(mult)) + F.lit(salt))
+    return ((F.col("doc_id") * F.lit(int(mult)) + F.lit(_SHARD_SALT))
             % F.lit(4294967296)).cast("bigint")
 
 
-def _shuffle_shards_sql(n_shards: int = 64, salt: int = 50923) -> str:
+def _shuffle_shards_sql() -> str:
     return f"""
 SELECT CAST(doc_id AS BIGINT) AS doc_id,
-       CAST((((doc_id * {_KNUTH} + {salt}) % 4294967296) * {n_shards})
+       CAST((((doc_id * {_KNUTH} + {_SHARD_SALT}) % 4294967296) * {_N_SHARDS})
             >> 32 AS BIGINT) AS shard,
-       CAST((doc_id * {_PRIME2} + {salt}) % 4294967296
+       CAST((doc_id * {_PRIME2} + {_SHARD_SALT}) % 4294967296
             AS BIGINT) AS order_key
 FROM documents
 """

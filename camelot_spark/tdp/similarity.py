@@ -22,6 +22,16 @@ from pyspark.sql import functions as F
 
 from .arrow_seams import by_length, fold_dot, fold_norm, list_parts
 
+# One value per setting, pinned by the twins: the query vector and
+# depth of every top-k search; the ANN index's IVF cells and probes
+# and the semantic operators' cell count; the near-dup banding (4
+# bands of 8 planes) with its verify floor and hot-bucket cap.
+_QUERY_VEC_ID, _TOP_K = 0, 10
+_IVF_CELLS, _IVF_PROBES, _SEMANTIC_CELLS = 8, 2, 16
+_NEARDUP_PLANES, _NEARDUP_BANDS, _NEARDUP_BUCKET_CAP = 32, 4, 10000
+_SEMDEDUP_THRESHOLD_X10K, _SEMDEDUP_CELL_CAP = 3000, 10000
+_BALANCED_QUOTA = 8
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -41,7 +51,7 @@ def _norm(a):
     )
 
 
-def cosine_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataFrame:
+def cosine_topk(embeddings: DataFrame) -> DataFrame:
     """Exact top-k cosine neighbors of one stored vector (brute force).
 
     The query vector rides in the task closure (1 row, collected —
@@ -53,18 +63,16 @@ def cosine_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10) -> Da
     window stays in SQL, so ordering semantics (NaN-first desc, NULLs
     last) are untouched. Multiple/zero rows matching the query id
     reproduce the old crossJoin cardinality."""
-    import pyarrow as pa
-
-    q_rows = embeddings.where(F.col("vec_id") == query_vec_id) \
+    q_rows = embeddings.where(F.col("vec_id") == _QUERY_VEC_ID) \
         .select("embedding").collect()
     qs = [None if r["embedding"] is None
           else [float(v) for v in r["embedding"]] for r in q_rows]
     scored = _np_cos_to_queries(
-        embeddings.where(F.col("vec_id") != query_vec_id), qs)
+        embeddings.where(F.col("vec_id") != _QUERY_VEC_ID), qs)
     w = Window.orderBy(F.desc("cos"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= _TOP_K)
         .select(F.col("vec_id").cast("bigint").alias("vec_id"), F.col("rank").cast("bigint").alias("rank"))
     )
 
@@ -183,30 +191,27 @@ def lsh_signatures(embeddings: DataFrame, n_planes: int = 16) -> DataFrame:
     ).mapInArrow(batches, "vec_id bigint, lsh_sig bigint")
 
 
-def lsh_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10,
-             n_planes: int = 16, max_hamming: int = 6,
-             sigs: DataFrame | None = None) -> DataFrame:
-    """ANN top-k: restrict brute-force scoring to vectors whose LSH
-    signature is within ``max_hamming`` bits of the query's — the
-    bucketed scale path (candidate set ≪ corpus).
+def lsh_topk(embeddings: DataFrame, sigs: DataFrame | None = None) -> DataFrame:
+    """ANN top-k: restrict brute-force scoring to vectors whose 16-plane
+    LSH signature is within 6 bits of the query's — the bucketed scale
+    path (candidate set ≪ corpus).
 
     ``sigs``: precomputed (vec_id, lsh_sig) signatures to reuse instead
     of recomputing. ``lsh_signatures`` bit b depends only on (b, dim),
-    so the low ``n_planes`` bits of any WIDER signature table are
-    exactly the ``n_planes``-plane signature — mask and pass a shared
-    table rather than paying the projection fold twice."""
+    so the low 16 bits of any WIDER signature table are exactly the
+    16-plane signature — mask and pass a shared table rather than
+    paying the projection fold twice."""
     if sigs is None:
-        sigs = lsh_signatures(embeddings, n_planes)
-    q_sig = sigs.where(F.col("vec_id") == query_vec_id).select(
+        sigs = lsh_signatures(embeddings, 16)
+    q_sig = sigs.where(F.col("vec_id") == _QUERY_VEC_ID).select(
         F.col("lsh_sig").alias("q_sig")
     )
     cand_ids = (
         sigs.crossJoin(F.broadcast(q_sig))
-        .where(F.bit_count(F.col("lsh_sig").bitwiseXOR(F.col("q_sig"))) <= max_hamming)
+        .where(F.bit_count(F.col("lsh_sig").bitwiseXOR(F.col("q_sig"))) <= 6)
         .select("vec_id")
     )
-    cands = embeddings.join(cand_ids, "vec_id")
-    return cosine_topk(cands, query_vec_id=query_vec_id, k=k)
+    return cosine_topk(embeddings.join(cand_ids, "vec_id"))
 
 
 def _pivot_hash(id_col):
@@ -328,11 +333,11 @@ def _assign_with_embedding(
         batches, schema)
 
 
-def ivf_assign(embeddings: DataFrame, n_cells: int = 8) -> DataFrame:
+def ivf_assign(embeddings: DataFrame) -> DataFrame:
     """IVF coarse assignment: cell = argmax cosine against K data-derived
     pivots (first max wins ties). One broadcast of the K-pivot row +
     a per-row JVM array fold — zero shuffle on the vectors."""
-    return _assign_with_embedding(embeddings, n_cells).select(
+    return _assign_with_embedding(embeddings, _IVF_CELLS).select(
         "vec_id", "ivf_cell")
 
 
@@ -362,18 +367,17 @@ FROM e a JOIN e b ON b.id = a.id + 1
 """
 
 
-def ivf_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10,
-             n_cells: int = 8, probes: int = 2) -> DataFrame:
+def ivf_topk(embeddings: DataFrame) -> DataFrame:
     """Multi-probe IVF: coarse-assign every vector to its nearest data-
     derived pivot, then brute-force rank only the vectors in the query's
-    ``probes`` nearest cells — the inverted-file ANN plan shape
+    ``_IVF_PROBES`` nearest cells — the inverted-file ANN plan shape
     (candidate set ≈ probes·corpus/n_cells; the cell filter prunes
     before any expensive scoring, and probing >1 cell recovers the
     neighbors that straddle a cell boundary)."""
-    prow = _pivot_row(embeddings, n_cells)
-    assigned = ivf_assign(embeddings, n_cells=n_cells)
+    prow = _pivot_row(embeddings, _IVF_CELLS)
+    assigned = ivf_assign(embeddings)
     # query's top-P cells by pivot cosine (desc, pivot index tie-break)
-    q = embeddings.where(F.col("vec_id") == query_vec_id).crossJoin(F.broadcast(prow))
+    q = embeddings.where(F.col("vec_id") == _QUERY_VEC_ID).crossJoin(F.broadcast(prow))
     ranked = F.array_sort(
         F.transform(
             F.col("pivots"),
@@ -382,17 +386,17 @@ def ivf_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10,
     )
     q_cells = q.select(
         F.explode(
-            F.transform(F.slice(ranked, 1, probes), lambda s: s["idx"].cast("int"))
+            F.transform(F.slice(ranked, 1, _IVF_PROBES), lambda s: s["idx"].cast("int"))
         ).alias("q_cell")
     )
     cand_ids = assigned.join(
         F.broadcast(q_cells), assigned.ivf_cell == q_cells.q_cell, "left_semi"
     ).select("vec_id")
-    return cosine_topk(embeddings.join(cand_ids, "vec_id"), query_vec_id=query_vec_id, k=k)
+    return cosine_topk(embeddings.join(cand_ids, "vec_id"))
 
 
 # shared CTE text: data-derived pivots + cosine scores per vector
-def _ivf_scores_cte(n_cells: int = 8) -> str:
+def _ivf_scores_cte(n_cells: int) -> str:
     """The shared pivots+scores CTE with a configurable pivot count.
     Built from a template placeholder — a string-replace against the
     finished CTE would silently no-op if the QUALIFY text drifted."""
@@ -414,7 +418,7 @@ scored AS (
   FROM embeddings e, plist)
 """
 
-_IVF_SCORES_CTE = _ivf_scores_cte(8)
+_IVF_SCORES_CTE = _ivf_scores_cte(_IVF_CELLS)
 
 IVF_ASSIGN_SQL = f"""
 WITH {_IVF_SCORES_CTE}
@@ -537,13 +541,9 @@ FROM q
 """
 
 
-def neardup_candidates(
-    embeddings: DataFrame, n_planes: int = 32, bands: int = 4,
-    bucket_cap: int | None = 10000,
-) -> DataFrame:
+def neardup_candidates(embeddings: DataFrame) -> DataFrame:
     """LSH candidate pairs for all-pairs embedding near-dup: banded
-    random-hyperplane signatures (``bands`` bands of ``n_planes/bands``
-    planes each), equi-joined on (band, band_signature) — the same
+    random-hyperplane signatures (4 bands of 32/4 planes each), equi-joined on (band, band_signature) — the same
     banded shape as ``minhash_lsh_pairs``.
 
     Scale notes (why this survives 100×, unlike 4-bit chunks):
@@ -551,7 +551,7 @@ def neardup_candidates(
       collide with p ≈ 4/256 instead of the near-certain collision of
       4-bit chunks (expected candidates ~n²/64 → ~n²·0.016, and the
       constant improves exponentially with planes-per-band);
-    - ``bucket_cap`` drops (band, sig) buckets bigger than the cap
+    - the bucket cap drops (band, sig) buckets bigger than 10000
       before the self-join: a degenerate hot bucket (all-identical
       signatures on a clustered corpus) would otherwise go quadratic on
       one key. Hot buckets are non-discriminative by construction, so
@@ -560,6 +560,7 @@ def neardup_candidates(
       (band, sig) keys.
     Output: distinct (a_id, b_id) with a_id < b_id.
     """
+    n_planes, bands = _NEARDUP_PLANES, _NEARDUP_BANDS
     ppb = n_planes // bands
     mask = (1 << ppb) - 1
     sigs = lsh_signatures(embeddings, n_planes)
@@ -581,14 +582,13 @@ def neardup_candidates(
     # bucket count and the semi-join all consume the same exchange.
     banded = banded.localCheckpoint()
     banded = banded.repartition("band", "band_sig")
-    if bucket_cap is not None:
-        small = (
-            banded.groupBy("band", "band_sig")
-            .agg(F.count(F.lit(1)).alias("bucket_n"))
-            .where(F.col("bucket_n") <= bucket_cap)
-            .select("band", "band_sig")
-        )
-        banded = banded.join(small, ["band", "band_sig"], "left_semi")
+    small = (
+        banded.groupBy("band", "band_sig")
+        .agg(F.count(F.lit(1)).alias("bucket_n"))
+        .where(F.col("bucket_n") <= _NEARDUP_BUCKET_CAP)
+        .select("band", "band_sig")
+    )
+    banded = banded.join(small, ["band", "band_sig"], "left_semi")
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(b, ["band", "band_sig"])
@@ -598,18 +598,14 @@ def neardup_candidates(
     )
 
 
-def embedding_neardup_pairs(
-    embeddings: DataFrame, n_planes: int = 32, bands: int = 4,
-    threshold_x10k: int = 3000, bucket_cap: int | None = 10000,
-) -> DataFrame:
+def embedding_neardup_pairs(embeddings: DataFrame) -> DataFrame:
     """All-pairs embedding near-dup: banded LSH buckets propose
     candidates (``neardup_candidates``), exact cosine verifies. The
     candidate join shuffles only (band, 8-bit sig) keys and the verify
     join ships vectors for CANDIDATE pairs only — never the n² pair
     space — which is the 100 TB shape; the adjacent-id variant is just
     a smoke check."""
-    cand = neardup_candidates(embeddings, n_planes=n_planes, bands=bands,
-                              bucket_cap=bucket_cap)
+    cand = neardup_candidates(embeddings)
     e = embeddings.select(
         F.col("vec_id").cast("bigint").alias("vec_id"), "embedding"
     )
@@ -629,7 +625,7 @@ def embedding_neardup_pairs(
         scored.select(
             "a_id", "b_id", F.floor(cos * 10000).cast("bigint").alias("cos_x10k")
         )
-        .where(F.col("cos_x10k") >= threshold_x10k)
+        .where(F.col("cos_x10k") >= 3000)
     )
 
 
@@ -665,13 +661,11 @@ SELECT a_id, b_id, cos_x10k FROM scored WHERE cos_x10k >= 3000
 """
 
 
-def semantic_dedup(embeddings: DataFrame, n_cells: int = 16,
-                   threshold_x10k: int = 3000,
-                   cell_cap: int = 10000) -> DataFrame:
+def semantic_dedup(embeddings: DataFrame) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv
     2303.09540): IVF coarse clusters bound the pair space, then within
     each cluster a vector is DROPPED when a lower-id member sits at
-    cosine ≥ threshold (keep-first convention, like
+    cosine ≥ 0.3 (keep-first convention, like
     ``dedup_keep_first``). Output: (vec_id, ivf_cell, is_kept).
 
     Scale shape — why this is the 100 TB semantic-dedup plan:
@@ -681,14 +675,13 @@ def semantic_dedup(embeddings: DataFrame, n_cells: int = 16,
       once to their cluster's reducer and pairs form per-cluster,
       never across the n² global space — exactly the paper's design
       point (cluster count scales with corpus so cluster sizes stay
-      bounded; the default K=16 is what SEMANTIC_DEDUP_SQL pins —
-      pass a different K only with a matching _ivf_scores_cte(K) twin);
-    - ``cell_cap`` bounds a HOT cell: only the first ``cell_cap``
+      bounded; K = ``_SEMANTIC_CELLS``, which SEMANTIC_DEDUP_SQL pins);
+    - the cell cap bounds a HOT cell: only the first 10000
       members of a cell (by vec_id — deterministic) act as the pair
       join's a-side ("representatives"); the b-side stays unrestricted,
       so every member is still compared against the cell's head but the
       per-cell pair space is cap·|cell| (linear), never |cell|² — the
-      same skew guard as ``embedding_neardup_pairs``' bucket_cap.
+      same skew guard as ``embedding_neardup_pairs``' bucket cap.
       Output is IDENTICAL to uncapped whenever no cell exceeds the cap
       (keep-first drops the higher id of a close pair, and the likely
       droppers — low ids — are exactly the representatives);
@@ -702,15 +695,15 @@ def semantic_dedup(embeddings: DataFrame, n_cells: int = 16,
     # each of the three plan branches that consume `e` (a-side, b-side,
     # final flag join) — measured ~1 s/branch at sf0.1; partition-local
     # materialization, no shuffle added.
-    e = _assign_with_embedding(embeddings, n_cells).localCheckpoint()
+    e = _assign_with_embedding(embeddings, _SEMANTIC_CELLS).localCheckpoint()
     # norms hoisted to one column per VECTOR before the pair join —
     # computing them per PAIR would redo the O(dim) fold ~cell_size
     # times per vector; dot/(na*nb) is the same expression tree, so
     # results stay bit-identical to the oracle's per-pair formula
     #
-    # the a-side rank filter is the cell_cap guard documented above.
+    # the a-side rank filter is the cell-cap guard documented above.
     # NOTE: this plans a FULL per-cell Window sort, not a
-    # WindowGroupLimit — cell_cap (10000) exceeds
+    # WindowGroupLimit — the cap (10000) exceeds
     # spark.sql.optimizer.windowGroupLimitThreshold (default 1000), so
     # InferWindowGroupLimit declines (see tools/plan_audit.py's
     # BOUNDED_WINDOW_GROUPS entry). The sort is O(|cell| log |cell|)
@@ -719,7 +712,7 @@ def semantic_dedup(embeddings: DataFrame, n_cells: int = 16,
     rep_rn = F.row_number().over(
         Window.partitionBy("ivf_cell").orderBy("vec_id"))
     a = (e.withColumn("cell_rn", rep_rn)
-         .where(F.col("cell_rn") <= cell_cap)
+         .where(F.col("cell_rn") <= _SEMDEDUP_CELL_CAP)
          .select(F.col("ivf_cell"), F.col("vec_id").alias("a_id"),
                  F.col("embedding").alias("emb_a"),
                  _norm(F.col("embedding")).alias("norm_a")))
@@ -732,7 +725,7 @@ def semantic_dedup(embeddings: DataFrame, n_cells: int = 16,
     dropped = (
         a.join(b, "ivf_cell")
         .where(F.col("a_id") < F.col("b_id"))
-        .where(F.floor(cos * 10000).cast("bigint") >= threshold_x10k)
+        .where(F.floor(cos * 10000).cast("bigint") >= _SEMDEDUP_THRESHOLD_X10K)
         .select(F.col("b_id").alias("vec_id"))
         .distinct()
     )
@@ -743,7 +736,7 @@ def semantic_dedup(embeddings: DataFrame, n_cells: int = 16,
 
 
 SEMANTIC_DEDUP_SQL = f"""
-WITH {_ivf_scores_cte(16)},
+WITH {_ivf_scores_cte(_SEMANTIC_CELLS)},
 assigned AS (
   SELECT vec_id, embedding,
          CAST(list_position(ss, list_max(ss)) - 1 AS INTEGER) AS ivf_cell
@@ -772,7 +765,7 @@ FROM assigned s LEFT JOIN dropped d USING (vec_id)
 """
 
 
-def ann_recall(embeddings: DataFrame, k: int = 10) -> DataFrame:
+def ann_recall(embeddings: DataFrame) -> DataFrame:
     """Self-evaluation of the two ANN paths against exact brute-force
     ground truth: per method, how many of the true top-k the bucketed
     search returned (recall@k numerator — the metric a production ANN
@@ -780,18 +773,18 @@ def ann_recall(embeddings: DataFrame, k: int = 10) -> DataFrame:
     integer: (method, n_hits, k)."""
     # k-row checkpoint: both method branches join against the exact
     # ground truth — without it the brute-force pass runs twice
-    truth = cosine_topk(embeddings, k=k).select("vec_id").localCheckpoint()
+    truth = cosine_topk(embeddings).select("vec_id").localCheckpoint()
 
     def hits(name, df):
         return (
             df.select("vec_id").join(truth, "vec_id")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_hits"))
             .select(F.lit(name).alias("method"), "n_hits",
-                    F.lit(k).cast("bigint").alias("k"))
+                    F.lit(_TOP_K).cast("bigint").alias("k"))
         )
 
-    return hits("lsh", lsh_topk(embeddings, k=k)).unionByName(
-        hits("ivf", ivf_topk(embeddings, k=k)))
+    return hits("lsh", lsh_topk(embeddings)).unionByName(
+        hits("ivf", ivf_topk(embeddings)))
 
 
 ANN_RECALL_SQL = f"""
@@ -808,8 +801,7 @@ FROM i JOIN truth USING (vec_id)
 """
 
 
-def ivf_refine(embeddings: DataFrame, n_cells: int = 16,
-               scale: int = 10000) -> DataFrame:
+def ivf_refine(embeddings: DataFrame) -> DataFrame:
     """One Lloyd (k-means) refinement iteration over the IVF coarse
     cells: recompute each cell's centroid as the element-wise mean of
     its members, then reassign every vector to its nearest refined
@@ -817,7 +809,7 @@ def ivf_refine(embeddings: DataFrame, n_cells: int = 16,
     sampled rows" and a trained quantizer.
 
     Determinism: centroids are INTEGER vectors — components are
-    floor(x·scale) quantized, summed per cell (integer sums commute,
+    floor(x·10⁴) quantized, summed per cell (integer sums commute,
     so shuffle order can't change them), and floor-divided by the cell
     count via the explicit pmod identity (s - ((s%n)+n)%n)/n, which
     reads the same on both engines regardless of their native int-div
@@ -843,10 +835,10 @@ def ivf_refine(embeddings: DataFrame, n_cells: int = 16,
     explode, the cell counts AND the rescoring — without the barrier
     the K-cosine assignment fold runs once per branch.
     """
-    e = _assign_with_embedding(embeddings, n_cells).localCheckpoint()
+    e = _assign_with_embedding(embeddings, _SEMANTIC_CELLS).localCheckpoint()
     qcol = F.transform(
         F.col("embedding"),
-        lambda x: F.floor(x.cast("double") * scale).cast("bigint"),
+        lambda x: F.floor(x.cast("double") * 10000).cast("bigint"),
     )
     exploded = e.select("ivf_cell", F.posexplode(qcol).alias("pos", "q"))
     sums = (
@@ -893,7 +885,7 @@ def ivf_refine(embeddings: DataFrame, n_cells: int = 16,
 
 
 IVF_REFINE_SQL = f"""
-WITH {_ivf_scores_cte(16)},
+WITH {_ivf_scores_cte(_SEMANTIC_CELLS)},
 assigned AS (
   SELECT vec_id, embedding,
          CAST(list_position(ss, list_max(ss)) - 1 AS INTEGER) AS cell0
@@ -930,11 +922,9 @@ FROM rescored
 """
 
 
-def cluster_balanced_sample(
-    embeddings: DataFrame, n_cells: int = 16, k: int = 8
-) -> DataFrame:
-    """Diversity-balanced selection: an equal quota of ``k`` vectors
-    from each of ``n_cells`` semantic IVF cells, ranked by centrality
+def cluster_balanced_sample(embeddings: DataFrame) -> DataFrame:
+    """Diversity-balanced selection: ``_BALANCED_QUOTA`` vectors from
+    each of the ``_SEMANTIC_CELLS`` IVF cells, ranked by centrality
     (cosine to the cell's own pivot) — the cluster-balanced curation
     step that keeps a corpus's long-tail topics from being drowned by
     its head cluster. Output: (vec_id, ivf_cell, rank), rank 1 = most
@@ -942,22 +932,22 @@ def cluster_balanced_sample(
 
     Shape: one broadcast K-pivot row, assignment + centrality in the
     scan task (zero vector shuffle), then a per-cell row_number capped
-    by ``rank <= k`` — Catalyst plans a WindowGroupLimit, so every
+    by the quota — Catalyst plans a WindowGroupLimit, so every
     task pre-reduces to k rows per cell before the (n_cells-key)
     shuffle: the window never sees an unbounded group.
     """
-    base = _assign_with_embedding(embeddings, n_cells, with_cos=True).select(
+    base = _assign_with_embedding(embeddings, _SEMANTIC_CELLS, with_cos=True).select(
         "vec_id", "ivf_cell", "cos")
     w = Window.partitionBy("ivf_cell").orderBy(F.desc("cos"), "vec_id")
     return (
         base.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= _BALANCED_QUOTA)
         .select("vec_id", "ivf_cell", F.col("rank").cast("bigint").alias("rank"))
     )
 
 
 CLUSTER_BALANCED_SQL = f"""
-WITH {_ivf_scores_cte(16)},
+WITH {_ivf_scores_cte(_SEMANTIC_CELLS)},
 assigned AS (
   SELECT vec_id, list_max(ss) AS cos,
          list_position(ss, list_max(ss)) - 1 AS cell
@@ -1035,8 +1025,7 @@ def _pq_codes_of(xs, pivots, m, dsub):
     return codes
 
 
-def _pq_staged_np(embeddings: DataFrame, m: int = _PQ_M,
-                  dsub: int = _PQ_DSUB, ks: int = _PQ_KS,
+def _pq_staged_np(embeddings: DataFrame,
                   pivots: list | None = None) -> DataFrame:
     """(vec_id, codes) computed in mapInArrow (r7, guide §4.2): the
     KS pivots ride in the task closure and the M×KS×dsub squared-
@@ -1048,8 +1037,9 @@ def _pq_staged_np(embeddings: DataFrame, m: int = _PQ_M,
     import numpy as np
     import pyarrow as pa
 
+    m, dsub = _PQ_M, _PQ_DSUB
     if pivots is None:
-        pivots = _pq_pivots(embeddings, ks)
+        pivots = _pq_pivots(embeddings, _PQ_KS)
     full = m * dsub
     ok_piv = np.array([p is not None and len(p) == full for p in pivots])
     P = np.zeros((len(pivots), full))
@@ -1115,8 +1105,7 @@ def pq_encode(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def pq_topk(embeddings: DataFrame, query_vec_id: int = 0,
-            k: int = 10) -> DataFrame:
+def pq_topk(embeddings: DataFrame) -> DataFrame:
     """Asymmetric-distance (ADC) top-k in the compressed domain: the
     query stays a raw vector, every candidate is scored ONLY through
     its M codes — distance = sum over subspaces of
@@ -1128,15 +1117,15 @@ def pq_topk(embeddings: DataFrame, query_vec_id: int = 0,
     pre-reduce before the single k-row merge — the global-window
     analogue of WindowGroupLimit). Output (vec_id, rank), rank 1 =
     nearest."""
-    m, dsub, ks = _PQ_M, _PQ_DSUB, _PQ_KS
-    pivots = _pq_pivots(embeddings, ks)
+    m, dsub = _PQ_M, _PQ_DSUB
+    pivots = _pq_pivots(embeddings, _PQ_KS)
     st = _pq_staged_np(embeddings, pivots=pivots)
     # ADC lookup tables, one per query-id row (old crossJoin
     # cardinality): T[j][c] = sqdist(q_sub_j, codeword_c_sub_j) with
     # _sqdist's exact fold order, shipped as a literal — the per-row
     # cost drops from M×dsub folds to M table probes, which is
     # exactly how a PQ index scores (the codes never meet the floats)
-    q_rows = embeddings.where(F.col("vec_id") == query_vec_id) \
+    q_rows = embeddings.where(F.col("vec_id") == _QUERY_VEC_ID) \
         .select("embedding").collect()
     dists = []
     for r in q_rows:
@@ -1162,7 +1151,7 @@ def pq_topk(embeddings: DataFrame, query_vec_id: int = 0,
                      + 1).cast("int"))),
         )
         dists.append(d)
-    base = st.where(F.col("vec_id") != query_vec_id)
+    base = st.where(F.col("vec_id") != _QUERY_VEC_ID)
     if not dists:
         scored = base.select(
             "vec_id", F.lit(None).cast("double").alias("dist")
@@ -1172,13 +1161,10 @@ def pq_topk(embeddings: DataFrame, query_vec_id: int = 0,
         scored = parts[0]
         for p in parts[1:]:
             scored = scored.unionAll(p)
-    scored = (
-        scored
-    )
     w = Window.orderBy(F.asc("dist"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= _TOP_K)
         .select("vec_id", F.col("rank").cast("bigint").alias("rank"))
     )
 

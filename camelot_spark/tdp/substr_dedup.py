@@ -91,8 +91,7 @@ def duplicate_substring_spans(documents: DataFrame, k: int = 40,
     )
 
 
-def duplicate_substring_stats(documents: DataFrame, k: int = 40,
-                              portable: bool = False,
+def duplicate_substring_stats(documents: DataFrame,
                               spans: DataFrame | None = None) -> DataFrame:
     """Per-document rollup of the duplicate regions: how much of each
     document is verbatim-duplicated text (the curation signal — drop or
@@ -101,11 +100,12 @@ def duplicate_substring_stats(documents: DataFrame, k: int = 40,
     function of the corpus.
 
     ``spans``: a precomputed ``duplicate_substring_spans`` result for
-    the same (documents, k) — callers running several consumers of the
+    the same documents — callers running several consumers of the
     region list (stats + strip + audit) compute/persist it once instead
-    of re-running the k-gram shuffle per consumer."""
+    of re-running the k-gram shuffle per consumer. Left to None, the
+    production spans (k = 40, xxhash64 keys) are computed here."""
     if spans is None:
-        spans = duplicate_substring_spans(documents, k=k, portable=portable)
+        spans = duplicate_substring_spans(documents)
     per_doc = spans.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_regions"),
         F.sum(F.col("dup_end") - F.col("dup_start")).cast("bigint").alias("dup_chars"),
@@ -126,7 +126,6 @@ def duplicate_substring_stats(documents: DataFrame, k: int = 40,
 
 
 def strip_duplicate_substrings(documents: DataFrame, k: int = 40,
-                               portable: bool = False,
                                spans: DataFrame | None = None) -> DataFrame:
     """The removal step: cut every duplicate region out of each
     document, keeping the corpus-wide first occurrence — the operator
@@ -143,7 +142,7 @@ def strip_duplicate_substrings(documents: DataFrame, k: int = 40,
     ``spans``: optional precomputed region list (see
     ``duplicate_substring_stats``)."""
     if spans is None:
-        spans = duplicate_substring_spans(documents, k=k, portable=portable)
+        spans = duplicate_substring_spans(documents, k=k)
     regions = spans.groupBy("doc_id").agg(
         F.sort_array(F.collect_list(F.struct("dup_start", "dup_end"))).alias("regs"))
     n = F.size("regs")

@@ -26,17 +26,21 @@ def _tokens(col):
     return F.split(col, " ")
 
 
-def _clean_toks(col_name: str = "text"):
-    """Lowercased non-empty tokens with NULL text folded to the empty
-    list — the one definition of the NULL-safe tokenizer shared by
-    the feature-hash embeddings and hard-negative mining (mirrored in
-    the DuckDB twins' list_filter/COALESCE form)."""
+def _clean_toks():
+    """Lowercased non-empty tokens of ``text`` with NULL text folded to
+    the empty list — the one definition of the NULL-safe tokenizer
+    shared by the feature-hash embeddings and hard-negative mining
+    (mirrored in the DuckDB twins' list_filter/COALESCE form)."""
     return F.filter(
-        _tokens(F.lower(F.coalesce(F.col(col_name), F.lit("")))),
+        _tokens(F.lower(F.coalesce(F.col("text"), F.lit("")))),
         lambda t: F.length(t) > 0)
 
 
 _POLY_M = 1_000_000_007
+# hashed vectors are 64 wide (a power of two: bucket and sign are bit
+# ops); searches rank the top 10 around doc 0; hard negatives share >= 3
+# distinct tokens with it and sit beyond squared-L2 distance 8
+_HASH_DIM, _QUERY_DOC_ID, _TEXT_TOP_K, _DUP_DIST = 64, 0, 10, 8
 
 
 def portable_token_hash(t):
@@ -341,8 +345,8 @@ FROM d
 """
 
 
-def top_ngrams(documents: DataFrame, n: int = 2, k: int = 20) -> DataFrame:
-    """Corpus-wide top-k word n-grams with counts — the vocabulary/
+def top_ngrams(documents: DataFrame) -> DataFrame:
+    """Corpus-wide top-20 word bigrams with counts — the vocabulary/
     contamination-audit aggregation. The explode→count shuffle is
     inherent to a global aggregate; Spark plans it as map-side partial
     HashAggregate + exchange on the n-gram key + TakeOrdered for the
@@ -354,6 +358,7 @@ def top_ngrams(documents: DataFrame, n: int = 2, k: int = 20) -> DataFrame:
     interpreted lambda (with an array allocation) per position. Same
     gram multiset: slices are empty when size < n, NULL text zips to
     NULL and inner explode drops both."""
+    n = 2
     toks = _tokens(F.col("text"))
     cnt = F.greatest(F.size(toks) - (n - 1), F.lit(0))
     zipped = F.arrays_zip(*[F.slice(toks, i + 1, cnt) for i in range(n)])
@@ -365,7 +370,7 @@ def top_ngrams(documents: DataFrame, n: int = 2, k: int = 20) -> DataFrame:
         .groupBy("ngram")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         .orderBy(F.desc("cnt"), F.asc("ngram"))
-        .limit(k)
+        .limit(20)
     )
 
 
@@ -429,9 +434,9 @@ FROM tok GROUP BY doc_id
 """
 
 
-def winnow_fingerprints(documents: DataFrame, w: int = 4) -> DataFrame:
+def winnow_fingerprints(documents: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al.: min token-hash
-    per sliding window, deduplicated) — the standard local-fingerprint
+    per sliding 4-token window, deduplicated) — the standard local-fingerprint
     scheme for plagiarism/near-dup detection.
 
     Token hashes use a portable polynomial hash (fold over chars,
@@ -450,6 +455,7 @@ def winnow_fingerprints(documents: DataFrame, w: int = 4) -> DataFrame:
     n = F.size(hashes)
     # sliding-window min as an elementwise least over w shifted copies:
     # O(n) arrays instead of O(n*w) per-window slices
+    w = 4
     L = n - w + 1
     shifted = [F.slice(hashes, 1 + k, L) for k in range(w)]
     mins = shifted[0]
@@ -486,11 +492,11 @@ FROM wins
 """
 
 
-def token_rarity(documents: DataFrame, rare_max_count: int = 2) -> DataFrame:
+def token_rarity(documents: DataFrame) -> DataFrame:
     """CCNet-style corpus-frequency quality signal, integer-exact:
     per document, the mean corpus-wide occurrence count of its word
     tokens and the fraction (ppm) of tokens that are corpus-rare
-    (count <= ``rare_max_count``). Docs dominated by rare tokens are
+    (count <= 2). Docs dominated by rare tokens are
     OCR garbage / boilerplate hashes / non-language — the
     LM-perplexity-filter surrogate that stays deterministic across
     engines (a real LM score is float and engine-specific).
@@ -510,7 +516,7 @@ def token_rarity(documents: DataFrame, rare_max_count: int = 2) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             F.sum("c").alias("sum_c"),
-            F.sum(F.when(F.col("c") <= rare_max_count, 1).otherwise(0))
+            F.sum(F.when(F.col("c") <= 2, 1).otherwise(0))
             .alias("n_rare"),
         )
         .selectExpr(
@@ -624,14 +630,13 @@ GROUP BY doc_id
 
 
 def boilerplate_strip(
-    documents: DataFrame, n: int = 3,
-    min_ratio_ppm: int = 500_000, min_docs: int = 2,
+    documents: DataFrame, min_ratio_ppm: int = 500_000,
 ) -> DataFrame:
     """Per-source boilerplate removal, document-frequency based (the
     C4/RefinedWeb "same line on most pages of a site" filter, over
-    token ``n``-grams since this corpus has no line structure): an
-    n-gram occurring in >= ``min_ratio_ppm``/1e6 of a source's docs
-    (and >= ``min_docs`` absolute) is boilerplate — every occurrence
+    token 3-grams since this corpus has no line structure): a
+    3-gram occurring in >= ``min_ratio_ppm``/1e6 of a source's docs
+    (and in >= 2 docs) is boilerplate — every occurrence
     is struck from every doc of that source, removing the covered
     token positions (overlapping hits union). Distinct from
     ``substr_dedup`` (which targets long LITERAL spans duplicated
@@ -648,6 +653,7 @@ def boilerplate_strip(
     masking is a per-row array filter. No full-text shuffle: the only
     wide op carrying text is the final left join keyed on doc_id.
     """
+    n = 3
     toks = documents.select(
         "doc_id", "source", _tokens(F.col("text")).alias("toks"))
     # r7: gram array via arrays_zip of n shifted slices + one concat
@@ -679,7 +685,7 @@ def boilerplate_strip(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"))
     boil = (
         df_counts.join(n_docs, "source")
-        .where((F.col("df") >= min_docs)
+        .where((F.col("df") >= 2)
                & (F.col("df") * F.lit(1_000_000)
                   >= F.col("n_docs") * F.lit(min_ratio_ppm)))
         .select("source", "gram")
@@ -751,7 +757,7 @@ FROM m
 """
 
 
-def feature_hash_vec(documents: DataFrame, dim: int = 64):
+def feature_hash_vec(documents: DataFrame):
     """Hashing-trick document vectors (Weinberger et al.'s feature
     hashing): text -> dim-D SIGNED INTEGER vector with zero external
     model — each token's portable hash picks a bucket (low bits) and a
@@ -762,7 +768,7 @@ def feature_hash_vec(documents: DataFrame, dim: int = 64):
     geometry, exact cross-engine arithmetic — a float encoder could
     never be oracle-pinned).
 
-    ``dim`` must be a power of two: bucket = h & (dim-1) and
+    The width is a power of two: bucket = h & (dim-1) and
     sign = bit log2(dim) of h are pure integer bit ops on BOTH
     engines (no DIV-vs-// or float-division divergence).
 
@@ -774,17 +780,16 @@ def feature_hash_vec(documents: DataFrame, dim: int = 64):
     measured 30x slower than this shape at sf0.1. Here everything
     except one O(dim²) map-probe projection per doc is whole-stage
     codegen, and the shuffle after map-side combine carries at most
-    ``dim`` short rows per doc — bounded, skew-free (doc_id keys),
+    ``_HASH_DIM`` short rows per doc — bounded, skew-free (doc_id keys),
     linear to any corpus size. Returns (doc_id, vec: array<long>).
 
     Contract: ``doc_id`` is the table's primary key (as everywhere in
     this package). Rows sharing a doc_id — or multiple NULL doc_ids —
     aggregate into ONE pooled vector per key, not one per row.
     """
-    if dim & (dim - 1) or dim <= 0:
-        raise ValueError("dim must be a power of two")
     import pyarrow as pa
 
+    dim = _HASH_DIM
     sign_bit = dim.bit_length() - 1
     mask = dim - 1
     # tokenization (lower/split/filter, NULL text -> []) stays a JVM
@@ -838,12 +843,12 @@ def feature_hash_vec(documents: DataFrame, dim: int = 64):
         ).alias("vec"))
 
 
-def feature_hash_embed(documents: DataFrame, dim: int = 64) -> DataFrame:
+def feature_hash_embed(documents: DataFrame) -> DataFrame:
     """Driver-query surface over ``feature_hash_vec``: the vector as a
     comma-joined string plus integer invariants, so the cross-engine
     compare pins every component exactly. Output
     (doc_id, vec_str, norm_sq, nnz)."""
-    v = feature_hash_vec(documents, dim)
+    v = feature_hash_vec(documents)
     return v.select(
         "doc_id",
         F.array_join(F.transform("vec", lambda x: x.cast("string")),
@@ -855,8 +860,7 @@ def feature_hash_embed(documents: DataFrame, dim: int = 64) -> DataFrame:
     )
 
 
-def hashed_topk(documents: DataFrame, query_doc_id: int = 0,
-                k: int = 10, dim: int = 64) -> DataFrame:
+def hashed_topk(documents: DataFrame) -> DataFrame:
     """Exact integer nearest-neighbour search over the hashed vectors:
     top-k docs by squared L2 distance to the query doc's vector —
     the full text -> vector -> search chain with no float anywhere,
@@ -868,11 +872,11 @@ def hashed_topk(documents: DataFrame, query_doc_id: int = 0,
     query broadcasts, and the global lone-rank filter plans a
     TakeOrderedAndProject k-row pre-reduce per task (same shape as
     ``pq_topk``). Output (doc_id, dist, rank)."""
-    scored = _query_dists(feature_hash_vec(documents, dim), query_doc_id)
+    scored = _query_dists(feature_hash_vec(documents), _QUERY_DOC_ID)
     w = Window.orderBy(F.asc("dist"), F.asc("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= _TEXT_TOP_K)
         .select("doc_id", "dist", F.col("rank").cast("bigint").alias("rank"))
     )
 
@@ -942,14 +946,12 @@ FROM sc ORDER BY dist, doc_id LIMIT 10
 """
 
 
-def hashed_ivf_topk(documents: DataFrame, query_doc_id: int = 0,
-                    k: int = 10, dim: int = 64, n_cells: int = 8,
-                    probes: int = 2) -> DataFrame:
+def hashed_ivf_topk(documents: DataFrame) -> DataFrame:
     """Hybrid text+vector search: ``feature_hash_vec`` text vectors
     through the IVF bucketed ANN path — the scale answer when exact
     ``hashed_topk`` (a full corpus scan per query) gets too expensive.
-    Same inverted-file plan as ``similarity.ivf_topk`` (pivots via the
-    shared ``_pivot_row``), but ALL-INTEGER: cell = argmin squared-L2
+    Same inverted-file plan, cells and probes as ``similarity.ivf_topk``
+    (shared ``_pivot_row``), but ALL-INTEGER: cell = argmin squared-L2
     to the pivot (first-min wins ties), so there is no float cosine
     anywhere and the whole hybrid chain is pinned by one hash oracle.
 
@@ -966,12 +968,12 @@ def hashed_ivf_topk(documents: DataFrame, query_doc_id: int = 0,
     pivots from that projection, ranking its doc_ids by the shared
     ``_pivot_hash``. The checkpoint is (doc_id, 64 longs) per doc — the
     IVF index-build artifact, linear in corpus size, no text."""
-    from .similarity import _pivot_row
+    from .similarity import _IVF_CELLS, _IVF_PROBES, _pivot_row
 
-    emb = feature_hash_vec(documents, dim).localCheckpoint()
+    emb = feature_hash_vec(documents).localCheckpoint()
     prow = _pivot_row(
         emb.select(F.col("doc_id").alias("vec_id"),
-                   F.col("vec").alias("embedding")), n_cells)
+                   F.col("vec").alias("embedding")), _IVF_CELLS)
 
     def dist_to(p_vec, vec=F.col("vec")):
         return F.aggregate(
@@ -983,25 +985,25 @@ def hashed_ivf_topk(documents: DataFrame, query_doc_id: int = 0,
     cells = scored.select(
         "doc_id", "vec",
         (F.array_position(ds, F.array_min(ds)) - 1).cast("int").alias("cell"))
-    # the query doc's `probes` nearest cells by the SAME integer metric
+    # the query doc's _IVF_PROBES nearest cells by the SAME integer metric
     # (asc dist, pivot index tie-break), as a broadcast ≤probes-row side
     ranked = F.array_sort(F.transform(
         F.col("pivots"),
         lambda p, i: F.struct(dist_to(p["p_emb"]).alias("d"),
                               i.alias("idx"))))
     q_cells = (
-        emb.where(F.col("doc_id") == query_doc_id)
+        emb.where(F.col("doc_id") == _QUERY_DOC_ID)
         .crossJoin(F.broadcast(prow))
         .select(F.explode(F.transform(
-            F.slice(ranked, 1, probes),
+            F.slice(ranked, 1, _IVF_PROBES),
             lambda s: s["idx"].cast("int"))).alias("q_cell")))
     cand = cells.join(F.broadcast(q_cells),
                       cells.cell == q_cells.q_cell, "left_semi")
-    scored = _query_dists(emb, query_doc_id, candidates=cand)
+    scored = _query_dists(emb, _QUERY_DOC_ID, candidates=cand)
     w = Window.orderBy(F.asc("dist"), F.asc("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= _TEXT_TOP_K)
         .select("doc_id", "dist", F.col("rank").cast("bigint").alias("rank"))
     )
 
@@ -1044,9 +1046,7 @@ FROM sc QUALIFY rank <= 10
 """
 
 
-def mine_hard_negatives(documents: DataFrame, query_doc_id: int = 0,
-                        k: int = 10, min_overlap: int = 3,
-                        dup_dist: int = 8) -> DataFrame:
+def mine_hard_negatives(documents: DataFrame) -> DataFrame:
     """Hard-negative mining for contrastive training: the k documents
     that SHARE the most vocabulary with the query doc (lexically
     confusable — the negatives a bi-encoder actually needs) while
@@ -1058,7 +1058,7 @@ def mine_hard_negatives(documents: DataFrame, query_doc_id: int = 0,
     intersection| with the query doc (per-row array_intersect against
     the broadcast query token set — codegen, zero shuffle); dist =
     squared L2 between ``feature_hash_vec`` vectors. Keep docs with
-    overlap >= ``min_overlap`` AND dist > ``dup_dist``; rank by
+    overlap >= 3 AND dist > ``_DUP_DIST``; rank by
     (overlap desc, dist asc, doc_id) — most confusable first.
 
     Scale shape: each signal reduces to one (doc_id, long) column in
@@ -1074,23 +1074,23 @@ def mine_hard_negatives(documents: DataFrame, query_doc_id: int = 0,
     base = documents.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.array_distinct(_clean_toks()).alias("toks"))
-    q_toks = (base.where(F.col("doc_id") == query_doc_id)
+    q_toks = (base.where(F.col("doc_id") == _QUERY_DOC_ID)
               .select(F.col("toks").alias("q_toks")))
     overlaps = (
-        base.where(F.col("doc_id") != query_doc_id)
+        base.where(F.col("doc_id") != _QUERY_DOC_ID)
         .crossJoin(F.broadcast(q_toks))
         .select("doc_id",
                 F.size(F.array_intersect("toks", "q_toks"))
                 .cast("bigint").alias("overlap"))
-        .where(F.col("overlap") >= min_overlap)
+        .where(F.col("overlap") >= 3)
     )
-    dists = _query_dists(feature_hash_vec(documents), query_doc_id) \
-        .where(F.col("dist") > dup_dist)
+    dists = _query_dists(feature_hash_vec(documents), _QUERY_DOC_ID) \
+        .where(F.col("dist") > _DUP_DIST)
     scored = overlaps.join(dists, "doc_id")
     w = Window.orderBy(F.desc("overlap"), F.asc("dist"), F.asc("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= _TEXT_TOP_K)
         .select("doc_id", "overlap", "dist",
                 F.col("rank").cast("bigint").alias("rank"))
     )

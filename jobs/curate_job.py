@@ -125,8 +125,7 @@ def apply_steps(spark, docs, args):
             from camelot_spark.tdp.text import boilerplate_strip
 
             cleaned = boilerplate_strip(
-                docs,
-                min_ratio_ppm=getattr(args, "boilerplate_ratio_ppm", 500_000))
+                docs, min_ratio_ppm=args.boilerplate_ratio_ppm)
             docs = (docs.drop("text")
                     .join(cleaned.select("doc_id",
                                          F.col("clean_text").alias("text")),
@@ -134,8 +133,7 @@ def apply_steps(spark, docs, args):
         elif step == "ppl_mix":
             from camelot_spark.tdp.sampling import perplexity_bucket_mix
 
-            head, middle, tail = (int(x) for x in getattr(
-                args, "ppl_rates", "1000000,500000,100000").split(","))
+            head, middle, tail = (int(x) for x in args.ppl_rates.split(","))
             mixed = perplexity_bucket_mix(
                 docs, head_ppm=head, middle_ppm=middle, tail_ppm=tail)
             # no-bigram docs have no bucket — pass through (the
@@ -188,15 +186,14 @@ def apply_steps(spark, docs, args):
 
             docs = docs.withColumn(
                 "split",
-                split_expr(getattr(args, "split_id_col", "doc_id"),
-                           args.train_ppm, args.val_ppm))
+                split_expr(args.split_id_col, args.train_ppm, args.val_ppm))
         else:
             raise SystemExit(f"unknown step {step!r}")
         docs = note(step, docs)
     return docs, report
 
 
-def main(argv: list[str] | None = None) -> int:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True,
@@ -231,15 +228,16 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--shard-epoch", type=int, default=0,
                     help="re-salt the shard/order assignment for this "
                          "training epoch (deterministic per epoch)")
-    args = ap.parse_args(argv)
+    return ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
 
-    from camelot_spark.pipeline import load_documents
+def main(argv: list[str] | None = None) -> int:
+    args = parse_args(argv)
+
+    from camelot_spark.pipeline import job_session, load_documents
     from camelot_spark.snapshots import SnapshotLog
 
-    spark = SparkSession.builder.appName("camelot-spark-curate").config(
-        "spark.sql.adaptive.enabled", "true").getOrCreate()
+    spark = job_session("camelot-spark-curate")
     docs = load_documents(spark, args.input)
     curated, report = apply_steps(spark, docs, args)
     manifest = SnapshotLog(args.output).append(

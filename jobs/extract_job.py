@@ -71,13 +71,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--export-format", choices=("csv", "json", "html"), default="csv")
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from camelot_spark.pipeline import job_session, load_documents, run_extraction
 
-    from camelot_spark.pipeline import load_documents, run_extraction
-
-    spark = SparkSession.builder.appName(
-        f"camelot-spark-extract-{args.flavor}"
-    ).config("spark.sql.adaptive.enabled", "true").getOrCreate()
+    spark = job_session(f"camelot-spark-extract-{args.flavor}")
 
     docs = load_documents(spark, args.input)
     if args.doc_ids:

@@ -76,12 +76,10 @@ def main(argv: list[str] | None = None) -> int:
         # the dry run predicts the wet run instead of slicing [:-0] == []
         raise SystemExit("--keep-last must be >= 1 when running expire")
 
-    from pyspark.sql import SparkSession
-
+    from camelot_spark.pipeline import job_session
     from camelot_spark.snapshots import CommitConflict, SnapshotLog
 
-    spark = SparkSession.builder.appName("camelot-spark-maintain").config(
-        "spark.sql.adaptive.enabled", "true").getOrCreate()
+    spark = job_session("camelot-spark-maintain")
     log = SnapshotLog(args.table)
     latest = log.latest()
     if latest is None:

@@ -42,8 +42,8 @@ def test_bpe_matches_python_reference(spark):
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
     got = [(r["merge_rank"], r["left"], r["right"], r["pair_count"])
-           for r in bpe_train(docs, n_merges=10).collect()]
-    want = _reference_bpe(texts, 10)
+           for r in bpe_train(docs).collect()]
+    want = _reference_bpe(texts, 8)
     assert got == want
     # 'th' and then 'the' should be learned early on this corpus
     merged = ["".join((l, r)) for _, l, r, _ in got]
@@ -52,7 +52,7 @@ def test_bpe_matches_python_reference(spark):
 
 def test_bpe_stops_when_no_pairs_remain(spark):
     docs = spark.createDataFrame([(0, "ab ab ab")], "doc_id long, text string")
-    got = bpe_train(docs, n_merges=5).collect()
+    got = bpe_train(docs).collect()
     # one merge (a,b) exhausts every pair (single guard-separated words)
     assert len(got) == 1
     assert (got[0]["left"], got[0]["right"], got[0]["pair_count"]) == ("a", "b", 3)
@@ -67,7 +67,7 @@ def test_bpe_token_counts_shrink_with_merges(spark):
     from camelot_spark.tdp.bpe import bpe_token_counts
 
     got = {r["doc_id"]: r["n_tokens"]
-           for r in bpe_token_counts(docs, n_merges=6).collect()}
+           for r in bpe_token_counts(docs).collect()}
 
     # reference: replay training, then count tokens of the final state
     import re
@@ -75,7 +75,7 @@ def test_bpe_token_counts_shrink_with_merges(spark):
     for i, t in enumerate(texts):
         words = [w for w in re.split("[^a-z]+", t.lower()) if w]
         states[i] = " " + " | ".join(" ".join(w) for w in words) + " "
-    for _ in range(6):
+    for _ in range(8):
         counts = {}
         for s in states.values():
             toks = [x for x in s.split(" ") if x]

@@ -20,19 +20,22 @@ def _corpus(spark):
         rows, "doc_id long, text string, lang string, source string, n_chars long")
 
 
+def _args(*argv):
+    """curate_job's parsed command line for ``argv`` (input and output
+    are unused: the tests hand apply_steps a DataFrame)."""
+    from jobs.curate_job import parse_args
+
+    return parse_args(["--input", "unused", "--output", "unused", *argv])
+
+
 def test_curate_job_steps_and_snapshot(spark, tmp_path):
     from camelot_spark.snapshots import SnapshotLog
-    from jobs.curate_job import apply_steps, parse_rates
+    from jobs.curate_job import apply_steps
 
-    class Args:
-        steps = "quality,dedup_exact,sample"
-        min_quality = 300
-        substr_k = 40
-        sample_rates = "en=1000000,fr=0"
-        strata_col = "lang"
-
+    args = _args("--steps", "quality,dedup_exact,sample",
+                 "--sample-rates", "en=1000000,fr=0")
     docs = _corpus(spark)
-    curated, report = apply_steps(spark, docs, Args)
+    curated, report = apply_steps(spark, docs, args)
     by_step = {r["step"]: r["docs"] for r in report}
     assert by_step["input"] == 23
     assert by_step["quality"] == 22          # low-quality doc dropped
@@ -58,21 +61,15 @@ def test_curate_strip_substr_step(spark):
     docs = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long")
 
-    class Args:
-        steps = "strip_substr"
-        min_quality = 0
-        substr_k = 20
-        sample_rates = ""
-        strata_col = "lang"
-
-    curated, _ = apply_steps(spark, docs, Args)
+    args = _args("--steps", "strip_substr", "--substr-k", "20")
+    curated, _ = apply_steps(spark, docs, args)
     texts = {r["doc_id"]: r["text"] for r in curated.collect()}
     assert lic in texts[1]                    # canonical copy survives
     assert lic not in texts[2]                # duplicate region cut
     assert "totally different tail" in texts[2]
 
 
-def test_spark_submit_curate_end_to_end(spark, tmp_path):
+def test_spark_submit_curate_end_to_end(spark, tmp_path, monkeypatch):
     """The TDP deployment shape, run for real: `spark-submit --py-files`
     from a neutral cwd drives the curation job and commits exactly one
     snapshot with the per-step audit trail."""
@@ -125,9 +122,10 @@ def test_spark_submit_curate_end_to_end(spark, tmp_path):
     assert shards.count() == 20
     assert all(0 <= r["shard"] < 4 for r in
                shards.select("shard").distinct().collect())
-    from camelot_spark.tdp.sampling import shuffle_shards
+    from camelot_spark.tdp import sampling
+    monkeypatch.setattr(sampling, "_N_SHARDS", 4)  # the job's --n-shards
     want = {r["doc_id"]: r["shard"] for r in
-            shuffle_shards(log.read(spark), n_shards=4).collect()}
+            sampling.shuffle_shards(log.read(spark)).collect()}
     got = {r["doc_id"]: r["shard"] for r in
            shards.select("doc_id", "shard").collect()}
     assert got == want
@@ -145,15 +143,8 @@ def test_curate_classifier_step(spark):
     docs = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long")
 
-    class Args:
-        steps = "classifier"
-        min_quality = 0
-        substr_k = 40
-        near_threshold = 7000
-        sample_rates = ""
-        strata_col = "lang"
-
-    curated, report = apply_steps(spark, docs, Args)
+    args = _args("--steps", "classifier")
+    curated, report = apply_steps(spark, docs, args)
     kept = {r["doc_id"] for r in curated.select("doc_id").collect()}
     assert kept == set(range(8))           # fluent kept, soup dropped
     assert report[-1] == {"step": "classifier", "docs": 8}
@@ -170,15 +161,8 @@ def test_curate_classifier_skips_one_class_corpus(spark):
     docs = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long")
 
-    class Args:
-        steps = "classifier"
-        min_quality = 0
-        substr_k = 40
-        near_threshold = 7000
-        sample_rates = ""
-        strata_col = "lang"
-
-    curated, report = apply_steps(spark, docs, Args)
+    args = _args("--steps", "classifier")
+    curated, report = apply_steps(spark, docs, args)
     assert curated.count() == 10                     # nothing dropped
     assert {"step": "classifier_skipped_one_class", "docs": -1} in report
 
@@ -195,15 +179,8 @@ def test_curate_classifier_passes_through_tokenless_docs(spark):
     docs = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long")
 
-    class Args:
-        steps = "classifier"
-        min_quality = 0
-        substr_k = 40
-        near_threshold = 7000
-        sample_rates = ""
-        strata_col = "lang"
-
-    curated, _ = apply_steps(spark, docs, Args)
+    args = _args("--steps", "classifier")
+    curated, _ = apply_steps(spark, docs, args)
     kept = {r["doc_id"] for r in curated.select("doc_id").collect()}
     assert 3 in kept          # tokenless doc passes through
     assert 1 in kept and 2 not in kept
@@ -213,24 +190,17 @@ def test_curate_split_step_annotates_without_filtering(spark):
     """The split step adds the deterministic train/val/test bucket to
     every surviving doc, drops none, and matches dataset_split's
     assignment for the same ppm config."""
-    from camelot_spark.tdp.sampling import dataset_split
+    from camelot_spark.tdp.sampling import split_expr
     from jobs.curate_job import apply_steps
 
-    class Args:
-        steps = "split"
-        min_quality = 300
-        substr_k = 40
-        sample_rates = ""
-        strata_col = "lang"
-        train_ppm = 600_000
-        val_ppm = 200_000
-
+    args = _args("--steps", "split", "--train-ppm", "600000",
+                 "--val-ppm", "200000")
     docs = _corpus(spark)
-    curated, report = apply_steps(spark, docs, Args)
+    curated, report = apply_steps(spark, docs, args)
     assert {r["step"]: r["docs"] for r in report}["split"] == 23
     got = {r["doc_id"]: r["split"] for r in curated.collect()}
-    want = {r["doc_id"]: r["split"] for r in dataset_split(
-        docs, train_ppm=600_000, val_ppm=200_000).collect()}
+    want = {r["doc_id"]: r["split"] for r in docs.select(
+        "doc_id", split_expr("doc_id", 600_000, 200_000).alias("split")).collect()}
     assert got == want
 
 
@@ -242,37 +212,20 @@ def test_curate_boilerplate_and_ppl_mix_steps(spark):
 
     from jobs.curate_job import apply_steps
 
-    class Args:
-        steps = "boilerplate"
-        min_quality = 300
-        substr_k = 40
-        sample_rates = ""
-        strata_col = "lang"
-        boilerplate_ratio_ppm = 500_000
-
     docs = _corpus(spark)
-    curated, report = apply_steps(spark, docs, Args)
+    curated, report = apply_steps(spark, docs, _args("--steps", "boilerplate"))
     assert curated.count() == 23             # annotating edit, no drops
     # the shared "good" prefix grams clear 50% df within src -> struck
     texts = {r["doc_id"]: r["text"] for r in curated.collect()}
     assert "quick brown fox" not in texts[0]
     assert texts[0].endswith("doc0")         # per-doc tail survives
 
-    class Args2:
-        steps = "ppl_mix"
-        min_quality = 300
-        substr_k = 40
-        sample_rates = ""
-        strata_col = "lang"
-        ppl_rates = "1000000,1000000,1000000"
-
-    all_kept, _ = apply_steps(spark, docs, Args2)
+    all_kept, _ = apply_steps(spark, docs, _args(
+        "--steps", "ppl_mix", "--ppl-rates", "1000000,1000000,1000000"))
     assert all_kept.count() == 23            # rate 1e6 keeps everything
 
-    class Args3(Args2):
-        ppl_rates = "0,0,0"
-
-    none_kept, _ = apply_steps(spark, docs, Args3)
+    none_kept, _ = apply_steps(spark, docs, _args(
+        "--steps", "ppl_mix", "--ppl-rates", "0,0,0"))
     # every doc with bigrams dropped; none have <2 tokens here
     assert none_kept.count() == 0
 
@@ -370,3 +323,25 @@ def test_maintain_job_reports_commit_conflict(spark, tmp_path, monkeypatch):
     # expire did NOT run after the conflict (stop-mutating rule)
     assert "expired_versions" not in rep
     assert rep["version_after"] == 1
+
+
+def test_jobs_pin_utc_through_job_session(spark):
+    """Every job builds its session through pipeline.job_session, which
+    turns AQE on and pins the session time zone to UTC even when the
+    running session was set to another zone."""
+    from camelot_spark.pipeline import job_session
+
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "America/Los_Angeles")
+    try:
+        s = job_session("camelot-spark-probe")
+        assert s.conf.get(key) == "UTC"
+        assert s.conf.get("spark.sql.adaptive.enabled") == "true"
+    finally:
+        spark.conf.set(key, prev)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for job in ("extract_job", "curate_job", "maintain_job"):
+        with open(os.path.join(repo, "jobs", f"{job}.py")) as f:
+            src = f.read()
+        assert "job_session(" in src and "SparkSession.builder" not in src, job

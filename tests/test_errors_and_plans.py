@@ -182,7 +182,7 @@ class TestTdpReferenceEquivalence:
         rows, df = self._corpus(spark)
         got = {(r["doc_id"], r["chunk_idx"]):
                (r["n_chunk_tokens"], r["first_token"], r["last_token"])
-               for r in chunk_documents(df, chunk_tokens=64, overlap=16).collect()}
+               for r in chunk_documents(df).collect()}
         want = {}
         for doc_id, text, _ in rows:
             toks = text.split(" ")
@@ -196,7 +196,7 @@ class TestTdpReferenceEquivalence:
 
         rows, df = self._corpus(spark)
         got = {r["doc_id"]: (r["seq_id"], r["seq_offset"], r["n_tokens"])
-               for r in pack_sequences(df, seq_len=512).collect()}
+               for r in pack_sequences(df).collect()}
         by_src: dict = {}
         for doc_id, text, src in sorted(rows):
             n = len(text.split(" "))
@@ -291,12 +291,15 @@ class TestLshCandidateBounds:
         # precision/scale: nowhere near all-pairs (4-bit chunks gave ~n²/16)
         assert cands < 0.2 * all_pairs
 
-    def test_embedding_bucket_cap_bounds_hot_buckets(self, spark):
+    def test_embedding_bucket_cap_bounds_hot_buckets(self, spark, monkeypatch):
+        from camelot_spark.tdp import similarity
         from camelot_spark.tdp.similarity import neardup_candidates
 
         emb = _cluster_embeddings(spark)
-        uncapped = neardup_candidates(emb, bucket_cap=None).count()
-        capped = neardup_candidates(emb, bucket_cap=10).count()
+        # the product cap (10000) never binds on 300 vectors
+        uncapped = neardup_candidates(emb).count()
+        monkeypatch.setattr(similarity, "_NEARDUP_BUCKET_CAP", 10)
+        capped = neardup_candidates(emb).count()
         # clusters of 20 exceed the cap of 10 on every coherent band, so
         # their quadratic buckets are dropped entirely
         assert capped < uncapped
@@ -311,8 +314,8 @@ class TestLshCandidateBounds:
         from camelot_spark.tdp.similarity import cosine_topk, ivf_assign, ivf_topk
 
         emb = _cluster_embeddings(spark, n_clusters=10, per_cluster=20, dim=16)
-        truth = {r["vec_id"] for r in cosine_topk(emb, query_vec_id=0, k=10).collect()}
-        got = {r["vec_id"] for r in ivf_topk(emb, query_vec_id=0, k=10).collect()}
+        truth = {r["vec_id"] for r in cosine_topk(emb).collect()}
+        got = {r["vec_id"] for r in ivf_topk(emb).collect()}
         assert got == truth  # recall@10 = 1.0 vs brute force
         # pruning is real: no probed pair of cells holds the whole corpus
         sizes = sorted(
@@ -320,7 +323,8 @@ class TestLshCandidateBounds:
         )
         assert sum(sizes[-2:]) < emb.count()
 
-    def test_simhash_cap_bounds_duplicate_heavy_corpus(self, spark):
+    def test_simhash_cap_bounds_duplicate_heavy_corpus(self, spark, monkeypatch):
+        from camelot_spark.tdp import dedup
         from camelot_spark.tdp.dedup import simhash_near_dups
 
         # 30% exact duplicates: 60 of 200 docs share one text => one
@@ -329,8 +333,10 @@ class TestLshCandidateBounds:
         rows = [(i, dup if i < 60 else f"unique document number {i} with words {i * 7} {i * 13}")
                 for i in range(200)]
         docs = spark.createDataFrame(rows, "doc_id: long, text: string")
-        uncapped = simhash_near_dups(docs, bucket_cap=None).count()
-        capped = simhash_near_dups(docs, bucket_cap=20).count()
+        # the product cap (10000) never binds on 200 docs
+        uncapped = simhash_near_dups(docs).count()
+        monkeypatch.setattr(dedup, "_SIMHASH_BUCKET_CAP", 20)
+        capped = simhash_near_dups(docs).count()
         assert uncapped >= 60 * 59 // 2  # the duplicate block is all-pairs
         assert capped < uncapped
         assert capped <= 200  # hot buckets dropped => bounded output

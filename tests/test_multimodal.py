@@ -98,9 +98,9 @@ def test_media_metadata_real_png_payloads(spark):
     assert out["a"]["header_byte"] == 9
     assert (out["b"]["fake_width"], out["b"]["fake_height"]) == (20, 8)
     # resize consumes the real raster: constant image -> constant pixels
-    rs = {r["doc_id"]: r for r in mm.resize_media(df, width=8, height=4).collect()}
+    rs = {r["doc_id"]: r for r in mm.resize_media(df).collect()}
     px = np.frombuffer(rs["a"]["pixels"], dtype=np.uint8)
-    assert px.size == 32 and (px == 9).all()
+    assert px.size == 32 * 24 and (px == 9).all()
 
 
 def test_fake_route_runs_regardless_of_codec(docs):
@@ -115,12 +115,12 @@ def test_fake_route_runs_regardless_of_codec(docs):
 
 
 def test_resize_media_shapes(docs):
-    out = mm.resize_media(docs, width=16, height=8).collect()
+    out = mm.resize_media(docs).collect()
     assert len(out) == 6
     for r in out:
-        assert (r["width"], r["height"]) == (16, 8)
-        px = np.frombuffer(r["frame" if False else "pixels"], dtype=np.uint8)
-        assert px.size == 16 * 8
+        assert (r["width"], r["height"]) == (32, 24)
+        px = np.frombuffer(r["pixels"], dtype=np.uint8)
+        assert px.size == 32 * 24
 
 
 def test_resize_deterministic(docs):
@@ -129,8 +129,11 @@ def test_resize_deterministic(docs):
     assert a == b
 
 
-def test_frame_sample_fanout(docs):
-    out = mm.frame_sample(docs, frame_bytes=16, every_n=2).collect()
+def test_frame_sample_fanout(docs, monkeypatch):
+    # the product's 64-byte frames leave doc 0 (60 bytes) frameless
+    monkeypatch.setattr(mm, "_FRAME_BYTES", 16)
+    monkeypatch.setattr(mm, "_EVERY_N", 2)
+    out = mm.frame_sample(docs).collect()
     by_doc = {}
     for r in out:
         by_doc.setdefault(r["doc_id"], []).append(r)
@@ -139,20 +142,21 @@ def test_frame_sample_fanout(docs):
     assert sorted(r["frame_idx"] for r in by_doc["0"]) == [0, 2]
 
 
-def test_frame_sample_no_frames_when_payloads_shorter_than_frame(docs):
+def test_frame_sample_no_frames_when_payloads_shorter_than_frame(docs, monkeypatch):
     """Every payload (at most 90 bytes) is shorter than one frame, so
     every batch is empty: the stage still returns FRAME_SCHEMA, 0 rows."""
-    out = mm.frame_sample(docs, frame_bytes=1000, every_n=1)
+    monkeypatch.setattr(mm, "_FRAME_BYTES", 1000)
+    out = mm.frame_sample(docs)
     assert out.schema == mm.FRAME_SCHEMA
     assert out.collect() == []
 
 
 def test_media_features_histogram(docs, spark):
     out = {}
-    for r in mm.media_features_hist(docs, dim=4).collect():
+    for r in mm.media_features_hist(docs).collect():
         out.setdefault(r["doc_id"], {})[r["bucket"]] = r["cnt"]
     assert len(out) == 6
-    assert all(sorted(v) == [0, 1, 2, 3] for v in out.values())
+    assert all(sorted(v) == list(range(8)) for v in out.values())
     # histogram sums to the character count of the text
     row = docs.where("doc_id = 1").collect()[0]
     assert sum(out[1].values()) == len(row["text"])
@@ -449,7 +453,7 @@ class TestGifCodec:
         assert (got == want).all()
 
 
-def test_frame_sample_decodes_real_gif(spark):
+def test_frame_sample_decodes_real_gif(spark, monkeypatch):
     """frame_sample over a genuine multi-frame GIF payload: the emitted
     frames are the DECODED every-Nth rasters, not byte chunks."""
     from camelot_spark.tdp.gif_codec import encode_gif
@@ -459,7 +463,8 @@ def test_frame_sample_decodes_real_gif(spark):
               for _ in range(7)]
     docs = spark.createDataFrame(
         [(1, bytearray(encode_gif(frames)))], "doc_id long, payload binary")
-    out = {r["frame_idx"]: r for r in mm.frame_sample(docs, every_n=3).collect()}
+    monkeypatch.setattr(mm, "_EVERY_N", 3)  # the product's 4 keeps [0, 4]
+    out = {r["frame_idx"]: r for r in mm.frame_sample(docs).collect()}
     assert sorted(out) == [0, 3, 6]
     for idx in (0, 3, 6):
         got = np.frombuffer(out[idx]["frame"], dtype=np.uint8).reshape(6, 8)
@@ -756,14 +761,15 @@ class TestAviCodec:
         with pytest.raises(NotImplementedError, match="non-MJPEG"):
             decode_avi(bytes(avi))
 
-    def test_frame_sample_routes_avi(self, spark):
+    def test_frame_sample_routes_avi(self, spark, monkeypatch):
         from camelot_spark.tdp.avi_codec import encode_avi
 
         frames = self._frames()
         df = spark.createDataFrame(
             [(9, bytearray(encode_avi(frames, quality=95)))],
             "doc_id long, payload binary")
-        rows = mm.frame_sample(df, every_n=2).collect()
+        monkeypatch.setattr(mm, "_EVERY_N", 2)  # the product's 4 keeps [0, 4]
+        rows = mm.frame_sample(df).collect()
         assert sorted(r["frame_idx"] for r in rows) == [0, 2, 4]
         f0 = np.frombuffer(
             [r for r in rows if r["frame_idx"] == 0][0]["frame"], np.uint8)

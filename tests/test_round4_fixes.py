@@ -55,22 +55,16 @@ def test_dedup_groups_verified_keeps_true_groups(spark):
 def test_curate_dedup_near_verified_end_to_end(spark):
     """The curation delete step keeps dissimilar docs even when they are
     LSH candidates, and drops only verified near-dups."""
-    from jobs.curate_job import apply_steps
+    from jobs.curate_job import apply_steps, parse_args
 
     rows = [(1, NEAR_A, "en", "s", 100), (2, NEAR_B, "en", "s", 100),
             (3, FAR_C, "en", "s", 100), (4, FAR_D, "en", "s", 100)]
     docs = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long")
 
-    class Args:
-        steps = "dedup_near"
-        min_quality = 0
-        substr_k = 40
-        near_threshold = 7000
-        sample_rates = ""
-        strata_col = "lang"
-
-    curated, report = apply_steps(spark, docs, Args)
+    args = parse_args(["--input", "unused", "--output", "unused",
+                       "--steps", "dedup_near"])
+    curated, report = apply_steps(spark, docs, args)
     ids = {r["doc_id"] for r in curated.select("doc_id").collect()}
     assert ids == {1, 3, 4}
     assert report[-1]["docs"] == 3
@@ -136,7 +130,7 @@ def test_link_rank_matches_python_reference(spark):
 
     edges = [(1, 0), (2, 0), (3, 0), (4, 2), (0, 2)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["doc_id"]: r["rank_ppm"] for r in link_rank(df, iters=8).collect()}
+    got = {r["doc_id"]: r["rank_ppm"] for r in link_rank(df).collect()}
 
     MU, d = 1_000_000, 85
     base = MU * (100 - d) // 100

@@ -103,9 +103,10 @@ class TestJpegFactorThree:
                             factors=[(3, 1), (2, 1), (1, 1)])
 
 
-def test_frame_sample_degrades_unsupported_avi_per_row(spark):
+def test_frame_sample_degrades_unsupported_avi_per_row(spark, monkeypatch):
     """ADVICE r4: a non-MJPEG AVI payload must degrade THAT ROW to the
     fixed-size-chunk route, not fail the whole Spark task."""
+    from camelot_spark.tdp import multimodal
     from camelot_spark.tdp.avi_codec import encode_avi
     from camelot_spark.tdp.multimodal import frame_sample
 
@@ -117,7 +118,8 @@ def test_frame_sample_degrades_unsupported_avi_per_row(spark):
     docs = spark.createDataFrame(
         [("good", bytes(good)), ("bad", bytes(bad))],
         "doc_id string, payload binary")
-    out = frame_sample(docs, frame_bytes=64, every_n=1)
+    monkeypatch.setattr(multimodal, "_EVERY_N", 1)  # the product's 4 keeps 1 of 4
+    out = frame_sample(docs)
     rows = {r["doc_id"]: [] for r in out.collect()}
     for r in out.collect():
         rows[r["doc_id"]].append(r)

@@ -12,10 +12,11 @@ class TestAviRobustness:
         return [rng.randint(0, 256, (8, 8)).astype(np.uint8)
                 for _ in range(n)]
 
-    def test_truncated_idx1_degrades_row_in_frame_sample(self, spark):
+    def test_truncated_idx1_degrades_row_in_frame_sample(self, spark, monkeypatch):
         """A container truncated inside its idx1 raises struct.error in
         header parsing; frame_sample must degrade that ROW to the
         fixed-size-chunk route, not fail the task."""
+        from camelot_spark.tdp import multimodal
         from camelot_spark.tdp.avi_codec import encode_avi
         from camelot_spark.tdp.multimodal import frame_sample
 
@@ -24,7 +25,8 @@ class TestAviRobustness:
         truncated = avi[:ib + 12]  # ends mid-entry; RIFF size now lies
         docs = spark.createDataFrame(
             [("t", truncated)], "doc_id string, payload binary")
-        rows = frame_sample(docs, frame_bytes=64, every_n=1).collect()
+        monkeypatch.setattr(multimodal, "_EVERY_N", 1)
+        rows = frame_sample(docs).collect()
         assert len(rows) == len(truncated) // 64  # chunk-route fallback
 
     def test_empty_idx1_falls_back_to_movi_walk(self):
@@ -116,20 +118,20 @@ def test_semantic_dedup_keep_first(spark):
     w = [0.0, 1.0, 0.0, 0.0]
     rows = [(0, v), (1, v), (2, w), (3, [0.9, 0.1, 0.0, 0.0])]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = {r["vec_id"]: r for r in
-           semantic_dedup(emb, n_cells=2, threshold_x10k=9999).collect()}
+    out = {r["vec_id"]: r for r in semantic_dedup(emb).collect()}
     assert out[0]["is_kept"] == 1          # canonical of the dup pair
     assert out[1]["is_kept"] == 0          # exact dup of a lower id
     assert out[2]["is_kept"] == 1          # orthogonal singleton
     assert len(out) == 4
 
 
-def test_semantic_dedup_cell_cap_bounds_hot_cell(spark):
-    """A planted hot cell cannot go quadratic: with cell_cap=2, only
+def test_semantic_dedup_cell_cap_bounds_hot_cell(spark, monkeypatch):
+    """A planted hot cell cannot go quadratic: with a cell cap of 2, only
     the first 2 members of the cell (by vec_id) drop others — tail
     members are compared against the head (linear, cap x |cell|) but
     never against EACH OTHER. And when the cap doesn't bind, output is
     identical to uncapped."""
+    from camelot_spark.tdp import similarity
     from camelot_spark.tdp.similarity import semantic_dedup
 
     u = [1.0, 0.0, 0.0, 0.0]
@@ -137,14 +139,18 @@ def test_semantic_dedup_cell_cap_bounds_hot_cell(spark):
     rows = [(0, u), (1, u), (2, v), (3, v), (4, v)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    # n_cells=1 makes the whole corpus ONE hot cell by construction
+    # one cell makes the whole corpus ONE hot cell by construction; the
+    # product cap (10000) does not bind
+    monkeypatch.setattr(similarity, "_SEMANTIC_CELLS", 1)
+    monkeypatch.setattr(similarity, "_SEMDEDUP_THRESHOLD_X10K", 9900)
     uncapped = {r["vec_id"]: r["is_kept"] for r in semantic_dedup(
-        emb, n_cells=1, threshold_x10k=9900).collect()}
+        emb).collect()}
     # reps {0,1} drop 1; tail pairs (2,3),(3,4),(2,4) drop 3,4
     assert uncapped == {0: 1, 1: 0, 2: 1, 3: 0, 4: 0}
 
+    monkeypatch.setattr(similarity, "_SEMDEDUP_CELL_CAP", 2)
     capped = {r["vec_id"]: r["is_kept"] for r in semantic_dedup(
-        emb, n_cells=1, threshold_x10k=9900, cell_cap=2).collect()}
+        emb).collect()}
     # reps {0,1}: (0,1) still compared (drop 1); head x tail compared
     # but cos < threshold; tail x tail (2,3),(2,4),(3,4) NEVER compared
     # => 3 and 4 survive — the observable proof the pair space is
@@ -152,8 +158,9 @@ def test_semantic_dedup_cell_cap_bounds_hot_cell(spark):
     assert capped == {0: 1, 1: 0, 2: 1, 3: 1, 4: 1}
 
     # non-binding cap (>= cell size) reproduces uncapped exactly
+    monkeypatch.setattr(similarity, "_SEMDEDUP_CELL_CAP", 5)
     roomy = {r["vec_id"]: r["is_kept"] for r in semantic_dedup(
-        emb, n_cells=1, threshold_x10k=9900, cell_cap=5).collect()}
+        emb).collect()}
     assert roomy == uncapped
 
 
@@ -205,7 +212,7 @@ def test_session_rollup_boundary_semantics(spark):
             (5, base + dt.timedelta(seconds=2600), 7)]
     df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_id long")
     out = {}
-    for r in session_rollup(df, gap_s=1800).collect():
+    for r in session_rollup(df).collect():
         out.setdefault(r["user_id"], []).append(r)
     assert len(out[1]) == 1 and out[1][0]["n_events"] == 2
     assert out[1][0]["span_s"] == 1800
@@ -235,7 +242,7 @@ def test_session_rollup_streaming_append(spark, tmp_path):
         events = (spark.readStream
                   .schema("user_id long, ts timestamp, event_id long")
                   .parquet(inp).withWatermark("ts", "10 seconds"))
-        q = (session_rollup(events, gap_s=60)
+        q = (session_rollup(events)
              .writeStream.option("checkpointLocation", ckpt)
              .outputMode("append").trigger(availableNow=True)
              .format("parquet").option("path", outp).start())
@@ -292,7 +299,7 @@ def test_decontaminate_bloom_matches_python_mirror(spark):
             3: "completely unrelated text with no overlap at all present"}
     df = spark.createDataFrame(list(docs.items()), "doc_id long, text string")
     got = {r["doc_id"]: r["overlap_bloom"]
-           for r in decontaminate_bloom(df, threshold=3).collect()}
+           for r in decontaminate_bloom(df).collect()}
 
     bench_bits = {p for d in (0, 50) for g in shingles(docs[d])
                   for p in positions(g)}
@@ -377,7 +384,7 @@ class TestQualityClassifier:
         assert {r["pred"] for r in out} == {1, -1}
 
 
-def test_ivf_refine_brute_force(spark):
+def test_ivf_refine_brute_force(spark, monkeypatch):
     """One Lloyd iteration vs a from-scratch numpy replica, on a
     fixture where the hash-sampled pivot of cluster A is atypically
     skewed toward B: the borderline vector 3 starts in cell 0 (pivot
@@ -385,6 +392,7 @@ def test_ivf_refine_brute_force(spark):
     correction the refinement step exists to make."""
     import numpy as np
 
+    from camelot_spark.tdp import similarity
     from camelot_spark.tdp.similarity import ivf_refine
 
     A = [1.0, 0.0, 0.0, 0.0]
@@ -422,8 +430,10 @@ def test_ivf_refine_brute_force(spark):
         want[v] = (cell0[v], c1)
 
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    # two cells: the product's 16 would make every vector its own pivot
+    monkeypatch.setattr(similarity, "_SEMANTIC_CELLS", 2)
     got = {r["vec_id"]: (r["cell0"], r["cell1"], r["moved"])
-           for r in ivf_refine(df, n_cells=2).collect()}
+           for r in ivf_refine(df).collect()}
     assert {v: (c0, c1) for v, (c0, c1, _) in got.items()} == want
     assert got[3] == (0, 1, 1)           # the corrected borderline vector
     assert all(m == (1 if c0 != c1 else 0) for c0, c1, m in got.values())
@@ -462,48 +472,15 @@ def test_dedup_incremental_classifies_new_batch(spark):
     plan = dedup_incremental(new, ref)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "LeftSemi" in plan and "HashAggregate" in plan
-    # production hook: passing persisted band buckets reproduces the
-    # inline-minhash result exactly
-    from camelot_spark.tdp.dedup import banded_signatures, minhash_signatures
-
-    def buckets(df):
-        return banded_signatures(minhash_signatures(
-            df.where(F.size(F.split("text", " ")) >= 3), 32, 3,
-            portable=True), 8, 4)
-
-    got2 = {r["doc_id"]: r["status"]
-            for r in dedup_incremental(
-                new, ref, portable=True, new_banded=buckets(new),
-                ref_banded=buckets(ref)).collect()}
-    assert got2 == got
-    # operator-layer guard: buckets built WITHOUT the length filter
-    # (the natural upstream banded_signatures(minhash_signatures(df)))
-    # band short docs to '' on both sides — the degenerate-bucket drop
-    # inside dedup_incremental must keep short novel docs 'kept'
-    def raw_buckets(df):
-        return banded_signatures(
-            minhash_signatures(df, 32, 3, portable=True), 8, 4)
-
-    both = new.unionByName(new2)
-    got3 = {r["doc_id"]: r["status"]
-            for r in dedup_incremental(
-                both, ref, portable=True, new_banded=raw_buckets(both),
-                ref_banded=raw_buckets(ref)).collect()}
-    assert got3[9] == "kept"
-    assert {k: got3[k] for k in got} == got
-    # num_hashes must divide bands evenly — silent truncation refused
-    import pytest
-
-    with pytest.raises(ValueError):
-        dedup_incremental(new, ref, num_hashes=30, bands=8)
 
 
-def test_cluster_balanced_sample_quota_and_plan(spark):
+def test_cluster_balanced_sample_quota_and_plan(spark, monkeypatch):
     """Every populated cell contributes at most k vectors ranked by
     centrality, and the per-cell rank cap plans a WindowGroupLimit so
     no task ever holds a whole cell."""
     import math
 
+    from camelot_spark.tdp import similarity
     from camelot_spark.tdp.similarity import cluster_balanced_sample
 
     rng_rows = []
@@ -511,7 +488,10 @@ def test_cluster_balanced_sample_quota_and_plan(spark):
         ang = (i * 37) % 360 / 180 * math.pi
         rng_rows.append((i, [math.cos(ang), math.sin(ang), 0.25]))
     df = spark.createDataFrame(rng_rows, "vec_id long, embedding array<float>")
-    out = cluster_balanced_sample(df, n_cells=4, k=5)
+    # 4 cells of ~15 vectors, so the quota of 5 binds
+    monkeypatch.setattr(similarity, "_SEMANTIC_CELLS", 4)
+    monkeypatch.setattr(similarity, "_BALANCED_QUOTA", 5)
+    out = cluster_balanced_sample(df)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan
     rows = out.collect()
@@ -520,6 +500,7 @@ def test_cluster_balanced_sample_quota_and_plan(spark):
         per_cell.setdefault(r["ivf_cell"], []).append(r["rank"])
     assert per_cell and all(sorted(v) == list(range(1, len(v) + 1)) and len(v) <= 5
                             for v in per_cell.values())
+    assert max(len(v) for v in per_cell.values()) == 5
 
 
 def test_boilerplate_strip_df_threshold_and_cover(spark):
@@ -540,7 +521,7 @@ def test_boilerplate_strip_df_threshold_and_cover(spark):
          ],
         "doc_id long, source string, text string")
     got = {r["doc_id"]: r for r in
-           boilerplate_strip(docs, n=3, min_ratio_ppm=500_000).collect()}
+           boilerplate_strip(docs, min_ratio_ppm=500_000).collect()}
     assert got[0]["clean_text"] == "x y" and got[0]["n_removed"] == 3
     assert got[1]["clean_text"] == "" and got[1]["n_removed"] == 6
     assert got[2]["clean_text"] == "p q" and got[2]["n_removed"] == 3
@@ -550,7 +531,7 @@ def test_boilerplate_strip_df_threshold_and_cover(spark):
     assert got[6]["clean_text"] == "ab" and got[6]["n_tokens"] == 1
     # determinism under a different layout
     again = {r["doc_id"]: r["clean_text"] for r in
-             boilerplate_strip(docs.repartition(5), n=3,
+             boilerplate_strip(docs.repartition(5),
                                min_ratio_ppm=500_000).collect()}
     assert again == {k: v["clean_text"] for k, v in got.items()}
 
@@ -590,12 +571,13 @@ def test_perplexity_bucket_mix_tertiles_and_rates(spark):
     assert len(by_bucket["head"]) >= (n + 2) // 3
 
 
-def test_key_skew_profile_and_hot_keys(spark):
+def test_key_skew_profile_and_hot_keys(spark, monkeypatch):
     """Histogram buckets = floor(log2(group size)); hot_keys returns
     the k largest with deterministic tie-break and ppm share, via a
     TakeOrdered merge (never a global sort)."""
     from pyspark.sql import functions as F
 
+    from camelot_spark.tdp import relational
     from camelot_spark.tdp.relational import hot_keys, key_skew_profile
 
     # key 'a' x8 (bucket 3), 'b' x3 (bucket 1), 'c','d' x1 (bucket 0)
@@ -605,10 +587,11 @@ def test_key_skew_profile_and_hot_keys(spark):
             for r in key_skew_profile(df, "k0").collect()}
     assert prof == {3: (1, 8, 8), 1: (1, 3, 3), 0: (2, 2, 1)}
 
-    hk = hot_keys(df, "k0", k=3).collect()
+    monkeypatch.setattr(relational, "_HOT_KEYS", 3)  # the product's 10 adds 'd'
+    hk = hot_keys(df, "k0").collect()
     assert [(r["k"], r["c"]) for r in hk] == [("a", 8), ("b", 3), ("c", 1)]
     assert hk[0]["share_ppm"] == 8 * 1_000_000 // 13
-    plan = hot_keys(df, "k0", k=3)._jdf.queryExecution() \
+    plan = hot_keys(df, "k0")._jdf.queryExecution() \
         .executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
 
@@ -667,7 +650,7 @@ def test_pq_encode_matches_bruteforce_and_topk_adc(spark):
         return acc
     order = sorted((adc(expected[v]), v) for v in range(1, 40))[:10]
     want = [v for _, v in order]
-    topk = pq_topk(df, k=10).orderBy("rank").collect()
+    topk = pq_topk(df).orderBy("rank").collect()
     assert [r["vec_id"] for r in topk] == want
     assert [r["rank"] for r in topk] == list(range(1, 11))
 
@@ -684,19 +667,16 @@ def test_pq_encode_matches_bruteforce_and_topk_adc(spark):
     # the window — per-task k-row pre-reduce, the single window task
     # only ever sees k rows (the global-window analogue of
     # WindowGroupLimit)
-    top_plan = (pq_topk(df, k=10)
+    top_plan = (pq_topk(df)
                 ._jdf.queryExecution().executedPlan().toString())
     assert "TakeOrderedAndProject" in top_plan
 
 
 def test_feature_hash_embed_matches_python_and_plan(spark):
     """Hashed vectors equal a plain-Python replication of the portable
-    hash -> bucket/sign -> signed sum pipeline; dim must be a power of
-    two; the plan's only exchanges are the bounded (doc_id[, bucket])
+    hash -> bucket/sign -> signed sum pipeline; the plan's only exchanges are the bounded (doc_id[, bucket])
     partial-agg shuffles (<= dim rows per doc), never the token
     explode itself."""
-    import pytest
-
     from camelot_spark.tdp.text import feature_hash_embed, feature_hash_vec
 
     rows = [(1, "aa bb cc aa"), (2, ""), (3, "zebra  moon"),
@@ -724,9 +704,6 @@ def test_feature_hash_embed_matches_python_and_plan(spark):
         want = vec_of(text)
         assert got[doc_id] == ",".join(str(x) for x in want), doc_id
 
-    with pytest.raises(ValueError):
-        feature_hash_vec(df, dim=48)
-
     # r7 shape: the hash+scatter runs inside MapInArrow over the
     # JVM-tokenized arrays, so the only shuffle carries one slim
     # (doc_id, dim longs) row per input row — the aggregate key is
@@ -738,13 +715,15 @@ def test_feature_hash_embed_matches_python_and_plan(spark):
     assert "Join" not in plan
 
 
-def test_hashed_topk_plan_is_take_ordered(spark):
+def test_hashed_topk_plan_is_take_ordered(spark, monkeypatch):
+    from camelot_spark.tdp import text
     from camelot_spark.tdp.text import hashed_topk
 
     df = spark.createDataFrame(
         [(i, f"tok{i % 7} tok{i % 3} alpha") for i in range(30)],
         "doc_id long, text string")
-    out = hashed_topk(df, query_doc_id=0, k=5)
+    monkeypatch.setattr(text, "_TEXT_TOP_K", 5)  # the product's 10 ranks 10
+    out = hashed_topk(df)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
     rows = out.orderBy("rank").collect()
@@ -754,12 +733,13 @@ def test_hashed_topk_plan_is_take_ordered(spark):
     assert dists == sorted(dists)
 
 
-def test_write_training_shards_deterministic(spark, tmp_path):
+def test_write_training_shards_deterministic(spark, tmp_path, monkeypatch):
     """The shard writer's output order is a pure function of doc_id:
     writing the same corpus from two different input partitionings
     yields identical per-shard row sequences, each sorted by
     order_key."""
     from camelot_spark.sinks import write_training_shards
+    from camelot_spark.tdp import sampling
     from camelot_spark.tdp.sampling import shuffle_shards
 
     rows = [(i, f"doc {i}") for i in range(200)]
@@ -772,10 +752,10 @@ def test_write_training_shards_deterministic(spark, tmp_path):
     write_training_shards(df1, p1, n_shards=8)
     write_training_shards(df2, p2, n_shards=8)
 
+    monkeypatch.setattr(sampling, "_N_SHARDS", 8)  # the writer's n_shards
     key = {r["doc_id"]: (r["shard"], r["order_key"])
            for r in shuffle_shards(
-               spark.createDataFrame(rows, "doc_id long, text string"),
-               n_shards=8).collect()}
+               spark.createDataFrame(rows, "doc_id long, text string")).collect()}
 
     import pyarrow.parquet as pq
     import glob as g
@@ -804,16 +784,18 @@ def test_write_training_shards_deterministic(spark, tmp_path):
     assert on_disk == expected_shards
 
 
-def test_shard_high_bits_uniform_on_structured_ids(spark):
+def test_shard_high_bits_uniform_on_structured_ids(spark, monkeypatch):
     """Multiply-shift sharding stays uniform on a structured id space:
     an all-even corpus must fill ALL shards (the low-bits form
     ``h % n`` collapses to an affine map of doc_id mod n and fills
     only half), and shard/order_key must not be affinely related."""
+    from camelot_spark.tdp import sampling
     from camelot_spark.tdp.sampling import shuffle_shards
 
     rows = [(2 * i, "x") for i in range(512)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = shuffle_shards(df, n_shards=8).collect()
+    monkeypatch.setattr(sampling, "_N_SHARDS", 8)
+    out = shuffle_shards(df).collect()
     assert {r["shard"] for r in out} == set(range(8))
     # order_key minus the shard hash is NOT constant (different
     # multiplier, not an affine re-salt of the same hash)
@@ -833,7 +815,7 @@ def test_feature_hash_embed_null_text_is_zero_vector(spark):
     assert rows[1]["vec_str"] == ",".join(["0"] * 64)
     assert rows[1]["norm_sq"] == 0 and rows[1]["nnz"] == 0
     # and the NULL doc gets a real (not NULL-first) distance in topk
-    top = hashed_topk(df, query_doc_id=0, k=2).collect()
+    top = hashed_topk(df).collect()
     assert all(r["dist"] is not None for r in top)
 
 
@@ -865,27 +847,40 @@ def test_portable_token_hash_flat_equals_reference(spark):
     assert [r["flat"] for r in rows if r["tok"] is None] == [None]
 
 
-def test_shard_epoch_reshuffles_deterministically(spark):
-    """epoch=0 is byte-identical to the default assignment (oracles
-    unchanged); a different epoch yields a genuinely different
-    INDUCED shuffle — shard membership moves for a large fraction of
+def test_shard_epoch_reshuffles_deterministically(spark, monkeypatch):
+    """The shard writer's epoch 0 is byte-identical to shuffle_shards'
+    assignment (oracles unchanged); a different epoch yields a
+    genuinely different INDUCED shuffle — shard membership moves for a large fraction of
     docs and the per-shard document sequences change — not merely
     shifted raw order_key values (an additive re-salt is affine: it
     preserves shard high bits and induced order, which is the bug
     this test exists to keep out)."""
-    from camelot_spark.tdp.sampling import shuffle_shards
+    from pyspark.sql import functions as F
+
+    from camelot_spark.tdp import sampling
+    from camelot_spark.tdp.sampling import (_epoch_mults, order_key_expr,
+                                            shard_expr, shuffle_shards)
 
     df = spark.createDataFrame([(i, "x") for i in range(300)],
                                "doc_id long, text string")
 
     def induced(epoch):
-        rows = shuffle_shards(df, n_shards=8, epoch=epoch).collect()
+        # the per-epoch expressions sinks.write_training_shards applies
+        m1, m2 = _epoch_mults(epoch)
+        rows = df.select(F.col("doc_id"), shard_expr(8, mult=m1).alias("shard"),
+                         order_key_expr(mult=m2).alias("order_key")).collect()
         seq = {}
         for r in sorted(rows, key=lambda r: (r["order_key"], r["doc_id"])):
             seq.setdefault(r["shard"], []).append(r["doc_id"])
         return seq
 
     base, e0 = induced(0), induced(0)
+    monkeypatch.setattr(sampling, "_N_SHARDS", 8)
+    plain = {}
+    for r in sorted(shuffle_shards(df).collect(),
+                    key=lambda r: (r["order_key"], r["doc_id"])):
+        plain.setdefault(r["shard"], []).append(r["doc_id"])
+    assert plain == base
     e1, e1b = induced(1), induced(1)
     assert e0 == base
     assert e1 == e1b                          # per-epoch determinism
@@ -898,9 +893,10 @@ def test_shard_epoch_reshuffles_deterministically(spark):
     assert set(e1) == set(range(8))           # still uniform
 
 
-def test_mine_hard_negatives_excludes_dups_and_ranks_by_overlap(spark):
+def test_mine_hard_negatives_excludes_dups_and_ranks_by_overlap(spark, monkeypatch):
     """Near-dups of the query (dist <= dup_dist) are never negatives;
     low-overlap docs are filtered; rank = overlap desc, dist asc."""
+    from camelot_spark.tdp import text
     from camelot_spark.tdp.text import mine_hard_negatives
 
     rows = [
@@ -912,9 +908,9 @@ def test_mine_hard_negatives_excludes_dups_and_ranks_by_overlap(spark):
         (5, "nu xi omicron pi rho"),                 # 0-overlap: dropped
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = mine_hard_negatives(df, query_doc_id=0, k=10,
-                              min_overlap=3, dup_dist=0).orderBy("rank") \
-        .collect()
+    # radius 0: the product's 8 also drops doc 2 (one token off the query)
+    monkeypatch.setattr(text, "_DUP_DIST", 0)
+    got = mine_hard_negatives(df).orderBy("rank").collect()
     ids = [r["doc_id"] for r in got]
     assert 1 not in ids          # exact dup excluded (dist 0 not > 0)
     assert 4 not in ids and 5 not in ids

@@ -225,9 +225,11 @@ class TestSimhashProdWiring:
         brute-force hamming scan over the Python-reference simhashes."""
         monkeypatch.setattr(dedup_mod, "_prod_simhash_token_hash",
                             _injected_simhash_hash)
+        # radius 16: the product's 3 keeps only the tightest pairs
+        monkeypatch.setattr(dedup_mod, "_SIMHASH_MAX_HAMMING", 16)
         docs = _neardup_corpus(spark)
         got = {(r["a_id"], r["b_id"], r["hamming"]) for r in
-               dedup_mod.simhash_near_dups(docs, max_hamming=16).collect()}
+               dedup_mod.simhash_near_dups(docs).collect()}
         sigs = {d: _py_simhash(t) & 0xFFFFFFFFFFFFFFFF
                 for d, t in docs.collect()}
         ids = sorted(sigs)

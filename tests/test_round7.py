@@ -277,7 +277,7 @@ def test_assign_with_embedding_numpy_matches_expression(spark):
     assert out[1] is not None
 
 
-def test_cosine_topk_numpy_matches_expression(spark):
+def test_cosine_topk_numpy_matches_expression(spark, monkeypatch):
     """r7 numpy-scored cosine_topk == the broadcast-crossJoin
     expression reference (incl. NULL embeddings and missing query)."""
     import random
@@ -309,11 +309,12 @@ def test_cosine_topk_numpy_matches_expression(spark):
     for i in range(2, 60):
         rows.append((i, [random.uniform(-2, 2) for _ in range(4)]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = sorted(map(tuple, sim.cosine_topk(df, 0, 10).collect()))
+    got = sorted(map(tuple, sim.cosine_topk(df).collect()))
     want = sorted(map(tuple, reference(df, 0, 10).collect()))
     assert got == want
     # missing query id -> empty, like the old empty crossJoin
-    assert sim.cosine_topk(df, 10_000, 5).count() == 0
+    monkeypatch.setattr(sim, "_QUERY_VEC_ID", 10_000)
+    assert sim.cosine_topk(df).count() == 0
 
 
 def test_feature_hash_vec_arrow_matches_explode_agg(spark):
@@ -449,7 +450,7 @@ def test_decontaminate_python_matches_explode_join(spark):
     from camelot_spark.tdp.dedup import _shingles
 
     def ref_decontaminate(documents, n=3, threshold=5):
-        benchmark, corpus = ct._default_split(documents, None)
+        benchmark, corpus = ct._default_split(documents)
         bench_grams = benchmark.select(
             F.explode(_shingles(F.col("text"), n)).alias("g")).distinct()
         grams = corpus.select(
@@ -468,7 +469,7 @@ def test_decontaminate_python_matches_explode_join(spark):
                         .otherwise(0).cast("int").alias("contaminated")))
 
     def ref_bloom(documents, n=3, threshold=5):
-        benchmark, corpus = ct._default_split(documents, None)
+        benchmark, corpus = ct._default_split(documents)
         set_bits = (
             benchmark.select(F.explode(_shingles(F.col("text"), n)).alias("g"))
             .distinct()

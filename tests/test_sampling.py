@@ -131,7 +131,7 @@ def test_bm25_ranking_semantics(spark):
     ] + [(10 + i, "common filler words again %d" % i) for i in range(10)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    top = bm25_topk(docs, ["zebra", "common"], k=5).collect()
+    top = bm25_topk(docs, ["zebra", "common"]).collect()
     ranked = [r["doc_id"] for r in top]
     assert ranked[0] == 1                      # rare+dense wins
     assert 4 in ranked[:3]                     # rare term beats common
@@ -144,13 +144,15 @@ def test_bm25_ranking_semantics(spark):
     assert idx["common"]["df"] == 12
 
 
-def test_inverted_index_caps_hot_postings(spark):
+def test_inverted_index_caps_hot_postings(spark, monkeypatch):
+    from camelot_spark.tdp import ranking
     from camelot_spark.tdp.ranking import inverted_index
 
     docs = spark.createDataFrame(
         [(i, "hot term everywhere") for i in range(50)],
         "doc_id long, text string")
-    row = {r["term"]: r for r in inverted_index(docs, max_postings=8).collect()}
+    monkeypatch.setattr(ranking, "_MAX_POSTINGS", 8)  # the product's 20 lists 0..19
+    row = {r["term"]: r for r in inverted_index(docs).collect()}
     assert row["hot"]["df"] == 50                       # exact count
     assert row["hot"]["postings"] == "0,1,2,3,4,5,6,7"  # bounded list
 
@@ -242,11 +244,11 @@ def test_dataset_split_stable_and_leak_free(docs, spark):
     sub = {r["doc_id"]: r["split"] for r in sampling.dataset_split(
         docs.where(F.col("doc_id") < 100)).collect()}
     assert sub == {k: v for k, v in full.items() if k < 100}
-    # leakage control: id_col = the cluster-canonical id => all
+    # leakage control: split_expr over the cluster-canonical id => all
     # members of a duplicate cluster share a split
     clustered = docs.withColumn("canon_id", (F.col("doc_id") / 10).cast("long"))
     by_cluster = {}
-    for r in sampling.dataset_split(clustered, id_col="canon_id").join(
-            clustered.select("doc_id", "canon_id"), "doc_id").collect():
+    for r in clustered.select(
+            "canon_id", sampling.split_expr("canon_id").alias("split")).collect():
         by_cluster.setdefault(r["canon_id"], set()).add(r["split"])
     assert all(len(s) == 1 for s in by_cluster.values())

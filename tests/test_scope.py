@@ -7,8 +7,9 @@ by a product file other than itself, and every top-level ``def`` or
 ``class`` there must be referenced (an AST ``Name`` or ``Attribute``,
 outside its own body) by a product file. Every public method of a
 class there must be referenced as an ``Attribute`` by a product file.
-Outside ``camelot_spark/tdp/``, every parameter with a default must be
-passed by at least one product call of that name. Code only tests
+Every parameter with a default must be passed by at least one product
+call of that name: a setting with one product value is a module
+constant, which a test monkeypatches when it needs another. Code only tests
 reach is deleted, moved under ``tests/``, or kept in ``KEEP`` with its
 reason: a bare name exempts that definition, ``func.param`` one
 parameter. Spark-free.
@@ -38,6 +39,16 @@ KEEP = {
     "encode_jpeg_progressive": _ENCODER,
     "encode_png": _ENCODER,
     "add_stream_table.row_h": "tests/test_golden.py builds its tall-row golden with row_h=80.0",
+    "encode_jpeg.subsampling": _ENCODER,
+    "encode_jpeg.restart_interval": _ENCODER,
+    "encode_jpeg.non_interleaved": _ENCODER,
+    "encode_jpeg.split_scans": _ENCODER,
+    "encode_jpeg.gray_factors": _ENCODER,
+    "encode_avi.fps": _ENCODER,
+    "encode_avi.quality": _ENCODER,
+    "encode_avi.audio_rate": _ENCODER,
+    "encode_avi.with_index": _ENCODER,
+    "encode_wav.n_channels": _ENCODER,
 }
 
 
@@ -130,20 +141,13 @@ def _is_static(fn):
                for d in fn.decorator_list)
 
 
-# tdp/ is left out: its registry queries take size knobs (k, n_cells,
-# num_hashes, bands, ...) that only tests set, small, so they run on
-# tiny corpora. Folding those into constants rewrites test inputs
-# across dozens of files and is a change of its own.
 def _unpassed_parameters():
     """``func.param`` → its dotted path, for every defaulted parameter
-    outside ``tdp/`` that no product call of that name passes."""
+    that no product call of that name passes."""
     trees, modules, _ = _scan()
     calls, loaded = _calls_and_bare_loads(trees)
-    tdp = os.path.join(REPO, "camelot_spark", "tdp") + os.sep
     out = {}
     for m, p in modules.items():
-        if p.startswith(tdp):
-            continue
         for stmt in trees[p].body:
             if isinstance(stmt, _FUNC) and stmt.name not in loaded:
                 targets = [(stmt, stmt.name, 0, m)]

@@ -93,8 +93,10 @@ def test_stats_rollup_total_function(spark):
     lic = "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdef"  # 32 chars, repeat-free
     rows = [(0, "<x0><x1>" + lic), (1, lic + "<y0><y1>"),
             (2, "".join("<z%d>" % i for i in range(18)))]
+    docs = _docs(spark, rows)
+    spans = duplicate_substring_spans(docs, k=12, portable=True)
     out = {r["doc_id"]: r for r in duplicate_substring_stats(
-        _docs(spark, rows), k=12, portable=True).collect()}
+        docs, spans=spans).collect()}
     assert set(out) == {0, 1, 2}                    # total function
     assert out[2]["n_regions"] == 0 and out[2]["dup_ppm"] == 0
     assert out[0]["n_regions"] == 0                 # canonical copy
@@ -135,9 +137,10 @@ def test_strip_produces_reference_clean_text(spark, portable):
         want[doc_id] = ("".join(kept),
                         sum(e - s for s, e in regions.get(doc_id, [])),
                         len(regions.get(doc_id, [])))
+    docs = _docs(spark, rows)
+    spans = duplicate_substring_spans(docs, k=8, portable=portable)
     out = {r["doc_id"]: (r["clean_text"], r["removed_chars"], r["n_regions"])
-           for r in strip_duplicate_substrings(
-               _docs(spark, rows), k=8, portable=portable).collect()}
+           for r in strip_duplicate_substrings(docs, spans=spans).collect()}
     assert out == want
     assert out[1][1] == 0 and out[4][1] == 0      # canonical + clean intact
     assert lic not in out[2][0] and lic not in out[3][0]

@@ -113,9 +113,9 @@ BOUNDED_WINDOW_GROUPS = {
     # #sources rows (enum-small), broadcast back
     "pack_sequences_global",
     # group = one IVF cell, and the rank window IS the hot-cell cap
-    # (r6): a per-cell O(n log n) sort whose <=cell_cap filter bounds
+    # (r6): a per-cell O(n log n) sort whose cell-cap filter bounds
     # the downstream pair join to cap*|cell| instead of the |cell|^2
-    # join this audit would otherwise flag. cell_cap (10000) exceeds
+    # join this audit would otherwise flag. The cap (10000) exceeds
     # spark.sql.optimizer.windowGroupLimitThreshold (1000), so Spark
     # plans a full Window rather than a WindowGroupLimit — the sort is
     # the cheap side of the trade by construction
