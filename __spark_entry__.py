@@ -619,10 +619,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # log2 group-size histogram + hottest keys (new r5)
         "token_skew_profile": lambda s, d: relational.key_skew_profile(
             _load(s, d, "documents").select(
-                F.explode(F.split("text", " ")).alias("tok")), "tok"),
+                F.explode(F.split("text", " ")).alias("tok"))),
         "token_hot_keys": lambda s, d: relational.hot_keys(
             _load(s, d, "documents").select(
-                F.explode(F.split("text", " ")).alias("tok")), "tok"),
+                F.explode(F.split("text", " ")).alias("tok"))),
         # integer Rocchio quality classifier distilling a stopword-
         # ratio weak label into hashed-bucket weights (new r5)
         "train_quality_classifier": lambda s, d: perceptron.train_quality_classifier(
@@ -712,8 +712,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # range / reclaimable chars (new r6; shares the LSH prefix)
         "dedup_report": lambda s, d: dedup.dedup_report(
             _load(s, d, "documents").where(F.col("doc_id") % 2 == 0),
-            portable=True, verify_threshold_x10k=7000,
-            pairs=_portable_lsh_pairs(s, d)),
+            _portable_lsh_pairs(s, d)),
         # --- flagship extraction (non-SQL-expressible, rows-only) ---
         "extract_stream_corpus": _extract_corpus("stream", fx.STREAM_FAMILIES),
         "extract_lattice_corpus": _extract_corpus("lattice", fx.LATTICE_FAMILIES),
@@ -742,14 +741,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "winnow_fingerprints": lambda s, d: tdp_text.winnow_fingerprints(_load(s, d, "documents")),
         "normalize_text": lambda s, d: tdp_text.normalize_text(_load(s, d, "documents")),
         "repetition_stats": lambda s, d: tdp_text.repetition_stats(_load(s, d, "documents")),
-        "scrub_pii": lambda s, d: tdp_text.scrub_pii(_load(s, d, "documents"), decorate=True),
+        "scrub_pii": lambda s, d: tdp_text.scrub_pii(
+            tdp_text.decorate_pii(_load(s, d, "documents"))),
         "top_ngrams": lambda s, d: tdp_text.top_ngrams(_load(s, d, "documents")),
         # html boilerplate strip + DOM-block main-content heuristics
-        # (north_rule's web modality; decorate=True synthesizes the
+        # (north_rule's web modality; decorate_html synthesizes the
         # deterministic HTML shell from the plain-text corpus)
-        "html_strip": lambda s, d: tdp_html.strip_html(_load(s, d, "documents"), decorate=True),
-        "html_main_content": lambda s, d: tdp_html.main_content(_load(s, d, "documents"), decorate=True),
-        "html_links": lambda s, d: tdp_html.extract_links(_load(s, d, "documents"), decorate=True),
+        "html_strip": lambda s, d: tdp_html.strip_html(
+            tdp_html.decorate_html(_load(s, d, "documents"))),
+        "html_main_content": lambda s, d: tdp_html.main_content(
+            tdp_html.decorate_html(_load(s, d, "documents"))),
+        "html_links": lambda s, d: tdp_html.extract_links(
+            tdp_html.decorate_html(_load(s, d, "documents"))),
         "decontaminate": lambda s, d: contamination.decontaminate(_load(s, d, "documents")),
         # Bloom-filter variant: fixed 1-KB broadcast filter instead of
         # the benchmark gram strings; deterministic false positives the
@@ -757,16 +760,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "decontaminate_bloom": lambda s, d: contamination.decontaminate_bloom(
             _load(s, d, "documents")),
         "chunk_documents": lambda s, d: packing.chunk_documents(_load(s, d, "documents")),
-        # shard_docs=128 exercises the bounded-shard shape (a window
-        # task holds at most 128 docs regardless of source skew); the
-        # SQL twin shards identically
+        # the bounded-shard shape (a window task holds at most 128 docs
+        # regardless of source skew); the SQL twin shards identically
         "pack_sequences": lambda s, d: packing.pack_sequences(
-            _load(s, d, "documents"), shard_docs=128),
+            _load(s, d, "documents")),
         # globally contiguous packing via the hierarchical prefix sum;
         # the twin is the NAIVE one-task global window, so a hash match
         # proves the doc→shard→source decomposition exact (new r5)
         "pack_sequences_global": lambda s, d: packing.pack_sequences_global(
-            _load(s, d, "documents"), shard_docs=128),
+            _load(s, d, "documents")),
         # equal-quota-per-semantic-cell curation sampling; the per-cell
         # rank caps through WindowGroupLimit (new r5)
         "cluster_balanced_sample": lambda s, d: similarity.cluster_balanced_sample(
@@ -782,8 +784,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (materializing 8 band rows/doc costs more than the fold)
         "dedup_incremental": lambda s, d: dedup.dedup_incremental(
             _load(s, d, "documents").where(F.col("doc_id") % 2 == 1),
-            _load(s, d, "documents").where(F.col("doc_id") % 2 == 0),
-            portable=True),
+            _load(s, d, "documents").where(F.col("doc_id") % 2 == 0)),
         "dedup_exact": lambda s, d: dedup.dedup_exact(_load(s, d, "documents")),
         "clean_corpus": lambda s, d: cleaning.clean_corpus(_load(s, d, "documents")),
         "dedup_keep_first": lambda s, d: dedup.dedup_keep_first(_load(s, d, "documents")),
@@ -796,12 +797,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # deterministic growth-stable train/val/test split (new r5)
         "dataset_split": lambda s, d: sampling.dataset_split(
             _load(s, d, "documents")),
-        "corpus_mix": lambda s, d: sampling.corpus_mix(
-            _load(s, d, "documents"),
-            targets={"de": 200000, "en": 500000, "es": 100000, "fr": 200000},
-            sample_total=200),
+        "corpus_mix": lambda s, d: sampling.corpus_mix(_load(s, d, "documents")),
         "stratified_topk_sample": lambda s, d: sampling.stratified_topk_sample(
-            _load(s, d, "documents"), k=10),
+            _load(s, d, "documents")),
         "length_histogram": lambda s, d: sampling.length_histogram(
             _load(s, d, "documents")),
         "kmv_distinct": lambda s, d: dedup.kmv_distinct(_load(s, d, "documents")),

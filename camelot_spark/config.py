@@ -24,8 +24,8 @@ class StreamConfig:
     row_tol: float = 2
     column_tol: float = 0
     # LAParams analogue (`camelot/utils.py:763-814` get_page_layout):
-    # {"char_margin": 1.0, "word_margin": 0.1} regroup textline chars
-    # in-kernel before parsing; None keeps the encoded grouping.
+    # char_margin/word_margin (over LAYOUT_DEFAULTS) regroup textline
+    # chars in-kernel before parsing; None keeps the encoded grouping.
     layout_kwargs: dict | None = None
 
     def __post_init__(self):
@@ -70,12 +70,13 @@ LATTICE_ONLY = {
 }
 
 
-# implemented get_page_layout knobs (`camelot/utils.py:763-814`);
-# line_margin shapes PDFMiner textboxes, which extraction never reads
-LAYOUT_KEYS = {"char_margin", "word_margin"}
+# implemented get_page_layout knobs and their defaults
+# (`camelot/utils.py:763-814`); line_margin shapes PDFMiner textboxes,
+# which extraction never reads
+LAYOUT_DEFAULTS = {"char_margin": 1.0, "word_margin": 0.1}
 
 
-def validate_input(kwargs: dict, flavor: str = "lattice") -> None:
+def validate_input(kwargs: dict, flavor: str) -> None:
     """Reject kwargs belonging to the other flavor — `utils.py:121-134` —
     and unknown layout_kwargs keys."""
     bad = LATTICE_ONLY & set(kwargs) if flavor == "stream" else STREAM_ONLY & set(kwargs)
@@ -83,11 +84,11 @@ def validate_input(kwargs: dict, flavor: str = "lattice") -> None:
         raise ValueError(
             "{} cannot be used with flavor='{}'".format(",".join(sorted(bad)), flavor)
         )
-    bad_lk = set(kwargs.get("layout_kwargs") or {}) - LAYOUT_KEYS
+    bad_lk = set(kwargs.get("layout_kwargs") or {}) - set(LAYOUT_DEFAULTS)
     if bad_lk:
         raise ValueError(
             "unsupported layout_kwargs: {} (supported: {})".format(
-                ",".join(sorted(bad_lk)), ",".join(sorted(LAYOUT_KEYS))
+                ",".join(sorted(bad_lk)), ",".join(sorted(LAYOUT_DEFAULTS))
             )
         )
 

@@ -72,8 +72,8 @@ def _payload_of(builder: "DocBuilder", s: dict) -> dict:
     return p if p is not None else (json.loads(s["text"]) if s["text"] else {})
 
 
-def meta_span(width: float, height: float, offset: int = 0) -> dict:
-    return span("meta", {"width": width, "height": height}, offset)
+def meta_span(width: float, height: float) -> dict:
+    return span("meta", {"width": width, "height": height}, 0)
 
 
 class DocBuilder:
@@ -83,7 +83,7 @@ class DocBuilder:
         self.doc_id = doc_id
         self.width = width
         self.height = height
-        self.spans = [meta_span(width, height, 0)]
+        self.spans = [meta_span(width, height)]
         self._off = 1
         # payload dicts keyed by offset (raw_spans fast path)
         self._raw: dict[int, dict] = {0: {"width": width, "height": height}}
@@ -146,15 +146,15 @@ class DocBuilder:
 
 
 def add_stream_table(b: DocBuilder, cells: list[list[str]], col_x: list[float],
-                     y_top: float, row_h: float = ROW_H,
-                     small: dict | None = None) -> dict:
-    """Left-aligned stream table; returns geometry facts for golden math.
+                     y_top: float, small: dict | None = None) -> dict:
+    """Left-aligned stream table, rows ``ROW_H`` apart; returns geometry
+    facts for golden math.
 
     ``cells[i][j]``: text of row i (top first), col j; '' → no textline.
     ``small``: {(i, j): set(char_idx)} superscript chars.
     """
     nrows = len(cells)
-    y_rows = [y_top - i * row_h for i in range(nrows)]  # y0 of each row's lines
+    y_rows = [y_top - i * ROW_H for i in range(nrows)]  # y0 of each row's lines
     for i, row in enumerate(cells):
         for j, text in enumerate(row):
             if text == "":
@@ -452,14 +452,12 @@ def doc_striptext(doc_id: str = "striptext-0", dx: float = 0.0, dy: float = 0.0)
     return b
 
 
-def doc_rotated(rotation: str, doc_id: str | None = None, dx: float = 0.0, dy: float = 0.0,
-                base=None):
+def doc_rotated(rotation: str, doc_id: str, dx: float, dy: float, base=None):
     """Doc with all coordinates rotated 90° — clockwise or anticlockwise
     (models clockwise_table_1.pdf etc.). ``base`` picks the upright
     builder (default health/stream; doc_foo gives the rotated-lattice
     case where ruling segments swap roles). Golden = the upright golden
     (kernel unrotates)."""
-    doc_id = doc_id or f"rotated_{'cw' if rotation == 'clockwise' else 'acw'}-0"
     upright = (base or doc_health)(doc_id, dx, dy)
     W, Hh = upright.width, upright.height
     m = [-1.0, 1.0] if rotation == "clockwise" else [1.0, -1.0]
@@ -475,7 +473,7 @@ def doc_rotated(rotation: str, doc_id: str | None = None, dx: float = 0.0, dy: f
         return (min(ax, bx), min(ay, by), max(ax, bx), max(ay, by))
 
     rotated = DocBuilder(doc_id, width=Hh, height=W)
-    rotated.spans = [meta_span(Hh, W, 0)]
+    rotated.spans = [meta_span(Hh, W)]
 
     def emit(kind, payload, off, media_ref=""):
         rotated.spans.append(span(kind, payload, off, media_ref))
@@ -513,12 +511,12 @@ def doc_rotated(rotation: str, doc_id: str | None = None, dx: float = 0.0, dy: f
     return rotated
 
 
-def doc_blank(doc_id: str = "blank-0"):
+def doc_blank(doc_id: str):
     """No text, no media → no output spans (models blank.pdf)."""
     return DocBuilder(doc_id)
 
 
-def doc_imageonly(doc_id: str = "imageonly-0"):
+def doc_imageonly(doc_id: str):
     """Only a media span → passthrough (models image.pdf)."""
     b = DocBuilder(doc_id)
     ref = f"mem://{doc_id}/page-1"
@@ -561,28 +559,6 @@ def doc_rasterfoo(doc_id: str = "rasterfoo-0", dx: float = 0.0, dy: float = 0.0)
     return b
 
 
-def add_chars_run(b: DocBuilder, text: str, x0: float, y0: float,
-                  gaps: dict[int, float] | None = None) -> dict:
-    """One text_h span encoded as a raw char run: ``gaps[i]`` points of
-    extra space BEFORE char i. The encoded line keeps the run as one
-    textline; extraction-time layout_kwargs decide the real grouping
-    (LAParams analogue, `camelot/utils.py:763-814`)."""
-    chars = []
-    x = x0
-    for i, c in enumerate(text):
-        if gaps and i in gaps:
-            x += gaps[i]
-        chars.append({"c": c, "x0": x, "y0": y0, "x1": x + CW, "y1": y0 + H})
-        x += CW
-    payload = {
-        "t": text + "\n",
-        "x0": x0, "y0": y0, "x1": chars[-1]["x1"], "y1": y0 + H,
-        "chars": chars + [{"c": "\n"}],
-    }
-    b.add_span("text_h", payload)
-    return payload
-
-
 def doc_laparams(doc_id: str = "laparams-0", dx: float = 0.0, dy: float = 0.0):
     """LAParams knob family (SURVEY S4): one body cell arrives as a raw
     char run with a 12 pt interior gap. Under the non-default
@@ -599,7 +575,18 @@ def doc_laparams(doc_id: str = "laparams-0", dx: float = 0.0, dy: float = 0.0):
     run_row = 3
     cells[run_row][0] = ""  # emitted as a char run below instead
     t = add_stream_table(b, cells, col_x, y_top)
-    add_chars_run(b, "q3totals", col_x[0], y_top - run_row * ROW_H, gaps={2: 12.0})
+    # the cell as one text_h span encoded as a raw char run, with 12 pt
+    # of extra space before char 2: the encoded line keeps the run as
+    # one textline; extraction-time layout_kwargs decide the real
+    # grouping (LAParams analogue, `camelot/utils.py:763-814`)
+    x0, y0 = col_x[0], y_top - run_row * ROW_H
+    chars, x = [], x0
+    for i, c in enumerate("q3totals"):
+        x += 12.0 if i == 2 else 0.0
+        chars.append({"c": c, "x0": x, "y0": y0, "x1": x + CW, "y1": y0 + H})
+        x += CW
+    b.add_span("text_h", {"t": "q3totals\n", "x0": x0, "y0": y0, "x1": chars[-1]["x1"],
+                          "y1": y0 + H, "chars": chars + [{"c": "\n"}]})
     golden = [row[:] for row in cells]
     golden[run_row][0] = "q3 totals"
     b.add_table_golden(t["anchor_estimate"] - 10.0, col_x[0] - 10.0, 1, golden)
@@ -791,7 +778,6 @@ def corpus() -> list:
 
 
 # families safe to run under default per-flavor kwargs (bench tiling)
-BENCH_FAMILIES = ["health", "foo", "twotables", "rowspan", "prose"]
 STREAM_FAMILIES = ["health", "twotables", "prose"]
 LATTICE_FAMILIES = ["foo", "rowspan"]
 
@@ -818,19 +804,17 @@ def families_by_config() -> list[tuple[str, dict, list[str]]]:
             for (flavor, _), (kw, fams) in sorted(groups.items())]
 
 
-def builder_for(doc_key: str, families: list[str] | None = None,
-                raw: bool = False) -> DocBuilder:
+def builder_for(doc_key: str, families: list[str], raw: bool = False) -> DocBuilder:
     """Deterministic builder for an arbitrary key (corpus synthesis from
     driver tables): family + jitter seeded by crc32(doc_key).
 
     ``raw=True`` skips JSON-serializing span payloads; only
     ``raw_spans()`` is valid on the result (the fused pipeline path)."""
-    fams = families or BENCH_FAMILIES
     seed = zlib.crc32(doc_key.encode())
     if (seed % 1000) / 1000.0 < SKEW_FRAC:
-        fam = SKEW_FAMILY if SKEW_FAMILY in fams else fams[0]
+        fam = SKEW_FAMILY if SKEW_FAMILY in families else families[0]
     else:
-        fam = fams[(seed >> 4) % len(fams)]
+        fam = families[(seed >> 4) % len(families)]
     dx = float((seed >> 8) % 40)
     dy = float((seed >> 16) % 60)
     if not raw:

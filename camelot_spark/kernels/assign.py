@@ -21,8 +21,8 @@ def split_textline(
     grid: Grid,
     tline: dict,
     direction: str,
-    flag_size: bool = False,
-    strip_text: str = "",
+    flag_size: bool,
+    strip_text: str,
 ) -> list[tuple[int, int, str]]:
     """Distribute a multi-cell line's chars into per-cell substrings —
     `camelot/utils.py:488-603`.

@@ -103,7 +103,7 @@ def infer_columns(
     text_x_max: float,
     row_tol: float,
     column_tol: float,
-    table_label: str = "",
+    table_label: str,
 ) -> list[tuple[float, float]]:
     """Full inferred-columns path — `stream.py:347-385`.
 

@@ -42,7 +42,7 @@ class Grid:
         self.left[:] = self.right[:] = self.top[:] = self.bottom[:] = True
         return self
 
-    def set_edges(self, vertical: np.ndarray, horizontal: np.ndarray, joint_tol: float = 2) -> "Grid":
+    def set_edges(self, vertical: np.ndarray, horizontal: np.ndarray, joint_tol: float) -> "Grid":
         """Mark cell edges crossed by ruling segments — `core.py:394-527`.
 
         Replicates the reference's index-matching exactly, including the

@@ -22,7 +22,7 @@ MAX_TABLES_PER_PAGE = 10
 MIN_JOINTS_PER_TABLE = 4
 
 
-def merge_close_lines(ar: list[float] | np.ndarray, line_tol: float = 2) -> list[float]:
+def merge_close_lines(ar: list[float] | np.ndarray, line_tol: float) -> list[float]:
     """Running-mean merge of nearly-equal coordinates — `utils.py:382-407`.
 
     Sequential by construction: each merge updates the running value the
@@ -44,7 +44,7 @@ def merge_close_lines(ar: list[float] | np.ndarray, line_tol: float = 2) -> list
 
 
 def segment_joints(
-    v_segments: np.ndarray, h_segments: np.ndarray, tol: float = 2.0
+    v_segments: np.ndarray, h_segments: np.ndarray, tol: float
 ) -> np.ndarray:
     """All (x, y) crossings of vertical × horizontal segments.
 
@@ -73,7 +73,7 @@ def segment_joints(
 
 
 def segment_tables(
-    v_segments: np.ndarray, h_segments: np.ndarray, tol: float = 2.0
+    v_segments: np.ndarray, h_segments: np.ndarray, tol: float
 ) -> dict[tuple[float, float, float, float], list[tuple[float, float]]]:
     """Table bboxes + joints from ruling segments.
 
@@ -135,7 +135,7 @@ def segment_tables(
 def grid_intervals(
     tk: tuple[float, float, float, float],
     joints: list[tuple[float, float]],
-    line_tol: float = 2,
+    line_tol: float,
 ) -> tuple[list[tuple[float, float]], list[tuple[float, float]]]:
     """Columns/rows from joints + bbox corners — `lattice.py:298-323`.
 

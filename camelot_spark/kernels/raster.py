@@ -100,8 +100,7 @@ def _gaussian_mean_strips(g: np.ndarray, k: int):
 
 
 def adaptive_threshold(
-    img: np.ndarray, process_background: bool = False, blocksize: int = 15,
-    c: int = -2,
+    img: np.ndarray, process_background: bool, blocksize: int, c: int,
 ) -> np.ndarray:
     """Grayscale (H, W) uint8 → binary ruling mask — `image_processing.py:9-53`.
 
@@ -351,10 +350,10 @@ def connected_components(mask: np.ndarray) -> list[tuple[int, int, int, int]]:
 
 def find_lines(
     threshold: np.ndarray,
-    regions: list[tuple[int, int, int, int]] | None = None,
-    direction: str = "horizontal",
-    line_scale: int = 15,
-    iterations: int = 0,
+    regions: list[tuple[int, int, int, int]] | None,
+    direction: str,
+    line_scale: int,
+    iterations: int,
 ) -> tuple[np.ndarray, list[tuple[int, int, int, int]]]:
     """Ruling segments in one direction — `image_processing.py:56-135`.
 

@@ -15,7 +15,7 @@ import numpy as np
 from .textlines import TL, isclose
 
 
-def group_rows_indices(tl: TL, row_tol: float = 2) -> list[np.ndarray]:
+def group_rows_indices(tl: TL, row_tol: float) -> list[np.ndarray]:
     """Row groups as index arrays into ``tl`` (reading-ordered input),
     each sorted by x0 (`stream.py:131`). Blank lines are skipped; the
     bootstrap group anchored at y=0 is discarded (`stream.py:136`)."""

@@ -116,7 +116,7 @@ def _try_fast_alignment(st: EdgeState, xarr, keep, y0l, y1l, edge_tol: float) ->
     return True
 
 
-def generate_textedges(tl: TL, edge_tol: float = 50) -> dict[str, EdgeState]:
+def generate_textedges(tl: TL, edge_tol: float) -> dict[str, EdgeState]:
     """Accumulate left/right/middle edges over reading-ordered textlines.
 
     Semantics per `camelot/core.py:98-135`: for each line with >1 char

@@ -94,8 +94,8 @@ def make_textlines(records: list[dict]) -> TL:
     return TL(x0, y0, x1, y1, text, chars, offset)
 
 
-def regroup_horizontal(records: list[dict], char_margin: float = 1.0,
-                       word_margin: float = 0.1) -> list[dict]:
+def regroup_horizontal(records: list[dict], char_margin: float,
+                       word_margin: float) -> list[dict]:
     """LAParams-analogue textline regrouping — the extractor-side knob
     for `camelot/utils.py:763-814` (``get_page_layout`` exposes
     PDFMiner's char/word margins; camelot's default char_margin is 1.0).
@@ -154,11 +154,6 @@ def regroup_horizontal(records: list[dict], char_margin: float = 1.0,
                 }
             )
     return out
-
-
-def empty_textlines() -> TL:
-    z = np.empty(0)
-    return TL(z, z, z, z, [], [], np.empty(0, dtype=np.int64))
 
 
 def sort_reading_order(tl: TL) -> TL:

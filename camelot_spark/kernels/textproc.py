@@ -15,7 +15,7 @@ from itertools import groupby
 import numpy as np
 
 
-def text_strip(text: str, strip: str = "") -> str:
+def text_strip(text: str, strip: str) -> str:
     """Remove any of the chars in ``strip`` — `camelot/utils.py:410-428`."""
     if not strip:
         return text
@@ -35,7 +35,7 @@ def char_size(ch: dict, direction: str) -> float:
     return float(np.round(ch["x1"] - ch["x0"], decimals=6))
 
 
-def flag_font_size(chars: list[dict], direction: str, strip_text: str = "") -> str:
+def flag_font_size(chars: list[dict], direction: str, strip_text: str) -> str:
     """Wrap minimum-size consecutive char runs in <s></s> —
     `camelot/utils.py:436-485`.
 

@@ -15,6 +15,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
+from ..config import LAYOUT_DEFAULTS
 from ..kernels import textlines as tlk
 from ..kernels import transform as tfm
 from ..kernels.textlines import TL
@@ -41,7 +42,7 @@ class Page:
     n_spans: int = 0
 
 
-def parse_page(spans: list[dict], layout_kwargs: dict | None = None) -> Page:
+def parse_page(spans: list[dict], layout_kwargs: dict | None) -> Page:
     """Decode one document's span array into a :class:`Page`.
 
     Rotation is detected from char CTM signs (`camelot/utils.py:286-314`)
@@ -89,11 +90,9 @@ def parse_page(spans: list[dict], layout_kwargs: dict | None = None) -> Page:
             )
 
     if layout_kwargs:
+        lk = {**LAYOUT_DEFAULTS, **layout_kwargs}
         h_rec = tlk.regroup_horizontal(
-            h_rec,
-            char_margin=float(layout_kwargs.get("char_margin", 1.0)),
-            word_margin=float(layout_kwargs.get("word_margin", 0.1)),
-        )
+            h_rec, float(lk["char_margin"]), float(lk["word_margin"]))
     h_text = tlk.make_textlines(h_rec)
     v_text = tlk.make_textlines(v_rec)
 

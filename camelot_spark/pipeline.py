@@ -29,7 +29,7 @@ from .schema import DOCUMENTS_SCHEMA, EXTRACTED_SCHEMA, KERNEL_VERSION
 from .tdp.arrow_seams import map_rows, rows_batch
 
 
-def synthesize_documents(source_df, families: list[str] | None = None):
+def synthesize_documents(source_df, families: list[str]):
     """Distributed fixture-corpus synthesis: one span-document per input
     ``doc_id``, deterministically derived from that key (FIXTURES.md §4).
     Generation happens on executors inside Arrow batches — no
@@ -107,7 +107,7 @@ def _extract_arrow_iter(batches, cfg, fail_fast, docs_of=None):
 def synthesize_and_extract(
     keys_df,
     flavor: str,
-    families: list[str] | None = None,
+    families: list[str],
     fail_fast: bool = False,
     **kwargs,
 ):

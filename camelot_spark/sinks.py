@@ -133,7 +133,7 @@ def to_html(extracted: DataFrame) -> DataFrame:
 _FORMATS = {"csv": to_csv, "json": to_json, "html": to_html}
 
 
-def export(extracted: DataFrame, path: str, fmt: str = "csv") -> None:
+def export(extracted: DataFrame, path: str, fmt: str) -> None:
     """Bulk export — `TableList.export` (`camelot/core.py:689-735`).
 
     One output partition dir per doc (distributed analogue of one file
@@ -228,9 +228,8 @@ def span_stats(extracted: DataFrame) -> DataFrame:
     )
 
 
-def write_training_shards(documents: DataFrame, path: str,
-                          n_shards: int = 64,
-                          epoch: int = 0) -> None:
+def write_training_shards(documents: DataFrame, path: str, n_shards: int,
+                          epoch: int) -> None:
     """Materialize the deterministic training shuffle
     (``tdp.sampling.shuffle_shards``): one directory per shard, rows
     inside each shard's files in (order_key, doc_id) order — the

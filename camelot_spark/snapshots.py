@@ -147,7 +147,7 @@ class SnapshotLog:
                 out.append(name)
         return sorted(out)
 
-    def commit(self, data_dir: str, metrics: dict | None = None) -> dict:
+    def commit(self, data_dir: str, metrics: dict | None) -> dict:
         """Publish ONE new snapshot whose data = parent's data + the new
         directory. Returns the committed manifest."""
         rel = os.path.relpath(data_dir, self.root)
@@ -185,7 +185,7 @@ class SnapshotLog:
         df.write.mode("error").parquet(data_dir)
         return self.commit(data_dir, metrics=metrics)
 
-    def compact(self, spark, target_partitions: int = 1) -> dict:
+    def compact(self, spark, target_partitions: int) -> dict:
         """Rewrite the table's accumulated small data files into
         ``target_partitions`` files and commit ONE replacing snapshot —
         Iceberg's ``rewrite_data_files`` maintenance action. Long

@@ -13,10 +13,13 @@ from pyspark.sql import DataFrame
 _SIZE_SUFFIXES = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
 
 
-def _bytes_conf(spark, key: str, default: int) -> int:
-    """Parse a Spark byte-size conf value ('128MB', '134217728b', …)."""
+def _max_partition_bytes(spark) -> int:
+    """``spark.sql.files.maxPartitionBytes`` parsed from its byte-size
+    form ('128MB', '134217728b', …); Spark's 128 MB default when unset
+    or unparsable."""
+    default = 128 << 20
     try:
-        raw = str(spark.conf.get(key)).strip().lower()
+        raw = str(spark.conf.get("spark.sql.files.maxPartitionBytes")).strip().lower()
     except Exception:
         return default
     num = raw.rstrip("kmgtib")
@@ -43,7 +46,7 @@ def _estimated_scan_splits(df: DataFrame) -> int | None:
         return None
     if not files:
         return None
-    max_split = _bytes_conf(df.sparkSession, "spark.sql.files.maxPartitionBytes", 128 << 20)
+    max_split = _max_partition_bytes(df.sparkSession)
     splits = 0
     for uri in files:
         parsed = urlparse(uri)

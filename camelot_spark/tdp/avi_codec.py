@@ -177,8 +177,7 @@ def _to_gray(img: np.ndarray) -> np.ndarray:
     return img
 
 
-def sample_video_frames(payload: bytes, every_n: int = 1
-                        ) -> list[tuple[int, np.ndarray]]:
+def sample_video_frames(payload: bytes, every_n: int) -> list[tuple[int, np.ndarray]]:
     """Every Nth video frame as (frame_idx, (H, W) uint8 grayscale).
     With an idx1 index the skipped frames' bytes are never touched;
     decode cost is ceil(n_frames / every_n) JPEG decodes either way."""

@@ -101,51 +101,31 @@ def bpe_train(documents: DataFrame) -> DataFrame:
         learned, "merge_rank int, left string, right string, pair_count long")
 
 
-def bpe_token_counts(documents: DataFrame,
-                     merges: DataFrame | None = None) -> DataFrame:
-    """Train ``_N_MERGES`` merges on the given corpus, then ENCODE that
-    corpus with them: per document, the number of BPE tokens after all
-    merges apply (guards excluded) — the sequence-length statistic that
-    drives packing/quota decisions once a tokenizer exists.
-
-    ``merges``: an already-learned merge table (bpe_train's output
-    schema). When given, the per-round count→argmax→replace jobs are
-    skipped entirely and the ≤``_N_MERGES`` literal replaces apply in
+def bpe_token_counts(documents: DataFrame, merges: DataFrame) -> DataFrame:
+    """ENCODE the corpus with an already-learned merge table
+    (``bpe_train``'s output schema): per document, the number of BPE
+    tokens after all merges apply (guards excluded) — the
+    sequence-length statistic that drives packing/quota decisions once
+    a tokenizer exists. The ≤``_N_MERGES`` literal replaces apply in
     ONE chained projection — replace is associative-in-sequence, so
     chaining in rank order equals the per-round application exactly.
     This is how a production encode pass runs (the tokenizer is
     trained once, applied everywhere), and how the driver query shares
-    bpe_train's persisted prefix. Without ``merges`` the loop trains
-    in place as before (9 sequential driver-gated jobs)."""
-    if merges is not None:
-        rows = sorted(merges.collect(), key=lambda r: r["merge_rank"])
-        s = F.col("s")
-        for m in rows[:_N_MERGES]:
-            l, r = m["left"], m["right"]
-            s = F.replace(s, F.lit(f" {l} {r} "), F.lit(f" {l}{r} "))
-        toks = F.filter(F.split(s, " "),
-                        lambda t: (F.length(t) > 0) & (t != "|"))
-        return _initial_state(documents).select(
-            "doc_id", F.size(toks).cast("bigint").alias("n_tokens"))
-    spark = documents.sparkSession
-    state = _initial_state(documents).localCheckpoint(eager=False)
-    for _ in range(_N_MERGES):
-        best = (
-            _pair_counts(state)
-            .orderBy(F.col("c").desc(), F.col("l").asc(), F.col("r").asc())
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        l, r = best[0]["l"], best[0]["r"]
-        state = state.select(
-            "doc_id",
-            F.replace(F.col("s"), F.lit(f" {l} {r} "), F.lit(f" {l}{r} ")).alias("s"),
-        ).localCheckpoint(eager=False)
-    toks = F.filter(F.split(F.col("s"), " "),
+    bpe_train's persisted prefix.
+
+    A merge side that is empty or holds ``' '`` or ``'|'`` would break
+    the single-space, guard-separated state the replaces rely on; such
+    a row raises ``ValueError``."""
+    rows = sorted(merges.collect(), key=lambda r: r["merge_rank"])
+    s = F.col("s")
+    for m in rows[:_N_MERGES]:
+        l, r = m["left"], m["right"]
+        if not l or not r or any(c in l + r for c in " |"):
+            raise ValueError(f"merge row breaks the single-space state: {m}")
+        s = F.replace(s, F.lit(f" {l} {r} "), F.lit(f" {l}{r} "))
+    toks = F.filter(F.split(s, " "),
                     lambda t: (F.length(t) > 0) & (t != "|"))
-    return state.select(
+    return _initial_state(documents).select(
         "doc_id", F.size(toks).cast("bigint").alias("n_tokens"))
 
 

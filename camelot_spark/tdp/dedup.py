@@ -24,10 +24,11 @@ from pyspark.sql import functions as F
 from .arrow_seams import list_parts
 
 # One value per setting, replayed by the twins: word 3-gram shingles,
-# 32 minhashes in 8 bands; simhash pairs within 3 bits with hot chunk
-# buckets above the cap dropped; the KMV sketch keeps 64 minimums.
+# 32 minhashes in 8 bands; simhash pairs within 3 bits, bucketed on 4
+# chunks, with hot chunk buckets above the cap dropped; the KMV sketch
+# keeps 64 minimums.
 _SHINGLE_N, _NUM_HASHES, _BANDS = 3, 32, 8
-_SIMHASH_MAX_HAMMING, _SIMHASH_BUCKET_CAP = 3, 10000
+_SIMHASH_MAX_HAMMING, _SIMHASH_BUCKET_CAP, _SIMHASH_CHUNKS = 3, 10000, 4
 _KMV_K = 64
 
 
@@ -45,7 +46,7 @@ def dedup_exact(documents: DataFrame) -> DataFrame:
     )
 
 
-def _zip_grams(col, n: int = 3):
+def _zip_grams(col, n: int):
     """Word n-gram occurrences (dupes kept) as array<string>, built
     from ``arrays_zip`` of n shifted slices + one concat per element —
     the cheapest expression form (r7): the old per-position
@@ -59,7 +60,7 @@ def _zip_grams(col, n: int = 3):
         zipped, lambda z: F.concat_ws(" ", *[z[str(i)] for i in range(n)]))
 
 
-def _shingles(col, n: int = 3):
+def _shingles(col, n: int):
     """Distinct word n-gram shingles of a text column (empty when the
     text has fewer than n tokens or NULL — callers filter those out)."""
     toks = F.split(col, " ")
@@ -89,7 +90,7 @@ def ngram_jaccard_adjacent(documents: DataFrame) -> DataFrame:
     )
 
 
-def _shingle_rows(documents: DataFrame, n: int = 3) -> DataFrame:
+def _shingle_rows(documents: DataFrame, n: int) -> DataFrame:
     """One row per word n-gram OCCURRENCE: (doc_id, __mh_s) — the
     explode-first shingle generator for the minhash partial-agg paths.
 
@@ -227,10 +228,10 @@ def _portable_sig_arrow(ex: DataFrame, num_hashes: int) -> DataFrame:
     return ex.mapInArrow(batches, "doc_id bigint, sig array<bigint>")
 
 
-def minhash_signatures(documents: DataFrame, portable: bool = False) -> DataFrame:
+def minhash_signatures(documents: DataFrame, portable: bool) -> DataFrame:
     """K minhashes per doc: min over shingles of hash_k(shingle).
 
-    ``portable=False`` (default, the scale path) uses xxhash64(s, k) —
+    ``portable=False`` (the scale path) uses xxhash64(s, k) —
     the fastest built-in 64-bit hash. ``portable=True`` derives hash_k
     from the polynomial token hash
     ((ph·(2654435761+k) + 40503·(k+1)) mod 1e9+7), fully reproducible
@@ -453,11 +454,11 @@ def simhash64(documents: DataFrame) -> DataFrame:
 
 
 def _chunked_hamming_pairs(
-    sigs: DataFrame, n_chunks: int, chunk_bits: int,
-    materialize: bool = True,
+    sigs: DataFrame, chunk_bits: int, materialize: bool = True,
 ) -> DataFrame:
     """Pigeonhole chunk-bucket join over a ``simhash`` column: a pair
-    within ``_SIMHASH_MAX_HAMMING`` < n_chunks shares ≥1 exact chunk.
+    within ``_SIMHASH_MAX_HAMMING`` < ``_SIMHASH_CHUNKS`` shares ≥1
+    exact chunk.
 
     The bucket cap drops (chunk_id, chunk) buckets bigger than 10000
     before the self-join: simhash values cluster on near-dup-heavy
@@ -478,7 +479,7 @@ def _chunked_hamming_pairs(
         F.posexplode(
             F.array(*[
                 F.shiftrightunsigned("simhash", chunk_bits * c).bitwiseAND(F.lit(mask))
-                for c in range(n_chunks)
+                for c in range(_SIMHASH_CHUNKS)
             ])
         ).alias("chunk_id", "chunk"),
     )
@@ -512,7 +513,7 @@ def _chunked_hamming_pairs(
 def simhash_near_dups(documents: DataFrame) -> DataFrame:
     """Near-dup pairs by 64-bit SimHash hamming distance ≤ 3, bucketed
     by 16-bit chunks (see _chunked_hamming_pairs)."""
-    return _chunked_hamming_pairs(simhash64(documents), n_chunks=4, chunk_bits=16)
+    return _chunked_hamming_pairs(simhash64(documents), chunk_bits=16)
 
 
 def simhash_portable32(documents: DataFrame) -> DataFrame:
@@ -551,9 +552,7 @@ def simhash_near_dups_portable(documents: DataFrame) -> DataFrame:
     # less than the checkpoint's blocking job (measured 1.7 vs 2.0 s
     # at sf0.1; the prod 64-bit path measures the opposite way)
     return _chunked_hamming_pairs(
-        simhash_portable32(documents), n_chunks=4, chunk_bits=8,
-        materialize=False,
-    )
+        simhash_portable32(documents), chunk_bits=8, materialize=False)
 
 
 # Like MINHASH_PORTABLE_SQL, the oracle twin runs on a deterministic
@@ -807,8 +806,7 @@ def dedup_groups(documents, portable: bool = False,
     )
 
 
-def dedup_report(documents, verify_threshold_x10k: int = 3000,
-                 portable: bool = False, pairs=None):
+def dedup_report(documents, pairs):
     """Pre-delete audit of a verified dedup run: one row per would-be
     dedup GROUP — the report a curation pipeline reads BEFORE running
     the destructive keep-first delete. Output (component, n_docs,
@@ -819,18 +817,16 @@ def dedup_report(documents, verify_threshold_x10k: int = 3000,
     chars_dropped = the text volume the delete would reclaim (sum over
     non-canonical members).
 
-    Scale shape: candidates from the banded LSH prefix (shareable via
-    ``pairs``), exact-Jaccard verification on candidate docs only,
-    min-label propagation for components; the stats are two
-    partial aggregations over (id, longs) rows joined on the 8-byte
-    component key — the corpus text is read once for lengths and never
-    shuffled."""
+    Scale shape: ``pairs`` are the LSH candidates (the shareable banded
+    prefix), exact-Jaccard verified at ``_VERIFY_THRESHOLD`` on
+    candidate docs only, min-label propagation for components; the
+    stats are two partial aggregations over (id, longs) rows joined on
+    the 8-byte component key — the corpus text is read once for
+    lengths and never shuffled."""
     from pyspark.sql import functions as F
 
-    if pairs is None:
-        pairs = minhash_lsh_pairs(documents, portable=portable)
     verified = verify_pairs_jaccard(
-        documents, pairs, threshold_x10k=verify_threshold_x10k)
+        documents, pairs, threshold_x10k=_VERIFY_THRESHOLD)
     # feeds BOTH the label propagation and the pair-stats aggregation:
     # materialize once (same pattern as verify's cand)
     verified = verified.localCheckpoint(eager=True)
@@ -1167,9 +1163,7 @@ def _kmv_cap(batches, k: int):
     yield from acc
 
 
-def dedup_incremental(
-    new_docs: DataFrame, ref_docs: DataFrame, portable: bool = False,
-) -> DataFrame:
+def dedup_incremental(new_docs: DataFrame, ref_docs: DataFrame) -> DataFrame:
     """Cross-snapshot dedup: classify each NEW document against an
     existing reference corpus — the continuous-ingest shape (each crawl
     snapshot deduped against everything already kept) that a self-join
@@ -1189,8 +1183,9 @@ def dedup_incremental(
       filter them before the signature fold, so no side bands a
       shingle-less doc to the degenerate '' bucket).
 
-    Each side minhashes here; the registry query measured that a
-    persisted banded prefix costs more than the fold it saves.
+    Each side minhashes here with the portable hash family; the
+    registry query measured that a persisted banded prefix costs more
+    than the fold it saves.
     """
     ids = new_docs.select(F.col("doc_id").cast("bigint").alias("doc_id"))
 
@@ -1206,7 +1201,7 @@ def dedup_incremental(
 
     def buckets(docs):
         return banded_signatures(
-            minhash_signatures(docs.where(long_enough), portable=portable))
+            minhash_signatures(docs.where(long_enough), portable=True))
 
     new_b = buckets(new_docs)
     ref_b = buckets(ref_docs).select("band", "band_sig").distinct()
@@ -1226,8 +1221,8 @@ def dedup_incremental(
     )
 
 
-# Twin of dedup_incremental(new = odd doc_ids, ref = even doc_ids,
-# portable=True): one banded CTE over the whole corpus (same
+# Twin of dedup_incremental(new = odd doc_ids, ref = even doc_ids):
+# one banded CTE over the whole corpus (same
 # polynomial-hash chain as MINHASH_PORTABLE_SQL), split by parity at
 # the join.
 DEDUP_INCREMENTAL_SQL = """

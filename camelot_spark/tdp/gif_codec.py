@@ -27,6 +27,8 @@ import struct
 import numpy as np
 
 GIF_MAGIC = b"GIF8"
+# the encoder's LZW minimum code size: one literal code per 8-bit pixel
+_MIN_CODE_SIZE = 8
 
 
 # ----------------------------------------------------------------- encode
@@ -34,11 +36,10 @@ GIF_MAGIC = b"GIF8"
 class _LZWWriter:
     """Sub-block packed little-endian bitstream of literal codes."""
 
-    def __init__(self, min_code_size: int = 8):
-        self.min_code_size = min_code_size
-        self.clear = 1 << min_code_size
+    def __init__(self):
+        self.clear = 1 << _MIN_CODE_SIZE
         self.eoi = self.clear + 1
-        self.width = min_code_size + 1
+        self.width = _MIN_CODE_SIZE + 1
         self.acc = 0
         self.nbits = 0
         self.bytes = bytearray()
@@ -93,8 +94,8 @@ def encode_gif(frames: list[np.ndarray], delay_cs: int = 4,
         out += b"\x21\xf9\x04\x00" + struct.pack("<H", delay_cs) + b"\x00\x00"
         out += b"\x2c" + struct.pack("<HHHH", 0, 0, w, h)
         out.append(0x40 if interlace else 0x00)
-        out.append(8)  # LZW minimum code size
-        lzw = _LZWWriter(8)
+        out.append(_MIN_CODE_SIZE)
+        lzw = _LZWWriter()
         lzw.put(lzw.clear)
         count = 0
         rows = np.asarray(frame, dtype=np.uint8)

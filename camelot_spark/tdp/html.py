@@ -11,10 +11,11 @@ byte-identical logic. The block classifier is a deterministic
 jusText/readability-style heuristic: split the DOM into block-level
 chunks, score each by word count and link density, keep content blocks.
 
-The synthetic corpus is plain text, so ``decorate=True`` wraps each
-document in a deterministic HTML shell (nav/ads/footer boilerplate
-keyed on doc_id) exactly the way scrub_pii decorates PII — driver
-queries opt in; production callers run on their real HTML.
+Every operator reads an ``html`` column. The synthetic corpus is
+plain text, so the registry queries first run ``decorate_html``, which
+wraps each document in a deterministic HTML shell (nav/ads/footer
+boilerplate keyed on doc_id), the way ``text.decorate_pii`` decorates
+PII; production callers run on their real HTML.
 """
 
 from __future__ import annotations
@@ -82,20 +83,18 @@ def _strip_tags(col, scripts_removed: bool = False):
     return F.trim(F.regexp_replace(decoded, " +", " "))
 
 
-def strip_html(documents: DataFrame, decorate: bool = False) -> DataFrame:
-    """(doc_id, clean_text, n_tags): boilerplate-free text plus the
-    number of tags removed. Input: an ``html`` column, or ``decorate=True``
-    to synthesize one from ``text`` (driver/bench corpus)."""
-    src = decorate_html(documents) if decorate else documents.select("doc_id", "html")
+def strip_html(documents: DataFrame) -> DataFrame:
+    """(doc_id, clean_text, n_tags): boilerplate-free text of the
+    ``html`` column plus the number of tags removed."""
     html = F.col("html")
-    return src.select(
+    return documents.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         _strip_tags(html).alias("clean_text"),
         F.regexp_count(html, F.lit(_TAG)).cast("bigint").alias("n_tags"),
     )
 
 
-def main_content(documents: DataFrame, decorate: bool = False) -> DataFrame:
+def main_content(documents: DataFrame) -> DataFrame:
     """jusText-style block classification: split the DOM on block-level
     closing tags; per block compute word count and link density (chars
     inside <a> / text chars); a block is CONTENT iff it has at least
@@ -106,7 +105,6 @@ def main_content(documents: DataFrame, decorate: bool = False) -> DataFrame:
     Scale shape: split + transform + filter + aggregate over a per-row
     array — no explode, no shuffle; the whole classifier runs in
     codegen on the scan."""
-    src = decorate_html(documents) if decorate else documents.select("doc_id", "html")
     # script/style bodies can contain block-closing tags — remove them
     # BEFORE segmentation (jusText operates on the cleaned DOM)
     cleaned = F.regexp_replace(
@@ -140,7 +138,7 @@ def main_content(documents: DataFrame, decorate: bool = False) -> DataFrame:
     # chain per reference; as a multi-use column CollapseProject keeps
     # it staged and it evaluates once per row (the quantize_embeddings
     # pattern) — measured 2.1 -> 0.9 s at sf0.1
-    staged = src.select(
+    staged = documents.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         scored.alias("__blocks"))
     content = F.filter(
@@ -237,17 +235,16 @@ FROM scored
 _ANCHOR_FULL = '<a [^>]*href="([^"]*)"[^>]*>([^<]*)</a>'
 
 
-def extract_links(documents: DataFrame, decorate: bool = False) -> DataFrame:
+def extract_links(documents: DataFrame) -> DataFrame:
     """(doc_id, link_idx, href, anchor_text) — one row per <a> in
     document order; the DOM link-graph feed (outlink extraction for
     crawl frontier / PageRank-style dedup). One regexp_extract_all +
     posexplode: the explode is scan-local, the only wide op is whatever
     the caller aggregates next."""
-    src = decorate_html(documents) if decorate else documents.select("doc_id", "html")
     hrefs = F.regexp_extract_all(F.col("html"), F.lit(_ANCHOR_FULL), F.lit(1))
     texts = F.regexp_extract_all(F.col("html"), F.lit(_ANCHOR_FULL), F.lit(2))
     pairs = F.zip_with(hrefs, texts, lambda h, t: F.struct(h.alias("href"), t.alias("anchor_text")))
-    return src.select(
+    return documents.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.posexplode(pairs).alias("link_idx", "l"),
     ).select(

@@ -195,7 +195,7 @@ def _pad_replicate(comp: np.ndarray, ph: int, pw: int) -> np.ndarray:
     return p
 
 
-def _forward_blocks(arr: np.ndarray, quality: int, factors=None):
+def _forward_blocks(arr: np.ndarray, quality: int, factors):
     """uint8 image → per-component quantized zigzag coefficient arrays
     (bh_i, bw_i, 64) plus the quant tables — shared by the baseline and
     progressive encoders so both emit IDENTICAL coefficients.
@@ -247,15 +247,13 @@ def _forward_blocks(arr: np.ndarray, quality: int, factors=None):
 
 
 def _headers(marker_sof: int, zzs, qts, gray: bool, h: int, w: int,
-             ac_bits, ac_vals, factors=None) -> bytearray:
+             ac_bits, ac_vals, factors) -> bytearray:
     out = bytearray(b"\xff\xd8")  # SOI
     out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
     for i, q in enumerate(qts):
         out += _seg(0xDB, bytes([i]) + bytes(int(q[_ZZ_ROWS[z], _ZZ_COLS[z]])
                                              for z in range(64)))
     nc = len(zzs)
-    if factors is None:
-        factors = [(1, 1)] * nc
     sof = struct.pack(">BHHB", 8, h, w, nc)
     for c in range(nc):
         sof += bytes([c + 1, (factors[c][0] << 4) | factors[c][1],
@@ -954,12 +952,12 @@ def _sos_header(comps_sel, ss, se, ah, al) -> bytes:
     return _seg(0xDA, body + bytes([ss, se, (ah << 4) | al]))
 
 
-def _enc_ac_first(zz, ss: int, se: int, al: int, grid=None) -> bytes:
+def _enc_ac_first(zz, ss: int, se: int, al: int, grid) -> bytes:
     """G.1.2.2: run-length coding of the point-transformed band with
     cross-block EOB-run accumulation. ``grid`` bounds the block raster
     to the component's NATIVE grid (non-interleaved AC scans)."""
     w = _BitWriter()
-    bh, bw = grid if grid is not None else zz.shape[:2]
+    bh, bw = grid
     eobrun = 0
 
     def flush_eobrun():
@@ -1002,13 +1000,13 @@ def _enc_ac_first(zz, ss: int, se: int, al: int, grid=None) -> bytes:
     return bytes(w.buf)
 
 
-def _enc_ac_refine(zz, ss: int, se: int, al: int, grid=None) -> bytes:
+def _enc_ac_refine(zz, ss: int, se: int, al: int, grid) -> bytes:
     """G.1.2.3 refinement: newly-significant coefficients coded as
     (run, 1) + sign, already-significant ones contribute buffered
     correction bits associated with the next symbol or EOB run (cf.
     libjpeg encode_mcu_AC_refine — independently re-derived)."""
     w = _BitWriter()
-    bh, bw = grid if grid is not None else zz.shape[:2]
+    bh, bw = grid
     eobrun = 0
     bebuf: list[int] = []   # correction bits owed to the pending EOB run
 

@@ -9,10 +9,11 @@ dataloader.
 - ``pack_sequences``: concatenate documents in a deterministic order
   and cut at ``_SEQ_LEN`` token boundaries (GPT-style packing),
   assigning every document its (sequence id, offset). The running
-  token count is a window cumsum PARTITIONED BY ``source`` — a global
-  (unpartitioned) cumsum would serialize 100 TB through one task, so
-  packing parallelizes across sources/shards and is documented as
-  per-shard, exactly how production packers shard their input.
+  token count is a window cumsum PARTITIONED BY (``source``,
+  ``doc_id // _SHARD_DOCS``) — a global (unpartitioned) cumsum would
+  serialize 100 TB through one task, so packing parallelizes across
+  shards and is documented as per-shard, exactly how production
+  packers shard their input.
 - ``pack_sequences_global``: the same concatenate-and-cut semantics
   but over ONE contiguous global token stream, via a hierarchical
   prefix sum (doc → shard → source) so no task ever holds more than a
@@ -28,6 +29,9 @@ from pyspark.sql import functions as F
 
 
 _SEQ_LEN = 512  # tokens per training sequence
+# docs per packing shard: (source, doc_id // _SHARD_DOCS) bounds any
+# window task at this many docs regardless of source skew
+_SHARD_DOCS = 128
 
 
 def chunk_documents(documents: DataFrame) -> DataFrame:
@@ -77,35 +81,32 @@ FROM c
 """
 
 
-def pack_sequences(
-    documents: DataFrame, shard_docs: int | None = None
-) -> DataFrame:
+def _sharded_tokens(documents: DataFrame) -> DataFrame:
+    """(source, doc_id, n_tokens, shard): the shard is
+    ``doc_id // _SHARD_DOCS`` within a source."""
+    n_tok = F.size(F.split(F.col("text"), " ")).cast("bigint")
+    return documents.select(
+        "source", F.col("doc_id").cast("bigint").alias("doc_id"), n_tok.alias("n_tokens")
+    ).withColumn(
+        "shard", F.floor(F.col("doc_id") / F.lit(_SHARD_DOCS)).cast("bigint")
+    )
+
+
+def pack_sequences(documents: DataFrame) -> DataFrame:
     """Concatenate-and-cut packing into ``_SEQ_LEN``-token sequences:
     documents ordered by doc_id within each shard are laid end-to-end;
     every document gets the
     training-sequence id and intra-sequence offset where it starts.
     Output: (source, doc_id, n_tokens, seq_id, seq_offset).
 
-    The cumulative token count is a window cumsum partitioned by the
-    shard key, so packing parallelism equals shard count. The default
-    (``shard_docs=None``) shards by ``source`` alone — fine when
-    sources are many and balanced, but ONE giant source serializes
-    through one task. ``shard_docs=N`` sub-shards each source into
-    ``doc_id // N`` blocks (packing is per-shard by definition — real
-    packers shard their input the same way), bounding any task at N
-    docs regardless of source skew."""
-    n_tok = F.size(F.split(F.col("text"), " ")).cast("bigint")
-    shard_keys = ["source"]
-    base = documents.select(
-        "source", F.col("doc_id").cast("bigint").alias("doc_id"), n_tok.alias("n_tokens")
-    )
-    if shard_docs is not None:
-        base = base.withColumn(
-            "shard", F.floor(F.col("doc_id") / F.lit(int(shard_docs))).cast("bigint")
-        )
-        shard_keys = ["source", "shard"]
+    The cumulative token count is a window cumsum partitioned by
+    (source, ``doc_id // _SHARD_DOCS``), so packing parallelism equals
+    shard count and ONE giant source does not serialize through one
+    task (packing is per-shard by definition — real packers shard
+    their input the same way)."""
+    base = _sharded_tokens(documents)
     w = (
-        Window.partitionBy(*shard_keys)
+        Window.partitionBy("source", "shard")
         .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -117,9 +118,8 @@ def pack_sequences(
     )
 
 
-# Twin of the driver call pack_sequences(docs, shard_docs=128): the
-# cumsum partitions on (source, doc_id // 128), the bounded-shard
-# shape the Spark side ships.
+# Twin of pack_sequences: the cumsum partitions on
+# (source, doc_id // 128), the bounded-shard shape the Spark side ships.
 PACK_SEQUENCES_SQL = """
 WITH t AS (
   SELECT source, CAST(doc_id AS BIGINT) AS doc_id,
@@ -138,9 +138,7 @@ FROM c
 """
 
 
-def pack_sequences_global(
-    documents: DataFrame, shard_docs: int = 128
-) -> DataFrame:
+def pack_sequences_global(documents: DataFrame) -> DataFrame:
     """Globally contiguous concatenate-and-cut packing: the whole
     corpus ordered by (source, doc_id) is one token stream, cut at
     ``_SEQ_LEN`` boundaries; every document gets the global sequence id
@@ -151,10 +149,10 @@ def pack_sequences_global(
     the hierarchical prefix-sum instead — the tree-scan every
     large-scale packer uses, expressed in three bounded windows:
 
-    1. within-shard exclusive cumsum, group ≤ ``shard_docs`` docs;
+    1. within-shard exclusive cumsum, group ≤ ``_SHARD_DOCS`` docs;
     2. per-source exclusive cumsum of shard TOTALS (24-byte rows,
-       group = docs_per_source / shard_docs — at 10^12 docs with the
-       production ``shard_docs`` ~1e6 that is ~1e6 rows per task; add
+       group = docs_per_source / _SHARD_DOCS — at 10^12 docs with a
+       production ``_SHARD_DOCS`` ~1e6 that is ~1e6 rows per task; add
        a fourth level only past ~10^14 docs);
     3. exclusive cumsum of source totals (#sources rows, enum-small,
        broadcast back).
@@ -170,15 +168,8 @@ def pack_sequences_global(
     ``ORDER BY source`` (DuckDB defaults NULLS LAST) places it — a
     plain equi-join here would silently drop those rows instead.
     """
-    n_tok = F.size(F.split(F.col("text"), " ")).cast("bigint")
-    base = documents.select(
-        "source",
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        n_tok.alias("n_tokens"),
-    ).withColumn(
-        "shard", F.floor(F.col("doc_id") / F.lit(int(shard_docs))).cast("bigint")
-    )
-    # level 1: exclusive cumsum within a shard (<= shard_docs rows)
+    base = _sharded_tokens(documents)
+    # level 1: exclusive cumsum within a shard (<= _SHARD_DOCS rows)
     w_doc = (
         Window.partitionBy("source", "shard").orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)

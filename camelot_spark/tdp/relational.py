@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 
 SESSION_GAP_S = 1800
 _HOT_KEYS = 10
+# point-in-interval bucket width: near the registry intervals' 0.45 span
+_INTERVAL_BUCKET_WIDTH = 1.0
 
 
 def sessionize_gaps(events: DataFrame) -> DataFrame:
@@ -242,29 +244,27 @@ FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
 """
 
 
-def bucketized_interval_join(
-    points: DataFrame, intervals: DataFrame,
-    point_col: str, lo_col: str, hi_col: str, bucket_width: float,
-) -> DataFrame:
-    """Point-in-interval join as an EQUI-join — the scale fix for the
+def bucketized_interval_join(points: DataFrame, intervals: DataFrame) -> DataFrame:
+    """Point-in-interval join (``value`` in [``lo``, ``hi``]) as an
+    EQUI-join — the scale fix for the
     range join Catalyst can only plan as a nested loop (BNLJ/cartesian:
     O(points × intervals), the classic cluster-killer). Each interval
     is exploded to the buckets it covers (bounded by
-    interval_span/bucket_width — pick the width near the typical span
-    so the fan-out is ~2), each point hashes to one bucket, and the
-    join runs on the bucket key with the exact range predicate applied
-    after the match. Shuffle carries only bucket-key rows; no pair
-    explosion beyond genuine candidates."""
-    b = F.floor(F.col(point_col) / bucket_width).cast("long")
+    interval_span/_INTERVAL_BUCKET_WIDTH — the width sits near the
+    typical span so the fan-out is ~2), each point hashes to one
+    bucket, and the join runs on the bucket key with the exact range
+    predicate applied after the match. Shuffle carries only bucket-key
+    rows; no pair explosion beyond genuine candidates."""
+    b = F.floor(F.col("value") / _INTERVAL_BUCKET_WIDTH).cast("long")
     p = points.withColumn("__bucket", b)
     span = F.sequence(
-        F.floor(F.col(lo_col) / bucket_width).cast("long"),
-        F.floor(F.col(hi_col) / bucket_width).cast("long"),
+        F.floor(F.col("lo") / _INTERVAL_BUCKET_WIDTH).cast("long"),
+        F.floor(F.col("hi") / _INTERVAL_BUCKET_WIDTH).cast("long"),
     )
     iv = intervals.withColumn("__bucket", F.explode(span))
     return (
         p.join(iv, "__bucket")
-        .where((F.col(point_col) >= F.col(lo_col)) & (F.col(point_col) <= F.col(hi_col)))
+        .where((F.col("value") >= F.col("lo")) & (F.col("value") <= F.col("hi")))
         .drop("__bucket")
     )
 
@@ -283,7 +283,7 @@ def range_join_agg(events: DataFrame, part: DataFrame) -> DataFrame:
         ((F.col("p_partkey") % 1120) * 0.5 + 0.45).alias("hi"),
     )
     pts = events.select(F.col("event_id").cast("bigint").alias("event_id"), "value")
-    matched = bucketized_interval_join(pts, intervals, "value", "lo", "hi", 1.0)
+    matched = bucketized_interval_join(pts, intervals)
     return matched.groupBy("partkey").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_points"),
         F.min("event_id").cast("bigint").alias("min_event_id"),
@@ -561,10 +561,10 @@ FROM s GROUP BY user_id, sid
 """
 
 
-def key_skew_profile(df: DataFrame, key_col: str) -> DataFrame:
+def key_skew_profile(df: DataFrame) -> DataFrame:
     """Shuffle-key skew diagnostic: the log2-bucket histogram of
     per-key group sizes — the measurement that decides whether a
-    groupBy/join on ``key_col`` needs salting, AQE skew handling, or a
+    groupBy/join on the ``tok`` key column needs salting, AQE skew handling, or a
     bounded-aggregate restructure (the tool behind this repo's
     inverted_index hot-term fix). One row per occupied size bucket b
     (keys whose group size has floor(log2) = b): how many keys, how
@@ -574,7 +574,7 @@ def key_skew_profile(df: DataFrame, key_col: str) -> DataFrame:
     Two partial-agg passes, both scale-safe: per-key counts (short
     key + long), then at most 64 bucket rows. Never sorts, never holds
     a group."""
-    counts = df.groupBy(F.col(key_col).alias("k")).agg(
+    counts = df.groupBy(F.col("tok").alias("k")).agg(
         F.count(F.lit(1)).cast("bigint").alias("c"))
     b = (F.length(F.bin(F.col("c"))) - 1).cast("bigint")
     return (
@@ -586,14 +586,14 @@ def key_skew_profile(df: DataFrame, key_col: str) -> DataFrame:
     )
 
 
-def hot_keys(df: DataFrame, key_col: str) -> DataFrame:
-    """The 10 hottest keys of a prospective shuffle, with their row
+def hot_keys(df: DataFrame) -> DataFrame:
+    """The 10 hottest ``tok`` keys of a prospective shuffle, with their row
     counts and corpus share in ppm — the companion readout to
     ``key_skew_profile`` naming WHICH keys need the salt/cap. Per-key
     partial-agg count, then orderBy+limit compiles to
     TakeOrderedAndProject (per-partition top-k, k-row merge — no
     global sort); the total joins in as one broadcast row."""
-    counts = df.groupBy(F.col(key_col).alias("k")).agg(
+    counts = df.groupBy(F.col("tok").alias("k")).agg(
         F.count(F.lit(1)).cast("bigint").alias("c"))
     total = counts.agg(F.sum("c").cast("bigint").alias("total"))
     return (

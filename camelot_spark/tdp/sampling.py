@@ -34,6 +34,10 @@ _KNUTH = 2654435761
 # registry's shard count
 _RANK_MULT, _RANK_BASE_PPM = 2, 150_000
 _PPL_SALT, _SHARD_SALT, _N_SHARDS = 77773, 50923, 64
+# corpus_mix's per-lang target shares (ppm) of its sample size, and the
+# per-stratum size of stratified_topk_sample
+_MIX_TARGETS = {"de": 200000, "en": 500000, "es": 100000, "fr": 200000}
+_MIX_TOTAL, _TOPK_PER_STRATUM = 200, 10
 
 
 def _accept_ppm_hash(col, salt: int = 0):
@@ -59,23 +63,23 @@ def stratified_sample(documents: DataFrame, rates: dict[str, int],
     )
 
 
-def corpus_mix(documents: DataFrame, targets: dict[str, int],
-               sample_total: int) -> DataFrame:
+def corpus_mix(documents: DataFrame) -> DataFrame:
     """Sample toward TARGET PROPORTIONS: given per-``lang`` target
-    shares (ppm of ``sample_total``), derive each stratum's acceptance
-    rate from its actual count and keep documents deterministically —
+    shares (``_MIX_TARGETS``, ppm of ``_MIX_TOTAL``), derive each
+    stratum's acceptance rate from its actual count and keep documents
+    deterministically —
     the "mix 50% web, 30% books, 20% code" step of building a training
     corpus. A stratum smaller than its quota is kept whole (rate capped
     at 100%; no oversampling).
 
-    All integer math: want = sample_total * target_ppm / 1e6 (floor),
+    All integer math: want = _MIX_TOTAL * target_ppm / 1e6 (floor),
     accept_ppm = min(1e6, want * 1e6 / count) (floor) — so the DuckDB
     twin reproduces acceptance exactly. One tiny count aggregate (one
     row per stratum) broadcast back onto the corpus; the corpus itself
     never shuffles."""
     strata_col = "lang"
     targets_df = documents.sparkSession.createDataFrame(
-        sorted(targets.items()), f"{strata_col} string, target_ppm long")
+        sorted(_MIX_TARGETS.items()), f"{strata_col} string, target_ppm long")
     counts = documents.groupBy(strata_col).agg(F.count(F.lit(1)).alias("n"))
     rates = (
         counts.join(F.broadcast(targets_df), strata_col, "inner")
@@ -84,7 +88,7 @@ def corpus_mix(documents: DataFrame, targets: dict[str, int],
         .selectExpr(
             strata_col,
             f"least(CAST({_PPM} AS BIGINT), "
-            f"((target_ppm * CAST({int(sample_total)} AS BIGINT)) DIV {_PPM})"
+            f"((target_ppm * CAST({_MIX_TOTAL} AS BIGINT)) DIV {_PPM})"
             f" * {_PPM} DIV n) AS accept_ppm",
         )
     )
@@ -95,9 +99,10 @@ def corpus_mix(documents: DataFrame, targets: dict[str, int],
     )
 
 
-def stratified_topk_sample(documents: DataFrame, k: int = 10) -> DataFrame:
-    """Exactly-k-per-``lang`` deterministic sample: rank documents by
-    hash within each stratum and keep the k smallest — a fixed-size
+def stratified_topk_sample(documents: DataFrame) -> DataFrame:
+    """Exactly-k-per-``lang`` deterministic sample (k =
+    ``_TOPK_PER_STRATUM``): rank documents by hash within each stratum
+    and keep the k smallest — a fixed-size
     uniform-without-replacement sample that is stable across runs and
     cluster layouts (the reservoir-sampling use case, without reservoir
     state). Ties are impossible on distinct doc_ids; Catalyst plans the
@@ -107,7 +112,7 @@ def stratified_topk_sample(documents: DataFrame, k: int = 10) -> DataFrame:
     return (
         documents
         .withColumn("sample_rank", F.row_number().over(w))
-        .where(F.col("sample_rank") <= k)
+        .where(F.col("sample_rank") <= _TOPK_PER_STRATUM)
         .select("doc_id", "lang", F.col("sample_rank").cast("int").alias("sample_rank"))
     )
 

@@ -150,7 +150,7 @@ def _lsh_plane_weights(dim: int, n_planes: int):
     return w
 
 
-def lsh_signatures(embeddings: DataFrame, n_planes: int = 16) -> DataFrame:
+def lsh_signatures(embeddings: DataFrame, n_planes: int) -> DataFrame:
     """Random-hyperplane LSH signature: bit b = sign of <v, h_b> where
     h_b is a deterministic pseudo-random hyperplane derived from
     (b, dimension index) via a fixed integer mix — reproducible across

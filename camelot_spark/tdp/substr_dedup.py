@@ -91,8 +91,7 @@ def duplicate_substring_spans(documents: DataFrame, k: int = 40,
     )
 
 
-def duplicate_substring_stats(documents: DataFrame,
-                              spans: DataFrame | None = None) -> DataFrame:
+def duplicate_substring_stats(documents: DataFrame, spans: DataFrame) -> DataFrame:
     """Per-document rollup of the duplicate regions: how much of each
     document is verbatim-duplicated text (the curation signal — drop or
     trim documents past a duplication threshold). Docs with no
@@ -102,10 +101,7 @@ def duplicate_substring_stats(documents: DataFrame,
     ``spans``: a precomputed ``duplicate_substring_spans`` result for
     the same documents — callers running several consumers of the
     region list (stats + strip + audit) compute/persist it once instead
-    of re-running the k-gram shuffle per consumer. Left to None, the
-    production spans (k = 40, xxhash64 keys) are computed here."""
-    if spans is None:
-        spans = duplicate_substring_spans(documents)
+    of re-running the k-gram shuffle per consumer."""
     per_doc = spans.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_regions"),
         F.sum(F.col("dup_end") - F.col("dup_start")).cast("bigint").alias("dup_chars"),

@@ -289,37 +289,36 @@ _PII_PHONE = "\\b[0-9]{3}-[0-9]{3}-[0-9]{4}\\b"
 _PII_IP = "\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b"
 
 
-def scrub_pii(documents: DataFrame, decorate: bool = False) -> DataFrame:
-    """PII scrub for training data: mask emails/phones/IPs with typed
-    tokens, report per-kind hit counts + the scrubbed text. Zero
-    shuffle — regexp codegen on the scan.
+def decorate_pii(documents: DataFrame) -> DataFrame:
+    """Append deterministic PII-bearing suffixes (keyed on doc_id) to
+    ``text`` — the test/bench corpus is synthetic and PII-free, so the
+    registry query decorates it to exercise real replacements."""
+    return documents.select("doc_id", F.concat(
+        F.col("text"),
+        F.when(F.col("doc_id") % 7 == 0, F.lit(" contact bob@example.com now"))
+        .when(F.col("doc_id") % 7 == 1, F.lit(" call 555-867-5309 today"))
+        .when(F.col("doc_id") % 7 == 2, F.lit(" server at 10.0.42.7 responded"))
+        .otherwise(F.lit("")),
+    ).alias("text"))
 
-    ``decorate=True`` appends deterministic PII-bearing suffixes (keyed
-    on doc_id) before scrubbing — the test/bench corpus is synthetic
-    and PII-free, so the driver query opts in to exercise real
-    replacements. Production callers keep the default and get counts
-    over their actual text only."""
-    decorated = F.col("text")
-    if decorate:
-        decorated = F.concat(
-            F.col("text"),
-            F.when(F.col("doc_id") % 7 == 0, F.lit(" contact bob@example.com now"))
-            .when(F.col("doc_id") % 7 == 1, F.lit(" call 555-867-5309 today"))
-            .when(F.col("doc_id") % 7 == 2, F.lit(" server at 10.0.42.7 responded"))
-            .otherwise(F.lit("")),
-        )
+
+def scrub_pii(documents: DataFrame) -> DataFrame:
+    """PII scrub for training data: mask emails/phones/IPs in ``text``
+    with typed tokens, report per-kind hit counts + the scrubbed text.
+    Zero shuffle — regexp codegen on the scan."""
+    text = F.col("text")
     scrubbed = F.regexp_replace(
         F.regexp_replace(
-            F.regexp_replace(decorated, _PII_EMAIL, "<EMAIL>"), _PII_PHONE, "<PHONE>"
+            F.regexp_replace(text, _PII_EMAIL, "<EMAIL>"), _PII_PHONE, "<PHONE>"
         ),
         _PII_IP,
         "<IP>",
     )
     return documents.select(
         "doc_id",
-        F.regexp_count(decorated, F.lit(_PII_EMAIL)).cast("bigint").alias("n_emails"),
-        F.regexp_count(decorated, F.lit(_PII_PHONE)).cast("bigint").alias("n_phones"),
-        F.regexp_count(decorated, F.lit(_PII_IP)).cast("bigint").alias("n_ips"),
+        F.regexp_count(text, F.lit(_PII_EMAIL)).cast("bigint").alias("n_emails"),
+        F.regexp_count(text, F.lit(_PII_PHONE)).cast("bigint").alias("n_phones"),
+        F.regexp_count(text, F.lit(_PII_IP)).cast("bigint").alias("n_ips"),
         scrubbed.alias("scrubbed"),
     )
 
@@ -629,9 +628,7 @@ GROUP BY doc_id
 """
 
 
-def boilerplate_strip(
-    documents: DataFrame, min_ratio_ppm: int = 500_000,
-) -> DataFrame:
+def boilerplate_strip(documents: DataFrame, min_ratio_ppm: int) -> DataFrame:
     """Per-source boilerplate removal, document-frequency based (the
     C4/RefinedWeb "same line on most pages of a site" filter, over
     token 3-grams since this corpus has no line structure): a

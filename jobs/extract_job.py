@@ -47,7 +47,7 @@ def parse_kw(pairs: list[str]) -> dict:
     return out
 
 
-def main(argv: list[str] | None = None) -> int:
+def main(argv: list[str]) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--input", required=True, help="documents: parquet path or catalog table (no '/' = table; use ./dir for relative paths)")
     ap.add_argument("--output", required=True, help="extracted: parquet path or catalog table (no '/' = table; use ./dir for relative paths)")
@@ -105,4 +105,4 @@ def main(argv: list[str] | None = None) -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))

@@ -67,7 +67,7 @@ def test_bpe_token_counts_shrink_with_merges(spark):
     from camelot_spark.tdp.bpe import bpe_token_counts
 
     got = {r["doc_id"]: r["n_tokens"]
-           for r in bpe_token_counts(docs).collect()}
+           for r in bpe_token_counts(docs, bpe_train(docs)).collect()}
 
     # reference: replay training, then count tokens of the final state
     import re
@@ -92,3 +92,20 @@ def test_bpe_token_counts_shrink_with_merges(spark):
     assert got == want
     raw = {i: len(t.replace(" ", "")) for i, t in enumerate(texts)}
     assert all(got[i] < raw[i] for i in got)  # merges actually compress
+
+
+def test_bpe_token_counts_rejects_merge_rows_that_break_the_state(spark):
+    """A merge side that is empty, or holds the ' ' separator or the '|'
+    guard, raises and names the row instead of silently producing
+    tokens the pair count cannot see."""
+    import pytest
+
+    from camelot_spark.tdp.bpe import bpe_token_counts
+
+    docs = spark.createDataFrame([(0, "the theme")], "doc_id long, text string")
+    for left, right in (("", "h"), ("t", ""), ("t h", "e"), ("t", "|"), ("a|b", "c")):
+        merges = spark.createDataFrame(
+            [(1, "t", "h", 2), (2, left, right, 1)],
+            "merge_rank int, left string, right string, pair_count long")
+        with pytest.raises(ValueError, match=f"merge_rank=2, left='{re.escape(left)}'"):
+            bpe_token_counts(docs, merges)

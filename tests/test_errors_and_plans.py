@@ -197,12 +197,12 @@ class TestTdpReferenceEquivalence:
         rows, df = self._corpus(spark)
         got = {r["doc_id"]: (r["seq_id"], r["seq_offset"], r["n_tokens"])
                for r in pack_sequences(df).collect()}
-        by_src: dict = {}
+        by_shard: dict = {}
         for doc_id, text, src in sorted(rows):
             n = len(text.split(" "))
-            cum = by_src.get(src, 0)
+            cum = by_shard.get((src, doc_id // 128), 0)
             assert got[doc_id] == (cum // 512, cum % 512, n), doc_id
-            by_src[src] = cum + n
+            by_shard[(src, doc_id // 128)] = cum + n
         # reconstruction invariant: seq_id*512 + offset == tokens before
         assert all(s * 512 + o >= 0 for s, o, _ in got.values())
 

@@ -119,14 +119,15 @@ def test_lattice_table_areas_kwarg():
     assert res["tables"][0].nrows == 7
 
 
-def test_edge_tol_extension():
+def test_edge_tol_extension(monkeypatch):
     """Sparse tall column chains only with a larger edge_tol
     (`core.py:67`, test_common.py:126-131 analog)."""
     from camelot_spark.fixtures import DocBuilder, add_stream_table
 
     b = DocBuilder("edgetol-m")
     cells = [[f"L{i}", f"R{i}"] for i in range(7)]
-    add_stream_table(b, cells, [72.0, 300.0], 700.0, row_h=80.0)
+    monkeypatch.setattr(fx, "ROW_H", 80.0)  # tall rows
+    add_stream_table(b, cells, [72.0, 300.0], 700.0)
     res_default = extract_document(b.spans, make_config("stream"))
     res_tol = extract_document(b.spans, make_config("stream", edge_tol=500))
     cells_tol = [s[1] for s in res_tol["spans"] if s[0] == "cell"]

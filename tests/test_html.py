@@ -1,6 +1,6 @@
 """HTML main-content extraction: boilerplate strip + DOM-block
 heuristics on REAL html columns (the production path; the driver
-queries use decorate=True over the synthetic corpus)."""
+queries run them over decorate_html of the synthetic corpus)."""
 
 import os
 import sys
@@ -55,8 +55,8 @@ def test_html_operators_are_shuffle_free(spark):
     """The whole strip + block-classify pipeline is per-row regexp/array
     codegen on the scan: no Exchange, no Generate at any scale."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for fn in (lambda d: h.strip_html(d, decorate=True),
-               lambda d: h.main_content(d, decorate=True)):
+    for fn in (lambda d: h.strip_html(h.decorate_html(d)),
+               lambda d: h.main_content(h.decorate_html(d))):
         plan = fn(docs)._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan and "Generate" not in plan
 

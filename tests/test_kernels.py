@@ -5,6 +5,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from camelot_spark.config import LatticeConfig, StreamConfig
 from camelot_spark.kernels import cols as colk
 from camelot_spark.kernels import lines as lnk
 from camelot_spark.kernels import metrics as mtr
@@ -14,6 +15,10 @@ from camelot_spark.kernels import textlines as tlk
 from camelot_spark.kernels import textproc as txp
 from camelot_spark.kernels.assign import get_table_index, reduce_index
 from camelot_spark.kernels.grid import Grid
+
+
+# the Camelot tolerances and thresholds the kernels run with
+_S, _L = StreamConfig(), LatticeConfig()
 
 
 def tl_frame(rows):
@@ -30,7 +35,7 @@ def test_group_rows_anchor_gating():
     # anchor stays at first line of group (stream.py:130-133): y0s
     # 100, 98.5, 97.2 with tol 2 → 97.2 compares against 100, not 98.5
     f = tl_frame([(0, 100, 10, 110, "a"), (0, 98.5, 10, 108, "b"), (0, 97.2, 10, 107, "c")])
-    groups = rowk.group_rows_indices(f, row_tol=2)
+    groups = rowk.group_rows_indices(f, row_tol=_S.row_tol)
     assert [list(g) for g in groups] == [[0, 1], [2]]
 
 
@@ -38,7 +43,7 @@ def test_group_rows_blank_skip_and_bootstrap_drop():
     # blank lines skipped; a line within tol of y=0 joins the discarded
     # bootstrap group (stream.py:136 pop)
     f = tl_frame([(0, 1.0, 10, 11, "low"), (0, 100, 10, 110, " "), (0, 50, 10, 60, "x")])
-    groups = rowk.group_rows_indices(f, row_tol=2)
+    groups = rowk.group_rows_indices(f, row_tol=_S.row_tol)
     assert [list(g) for g in groups] == [[2]]
 
 
@@ -88,9 +93,9 @@ def test_textedge_validity_threshold():
     def frame(n):
         return tl_frame([(50, 600 - 14 * i, 80, 610 - 14 * i, "ab") for i in range(n)])
 
-    e6 = tek.generate_textedges(frame(6))["left"]
+    e6 = tek.generate_textedges(frame(6), _S.edge_tol)["left"]
     assert e6.valid_mask() == [True]
-    e5 = tek.generate_textedges(frame(5))["left"]
+    e5 = tek.generate_textedges(frame(5), _S.edge_tol)["left"]
     assert e5.valid_mask() == [False]
 
 
@@ -98,21 +103,21 @@ def test_textedge_far_line_lost_not_readded():
     # a line whose x matches but y0 gap > edge_tol neither extends nor
     # re-creates the edge (core.py:116-127 quirk)
     f = tl_frame([(50, 600, 80, 610, "ab"), (50, 500, 80, 510, "cd")])
-    e = tek.generate_textedges(f, edge_tol=50)["left"]
+    e = tek.generate_textedges(f, edge_tol=_S.edge_tol)["left"]
     assert e.intersections == [0]
     assert e.y0 == [600.0]
 
 
 def test_textedge_running_mean_x():
     f = tl_frame([(50, 600, 80, 610, "ab"), (50.4, 586, 80, 596, "cd")])
-    e = tek.generate_textedges(f)["left"]
+    e = tek.generate_textedges(f, _S.edge_tol)["left"]
     assert np.isclose(e.x[0], (0 * 50 + 50.4) / 1.0)  # (n*x + x')/(n+1), n=0
 
 
 def test_short_text_excluded_from_edges():
     # len(strip) > 1 gate (core.py:134)
     f = tl_frame([(50, 600, 55, 610, "a"), (50, 586, 80, 596, "bc")])
-    e = tek.generate_textedges(f)["left"]
+    e = tek.generate_textedges(f, _S.edge_tol)["left"]
     assert e.y0 == [586.0]
 
 
@@ -121,19 +126,19 @@ def test_short_text_excluded_from_edges():
 
 def test_merge_close_lines_running_mean():
     # sequential running mean: [10, 11, 12] tol 2 → 10→(10+11)/2=10.5→(10.5+12)/2=11.25
-    assert lnk.merge_close_lines([10, 11, 12], line_tol=2) == [11.25]
-    assert lnk.merge_close_lines([10, 20, 21], line_tol=2) == [10, 20.5]
+    assert lnk.merge_close_lines([10, 11, 12], line_tol=_L.line_tol) == [11.25]
+    assert lnk.merge_close_lines([10, 20, 21], line_tol=_L.line_tol) == [10, 20.5]
 
 
 def test_segment_tables_joint_threshold_and_cap():
     # 2×2 grid of lines → 4 joints → dropped (needs > 4)
     v = [(0, 0, 0, 10), (10, 0, 10, 10)]
     h = [(0, 0, 10, 0), (0, 10, 10, 10)]
-    assert lnk.segment_tables(v, h) == {}
+    assert lnk.segment_tables(v, h, _L.joint_tol) == {}
     # 3×3 → 9 joints → kept
     v = [(x, 0, x, 10) for x in (0, 5, 10)]
     h = [(0, y, 10, y) for y in (0, 5, 10)]
-    t = lnk.segment_tables(v, h)
+    t = lnk.segment_tables(v, h, _L.joint_tol)
     assert list(t) == [(0.0, 0.0, 10.0, 10.0)]
     assert len(t[(0.0, 0.0, 10.0, 10.0)]) == 9
 
@@ -146,7 +151,7 @@ def test_segment_tables_top10_cap():
         s = 10 + k
         v += [(ox + x, 0, ox + x, s) for x in (0, s / 2, s)]
         h += [(ox, y, ox + s, y) for y in (0, s / 2, s)]
-    t = lnk.segment_tables(v, h)
+    t = lnk.segment_tables(v, h, _L.joint_tol)
     assert len(t) == lnk.MAX_TABLES_PER_PAGE
     # the two smallest grids (k=0,1) dropped
     assert (0.0, 0.0, 10.0, 10.0) not in t
@@ -165,7 +170,7 @@ def test_set_edges_full_grid():
     g = make_grid3()
     v = [(x, 0, x, 30) for x in (0, 10, 20, 30)]
     h = [(0, y, 30, y) for y in (0, 10, 20, 30)]
-    g.set_edges(v, h)
+    g.set_edges(v, h, _L.joint_tol)
     assert g.left.all() and g.right.all() and g.top.all() and g.bottom.all()
 
 
@@ -174,7 +179,7 @@ def test_set_edges_partial_and_span():
     v = [(x, 0, x, 30) for x in (0, 10, 20, 30)]
     # omit the h edge between rows 0 and 1 over column 0
     h = [(0, 0, 30, 0), (10, 20, 30, 20), (0, 10, 30, 10), (0, 30, 30, 30)]
-    g.set_edges(v, h)
+    g.set_edges(v, h, _L.joint_tol)
     g.set_border()
     g.set_span()
     assert not g.top[1, 0] and not g.bottom[0, 0]
@@ -235,13 +240,13 @@ def test_flag_font_size():
         {"c": "*", "x0": 10, "y0": 0, "x1": 15, "y1": 6},
         {"c": "\n"},
     ]
-    assert txp.flag_font_size(chars, "horizontal") == "95<s>*</s>"
+    assert txp.flag_font_size(chars, "horizontal", _S.strip_text) == "95<s>*</s>"
     # uniform size → full text incl. trailing anno newline
     uni = [
         {"c": "a", "x0": 0, "y0": 0, "x1": 5, "y1": 10},
         {"c": "\n"},
     ]
-    assert txp.flag_font_size(uni, "horizontal") == "a\n"
+    assert txp.flag_font_size(uni, "horizontal", _S.strip_text) == "a\n"
 
 
 def test_text_strip():
@@ -298,7 +303,8 @@ class TestRasterKernels:
     def test_adaptive_threshold_foreground(self):
         from camelot_spark.kernels import raster as rk
         img = self._page()
-        thr = rk.adaptive_threshold(img)
+        thr = rk.adaptive_threshold(img, _L.process_background, _L.threshold_blocksize,
+                                     _L.threshold_constant)
         assert thr[50, 150] and thr[100, 50]      # line pixels pass
         assert not thr[10, 10] and not thr[190, 290]  # background drops
 
@@ -368,7 +374,8 @@ class TestRasterKernels:
         for d in (-7, 7):
             img[15 + d, 8:23] = 255
             img[8:23, 15 + d] = 255
-        ga = rk.adaptive_threshold(img, process_background=True)
+        ga = rk.adaptive_threshold(img, True, _L.threshold_blocksize,
+                                     _L.threshold_constant)
         assert ga[15, 15]
         # the same comparison against the 15×15 uniform-window mean
         # (c = -2) rejects the center pixel
@@ -392,7 +399,8 @@ class TestRasterKernels:
         import numpy as np
         # light lines on dark page: only the background branch finds them
         img = 255 - self._page()
-        thr = rk.adaptive_threshold(img, process_background=True)
+        thr = rk.adaptive_threshold(img, True, _L.threshold_blocksize,
+                                     _L.threshold_constant)
         assert thr[50, 150] and not thr[10, 10]
 
     def test_open_keeps_full_extent_and_drops_short_runs(self):
@@ -408,9 +416,10 @@ class TestRasterKernels:
     def test_find_lines_centerline_semantics(self):
         from camelot_spark.kernels import raster as rk
         img = self._page()
-        thr = rk.adaptive_threshold(img)
-        _, vlines = rk.find_lines(thr, direction="vertical", line_scale=15)
-        _, hlines = rk.find_lines(thr, direction="horizontal", line_scale=15)
+        thr = rk.adaptive_threshold(img, _L.process_background, _L.threshold_blocksize,
+                                     _L.threshold_constant)
+        _, vlines = rk.find_lines(thr, None, "vertical", _L.line_scale, _L.iterations)
+        _, hlines = rk.find_lines(thr, None, "horizontal", _L.line_scale, _L.iterations)
         assert sorted(x1 for x1, _, _, _ in vlines) == [50, 150, 250]
         assert sorted(y1 for _, y1, _, _ in hlines) == [50, 100, 150]
         # vertical lines carry (x, y2, x, y1) with y2 > y1 (image coords)
@@ -420,9 +429,10 @@ class TestRasterKernels:
     def test_find_contours_and_joints(self):
         from camelot_spark.kernels import raster as rk
         img = self._page()
-        thr = rk.adaptive_threshold(img)
-        vmask, _ = rk.find_lines(thr, direction="vertical", line_scale=15)
-        hmask, _ = rk.find_lines(thr, direction="horizontal", line_scale=15)
+        thr = rk.adaptive_threshold(img, _L.process_background, _L.threshold_blocksize,
+                                     _L.threshold_constant)
+        vmask, _ = rk.find_lines(thr, None, "vertical", _L.line_scale, _L.iterations)
+        hmask, _ = rk.find_lines(thr, None, "horizontal", _L.line_scale, _L.iterations)
         contours = rk.find_contours(vmask, hmask)
         assert len(contours) == 1
         tables = rk.find_joints(contours, vmask, hmask)
@@ -437,9 +447,10 @@ class TestRasterKernels:
         img = np.full((200, 300), 255, dtype=np.uint8)
         img[99:102, 39:262] = 0            # one h line
         img[39:162, 149:152] = 0           # one v line → 1 joint
-        thr = rk.adaptive_threshold(img)
-        vmask, _ = rk.find_lines(thr, direction="vertical", line_scale=15)
-        hmask, _ = rk.find_lines(thr, direction="horizontal", line_scale=15)
+        thr = rk.adaptive_threshold(img, _L.process_background, _L.threshold_blocksize,
+                                     _L.threshold_constant)
+        vmask, _ = rk.find_lines(thr, None, "vertical", _L.line_scale, _L.iterations)
+        hmask, _ = rk.find_lines(thr, None, "horizontal", _L.line_scale, _L.iterations)
         assert rk.find_joints(rk.find_contours(vmask, hmask), vmask, hmask) == {}
 
     def test_connected_components_8conn(self):

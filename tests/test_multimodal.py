@@ -496,7 +496,7 @@ def test_gif_delta_frames_composite_onto_canvas():
     body += b"\x21\xf9\x04" + bytes([0x04 | 0x01]) + b"\x00\x00" + bytes([tr]) + b"\x00"
     body += b"\x2c" + struct.pack("<HHHH", 2, 1, 4, 3) + b"\x00"
     body.append(8)
-    lzw = _LZWWriter(8)
+    lzw = _LZWWriter()
     lzw.put(lzw.clear)
     for px in patch_idx.reshape(-1):
         lzw.put(int(px))
@@ -529,7 +529,7 @@ def test_gif_disposal_background_clears_rect():
         body += b"\x21\xf9\x04" + bytes([disposal << 2]) + b"\x00\x00\x00\x00"
         body += b"\x2c" + struct.pack("<HHHH", fx, fy, fw, fh) + b"\x00"
         body.append(8)
-        lzw = _LZWWriter(8)
+        lzw = _LZWWriter()
         lzw.put(lzw.clear)
         for _ in range(fw * fh):
             lzw.put(val)

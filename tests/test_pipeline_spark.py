@@ -20,7 +20,7 @@ def stream_builders():
         fx.doc_health("health-s0"),
         fx.doc_twotables("twotables-s0"),
         fx.doc_prose_interleave("prose-s0"),
-        fx.doc_rotated("clockwise", "rotcw-s0"),
+        fx.doc_rotated("clockwise", "rotcw-s0", 0.0, 0.0),
         fx.doc_blank("blank-s0"),
     ]
 
@@ -229,7 +229,7 @@ def test_snapshot_isolation_and_atomic_commit(spark, tmp_path):
     m1 = log.latest()
     with pytest.raises(CommitConflict):
         log._publish(m1["version"], m1)
-    m2 = log.commit(dangling)
+    m2 = log.commit(dangling, {})
     assert m2["version"] == 2 and m2["parent_id"] == m1["snapshot_id"]
     assert log.read(spark).count() == 2
 
@@ -248,7 +248,7 @@ def test_snapshot_concurrent_committers(tmp_path):
     for d in dirs:
         os.makedirs(d)
     with ThreadPoolExecutor(8) as ex:
-        manifests = list(ex.map(log.commit, dirs))
+        manifests = list(ex.map(log.commit, dirs, [{}] * len(dirs)))
     assert sorted(m["version"] for m in manifests) == list(range(1, 9))
     hist = log.history()
     assert len(hist) == 8 and len(hist[-1]["data_dirs"]) == 8
@@ -268,7 +268,7 @@ def test_no_shuffle_without_salt(spark, stream_builders):
 
 
 def test_salted_repartition_balances(spark):
-    df = docs_df(spark, [fx.builder_for(str(i)) for i in range(64)]).coalesce(1)
+    df = docs_df(spark, [fx.builder_for(str(i), fx.STREAM_FAMILIES + fx.LATTICE_FAMILIES) for i in range(64)]).coalesce(1)
     out = extract(df, flavor="stream", salt_partitions=8)
     pids = [r["lineage"]["partition_id"] for r in out.collect()]
     # AQE may coalesce the small partitions; docs must still spread
@@ -334,7 +334,7 @@ def test_output_invariant_under_partitioning(spark):
     """Span sequences must be byte-identical no matter how docs are
     partitioned — extraction is doc-local, so partitioning is pure
     physics. Guards against any accidental cross-doc state."""
-    df = docs_df(spark, [fx.builder_for(str(i)) for i in range(40)])
+    df = docs_df(spark, [fx.builder_for(str(i), fx.STREAM_FAMILIES + fx.LATTICE_FAMILIES) for i in range(40)])
 
     def norm(out):
         return {

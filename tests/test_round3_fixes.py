@@ -121,19 +121,18 @@ def test_legacy_parquet_dir_folds_into_first_snapshot(spark, tmp_path):
     assert read_extracted(spark, out_path).count() == 3
 
 
-def test_pack_sequences_shard_docs_bounds_task_size(spark):
-    """With shard_docs=N on a SINGLE-source corpus, the cumsum window
+def test_pack_sequences_shard_docs_bounds_task_size(spark, monkeypatch):
+    """With _SHARD_DOCS=N on a SINGLE-source corpus, the cumsum window
     partitions on (source, shard): parallelism is corpus-size/N instead
     of 1, and the per-shard packing matches an independent reference."""
-    from pyspark.sql import functions as F
+    from camelot_spark.tdp import packing
 
-    from camelot_spark.tdp.packing import pack_sequences
-
+    monkeypatch.setattr(packing, "_SHARD_DOCS", 10)
     docs = spark.createDataFrame(
         [(i, "one", " ".join(["t"] * (7 + i % 13))) for i in range(80)],
         "doc_id long, source string, text string",
     )
-    out = pack_sequences(docs, shard_docs=10)
+    out = packing.pack_sequences(docs)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "shard" in plan and "hashpartitioning" in plan
 
@@ -147,17 +146,11 @@ def test_pack_sequences_shard_docs_bounds_task_size(spark):
         assert rows[i]["seq_id"] == prev // 512, i
         assert rows[i]["seq_offset"] == prev % 512, i
         cum[shard] = prev + (7 + i % 13)
-    # default (no shard key) is unchanged: one packing stream per source
-    base = {r["doc_id"]: r for r in pack_sequences(docs).collect()}
-    running = 0
-    for i in range(80):
-        assert base[i]["seq_id"] == running // 512 and base[i]["seq_offset"] == running % 512
-        running += 7 + i % 13
 
 
 def test_scrub_pii_undecorated_reports_only_true_hits(spark):
-    """Production path (decorate=False, the default): counts reflect the
-    actual text, and clean text is returned verbatim."""
+    """Production path (no decorate_pii): counts reflect the actual
+    text, and clean text is returned verbatim."""
     from camelot_spark.tdp.text import scrub_pii
 
     docs = spark.createDataFrame(
@@ -216,21 +209,23 @@ def test_dedup_groups_default_joins_12_hop_chain(spark):
     assert got == {i: (0, int(i == 0)) for i in range(13)}
 
 
-def test_bucketized_interval_join_is_equi_not_nested_loop(spark):
+def test_bucketized_interval_join_is_equi_not_nested_loop(spark, monkeypatch):
     """The banded re-expression plans an equi-join; the naive range
     join on the same data plans a BroadcastNestedLoopJoin — the shape
     this operator exists to avoid. Results match exactly."""
     from pyspark.sql import functions as F
 
+    from camelot_spark.tdp import relational
     from camelot_spark.tdp.relational import bucketized_interval_join
 
+    monkeypatch.setattr(relational, "_INTERVAL_BUCKET_WIDTH", 8.0)
     pts = spark.range(2000).select(
         F.col("id").alias("event_id"), (F.col("id") % 331 * 0.7).alias("value"))
     iv = spark.range(50).select(
         F.col("id").alias("key"), (F.col("id") * 4.0).alias("lo"),
         (F.col("id") * 4.0 + 9.0).alias("hi"))
 
-    ours = bucketized_interval_join(pts, iv, "value", "lo", "hi", bucket_width=8.0)
+    ours = bucketized_interval_join(pts, iv)
     plan = ours._jdf.queryExecution().executedPlan().toString()
     assert "NestedLoop" not in plan and "Cartesian" not in plan, plan
 
@@ -431,24 +426,26 @@ def test_snapshot_compaction_refuses_to_drop_concurrent_append(spark, tmp_path):
 
     log.latest = racing_latest
     with pytest.raises(CommitConflict):
-        log.compact(spark)
+        log.compact(spark, 1)
     # nothing lost: both commits' rows are visible
     assert log.read(spark).count() == 20
 
 
-def test_pack_sequences_global_matches_serial_scan(spark):
+def test_pack_sequences_global_matches_serial_scan(spark, monkeypatch):
     """The three-level prefix sum equals the serial global scan over
     (source, doc_id) order — checked against a pure-Python reference —
     and the plan carries exactly one SinglePartition exchange (the
     enum-small source-totals level) plus a broadcast back."""
+    from camelot_spark.tdp import packing
     from camelot_spark.tdp.packing import pack_sequences_global
 
+    monkeypatch.setattr(packing, "_SHARD_DOCS", 10)
     docs = spark.createDataFrame(
         [(i, ["alpha", "beta", "gamma"][i % 3],
           " ".join(["t"] * (5 + (i * 7) % 17))) for i in range(120)],
         "doc_id long, source string, text string",
     )
-    out = pack_sequences_global(docs, shard_docs=10)
+    out = pack_sequences_global(docs)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange SinglePartition") == 1
     assert "BroadcastExchange" in plan
@@ -464,7 +461,7 @@ def test_pack_sequences_global_matches_serial_scan(spark):
     # partition-invariance: same answer from a different physical layout
     again = {r["doc_id"]: (r["seq_id"], r["seq_offset"])
              for r in pack_sequences_global(
-                 docs.repartition(13), shard_docs=10).collect()}
+                 docs.repartition(13)).collect()}
     assert again == {k: (v["seq_id"], v["seq_offset"]) for k, v in rows.items()}
 
 
@@ -477,13 +474,14 @@ def test_pack_sequences_global_keeps_null_source(spark, monkeypatch):
 
     # 4-token sequences: the 12-token stream crosses three boundaries
     monkeypatch.setattr(packing, "_SEQ_LEN", 4)
+    monkeypatch.setattr(packing, "_SHARD_DOCS", 2)
     docs = spark.createDataFrame(
         [(0, "a", "t t t"), (1, None, "t t"), (2, "b", "t t t t"),
          (3, None, "t t t")],
         "doc_id long, source string, text string",
     )
     rows = {r["doc_id"]: r for r in
-            pack_sequences_global(docs, shard_docs=2).collect()}
+            pack_sequences_global(docs).collect()}
     assert len(rows) == 4                      # nothing dropped
     # serial order: a(3), b(4), NULLS LAST: doc1(2), doc3(3)
     assert (rows[0]["seq_id"], rows[0]["seq_offset"]) == (0, 0)

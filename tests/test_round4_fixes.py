@@ -70,24 +70,38 @@ def test_curate_dedup_near_verified_end_to_end(spark):
     assert report[-1]["docs"] == 3
 
 
-def test_bpe_oracle_degenerate_corpus_matches(spark):
-    """A corpus that exhausts learnable merges before round 8 (single-
-    letter words only) must still hash-match its DuckDB twin: the CTE
-    rounds pass state through unchanged when a round's argmax is empty,
-    mirroring the Spark loop's early break."""
+def _bpe_counts_and_twin(spark, rows):
     import duckdb
 
     from camelot_spark.tdp import bpe
 
-    rows = [(0, "a b c d"), (8, "a b a b"), (16, "c a c a")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     got = sorted(
         (r["doc_id"], r["n_tokens"])
-        for r in bpe.bpe_token_counts(docs).collect())
+        for r in bpe.bpe_token_counts(docs, bpe.bpe_train(docs)).collect())
     con = duckdb.connect()
     con.execute("create table documents(doc_id bigint, text varchar)")
     con.executemany("insert into documents values (?, ?)", rows)
-    want = sorted(map(tuple, con.execute(bpe.BPE_TOKEN_COUNTS_SQL).fetchall()))
+    return got, sorted(map(tuple, con.execute(bpe.BPE_TOKEN_COUNTS_SQL).fetchall()))
+
+
+def test_bpe_oracle_degenerate_corpus_matches(spark):
+    """A corpus that exhausts learnable merges before round 8 (single-
+    letter words only) must still hash-match its DuckDB twin: the CTE
+    rounds pass state through unchanged when a round's argmax is empty,
+    mirroring the Spark loop's early break. The twin (the reference)
+    also matches with edge rows added: an empty text, mixed case with
+    digits, and single letters."""
+    rows = [(0, "a b c d"), (8, "a b a b"), (16, "c a c a")]
+    edge = [(24, ""), (32, "lower UPPER mixed42case"), (40, "a b c d e f")]
+    got_edge, want_edge = _bpe_counts_and_twin(spark, rows + edge)
+    got_edge, want_edge = dict(got_edge), dict(want_edge)
+    # a text with no [a-z] word: Spark counts 0 tokens, while the twin
+    # reports NULL (DuckDB 1.0.0's array_to_string of an empty list is
+    # NULL); the twin's string is an oracle and is not changed here
+    assert got_edge.pop(24) == 0 and want_edge.pop(24) is None
+    assert got_edge == want_edge and len(got_edge) == 5
+    got, want = _bpe_counts_and_twin(spark, rows)
     assert got == want and len(got) == 3
     # sanity on the values: merges do fire on the repeated-pair docs
     counts = dict(got)
@@ -162,8 +176,8 @@ def test_jpeg_sof2_without_scans_raises():
                                               decode_jpeg)
     import numpy as np
 
-    zzs, qts, gray, h, w = _forward_blocks(np.zeros((8, 8), np.uint8), 90)
-    out = _headers(0xC2, zzs, qts, gray, h, w, _ACP_BITS, _ACP_VALS)
+    zzs, qts, gray, h, w = _forward_blocks(np.zeros((8, 8), np.uint8), 90, None)
+    out = _headers(0xC2, zzs, qts, gray, h, w, _ACP_BITS, _ACP_VALS, [(1, 1)])
     out += b"\xff\xd9"
     with pytest.raises(ValueError, match="no SOS"):
         decode_jpeg(bytes(out))

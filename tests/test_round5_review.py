@@ -460,14 +460,14 @@ def test_dedup_incremental_classifies_new_batch(spark):
          (7, "tiny doc")],                           # exact but <3 tokens? no — 2 tokens: exact path still md5-matches
         "doc_id long, text string")
     got = {r["doc_id"]: r["status"]
-           for r in dedup_incremental(new, ref, portable=True).collect()}
+           for r in dedup_incremental(new, ref).collect()}
     assert got[1] == "exact"
     assert got[3] == "near"
     assert got[5] == "kept"
     assert got[7] == "exact"      # md5 path is length-independent
     # short NOVEL docs stay kept (no empty-shingle bucket collisions)
     new2 = spark.createDataFrame([(9, "two words")], "doc_id long, text string")
-    assert dedup_incremental(new2, ref, portable=True).collect()[0]["status"] == "kept"
+    assert dedup_incremental(new2, ref).collect()[0]["status"] == "kept"
     # the ref bucket side is pre-reduced: plan aggregates before the join
     plan = dedup_incremental(new, ref)._jdf.queryExecution() \
         .executedPlan().toString()
@@ -582,16 +582,16 @@ def test_key_skew_profile_and_hot_keys(spark, monkeypatch):
 
     # key 'a' x8 (bucket 3), 'b' x3 (bucket 1), 'c','d' x1 (bucket 0)
     rows = [("a",)] * 8 + [("b",)] * 3 + [("c",), ("d",)]
-    df = spark.createDataFrame(rows, "k0 string")
+    df = spark.createDataFrame(rows, "tok string")
     prof = {r["bucket"]: (r["n_keys"], r["sum_rows"], r["max_rows"])
-            for r in key_skew_profile(df, "k0").collect()}
+            for r in key_skew_profile(df).collect()}
     assert prof == {3: (1, 8, 8), 1: (1, 3, 3), 0: (2, 2, 1)}
 
     monkeypatch.setattr(relational, "_HOT_KEYS", 3)  # the product's 10 adds 'd'
-    hk = hot_keys(df, "k0").collect()
+    hk = hot_keys(df).collect()
     assert [(r["k"], r["c"]) for r in hk] == [("a", 8), ("b", 3), ("c", 1)]
     assert hk[0]["share_ppm"] == 8 * 1_000_000 // 13
-    plan = hot_keys(df, "k0")._jdf.queryExecution() \
+    plan = hot_keys(df)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
 
@@ -749,8 +749,8 @@ def test_write_training_shards_deterministic(spark, tmp_path, monkeypatch):
                                 "doc_id long, text string").repartition(3)
 
     p1, p2 = str(tmp_path / "a"), str(tmp_path / "b")
-    write_training_shards(df1, p1, n_shards=8)
-    write_training_shards(df2, p2, n_shards=8)
+    write_training_shards(df1, p1, n_shards=8, epoch=0)
+    write_training_shards(df2, p2, n_shards=8, epoch=0)
 
     monkeypatch.setattr(sampling, "_N_SHARDS", 8)  # the writer's n_shards
     key = {r["doc_id"]: (r["shard"], r["order_key"])

@@ -131,7 +131,8 @@ def test_dedup_report_short_docs_no_ansi_crash(spark):
     docs = spark.createDataFrame(
         [(0, "one two"), (2, "three"), (4, t), (6, t + " lambda")],
         "doc_id long, text string")
-    out = [tuple(r) for r in dedup.dedup_report(docs, portable=True).collect()]
+    pairs = dedup.minhash_lsh_pairs(docs, portable=True)
+    out = [tuple(r) for r in dedup.dedup_report(docs, pairs).collect()]
     assert out == [(4, 2, 1, 8888, 8888, 63)]
     v = [tuple(r) for r in dedup.minhash_neardup_verified(docs).collect()]
     assert v == [(4, 6, 8888)]   # the short-doc '' pair is gone

@@ -43,15 +43,15 @@ def test_stratified_sample_deterministic_and_partition_invariant(docs):
     assert a == b and len(a) > 0
 
 
-def test_corpus_mix_hits_targets_and_caps_small_strata(spark):
+def test_corpus_mix_hits_targets_and_caps_small_strata(spark, monkeypatch):
     # 1000 en docs, 20 de docs; mix 50/50 toward a 200-doc sample:
     # en accepts ~10%, de (quota 100 > 20 docs) is kept WHOLE
+    monkeypatch.setattr(sampling, "_MIX_TARGETS", {"en": 500000, "de": 500000})
     rows = [(i, "t", "en", "s", 5) for i in range(1000)]
     rows += [(10_000 + i, "t", "de", "s", 5) for i in range(20)]
     docs = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long")
-    out = sampling.corpus_mix(
-        docs, targets={"en": 500000, "de": 500000}, sample_total=200)
+    out = sampling.corpus_mix(docs)
     got = out.collect()
     by_lang = {}
     for r in got:
@@ -64,15 +64,16 @@ def test_corpus_mix_hits_targets_and_caps_small_strata(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_stratified_topk_exactly_k_per_stratum(docs):
-    out = sampling.stratified_topk_sample(docs, k=7).collect()
+def test_stratified_topk_exactly_k_per_stratum(docs, monkeypatch):
+    monkeypatch.setattr(sampling, "_TOPK_PER_STRATUM", 7)
+    out = sampling.stratified_topk_sample(docs).collect()
     per = {}
     for r in out:
         per.setdefault(r["lang"], set()).add(r["sample_rank"])
     assert set(per) == {"en", "fr", "de", "es"}
     assert all(ranks == set(range(1, 8)) for ranks in per.values())
     # deterministic: same ids on re-run
-    again = sampling.stratified_topk_sample(docs, k=7).collect()
+    again = sampling.stratified_topk_sample(docs).collect()
     assert {r["doc_id"] for r in again} == {r["doc_id"] for r in out}
 
 

@@ -7,12 +7,30 @@ by a product file other than itself, and every top-level ``def`` or
 ``class`` there must be referenced (an AST ``Name`` or ``Attribute``,
 outside its own body) by a product file. Every public method of a
 class there must be referenced as an ``Attribute`` by a product file.
-Every parameter with a default must be passed by at least one product
-call of that name: a setting with one product value is a module
-constant, which a test monkeypatches when it needs another. Code only tests
-reach is deleted, moved under ``tests/``, or kept in ``KEEP`` with its
-reason: a bare name exempts that definition, ``func.param`` one
-parameter. Spark-free.
+
+Each setting has a single owner. Over the functions and methods of
+``camelot_spark/``, ``jobs/``, ``tools/`` and ``__spark_entry__.py``,
+every product call is recorded with its positional and keyword
+argument ASTs, and two rules read those records:
+
+- (A) a parameter needs at least two product values. A default counts
+  as a value when some call takes it; a non-literal argument counts as
+  varying. A parameter that only ever gets one value becomes a module
+  constant (which a test monkeypatches when it needs another) or a
+  literal.
+- (B) a default needs a product call that takes it. If none does, the
+  default goes, and so does every branch only the default reached.
+
+Known limit: calls are matched by bare callee name, so ``list.append(x)``
+counts as a call of ``SnapshotLog.append``, and a call that spreads
+``*args``/``**kwargs`` exempts every function of its name.
+
+Code only tests reach is deleted, moved under ``tests/``, or kept in
+``KEEP`` with its reason: a bare name exempts that definition,
+``func.param`` one parameter. A reason is safety code (a reference
+that tests compare against, a decoder, or an encoder that makes
+decoder inputs) or a fold that would need an edit under
+``perfbench/``. Spark-free.
 """
 
 import ast
@@ -34,11 +52,10 @@ KEEP = {
     "get_table_index": "scalar reference assign_indices_batch is tested against; "
                        "perfbench's tracer wraps it by name",
     "_sqdist": "Spark fold-order reference the numpy PQ distance folds are tested against",
-    "empty_textlines": "three-line constructor a test builds pages with",
     "encode_gif": _ENCODER,
     "encode_jpeg_progressive": _ENCODER,
     "encode_png": _ENCODER,
-    "add_stream_table.row_h": "tests/test_golden.py builds its tall-row golden with row_h=80.0",
+    "encode_jpeg.quality": _ENCODER,
     "encode_jpeg.subsampling": _ENCODER,
     "encode_jpeg.restart_interval": _ENCODER,
     "encode_jpeg.non_interleaved": _ENCODER,
@@ -48,7 +65,11 @@ KEEP = {
     "encode_avi.quality": _ENCODER,
     "encode_avi.audio_rate": _ENCODER,
     "encode_avi.with_index": _ENCODER,
+    "encode_avi.audio": _ENCODER,
+    "encode_wav.sample_rate": _ENCODER,
     "encode_wav.n_channels": _ENCODER,
+    "_enc_ac_first.al": _ENCODER,
+    "_enc_ac_refine.al": _ENCODER,
 }
 
 
@@ -141,32 +162,36 @@ def _is_static(fn):
                for d in fn.decorator_list)
 
 
-def _unpassed_parameters():
-    """``func.param`` → its dotted path, for every defaulted parameter
-    that no product call of that name passes."""
-    trees, modules, _ = _scan()
-    calls, loaded = _calls_and_bare_loads(trees)
-    out = {}
-    for m, p in modules.items():
-        for stmt in trees[p].body:
+_SETTABLE = ("camelot_spark", "jobs", "tools", "__spark_entry__.py")
+
+
+def _checked_functions(trees, loaded):
+    """(function AST, callee name, implicit leading parameters, dotted
+    owner) for every function and method whose settings the guard
+    checks, in ``_SETTABLE``: top-level functions no product file
+    loads as a bare name (those are called indirectly) and every
+    method of a class. ``implicit`` counts the bound ``self``/``cls``;
+    ``__init__`` is called by its class name."""
+    out = []
+    for p, tree in trees.items():
+        if os.path.relpath(p, REPO).split(os.sep)[0] not in _SETTABLE:
+            continue
+        m = _module_name(p)
+        for stmt in tree.body:
             if isinstance(stmt, _FUNC) and stmt.name not in loaded:
-                targets = [(stmt, stmt.name, 0, m)]
+                out.append((stmt, stmt.name, 0, m))
             elif isinstance(stmt, ast.ClassDef):
-                targets = [(fn, stmt.name if fn.name == "__init__" else fn.name,
-                            0 if _is_static(fn) else 1, f"{m}.{stmt.name}")
-                           for fn in stmt.body if isinstance(fn, _FUNC)]
-            else:
-                continue
-            for fn, callee, implicit, where in targets:
-                for param in _unpassed(fn, calls.get(callee), implicit):
-                    out[f"{fn.name}.{param}"] = f"{where}.{fn.name}.{param}"
+                out += [(fn, stmt.name if fn.name == "__init__" else fn.name,
+                         0 if _is_static(fn) else 1, f"{m}.{stmt.name}")
+                        for fn in stmt.body if isinstance(fn, _FUNC)]
     return out
 
 
 def _calls_and_bare_loads(trees):
-    """(call name → (most positional arguments, keyword names, whether
-    some call spreads ``*args``/``**kwargs``), names loaded outside
-    call position)."""
+    """(call name → list of product calls, each its positional
+    argument ASTs and keyword name → argument AST, or None for a call
+    that spreads ``*args``/``**kwargs``; names loaded outside call
+    position)."""
     calls, loaded = {}, set()
     for tree in trees.values():
         callees = set()
@@ -178,32 +203,68 @@ def _calls_and_bare_loads(trees):
             name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
             if name is None:
                 continue
-            npos, kws, spread = calls.get(name, (0, set(), False))
-            calls[name] = (
-                max(npos, len(node.args)),
-                kws | {k.arg for k in node.keywords if k.arg},
-                spread or any(isinstance(a, ast.Starred) for a in node.args)
-                or any(k.arg is None for k in node.keywords))
+            spread = (any(isinstance(a, ast.Starred) for a in node.args)
+                      or any(k.arg is None for k in node.keywords))
+            calls.setdefault(name, []).append(
+                None if spread else (node.args, {k.arg: k.value for k in node.keywords}))
         loaded.update(node.id for node in ast.walk(tree)
                       if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load)
                       and id(node) not in callees)
     return calls, loaded
 
 
-def _unpassed(fn, call, implicit):
-    """Defaulted parameters of ``fn`` that ``call`` never reaches;
-    ``implicit`` counts the bound ``self``/``cls``."""
-    npos, kws, spread = call or (0, set(), False)
-    if spread:
-        return []
+def _is_literal(node):
+    try:
+        ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError):
+        return False
+    return True
+
+
+def _parameter_hits(fn, calls, implicit):
+    """(rule A hits, rule B hits) of ``fn`` over its product ``calls``:
+    parameters with fewer than two product values, and defaults no
+    product call takes."""
+    if any(c is None for c in calls):
+        return [], []
     a = fn.args
-    pos = a.posonlyargs + a.args
-    first = len(pos) - len(a.defaults)
-    out = [arg.arg for i, arg in enumerate(pos[first:], first)
-           if arg.arg not in kws and npos <= i - implicit]
-    out += [arg.arg for arg, d in zip(a.kwonlyargs, a.kw_defaults)
-            if d is not None and arg.arg not in kws]
-    return out
+    pos = (a.posonlyargs + a.args)[implicit:]
+    defaults = dict(zip([p.arg for p in pos][len(pos) - len(a.defaults):], a.defaults))
+    defaults.update((p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None)
+    one_value, untaken = [], []
+    for i, param in enumerate(pos + a.kwonlyargs):
+        name = param.arg
+        passed, taken = [], False
+        for args, kws in calls:
+            if i < len(pos) and i < len(args):
+                passed.append(args[i])
+            elif name in kws:
+                passed.append(kws[name])
+            elif name in defaults:
+                taken = True
+        if name in defaults and not taken:
+            untaken.append(name)
+        if all(map(_is_literal, passed)):
+            values = {ast.dump(v) for v in passed}
+            if taken:
+                values.add(ast.dump(defaults[name]))
+            if len(values) < 2 and (passed or taken):
+                one_value.append(name)
+    return one_value, untaken
+
+
+@functools.cache
+def _settings():
+    """(rule A hits, rule B hits), each a list of (``func.param``, its
+    dotted path)."""
+    trees, _, _ = _scan()
+    calls, loaded = _calls_and_bare_loads(trees)
+    one_value, untaken = [], []
+    for fn, callee, implicit, where in _checked_functions(trees, loaded):
+        a, b = _parameter_hits(fn, calls.get(callee, []), implicit)
+        for hits, params in ((one_value, a), (untaken, b)):
+            hits += [(f"{fn.name}.{p}", f"{where}.{fn.name}.{p}") for p in params]
+    return one_value, untaken
 
 
 def test_every_module_is_imported_by_another_product_file():
@@ -245,15 +306,24 @@ def test_every_public_method_is_referenced_by_a_product_file():
     assert not unreached, f"methods no product file references: {unreached}"
 
 
-def test_every_defaulted_parameter_is_passed_by_a_product_call():
-    unpassed = sorted(where for key, where in _unpassed_parameters().items()
-                      if key not in KEEP and key.partition(".")[0] not in KEEP)
-    assert not unpassed, f"parameters no product call passes: {unpassed}"
+def _kept(key):
+    return key in KEEP or key.partition(".")[0] in KEEP
 
 
-def test_keep_lists_only_unpassed_parameters():
-    """A ``func.param`` KEEP entry that a product call now passes, or
-    whose parameter no longer has a default, is stale."""
-    unpassed = _unpassed_parameters()
-    stale = sorted(k for k in KEEP if "." in k and k not in unpassed)
+def test_every_parameter_has_two_product_values():
+    """Rule (A)."""
+    one_value = sorted(where for key, where in _settings()[0] if not _kept(key))
+    assert not one_value, f"parameters with one product value: {one_value}"
+
+
+def test_every_default_is_taken_by_a_product_call():
+    """Rule (B)."""
+    untaken = sorted(where for key, where in _settings()[1] if not _kept(key))
+    assert not untaken, f"defaults no product call takes: {untaken}"
+
+
+def test_keep_lists_only_parameter_hits():
+    """A ``func.param`` KEEP entry that neither rule names is stale."""
+    hits = {key for rule in _settings() for key, _ in rule}
+    stale = sorted(k for k in KEEP if "." in k and k not in hits)
     assert not stale, f"stale KEEP entries: {stale}"

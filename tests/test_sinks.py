@@ -82,7 +82,9 @@ def test_y_tied_tables_block_order_matches_tables_array():
     must be reordered by the same (-bottom, left, order) key even when
     the parser produced them right-first (insertion-order y-tie)."""
     from camelot_spark.extract_doc import assemble_spans, tables_in_span_order
-    from camelot_spark.kernels.textlines import empty_textlines
+    import numpy as np
+
+    from camelot_spark.kernels.textlines import TL
     from camelot_spark.parsers.common import TableResult
     from camelot_spark.parsers.page import Page
 
@@ -93,9 +95,9 @@ def test_y_tied_tables_block_order_matches_tables_array():
 
     right = table(1, 300.0, 500.0, "R")   # parser saw the right table first
     left = table(2, 10.0, 200.0, "L")
-    page = Page(width=600.0, height=800.0,
-                horizontal_text=empty_textlines(),
-                vertical_text=empty_textlines())
+    z = np.empty(0)
+    empty = TL(z, z, z, z, [], [], np.empty(0, dtype=np.int64))
+    page = Page(width=600.0, height=800.0, horizontal_text=empty, vertical_text=empty)
     spans = assemble_spans(page, [right, left])
     ordered = tables_in_span_order([right, left])
     # block i of the span sequence belongs to ordered[i]

@@ -1,10 +1,17 @@
 """Local stand-in for the driver's correctness gate: run each
 __spark_entry__ query on Spark AND its oracle on DuckDB at sf0.01,
 compare row-count + sorted values (column-name-sorted, like the driver).
+
+Before the sweep it prints one ``registry sha256`` line: the hash of
+the ``queries()`` keys in order plus every ``oracle_sql()`` string, so
+two commits' registries compare by running this tool on each.
+
+Usage: python tools/check_oracles.py [key ...]   (no keys = all)
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 
@@ -14,6 +21,7 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+SF_DIR = "/root/testdata/sf0.01"
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -21,11 +29,26 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns), ignore_index=True)
 
 
-def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None) -> int:
+def registry_digest(queries: dict, oracles: dict) -> str:
+    """sha256 over the query keys in registry order, then each oracle
+    key and SQL string in key order."""
+    h = hashlib.sha256()
+    for name in queries:
+        h.update(name.encode() + b"\0")
+    for name in sorted(oracles):
+        h.update(name.encode() + b"\0" + oracles[name].encode() + b"\0")
+    return h.hexdigest()
+
+
+def main(only: list[str] | None) -> int:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
 
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    print(f"registry sha256 {registry_digest(qs, oracles)}: "
+          f"{len(qs)} keys, {len(oracles)} oracles", flush=True)
     spark = (
         SparkSession.builder.master("local[8]")
         .config("spark.sql.shuffle.partitions", "8")
@@ -36,17 +59,15 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None) -
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
-            f"create view {t} as select * from read_parquet('{sf_dir}/{t}.parquet')"
+            f"create view {t} as select * from read_parquet('{SF_DIR}/{t}.parquet')"
         )
 
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     failures = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
         try:
-            got = fn(spark, sf_dir).toPandas()
+            got = fn(spark, SF_DIR).toPandas()
         except Exception as e:
             print(f"FAIL  {name}: spark error: {e}")
             failures += 1
@@ -81,4 +102,4 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None) -
 
 if __name__ == "__main__":
     only = sys.argv[1:] or None
-    raise SystemExit(main(only=only))
+    raise SystemExit(main(only))
